@@ -28,6 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from squirreling_spark.functions.registry import FunctionSpec, register_functions
+from squirreling_spark.qutil import local_df
 
 
 class QueryError(Exception):
@@ -93,16 +94,6 @@ def _position_of(exc: Exception, query: str) -> dict | None:
             "fragment": fragment,
         }
     return None
-
-
-def _edit_distance(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[-1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def _py_kind(v) -> str:
@@ -226,9 +217,15 @@ def _dynamic_json_text(v):
 
 
 def _coerce_row(row: dict, schema) -> tuple:
-    """Dict row → tuple in schema order, widening scalars to the inferred
-    field type (int→float for double fields etc.) — the explicit schema
-    makes Spark's verifier strict about exact Python types."""
+    """Dict row → tuple in schema order, converted to exactly the
+    inferred field type, as the Arrow build in ``qutil.local_df`` needs:
+    ints widen to float in double fields, naive datetimes become
+    UTC-aware read in the process-local zone (the reading Spark's row
+    path gave them), decimals round half-up to the field's scale (as
+    Spark's row path did)."""
+    import datetime as _dt
+    import decimal as _decimal
+
     from pyspark.sql import types as T
 
     def conv(v, ft):
@@ -238,6 +235,14 @@ def _coerce_row(row: dict, schema) -> tuple:
             return float(v)
         if isinstance(ft, T.LongType):
             return int(v)
+        if isinstance(ft, T.TimestampType):
+            return v.astimezone(_dt.timezone.utc)
+        if isinstance(ft, T.DecimalType):
+            return v.quantize(
+                _decimal.Decimal(1).scaleb(-ft.scale),
+                rounding=_decimal.ROUND_HALF_UP,
+                context=_decimal.Context(prec=ft.precision),
+            )
         if isinstance(ft, T.ArrayType):
             return [conv(x, ft.elementType) for x in v]
         if isinstance(ft, T.StructType):
@@ -270,14 +275,14 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> None:
                 df = spark.read.parquet(source)
         elif isinstance(source, list):
             # list-of-dicts in-memory table (reference memorySource,
-            # src/backend/dataSource.js:29-71). Explicit inference:
-            # Spark's sampler rejects all-null columns
-            # (CANNOT_DETERMINE_TYPE); the reference's JS rows allow
-            # them, so type those as void — null propagates through
-            # arithmetic AND string functions, matching the reference.
+            # src/backend/dataSource.js:29-71). Every row is typed by
+            # _infer_memory_schema (all-null columns as void, which
+            # Spark's sampler would reject) and loaded through
+            # qutil.local_df as an Arrow-built LocalRelation, so scans
+            # of the table never start Python workers.
             schema = _infer_memory_schema(source)
-            df = spark.createDataFrame(
-                [_coerce_row(r, schema) for r in source], schema=schema
+            df = local_df(
+                spark, [_coerce_row(r, schema) for r in source], schema
             )
         else:
             raise TypeError(f"unsupported table source for {name!r}: {type(source)}")

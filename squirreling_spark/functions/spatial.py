@@ -386,21 +386,6 @@ def intersects(ga: dict, gb: dict) -> bool:
     return False
 
 
-def _point_in_geom(p, geom, allow_boundary=True):
-    pts, segs, polys = _decompose(geom)
-    for q in pts:
-        if math.hypot(p[0] - q[0], p[1] - q[1]) <= EPS:
-            return True
-    for a, b in segs:
-        if _on_segment(p, a, b):
-            return True
-    for poly in polys:
-        r = _point_in_polygon(p, poly)
-        if r == "in" or (allow_boundary and r == "boundary"):
-            return True
-    return False
-
-
 def contains(ga: dict, gb: dict, proper: bool = False) -> bool:
     """Every point of b inside a (``proper``: strictly interior).
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from squirreling_spark.pipeline.ckpt import truncate_lineage
 
-from squirreling_spark.qutil import spread
+from squirreling_spark.qutil import local_df, spread
 
 # Per-bucket membership cap for LSH band self-joins. One degenerate band
 # key (empty/boilerplate docs that all hash identically) otherwise makes a
@@ -560,7 +560,7 @@ def embedding_lsh_dedup(
 def _driver_union_find(spark, pdf, src: str, dst: str) -> DataFrame:
     """Union-find with path compression over a COLLECTED edge list —
     the small-graph arm of connected_components. One Arrow transfer in,
-    one createDataFrame out; exact same (node, min-label) contract as the
+    one ``local_df`` out; exact same (node, min-label) contract as the
     distributed arm."""
     parent: dict[int, int] = {}
 
@@ -577,17 +577,9 @@ def _driver_union_find(spark, pdf, src: str, dst: str) -> DataFrame:
         if ra != rb:
             # union by min so the root IS the component's min node id
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = set(pdf[src].astype(int)) | set(pdf[dst].astype(int))
+    nodes = {int(n) for n in pdf[src]} | {int(n) for n in pdf[dst]}
     rows = [(n, find(n)) for n in sorted(nodes)]
-    # one Arrow batch back (r12): createDataFrame on a LIST pickles the
-    # rows and schedules Python-worker tasks per downstream action; the
-    # pandas+Arrow path decodes JVM-side with no Python at execution
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=["node", "label"], dtype="int64"),
-        schema="node bigint, label bigint",
-    )
+    return local_df(spark, rows, "node bigint, label bigint")
 
 
 def connected_components(
@@ -792,16 +784,6 @@ def simhash(text_col: str, bits: int = 48) -> F.Column:
     )
     return F.expr(
         f"concat_ws('', transform({votes}, s -> CASE WHEN s > 0 THEN '1' ELSE '0' END))"
-    )
-
-
-def simhash_dedup(df: DataFrame, text_col: str, id_col: str, bits: int = 48) -> DataFrame:
-    """Group docs by identical SimHash fingerprint (near-dup clusters)."""
-    return (
-        spread(df.select(id_col, text_col), by=[id_col])
-        .select(F.col(id_col), simhash(text_col, bits).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
     )
 
 

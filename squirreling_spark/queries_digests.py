@@ -1339,9 +1339,6 @@ def dialect_digest(spark, sf):
                 rejected.append((case,))
             except Exception:  # noqa: BLE001 — wrong error ≠ rejected
                 pass
-    # local_df (r12): pure-JVM LocalRelation — createDataFrame's
-    # Python-RDD path scheduled 32 Python-worker tasks per downstream
-    # action for this ~30-row list (guide §4)
     rej_df = local_df(spark, rejected, "reject_case string")
     branches.append(_digest_branch(rej_df, "strict_reject", _STRICT_CK))
     return _union_all(branches)

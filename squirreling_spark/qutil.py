@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType
 
 from squirreling_spark.tables import load_table, register_views  # noqa: F401
 
@@ -134,13 +135,6 @@ def det_round(col: Column, digits: int = 6) -> Column:
     return F.floor(col * factor + F.lit(0.5)) / F.lit(factor)
 
 
-def o_det_round(expr: str, digits: int = 6) -> str:
-    """DuckDB spelling of det_round — keep adjacent so dialects stay in
-    sync."""
-    factor = 10 ** digits
-    return f"floor(({expr}) * {factor} + 0.5) / {factor}"
-
-
 @_contextmanager
 def pinned_shuffle(spark: SparkSession, n: int = 16):
     """Pin ``spark.sql.shuffle.partitions`` around a streaming cycle and
@@ -160,39 +154,46 @@ def pinned_shuffle(spark: SparkSession, n: int = 16):
         spark.conf.set(key, prev)
 
 
-def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
-    """Small driver-local result set as a pure-JVM LocalRelation.
+def local_df(
+    spark: SparkSession, rows: list, schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows as a DataFrame: the one way the engine turns
+    Python values into a relation.
 
-    ``createDataFrame(rows)`` routes through the Python-RDD path: the
-    rows are pickled and every downstream action schedules a stage of
-    Python-worker tasks (32 tasks x ~150 ms of worker round-trip for an
-    8-row merge table — measured on the BPE/WordPiece trainers, guide
-    §4). Binding each column as ONE array parameter of a parameterized
-    ``spark.sql`` instead yields a single-partition LocalTableScan that
-    never leaves the JVM at execution time.
+    ``rows`` are sequences in ``schema`` order; ``schema`` is a
+    ``StructType`` (its field metadata is kept) or the ``"name type,
+    ..."`` DDL string ``createDataFrame`` takes. The rows are converted
+    column-wise to one ``pyarrow.Table`` typed by ``to_arrow_schema``
+    and handed to ``createDataFrame``, so:
 
-    ``schema`` is the same ``"name type, ..."`` DDL string
-    ``createDataFrame`` takes. Intended for SMALL row sets (the
-    parameter binding is py4j-element-wise — fine at tens of rows,
-    wrong at tens of thousands); values must not be None (SQL nulls
-    don't survive the literal binding) — both invariants hold for the
-    trainer-rule and digest-case callers."""
-    fields = [f.strip().split(None, 1) for f in schema.split(",")]
-    if not rows:
-        sel = ", ".join(
-            f"CAST(NULL AS {typ}) AS {name}" for name, typ in fields
-        )
-        return spark.sql(f"SELECT {sel} WHERE false")
-    cols = list(zip(*rows))
-    args = {f"c{i}": list(c) for i, c in enumerate(cols)}
-    sel = ", ".join(
-        f"CAST(element_at(:c{i}, i) AS {typ}) AS {name}"
-        for i, (name, typ) in enumerate(fields)
+    - the result is a ``LocalRelation``: it carries real size
+      statistics, and scans of it run in the JVM with no Python-worker
+      tasks. ``createDataFrame(list)`` would instead build a Python RDD
+      whose every scan schedules Python workers;
+    - above ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB
+      by default) Spark keeps the Arrow batches as a JVM RDD instead of
+      a ``LocalRelation``; scans still stay out of Python;
+    - ``None`` is a SQL null in any column, nested types (arrays,
+      structs, given as sequences) work, and an empty ``rows`` gives an
+      empty relation of the right schema.
+
+    Pass values of each field's Python type: Arrow converts them without
+    the row path's type checks (a float in a bigint field truncates). A
+    naive ``datetime`` in a timestamp field is read as UTC, not in the
+    process-local zone ``createDataFrame(list)`` used; pass aware values
+    to pin the instant (``engine._coerce_row`` does)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
     )
-    return spark.sql(
-        f"SELECT {sel} FROM (SELECT explode(sequence(1, {len(rows)})) AS i)",
-        args=args,
-    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 @_contextmanager

@@ -23,13 +23,22 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory holding the ``squirreling_spark`` package. Python UDF
+# workers import the package from here whatever the driver's working
+# directory is.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "squirreling_spark",
     cpus: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession configured for this engine."""
+    """Build (or reuse) a SparkSession configured for this engine.
+
+    Python workers get ``PACKAGE_ROOT`` on their ``PYTHONPATH``
+    (``spark.executorEnv.PYTHONPATH``) so UDF queries run from any
+    working directory; an ``extra_conf`` value for that key wins."""
     cpus = cpus or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -67,7 +76,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m"),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {"spark.executorEnv.PYTHONPATH": PACKAGE_ROOT, **(extra_conf or {})}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,7 +14,7 @@ the write path for free and SHOULD use it deliberately at scale:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_partitioned(
@@ -39,7 +39,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table_name)
     )
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)

@@ -136,7 +136,10 @@ def test_cancellation_api(spark):
 
 def test_cancel_running_query(spark):
     """Mid-query cancellation (the reference's AbortSignal semantics:
-    abort rejects rather than truncates, CHANGELOG 0.4.x)."""
+    abort rejects rather than truncates, CHANGELOG 0.4.x). The 8e12-row
+    cross product must still be running when cancel() comes: at 2000
+    rows (8e9) a broadcast nested-loop join over the in-memory table
+    finishes inside the 2 s wait."""
     import threading
     import time
 
@@ -147,7 +150,7 @@ def test_cancel_running_query(spark):
           SELECT a.id FROM big a CROSS JOIN big b CROSS JOIN big c
         )
         """,
-        tables={"big": [{"id": i} for i in range(2000)]},
+        tables={"big": [{"id": i} for i in range(20000)]},
     )
     errors = []
 

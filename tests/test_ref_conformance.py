@@ -9,10 +9,19 @@ immediately. The full sweep is scripts/ref_conformance.py →
 CONFORMANCE.json.
 """
 import collections
+import os
 
 import pytest
 
-from squirreling_spark.conformance import extract_all, run_conformance
+from squirreling_spark.conformance import REF_TEST_DIR, extract_all, run_conformance
+
+if not os.path.isdir(REF_TEST_DIR):
+    pytest.skip(
+        f"reference test files not found at {REF_TEST_DIR}: the floors can"
+        " only be re-checked where the reference checkout exists;"
+        " CONFORMANCE.json records the last full sweep",
+        allow_module_level=True,
+    )
 
 # per-file floor: (min_ok, min_value_checked) as of round 8 (dynamic
 # mixed-type memory columns via the JSON-text convention: CONFORMANCE
