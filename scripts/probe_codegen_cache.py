@@ -1,11 +1,24 @@
 """A/B probe: does codegen-cache eviction between interleaved bench passes
 explain the image_pixel_decode / audio_pcm_decode blow-up in full-bench
-context? Runs the two decode rows interleaved with ~30 other headline
-queries for 2 passes, once with the default 100-entry codegen cache and
-once with SPARK_GRAFT_CODEGEN_CACHE entries, in the SAME process layout
-as bench.py (fresh JVM per invocation — run this script twice).
+context? Runs 3 passes; each pass runs the 3 media rows in TARGETS, then
+the 8 rows in FILLER (trainers and dedup). Run it once with the default
+100-entry codegen cache and once with SPARK_GRAFT_CODEGEN_CACHE entries,
+in the SAME process layout as bench.py (fresh JVM per invocation — run
+this script twice).
 
 Usage: SPARK_GRAFT_CODEGEN_CACHE=10000 python scripts/probe_codegen_cache.py
+
+Environment (all optional):
+  SPARK_GRAFT_CODEGEN_CACHE              spark.sql.codegen.cache.maxEntries
+  SPARK_GRAFT_PROBE_NO_FILLER            any value: skip the FILLER rows,
+                                         so only the TARGETS run
+  SPARK_GRAFT_PROBE_CLEAR_RELATION_CACHE any value: call
+                                         spark.catalog.clearCache() after
+                                         every row. That empties the
+                                         in-memory RELATION cache, not the
+                                         codegen cache: it probes the
+                                         relation-cache confound, not
+                                         codegen eviction.
 """
 
 from __future__ import annotations
@@ -36,11 +49,12 @@ FILLER = [
     "bpe_train_merges", "wordpiece_train_merges", "pagerank_docs",
     "dedup_clusters",
 ]
-if os.environ.get("SPARK_GRAFT_PROBE_CLEAR"):
+if os.environ.get("SPARK_GRAFT_PROBE_NO_FILLER"):
     FILLER = []
 TARGETS = ["image_pixel_decode", "audio_pcm_decode", "video_mp4_meta"]
 
-CLEAR = bool(os.environ.get("SPARK_GRAFT_PROBE_CLEARCACHE"))
+# relation cache (cached DataFrames), not the codegen cache — see above
+CLEAR = bool(os.environ.get("SPARK_GRAFT_PROBE_CLEAR_RELATION_CACHE"))
 
 for p in range(3):
     for name in TARGETS:

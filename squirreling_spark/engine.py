@@ -261,8 +261,13 @@ def _coerce_row(row: dict, schema) -> tuple:
     return tuple(out)
 
 
-def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> None:
+def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
+    """Register each table-map entry as a temp view and return {view
+    name: schema} — the namespace the dialect rewrites resolve column
+    references against."""
+    schemas = {}
     for name, source in tables.items():
+        schema = None
         if isinstance(source, DataFrame):
             df = source
         elif isinstance(source, str):
@@ -287,6 +292,8 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> None:
         else:
             raise TypeError(f"unsupported table source for {name!r}: {type(source)}")
         df.createOrReplaceTempView(name)
+        schemas[name] = df.schema if schema is None else schema
+    return schemas
 
 
 def extract_tables(spark: SparkSession, query: str) -> list[str]:
@@ -442,8 +449,11 @@ def execute_sql(
     ``cache_tables`` memoizes the named tables across queries
     (``df.cache()`` — the reference's cachedDataSource cell memoization,
     src/backend/dataSource.js:80-129, at DataFrame granularity)."""
-    from squirreling_spark.functions.sqldialect import rewrite_reference_sql
-
+    from squirreling_spark.functions.sqldialect import (
+        drop_scratch_views,
+        ref_resolution_cache,
+        rewrite_reference_sql,
+    )
     from squirreling_spark.functions.sqlregistry import (
         register_reference_functions,
     )
@@ -454,6 +464,7 @@ def execute_sql(
     # even when "dataset.parquet" is a flat table-map key, and the rename
     # shim below would erase exactly that evidence.
     orig_query, orig_tables = query, tables
+    views = None
     if tables:
         # Names Spark can't hold in a temp view (dots: ``dataset.parquet``
         # is a FLAT name in the reference's table map, not a schema path)
@@ -479,30 +490,50 @@ def execute_sql(
                     lambda m: m.group(1) + safe,
                     query,
                 )
-        _register_tables(spark, tables)
+        views = _register_tables(spark, tables)
     for name in cache_tables or []:
         spark.catalog.cacheTable(name)
     if functions:
         register_functions(spark, functions)
-    if strict:
-        from squirreling_spark.functions.sqlstrict import (
-            strict_guards,
-            validate_reference_sql,
-        )
+    # Column references resolve against the call's table map only (no
+    # map: one snapshot of the session's temp views).
+    with ref_resolution_cache(views):
+        if strict:
+            from squirreling_spark.functions.sqlstrict import (
+                strict_guards,
+                validate_reference_sql,
+            )
 
-        validate_reference_sql(
-            orig_query, spark=spark, tables=orig_tables,
-            functions=functions,
+            validate_reference_sql(
+                orig_query, spark=spark, tables=orig_tables,
+                functions=functions,
+            )
+        query = rewrite_reference_sql(
+            query, spark=spark, like_mode=like_mode, pos_order=pos_order,
+            ident_quotes=ident_quotes,
         )
-    query = rewrite_reference_sql(
-        query, spark=spark, like_mode=like_mode, pos_order=pos_order,
-        ident_quotes=ident_quotes,
-    )
     if strict:
         query = strict_guards(query)
 
     job_group = f"squirreling-{uuid.uuid4().hex[:12]}"
     spark.sparkContext.setJobGroup(job_group, query[:200], interruptOnCancel=True)
+    try:
+        return _analyze(spark, query, job_group, orig_query, orig_tables)
+    finally:
+        # every statement built from the text is analyzed by now
+        drop_scratch_views(spark, query)
+
+
+def _analyze(
+    spark: SparkSession,
+    query: str,
+    job_group: str,
+    orig_query: str,
+    orig_tables: dict[str, Any] | None,
+) -> QueryResult:
+    """spark.sql the rewritten statement, retrying the reference shapes
+    Spark rejects, and map analysis errors onto the reference's error
+    types (``orig_*`` are the caller's text and table map)."""
     try:
         df = spark.sql(query)
     except Exception as exc:
@@ -573,15 +604,16 @@ def execute_sql(
         if "TABLE_OR_VIEW_NOT_FOUND" in msg:
             import re as _re
 
+            from squirreling_spark.functions.sqldialect import (
+                session_temp_views,
+            )
+
             tm = _re.search(r"`([^`\s]+)`(?:\s*,)?\s+cannot be found", msg)
             bad = tm.group(1).split("`.`")[-1] if tm else "?"
             if orig_tables:
                 available = list(orig_tables)
             else:
-                available = sorted(
-                    t.name for t in spark.catalog.listTables()
-                    if t.isTemporary
-                )
+                available = session_temp_views(spark)
             raise TableNotFoundError(
                 f'Table "{bad}" not found. Available tables: '
                 + ", ".join(available),

@@ -37,6 +37,7 @@ dynamically-typed JS engine meets SQL):
 from __future__ import annotations
 
 import contextlib
+import json
 import re
 import threading
 import uuid
@@ -540,79 +541,97 @@ _KEYWORDS = {
 }
 
 
-# Per-rewrite-call resolution cache: every _ref_field lookup otherwise
-# costs a catalog.listTables() plus one spark.table().schema analysis PER
-# VIEW — py4j round-trips that dominated wishlist_digest's build time
-# (16 execute_sql rewrites × several refs × several views). The cache
-# lives only for the duration of ONE rewrite_reference_sql call (views
-# cannot change mid-rewrite), so it is always coherent.
+# Column references resolve against ONE snapshot, {view name: schema},
+# held for the duration of a rewrite. engine.execute_sql installs the
+# call's own table map as that snapshot (engine._register_tables returns
+# it), so a bare name can only match a table the statement was given —
+# never a view an earlier call left in the session. Without a map the
+# session's temp views are snapshotted on first use through the JVM
+# session catalog (_session_view_schemas: no Spark job, no re-analysis).
 _REF_CACHE = threading.local()
 
 
 @contextlib.contextmanager
-def ref_resolution_cache():
-    """Hold ONE schema-resolution snapshot across MULTIPLE execute_sql
-    calls (rewrite_reference_sql reuses an already-active cache). For
-    multi-statement digests that register their views once and then run
-    many statements against them — catalog.listTables() + per-view
-    schema analysis cost ~200 ms per uncached rewrite. Only safe while
-    the temp-view set is not mutated between the wrapped statements."""
-    had = getattr(_REF_CACHE, "c", None)
-    if had is None:
-        _REF_CACHE.c = {}
+def ref_resolution_cache(views: dict | None = None):
+    """Resolve column references inside the block against one snapshot.
+    ``views`` ({view name: schema}) is the namespace when given.
+    Otherwise an enclosing block's snapshot is reused, or the session's
+    temp views are snapshotted on first use — multi-statement digests
+    wrap their statements so that one snapshot serves them all, which is
+    only safe while the wrapped statements leave the temp-view set alone
+    (the POSITIONAL JOIN scratch views keep the snapshot current)."""
+    outer = getattr(_REF_CACHE, "c", None)
+    if views is None and outer is not None:
+        yield
+        return
+    _REF_CACHE.c = {} if views is None else {"views": dict(views)}
     try:
         yield
     finally:
-        if had is None:
-            _REF_CACHE.c = None
+        _REF_CACHE.c = outer
+
+
+def session_temp_views(spark) -> list[str]:
+    """Sorted names of the session's local temp views, read from the JVM
+    session catalog. The public Catalog API's ``listTables()`` answers
+    the same question through ``toLocalIterator`` over a DataFrame, which
+    costs 5 Spark jobs per call; this runs none."""
+    it = (
+        spark._jsparkSession.sessionState().catalog()
+        .listLocalTempViews("*").iterator()
+    )
+    names = []
+    while it.hasNext():
+        names.append(it.next().table())
+    return names
+
+
+def _session_view_schemas(spark) -> dict:
+    """{view name: schema} for the session's temp views, read from each
+    view's already-analyzed plan (``sq_dynamic`` metadata included)."""
+    from py4j.protocol import Py4JError
+    from pyspark.sql import types as T
+
+    catalog = spark._jsparkSession.sessionState().catalog()
+    views = {}
+    for name in session_temp_views(spark):
+        try:
+            plan = catalog.getTempView(name).get()
+        except Py4JError:  # dropped since the listing: skip it
+            continue
+        views[name] = T.StructType.fromJson(json.loads(plan.schema().json()))
+    return views
+
+
+def _resolution_views(spark) -> dict:
+    """The active snapshot, taken now if the block has none yet; a
+    one-off session snapshot outside any block."""
+    c = getattr(_REF_CACHE, "c", None)
+    if c is None:
+        return _session_view_schemas(spark)
+    if "views" not in c:
+        c["views"] = _session_view_schemas(spark)
+    return c["views"]
 
 
 def _ref_field(spark, ref: str):
     """StructField of a simple column reference (``col`` or ``tbl.col``)
-    against the session's temp views, or None when it can't be resolved
-    (expression args, unknown tables)."""
+    in the resolution snapshot, or None when it can't be resolved
+    (expression args, unknown tables). A bare name matches the first
+    view that has it."""
     if spark is None or not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", ref):
         return None
-    cache = getattr(_REF_CACHE, "c", None)
-    if cache is not None and ref in cache:
-        return cache[ref]
-    f = _ref_field_uncached(spark, ref, cache)
-    if cache is not None:
-        cache[ref] = f
-    return f
-
-
-def _view_schemas(spark, cache):
-    """{view name: schema} for the session's temp views, snapshotted once
-    per rewrite call when a cache is active."""
-    if cache is not None and "__views__" in cache:
-        return cache["__views__"]
-    views = {}
-    for t in spark.catalog.listTables():
-        if t.isTemporary:
-            try:
-                views[t.name] = spark.table(t.name).schema
-            except Exception:  # noqa: BLE001 — unreadable view: skip
-                pass
-    if cache is not None:
-        cache["__views__"] = views
-    return views
-
-
-def _ref_field_uncached(spark, ref: str, cache=None):
-    try:
-        parts = ref.split(".")
-        if len(parts) == 2:
-            for f in spark.table(parts[0]).schema.fields:
-                if f.name == parts[1]:
-                    return f
-            return None
-        for schema in _view_schemas(spark, cache).values():
-            for f in schema.fields:
-                if f.name == ref:
-                    return f
-    except Exception:  # noqa: BLE001 — resolution is best-effort
-        return None
+    views = _resolution_views(spark)
+    table, _, col = ref.rpartition(".")
+    if table:
+        # view names are case-insensitive, as in Spark's catalog
+        schemas = [s for n, s in views.items() if n.lower() == table.lower()]
+    else:
+        schemas = views.values()
+    for schema in schemas:
+        for f in schema.fields:
+            if f.name == col:
+                return f
     return None
 
 
@@ -2640,6 +2659,12 @@ _POS_RE = re.compile(
 _STAR_RE = re.compile(r"(\bSELECT\s+)\*", re.I)
 
 
+# Row-numbered views of the two POSITIONAL JOIN sides, one pair per
+# rewritten join; drop_scratch_views removes them after analysis.
+_SCRATCH_PREFIX = "__sq_posv_"
+_SCRATCH_RE = re.compile(rf"\b{_SCRATCH_PREFIX}[0-9a-f]{{8}}\b")
+
+
 def _rewrite_positional_join(
     q: str,
     spark: SparkSession,
@@ -2659,13 +2684,18 @@ def _rewrite_positional_join(
     lt, la, rt, ra = m.group(1), m.group(2), m.group(3), m.group(4)
     la = la or lt.split(".")[-1]
     ra = ra or rt.split(".")[-1]
-    lv = f"__sq_posv_{uuid.uuid4().hex[:8]}"
-    rv = f"__sq_posv_{uuid.uuid4().hex[:8]}"
     pos_order = pos_order or {}
-    _with_rn(spark.table(lt), pos_order.get(lt)).createOrReplaceTempView(lv)
-    _with_rn(spark.table(rt), pos_order.get(rt)).createOrReplaceTempView(rv)
-    if getattr(_REF_CACHE, "c", None) is not None:
-        _REF_CACHE.c = {}  # new views mid-rewrite: drop the stale snapshot
+    sides = []
+    for table in (lt, rt):
+        src = spark.table(table)
+        view = f"{_SCRATCH_PREFIX}{uuid.uuid4().hex[:8]}"
+        rn = _with_rn(src, pos_order.get(table))
+        rn.createOrReplaceTempView(view)
+        c = getattr(_REF_CACHE, "c", None)
+        if c is not None and "views" in c:
+            c["views"][view] = rn.schema
+        sides.append((view, src))
+    (lv, lsrc), (rv, rsrc) = sides
     frag = (
         f"FROM {lv} AS {la} FULL OUTER JOIN {rv} AS {ra} "
         f"ON {la}.{_RN} = {ra}.{_RN}"
@@ -2674,13 +2704,24 @@ def _rewrite_positional_join(
     # Expand a bare SELECT * (the rn columns must not leak into it).
     star = _STAR_RE.search(q)
     if star and not _string_mask(q)[star.start()]:
-        lcols = [c for c in spark.table(lt).columns]
-        rcols = [c for c in spark.table(rt).columns]
         cols = ", ".join(
-            [f"{la}.{c}" for c in lcols] + [f"{ra}.{c}" for c in rcols]
+            [f"{la}.{c}" for c in lsrc.columns]
+            + [f"{ra}.{c}" for c in rsrc.columns]
         )
         q = q[: star.start()] + star.group(1) + cols + q[star.end() :]
     return q
+
+
+def drop_scratch_views(spark: SparkSession, query: str) -> None:
+    """Drop the scratch views a rewrite registered for ``query`` (the
+    rewritten text names them). Call it once spark.sql has analyzed every
+    statement built from that text: an analyzed plan holds the view's
+    body, so its result still collects after the drop."""
+    c = getattr(_REF_CACHE, "c", None)
+    for view in set(_SCRATCH_RE.findall(query)):
+        spark.catalog.dropTempView(view)
+        if c is not None and "views" in c:
+            c["views"].pop(view, None)
 
 
 def rewrite_reference_sql(
@@ -2700,17 +2741,17 @@ def rewrite_reference_sql(
     POSITIONAL JOIN. The reference (single-node, ordered arrays) zips
     physical row order; on a distributed engine that order is only
     well-defined given an explicit key — without a hint we zip the current
-    scan order (deterministic for single-split files, the DuckDB caveat)."""
-    had_cache = getattr(_REF_CACHE, "c", None)
-    if had_cache is None:
-        _REF_CACHE.c = {}  # fresh per-call resolution cache
-    try:
+    scan order (deterministic for single-split files, the DuckDB caveat).
+
+    Column references resolve against the enclosing
+    ``ref_resolution_cache`` snapshot (execute_sql's table map), else
+    against one snapshot of the session's temp views. POSITIONAL JOIN
+    registers scratch views that the returned text names; drop them with
+    ``drop_scratch_views`` once the statement is analyzed."""
+    with ref_resolution_cache():
         return _rewrite_reference_sql_inner(
             query, spark, like_mode, pos_order, ident_quotes
         )
-    finally:
-        if had_cache is None:
-            _REF_CACHE.c = None
 
 
 def _rewrite_reference_sql_inner(

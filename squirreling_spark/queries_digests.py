@@ -1317,8 +1317,8 @@ def dialect_digest(spark, sf):
 
     branches = []
     # shared resolution snapshot across the branch statements (the sq_dl_*
-    # views are registered once above; the positional-join rewrite
-    # invalidates the snapshot itself when it adds its __sq_posv views)
+    # views are registered once above; the positional-join rewrite adds
+    # its __sq_posv views to the snapshot and execute_sql drops them)
     with ref_resolution_cache():
         for tag, (sql, like_mode, ck, _) in _DIALECT_BRANCHES.items():
             res = execute_sql(
@@ -1590,8 +1590,8 @@ def wishlist_digest(spark, sf):
 
     branches = []
     # one schema-resolution snapshot across all 16 statements: the wl_*
-    # views are registered once above, so the per-statement
-    # listTables()+schema py4j scans (~200 ms each) are pure overhead
+    # views are registered once above, so re-reading every session
+    # view's schema from the JVM catalog per statement would be overhead
     with ref_resolution_cache():
         for tag, (sql, ck, _) in _WISHLIST_BRANCHES.items():
             res = execute_sql(spark, sql)

@@ -331,6 +331,93 @@ def test_dynamic_array_elements_still_raise():
         _infer_memory_schema([{"v": [1, "a"]}])
 
 
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        ("SELECT v FROM t ORDER BY v", [{"v": 2}, {"v": 3}, {"v": 10}]),
+        ("SELECT sum(v) AS s FROM t", [{"s": 15}]),
+        ("SELECT max(v) AS m FROM t", [{"m": 10}]),
+        ("SELECT v FROM t WHERE v > 2 ORDER BY v", [{"v": 3}, {"v": 10}]),
+    ],
+)
+def test_dynamic_typing_ignores_views_of_earlier_calls(spark, query, expected):
+    # an earlier call leaves a view whose `v` is dynamic; this call's own
+    # `t.v` is BIGINT and must not get the JSON-text rewrite
+    execute_sql(spark, "SELECT 1", tables={"aaa": [{"v": 1}, {"v": "x"}]})
+    rows = execute_sql(
+        spark, query, tables={"t": [{"v": 3}, {"v": 10}, {"v": 2}]}
+    ).collect()
+    assert rows == expected
+
+
+def test_execute_sql_on_table_map_launches_no_job(spark, monkeypatch):
+    """Dialect resolution reads the call's table map: planning a
+    dynamic-typing statement over memory tables runs no Spark job (the
+    public listTables() costs 5) until the result is collected."""
+    from pathlib import Path
+
+    from pyspark.sql import Catalog
+
+    def no_listing(*_a, **_k):
+        raise AssertionError("execute_sql listed the catalog")
+
+    monkeypatch.setattr(Catalog, "listTables", no_listing)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    probe = "no-job-probe"
+    # jobs started before execute_sql sets its own group land in `probe`
+    sc.setJobGroup(probe, "execute_sql job-count probe")
+    res = execute_sql(
+        spark,
+        "SELECT city, COUNT(*) AS n, MAX(age) AS oldest FROM users "
+        "WHERE age >= 30 GROUP BY city ORDER BY city",
+        tables={"users": [
+            {"city": "Oslo", "age": 31}, {"city": "Oslo", "age": "n/a"},
+            {"city": "Rome", "age": 52}, {"city": "Rome", "age": 12},
+        ]},
+    )
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(probe)) + len(
+            tracker.getJobIdsForGroup(res.job_group)
+        )
+
+    assert jobs() == 0
+    assert res.collect() == [
+        {"city": "Oslo", "n": 1, "oldest": 31.0},
+        {"city": "Rome", "n": 1, "oldest": 52.0},
+    ]
+    assert jobs() > 0  # the tracker does see this call's jobs
+    pkg = Path(__file__).resolve().parent.parent / "squirreling_spark"
+    listing = [
+        str(p) for p in pkg.rglob("*.py")
+        if "catalog.listTables" in p.read_text()
+    ]
+    assert listing == []
+
+
+def test_positional_join_drops_its_scratch_views(spark):
+    from squirreling_spark.functions.sqldialect import session_temp_views
+
+    before = set(session_temp_views(spark))
+    res = execute_sql(
+        spark,
+        "SELECT a.x, b.y FROM a POSITIONAL JOIN b",
+        tables={
+            "a": [{"x": i} for i in range(3)],
+            "b": [{"y": 10 * i} for i in range(4)],
+        },
+        pos_order={"a": ["x"], "b": ["y"]},
+    )
+    assert set(session_temp_views(spark)) == before | {"a", "b"}
+    rows = sorted(res.collect(), key=lambda r: r["y"])
+    assert rows == [
+        {"x": 0, "y": 0}, {"x": 1, "y": 10}, {"x": 2, "y": 20},
+        {"x": None, "y": 30},
+    ]
+
+
 # ---------------------------------------------------- structured error surface
 # Reference error-message shapes (validation/parseErrors.js:105-178,
 # validation/tables.js:166-211): did-you-mean suggestions, available-name
