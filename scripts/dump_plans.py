@@ -1,6 +1,17 @@
-"""Generate PLANS.md: formatted physical plans for representative queries —
-evidence that pushdown/pruning/broadcast/partial-agg actually happen."""
+"""Dump formatted physical plans of registered queries.
 
+    python scripts/dump_plans.py
+        regenerates PLANS.md: the plans of the representative queries in
+        SHOW at sf0.001 — evidence that pushdown/pruning/broadcast/
+        partial-agg actually happen.
+    python scripts/dump_plans.py --out DIR --suffix S QUERY [QUERY ...]
+        writes DIR/<QUERY>_<S>.txt for each named query, for before/after
+        plan comparisons (run it from each tree with S = before|after;
+        data from $SPARK_GRAFT_SF_DIR, sf0.1 by default).
+"""
+
+import argparse
+import os
 import sys
 from pathlib import Path
 
@@ -8,8 +19,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from squirreling_spark import inventory
 from squirreling_spark.session import get_spark
-
-inventory.load_all()
 
 SF = "/root/testdata/sf0.001"
 SHOW = [
@@ -127,22 +136,49 @@ SHOW = [
 ]
 
 
-def main():
+def explain(spark, name: str, sf: str) -> str:
+    df = inventory.QUERIES[name](spark, sf)
+    return spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def write_plans_md():
     spark = get_spark("plan-dump", cpus=8)
     out = [
         "# PLANS — physical-plan evidence (generated by scripts/dump_plans.py",
         f"# at sf0.001; regenerate after plan-affecting changes)\n",
     ]
     for name, why in SHOW:
-        df = inventory.QUERIES[name](spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = explain(spark, name, SF)
         out.append(f"\n## {name}\n\n*{why}*\n\n```\n{plan.strip()}\n```\n")
     Path("PLANS.md").write_text("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} sections)")
+
+
+def write_plan_files(out_dir: Path, suffix: str, names: list[str]):
+    out_dir.mkdir(parents=True, exist_ok=True)
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", SF.replace("sf0.001", "sf0.1"))
+    spark = get_spark(f"plan-dump-{suffix}")
+    for name in names:
+        txt = explain(spark, name, sf)
+        (out_dir / f"{name}_{suffix}.txt").write_text(txt)
+        print(f"wrote {name}_{suffix}.txt ({len(txt)} bytes)")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--out", type=Path, help="directory for per-query files")
+    ap.add_argument("--suffix", help="file-name suffix, e.g. before|after")
+    ap.add_argument("queries", nargs="*", help="registered query names")
+    args = ap.parse_args()
+    inventory.load_all()
+    if not args.queries:
+        write_plans_md()
+    elif args.out is None or args.suffix is None:
+        ap.error("--out and --suffix are required with query names")
+    else:
+        write_plan_files(args.out, args.suffix, args.queries)
 
 
 if __name__ == "__main__":

@@ -330,11 +330,11 @@ def extract_tables(spark: SparkSession, query: str) -> list[str]:
         # identifiers ("name" / `name`).
         import re
 
-        from squirreling_spark.functions.sqldialect import _string_mask
+        from squirreling_spark.functions.sqldialect import _scan
 
         stripped = re.sub(r"--[^\n]*", " ", query)
         stripped = re.sub(r"/\*.*?\*/", " ", stripped, flags=re.S)
-        mask = _string_mask(stripped)
+        mask = _scan(stripped).mask
         pat = re.compile(
             r"(?:\bfrom|\bjoin)\s+"
             r"([A-Za-z_][\w.]*|\"[^\"]+\"|`[^`]+`)",
@@ -634,20 +634,14 @@ def _analyze(
             # a column reference inside FROM/JOIN UNNEST(...) is a
             # correlation the reference rejects with guidance
             # (execute.unnest tests, verbatim)
+            from squirreling_spark.functions.sqldialect import _scan
+
+            partner = _scan(orig_query).partner
             for um in _re.finditer(
                 r"\b(?:FROM|JOIN|,)\s*UNNEST\s*\(", orig_query, _re.I
             ):
-                open_idx = orig_query.index("(", um.end() - 1)
-                depth, j = 0, open_idx
-                while j < len(orig_query):
-                    if orig_query[j] == "(":
-                        depth += 1
-                    elif orig_query[j] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                span = orig_query[open_idx: j + 1]
+                # an unbalanced call (no partner) gives an empty span
+                span = orig_query[um.end() - 1 : partner[um.end() - 1] + 1]
                 if _re.search(
                     r"(?<![\w.])" + _re.escape(bad) + r"(?![\w.])", span
                 ):

@@ -37,10 +37,12 @@ dynamically-typed JS engine meets SQL):
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import re
 import threading
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -61,33 +63,144 @@ _JE_DISPATCH = (
 )
 
 
-def _string_mask(q: str) -> list[bool]:
-    """Per-character mask: True where the char sits inside a quoted region
-    ('...' with '' escapes, "..." identifiers, `...` identifiers)."""
-    mask = [False] * len(q)
-    i, n = 0, len(q)
-    while i < n:
-        ch = q[i]
-        if ch in ("'", '"', "`"):
-            j = i + 1
-            while j < n:
-                if q[j] == ch:
-                    if ch == "'" and j + 1 < n and q[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            for k in range(i, min(j + 1, n)):
-                mask[k] = True
-            i = j + 1
-        else:
-            i += 1
-    return mask
+class _Scan(NamedTuple):
+    """Quoting and bracket nesting of one SQL text (see ``_scan``)."""
+
+    mask: bytes  # mask[i] is 1 where char i sits inside a quoted region
+    depth: tuple[int, ...]  # depth[i]: brackets open just before char i
+    partner: tuple[int, ...]  # index of the matching bracket, or -1
+
+
+# A quoted region ('...' with '' escapes, "..." and `...` identifiers; an
+# unterminated one runs to the end of the text) or one bracket.
+_SCAN_RE = re.compile(r"'(?:[^']|'')*'?|\"[^\"]*\"?|`[^`]*`?|[()\[\]]")
+_OPENER = {")": "(", "]": "["}
+
+
+@functools.lru_cache(maxsize=64)
+def _scan(q: str) -> _Scan:
+    """The one quote- and bracket-aware pass over SQL text that every
+    text-level rewrite and check reads. Brackets are ``()`` and ``[]``
+    outside quoted regions; a closer pairs with the innermost open
+    bracket when that is of its kind. A closer that does not (a stray
+    or mismatched one) and an opener never closed get no partner, so
+    callers leave such text for Spark to report. ``depth`` has
+    ``len(q) + 1`` entries and counts only the open brackets on that
+    stack. Cached: rewrites scan the same text many times."""
+    n = len(q)
+    mask = bytearray(n)
+    depth = [0] * (n + 1)
+    partner = [-1] * n
+    stack: list[int] = []
+    filled = 0
+    for m in _SCAN_RE.finditer(q):
+        i, ch = m.start(), m.group()
+        if len(ch) > 1 or ch in "'\"`":
+            mask[i : m.end()] = b"\x01" * (m.end() - i)
+            continue
+        depth[filled : i + 1] = [len(stack)] * (i + 1 - filled)
+        filled = i + 1
+        if ch in "([":
+            stack.append(i)
+        elif stack and q[stack[-1]] == _OPENER[ch]:
+            partner[i] = stack.pop()
+            partner[partner[i]] = i
+    depth[filled:] = [len(stack)] * (n + 1 - filled)
+    return _Scan(bytes(mask), tuple(depth), tuple(partner))
+
+
+_CLOSER_RE = re.compile(r"[)\]]")
+
+
+def _stmt_end(q: str, start: int) -> int:
+    """Index where the statement containing ``start`` ends: the first
+    closer at/after ``start`` that no bracket opened at/after ``start``
+    matches (the enclosing subquery's close), else len(q)."""
+    s = _scan(q)
+    for m in _CLOSER_RE.finditer(q, start):
+        if not s.mask[m.start()] and s.partner[m.start()] < start:
+            return m.start()
+    return len(q)
+
+
+def _toplevel_kw(q: str, pattern: re.Pattern, start: int = 0) -> int:
+    """Start index of the first outside-string match of ``pattern`` at
+    the nesting depth of ``start`` and before the statement's end
+    (``_stmt_end``); -1 when absent."""
+    s = _scan(q)
+    end = _stmt_end(q, start)
+    m = pattern.search(q, start)
+    while m and m.start() < end:
+        i = m.start()
+        if not s.mask[i] and s.depth[i] == s.depth[start]:
+            return i
+        m = pattern.search(q, i + 1)
+    return -1
+
+
+def _top_commas(q: str, start: int = 0, end: int | None = None) -> list[int]:
+    """Outside-string commas in ``q[start:end]`` at the depth of
+    ``start``."""
+    s = _scan(q)
+    end = len(q) if end is None else end
+    out = []
+    i = q.find(",", start, end)
+    while i != -1:
+        if not s.mask[i] and s.depth[i] == s.depth[start]:
+            out.append(i)
+        i = q.find(",", i + 1, end)
+    return out
+
+
+def _split_top_args(s: str) -> list[str]:
+    """Split an argument list on top-level commas (string/bracket aware)."""
+    bounds = [-1, *_top_commas(s), len(s)]
+    return [s[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:])]
+
+
+def _balanced_arg(q: str, open_idx: int) -> int:
+    """Index just past the bracket matching the one at ``open_idx``."""
+    close = _scan(q).partner[open_idx]
+    if close < 0:
+        raise ValueError(
+            f"unbalanced SQL: no bracket closes {q[open_idx]!r} at "
+            f"position {open_idx}"
+        )
+    return close + 1
+
+
+_LITERAL_BRACKET_KEYWORDS = {
+    "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "IN", "AND", "OR", "NOT",
+    "ON", "BY", "HAVING", "RETURN", "AS", "FROM", "LIMIT", "OFFSET",
+    "DISTINCT", "ALL", "UNION", "EXCEPT", "INTERSECT", "CASE", "END",
+    "BETWEEN", "LIKE", "ILIKE", "IS", "NULL", "TRUE", "FALSE",
+}
+
+
+def _bracket_is_literal(q: str, i: int) -> bool:
+    """True when the ``[`` at ``i`` opens an array literal, False when it
+    subscripts the value before it (reference tokenize.js decides the
+    same way as for unary minus: after an identifier, number, string,
+    ``)`` or ``]`` a ``[`` is a subscript; after a keyword, an operator,
+    ``(``, ``,`` or at the start it is a literal)."""
+    j = i - 1
+    while j >= 0 and q[j].isspace():
+        j -= 1
+    if j < 0:
+        return True
+    if q[j] in ")]'\"`":
+        return False
+    k = j
+    while k >= 0 and (q[k].isalnum() or q[k] in "_$"):
+        k -= 1
+    if k == j:
+        return True  # an operator or punctuation before the bracket
+    return q[k + 1 : j + 1].upper() in _LITERAL_BRACKET_KEYWORDS
 
 
 def _sub_outside_strings(q: str, pattern: re.Pattern, repl) -> str:
     """re.sub that skips matches starting inside string literals."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     out, last = [], 0
     for m in pattern.finditer(q):
         if mask[m.start()]:
@@ -194,20 +307,9 @@ def _operand_left(q: str, i: int) -> tuple[int, int]:
     while start > 0:
         c = q[start - 1]
         if c in ")]":
-            opener = "(" if c == ")" else "["
-            depth = 0
-            k = start - 1
-            while k >= 0:
-                if q[k] == c:
-                    depth += 1
-                elif q[k] == opener:
-                    depth -= 1
-                    if depth == 0:
-                        break
-                k -= 1
-            if k < 0:
+            start = _scan(q).partner[start - 1]
+            if start < 0:
                 return -1, end
-            start = k
             # a function/array name may precede the group
             while start > 0 and (q[start - 1].isalnum() or q[start - 1] in "_$."):
                 start -= 1
@@ -246,7 +348,7 @@ def _rewrite_json_arrows(q: str) -> str:
     (the only spot a lambda param can sit) is skipped as a guard."""
     pos = 0
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = None
         for cand in _ARROW_RE.finditer(q, pos):
             if not mask[cand.start()]:
@@ -353,7 +455,7 @@ def _rewrite_tilde_ops(q: str) -> str:
     non-literal RHS is left untouched (clean Spark parse error rather
     than a mangled ``RLIKE *``). Unary ``~`` (bitwise NOT) is left for
     Spark: binary context requires a value token on the left."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     hits = []
     for m in _TILDE_RE.finditer(q):
         if mask[m.start()]:
@@ -396,50 +498,6 @@ def _rewrite_exclude(q: str) -> str:
     )
 
 
-def _toplevel_kw(q: str, pattern: re.Pattern, start: int = 0) -> int:
-    """Start index of the first paren-depth-0, outside-string match of
-    ``pattern`` at/after ``start``; -1 when absent. Scanning stops at an
-    unbalanced ``)`` (the end of an enclosing subquery)."""
-    mask = _string_mask(q)
-    depth = 0
-    i = start
-    while i < len(q):
-        if mask[i]:
-            i += 1
-            continue
-        c = q[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth < 0:
-                return -1
-        elif depth == 0:
-            m = pattern.match(q, i)
-            if m:
-                return i
-        i += 1
-    return -1
-
-
-def _stmt_end(q: str, start: int) -> int:
-    """Index where the statement containing ``start`` ends: the first
-    unbalanced ``)`` at/after start (enclosing-subquery close), else
-    len(q)."""
-    mask = _string_mask(q)
-    depth = 0
-    for i in range(start, len(q)):
-        if mask[i]:
-            continue
-        if q[i] == "(":
-            depth += 1
-        elif q[i] == ")":
-            depth -= 1
-            if depth < 0:
-                return i
-    return len(q)
-
-
 _DON_RE = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.I)
 _FROM_KW = re.compile(r"\bFROM\b", re.I)
 _ORDER_KW = re.compile(r"\bORDER\s+BY\b", re.I)
@@ -454,7 +512,7 @@ def _rewrite_distinct_on(q: str) -> str:
     and ORDER BY must resolve against the FROM relations (not select-list
     aliases), which covers the production queries in the wish-list."""
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next((c for c in _DON_RE.finditer(q) if not mask[c.start()]), None)
         if m is None:
             return q
@@ -510,22 +568,6 @@ def _rewrite_wishlist(q: str) -> str:
     if "DISTINCT" in up and re.search(r"\bDISTINCT\s+ON\b", q, re.I):
         q = _rewrite_distinct_on(q)
     return q
-
-
-def _balanced_arg(q: str, open_idx: int) -> int:
-    """Index just past the ')' matching the '(' at open_idx (string-aware)."""
-    mask = _string_mask(q)
-    depth = 0
-    for i in range(open_idx, len(q)):
-        if mask[i]:
-            continue
-        if q[i] == "(":
-            depth += 1
-        elif q[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise ValueError("unbalanced parentheses in JSON_EACH argument")
 
 
 _JE_RE = re.compile(r"\bJSON_EACH\s*\(", re.I)
@@ -672,7 +714,7 @@ def _rewrite_json_each_from(q: str, spark=None) -> str:
       table function).
     """
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = None
         for cand in _JE_RE.finditer(q):
             if not mask[cand.start()]:
@@ -738,72 +780,24 @@ def _rewrite_json_each_from(q: str, spark=None) -> str:
 # ---------------------------------------------------------------------------
 # Array literals: [1, 2, 3] → array(1, 2, 3)
 # ---------------------------------------------------------------------------
-# A '[' is a LITERAL when the preceding token cannot end a value
-# (reference tokenize.js distinguishes the same way it does unary minus:
-# after identifier / number / string / ')' / ']' a '[' is a subscript).
-
-_LITERAL_BRACKET_KEYWORDS = {
-    "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "IN", "AND", "OR", "NOT",
-    "ON", "BY", "HAVING", "RETURN", "AS", "FROM", "LIMIT", "OFFSET",
-    "DISTINCT", "ALL", "UNION", "EXCEPT", "INTERSECT", "CASE", "END",
-    "BETWEEN", "LIKE", "ILIKE", "IS", "NULL", "TRUE", "FALSE",
-}
-
 
 def _rewrite_array_literals(q: str) -> str:
-    """``[...]`` in literal position → ``array(...)``. Subscripts
-    (``arr[2]``, ``m[1][0]``) are untouched; nested literals rewrite in
-    the same scan because the replacement leaves '(' before the inner
-    bracket."""
-    while True:
-        mask = _string_mask(q)
-        target = None
-        for i, ch in enumerate(q):
-            if ch != "[" or mask[i]:
-                continue
-            # previous non-space unmasked char
-            j = i - 1
-            while j >= 0 and q[j] in " \t\r\n":
-                j -= 1
-            if j < 0:
-                target = i
-                break
-            prev = q[j]
-            if prev in ",(=<>+-*/%|&":
-                target = i
-                break
-            if prev in ")]'\"`" or prev.isdigit():
-                continue  # subscript on value/string/number
-            if prev.isalpha() or prev == "_":
-                # word before the bracket: keyword → literal, ident → sub
-                k = j
-                while k >= 0 and (q[k].isalnum() or q[k] == "_"):
-                    k -= 1
-                word = q[k + 1 : j + 1].upper()
-                if word in _LITERAL_BRACKET_KEYWORDS:
-                    target = i
-                    break
-                continue
-            target = i
-            break
-        if target is None:
-            return q
-        # find the matching ']' (string-aware, bracket-nesting)
-        depth = 0
-        end = None
-        for i in range(target, len(q)):
-            if mask[i]:
-                continue
-            if q[i] == "[":
-                depth += 1
-            elif q[i] == "]":
-                depth -= 1
-                if depth == 0:
-                    end = i
-                    break
-        if end is None:
-            return q  # unbalanced: let Spark report it
-        q = q[:target] + "array(" + q[target + 1 : end] + ")" + q[end + 1 :]
+    """``[...]`` in literal position → ``array(...)``, nested literals
+    included. Subscripts (``arr[2]``, ``m[1][0]``) and brackets without a
+    partner are untouched."""
+    s = _scan(q)
+    swap = {}
+    i = q.find("[")
+    while i != -1:
+        if not s.mask[i] and s.partner[i] >= 0 and _bracket_is_literal(q, i):
+            swap[i], swap[s.partner[i]] = "array(", ")"
+        i = q.find("[", i + 1)
+    out, last = [], 0
+    for i in sorted(swap):
+        out += [q[last:i], swap[i]]
+        last = i + 1
+    out.append(q[last:])
+    return "".join(out)
 
 
 # ---------------------------------------------------------------------------
@@ -838,7 +832,7 @@ def _rewrite_unnest_from(q: str, spark=None) -> str:
     """
     # lateral-join forms first (their FROM keyword must not re-match)
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (
                 c
@@ -905,7 +899,7 @@ def _rewrite_unnest_from(q: str, spark=None) -> str:
         if pred:
             # fold the ON predicate into WHERE (inner lateral semantics)
             wm = re.search(r"\bWHERE\b", q, re.I)
-            if wm and not _string_mask(q)[wm.start()]:
+            if wm and not _scan(q).mask[wm.start()]:
                 q = (
                     q[: wm.end()] + f" ({pred}) AND" + q[wm.end():]
                 )
@@ -920,7 +914,7 @@ def _rewrite_unnest_from(q: str, spark=None) -> str:
                 q = q[:at] + f" WHERE {pred} " + q[at:]
     # standalone FROM-position forms
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (c for c in _UNNEST_FROM_RE.finditer(q) if not mask[c.start()]),
             None,
@@ -1020,30 +1014,12 @@ _DATE_PART_RE = re.compile(
 )
 
 
-def _split_top_args(s: str) -> list[str]:
-    """Split an argument list on top-level commas (string/paren aware)."""
-    mask = _string_mask(s)
-    out, depth, last = [], 0, 0
-    for i, ch in enumerate(s):
-        if mask[i]:
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(s[last:i])
-            last = i + 1
-    out.append(s[last:])
-    return [a.strip() for a in out]
-
-
 def _rewrite_date_dialect(q: str) -> str:
     """DATE_DIFF/DATEDIFF('unit', a, b), EXTRACT(DOW|EPOCH|SECOND ...),
     DATE_PART('dow'|'epoch'|'second', x), EPOCH(x) → reference semantics
     (integer seconds, JS getUTCDay() DOW, fractional epoch)."""
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (c for c in _DATE_DIFF_RE.finditer(q) if not mask[c.start()]),
             None,
@@ -1065,7 +1041,7 @@ def _rewrite_date_dialect(q: str) -> str:
         )
     # EXTRACT variants — rewrite the whole call
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (c for c in _EXTRACT_RE.finditer(q) if not mask[c.start()]),
             None,
@@ -1079,7 +1055,7 @@ def _rewrite_date_dialect(q: str) -> str:
         expr = inner[inner.upper().index("FROM") + 4 :].strip()
         q = q[: m.start()] + _extract_sql(field, expr) + q[arg_end:]
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (c for c in _DATE_PART_RE.finditer(q) if not mask[c.start()]),
             None,
@@ -1131,7 +1107,7 @@ def _rewrite_orderless_windows(q: str) -> str:
     ``ORDER BY monotonically_increasing_id()`` (reference: rows number in
     input order when no ORDER BY is given)."""
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         target = None
         for m in re.finditer(r"\bOVER\s*\(", q, re.I):
             if mask[m.start()]:
@@ -1161,7 +1137,7 @@ _NK_AGG_RE = re.compile(r"\b(ARRAY_AGG|JSON_ARRAYAGG)\s*\(", re.I)
 
 
 def _rewrite_null_keeping_aggs(q: str) -> str:
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     starts = [
         (m.start(), m.group(1).upper())
         for m in _NK_AGG_RE.finditer(q)
@@ -1207,7 +1183,7 @@ def _rewrite_wrap_call(q: str, pattern: re.Pattern, build) -> str:
     RIGHT-TO-LEFT so a replacement that itself contains the pattern (e.g.
     ARRAY_POSITION → nullif(array_position(...))) is never rescanned —
     left-of-match offsets stay valid throughout."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     starts = [m.start() for m in pattern.finditer(q) if not mask[m.start()]]
     for start in reversed(starts):
         open_idx = q.index("(", start)
@@ -1245,7 +1221,6 @@ _OB_ITEM_RE = re.compile(
     r"(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?\s*$",
     re.I,
 )
-_OB_STOP_KW = re.compile(r"(?i)^(LIMIT|OFFSET|UNION|EXCEPT|INTERSECT)\b")
 
 
 def _rewrite_dynamic_orderby(q: str, spark) -> str:
@@ -1254,32 +1229,16 @@ def _rewrite_dynamic_orderby(q: str, spark) -> str:
     dynamic comparator is the JS ``<`` operator, which coerces the
     string '5' to the number 5 against numeric members
     (execute.orderby.test.js 'should sort mixed types')."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     out = q
     for m in reversed(list(re.finditer(r"(?i)\bORDER\s+BY\s+", q))):
         if mask[m.start()]:
             continue
-        # span of the ORDER BY item list: to LIMIT/OFFSET/set-op at the
-        # same depth, a closing paren beneath depth 0, or end of string
-        i, depth = m.end(), 0
-        item_start, items = i, []
-        while i <= len(q):
-            ch = q[i] if i < len(q) else ")"
-            if i == len(q) or (ch == ")" and depth == 0):
-                items.append((item_start, i))
-                break
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                items.append((item_start, i))
-                item_start = i + 1
-            elif depth == 0 and not mask[i] and _OB_STOP_KW.match(q, i) \
-                    and (i == 0 or not (q[i - 1].isalnum() or q[i - 1] == "_")):
-                items.append((item_start, i))
-                break
-            i += 1
+        # the item list runs to the end of the statement, so a trailing
+        # LIMIT/OFFSET stays in the last item (which then is no bare ref)
+        end = _stmt_end(q, m.end())
+        cuts = [m.end() - 1, *_top_commas(q, m.end(), end), end]
+        items = [(a + 1, e) for a, e in zip(cuts, cuts[1:])]
         for s, e in reversed(items):
             im = _OB_ITEM_RE.match(q[s:e].strip())
             if im is None:
@@ -1304,7 +1263,7 @@ def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
     → JS truthiness over the JSON text: null/false/0/'' are falsy, any
     JSON string (even '"0"') is truthy, numbers by ≠ 0
     (execute.test.js 'should handle falsy values in WHERE clause')."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     out = q
     for m in reversed(list(_WHERE_BARE_RE.finditer(q))):
         if mask[m.start()]:
@@ -1345,7 +1304,7 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
 
         return build
 
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     starts = [
         (m.start(), m.group(0)) for m in _ARR_FAMILY_RE.finditer(q)
         if not mask[m.start()]
@@ -1541,7 +1500,7 @@ def _rewrite_concat_precedence(q: str) -> str:
     if "||" not in q:
         return q
     # Recurse into every top-level paren group.
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     i = 0
     while i < len(q):
         if q[i] == "(" and not mask[i]:
@@ -1550,7 +1509,7 @@ def _rewrite_concat_precedence(q: str) -> str:
             new_inner = _rewrite_concat_precedence(inner)
             if new_inner != inner:
                 q = q[: i + 1] + new_inner + q[j - 1 :]
-                mask = _string_mask(q)
+                mask = _scan(q).mask
                 j = i + 1 + len(new_inner) + 1
             i = j
         else:
@@ -1678,7 +1637,7 @@ def _rewrite_correlated_unnest_count(q: str) -> str:
     matching the documented limitation)."""
     pos = 0
     while True:
-        mask = _string_mask(q)
+        mask = _scan(q).mask
         m = next(
             (c for c in _CORR_COUNT_RE.finditer(q, pos) if not mask[c.start()]),
             None,
@@ -1722,7 +1681,7 @@ def _rewrite_dynamic_access(q: str, spark=None) -> str:
     object key → null). Unresolvable bases pass through unchanged."""
     from pyspark.sql import types as T
 
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     matches = [
         m for m in _SUBSCRIPT_RE.finditer(q) if not mask[m.start()]
     ]
@@ -1736,21 +1695,11 @@ def _rewrite_dynamic_access(q: str, spark=None) -> str:
         null_out = False
         while True:
             if end < len(q) and q[end] == "[":
-                open_br = end
-                depth = 0
-                j = end
-                while j < len(q):
-                    if q[j] == "[":
-                        depth += 1
-                    elif q[j] == "]":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                if depth != 0:
+                close = _scan(q).partner[end]
+                if close < 0:
                     break  # unbalanced — leave it to Spark
-                inner = q[open_br + 1 : j].strip()
-                end = j + 1
+                inner = q[end + 1 : close].strip()
+                end = close + 1
                 if isinstance(dt, T.ArrayType):
                     dt = dt.elementType
                 elif isinstance(dt, T.MapType):
@@ -2375,7 +2324,7 @@ def _derived_alias(item: str) -> str | None:
 def _collapse_dots(item: str) -> str:
     """`t.c` → `c` for naming purposes (identifier rule uses the column
     name); applied to qualified refs outside strings."""
-    mask = _string_mask(item)
+    mask = _scan(item).mask
     out, last = [], 0
     for m in re.finditer(
         r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)+", item
@@ -2400,7 +2349,7 @@ def loosen_group_by(q: str, spark=None) -> str | None:
     engine retries with this ONLY after Spark raises MISSING_AGGREGATION,
     so strict queries keep strict errors."""
     gm = re.search(r"\bGROUP\s+BY\b", q, re.I)
-    if gm and not _string_mask(q)[gm.start()]:
+    if gm and not _scan(q).mask[gm.start()]:
         # group-by keys: up to the next top-level clause keyword
         tail = q[gm.end():]
         km = re.search(
@@ -2419,7 +2368,7 @@ def loosen_group_by(q: str, spark=None) -> str | None:
         # one group, every bare column takes its first value
         keys = set()
     m = _SELECT_HEAD_RE.search(q)
-    if not m or _string_mask(q)[m.start()]:
+    if not m or _scan(q).mask[m.start()]:
         return None
     start = m.end()
     fm = re.search(r"\bFROM\b", q[start:], re.I)
@@ -2497,7 +2446,7 @@ def inline_select_aliases(q: str) -> str | None:
       ``any_value`` (same convention as ``loosen_group_by``).
 
     Returns None when nothing applies."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     m = _SELECT_HEAD_RE.search(q)
     if not m or mask[m.start()]:
         return None
@@ -2588,33 +2537,15 @@ def inline_select_aliases(q: str) -> str | None:
 
 def _rewrite_auto_alias(q: str) -> str:
     """Append reference-style aliases to unaliased top-level select items."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     m = _SELECT_HEAD_RE.search(q)
     if not m or mask[m.start()]:
         return q
-    # find the end of the select list: top-level FROM or end of string
-    depth = 0
+    # the select list ends at its FROM or at the end of the statement
     start = m.end()
-    end = len(q)
-    i = start
-    while i < len(q):
-        if mask[i]:
-            i += 1
-            continue
-        ch = q[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                end = i
-                break
-        elif depth == 0 and re.match(r"\bFROM\b", q[i:], re.I) and (
-            i == 0 or not (q[i - 1].isalnum() or q[i - 1] == "_")
-        ):
-            end = i
-            break
-        i += 1
+    end = _toplevel_kw(q, _FROM_KW, start)
+    if end == -1:
+        end = _stmt_end(q, start)
     items = _split_top_args(q[start:end])
     changed = False
     new_items = []
@@ -2675,7 +2606,7 @@ def _rewrite_positional_join(
     (`operators/positional_join._with_rn` — parallel range numbering, no
     single-task WindowExec). ``SELECT *`` is expanded to the explicit
     column list so the internal row-number column stays hidden."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     m = _POS_RE.search(q)
     while m and mask[m.start()]:
         m = _POS_RE.search(q, m.end())
@@ -2703,7 +2634,7 @@ def _rewrite_positional_join(
     q = q[: m.start()] + frag + q[m.end() :]
     # Expand a bare SELECT * (the rn columns must not leak into it).
     star = _STAR_RE.search(q)
-    if star and not _string_mask(q)[star.start()]:
+    if star and not _scan(q).mask[star.start()]:
         cols = ", ".join(
             [f"{la}.{c}" for c in lsrc.columns]
             + [f"{ra}.{c}" for c in rsrc.columns]

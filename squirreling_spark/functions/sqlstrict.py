@@ -33,8 +33,9 @@ import re
 
 from .sqldialect import (
     _balanced_arg,
+    _bracket_is_literal,
+    _scan,
     _split_top_args,
-    _string_mask,
     _sub_outside_strings,
 )
 
@@ -241,7 +242,7 @@ def _validate_known_tables(q: str, tables) -> None:
     catalog-backed sessions resolve names Spark-side."""
     if not tables:
         return
-    mask = _string_mask(q)
+    mask, _, partner = _scan(q)
     known = {t.lower() for t in tables}
     known |= _cte_names(q, mask)
     # FROM is also a keyword inside EXTRACT/TRIM/SUBSTRING/POSITION/
@@ -254,12 +255,8 @@ def _validate_known_tables(q: str, tables) -> None:
     ):
         if mask[cm.start()]:
             continue
-        open_idx = q.index("(", cm.end() - 1)
-        try:
-            end = _balanced_arg(q, open_idx)
-        except Exception:  # noqa: BLE001 — unbalanced: Spark will error
-            continue
-        for i in range(cm.start(), end):
+        # an unbalanced call (no partner) masks nothing
+        for i in range(cm.start(), partner[cm.end() - 1] + 1):
             call_mask[i] = 1
     for m in re.finditer(
         r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)(?![\w.])", q, re.I
@@ -288,25 +285,23 @@ def _literal_int(arg: str) -> int | None:
 
 
 def _iter_calls(q: str):
-    """Yield (name_upper, start, args) for every call outside strings."""
-    mask = _string_mask(q)
+    """Yield (name_upper, start, args, end) for every call outside
+    strings whose parenthesis closes; ``end`` is the index just past
+    it, for validating call suffixes (WITHIN GROUP / FILTER)."""
+    partner = _scan(q).partner
     for m in _CALL_RE.finditer(q):
-        if mask[m.start()]:
-            continue
-        open_idx = q.index("(", m.end() - 1)
-        try:
-            arg_end = _balanced_arg(q, open_idx)
-        except Exception:  # noqa: BLE001 — unbalanced: Spark will error
-            continue
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
+        close = partner[m.end() - 1]
+        if close < 0:
+            continue  # quoted, or unbalanced: Spark will error
+        args = _split_top_args(q[m.end() : close])
         if args == [""]:
             args = []
-        yield m.group(1).upper(), m.start(), args
+        yield m.group(1).upper(), m.start(), args, close + 1
 
 
 def _validate_arity(q: str, functions) -> None:
     udf_names = {k.upper() for k in (functions or {})}
-    for name, pos, args in _iter_calls(q):
+    for name, pos, args, _ in _iter_calls(q):
         if name in udf_names:
             continue  # UDF arity is the registration's concern
         spec = FUNCTION_SIGNATURES.get(name)
@@ -349,7 +344,7 @@ def _validate_arity(q: str, functions) -> None:
 
 def _validate_literal_args(q: str) -> None:
     """Statically-visible invalid literal arguments (strings.js checks)."""
-    for name, pos, args in _iter_calls(q):
+    for name, pos, args, _ in _iter_calls(q):
         if name in ("SUBSTRING", "SUBSTR") and len(args) >= 2:
             # reference message shapes: strings.js, asserted verbatim by
             # execute.errors.test.js
@@ -455,7 +450,7 @@ def _validate_string_arg_types(q: str, spark) -> None:
         T.DecimalType, T.ShortType, T.DateType, T.TimestampType,
         T.BooleanType,
     )
-    for name, pos, args in _iter_calls(q):
+    for name, pos, args, _ in _iter_calls(q):
         if name not in ("LENGTH", "OCTET_LENGTH") or len(args) != 1:
             continue
         dt = _ref_dtype(spark, args[0].strip())
@@ -482,7 +477,7 @@ def _validate_string_arg_types(q: str, spark) -> None:
 
 
 def _validate_cast_targets(q: str) -> None:
-    for name, pos, args in _iter_calls(q):
+    for name, pos, args, _ in _iter_calls(q):
         if name != "CAST" or len(args) != 1:
             continue
         m = re.search(r"\sAS\s+([A-Za-z]+)\s*$", args[0], re.I)
@@ -495,7 +490,7 @@ def _validate_cast_targets(q: str) -> None:
 
 
 def _validate_intervals(q: str) -> None:
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     for m in re.finditer(r"\bINTERVAL\b", q, re.I):
         if mask[m.start()]:
             continue
@@ -529,7 +524,7 @@ def _validate_order_by_star(q: str) -> None:
     """ORDER BY <n> where select item n is ``*`` (reference resolves
     positional ORDER BY against the select list; * has no single
     value)."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     m = re.search(r"\bORDER\s+BY\s+", q, re.I)
     if not m or mask[m.start()]:
         return
@@ -575,7 +570,7 @@ def _visible_tables(q: str, tables) -> list[str]:
     """FROM/JOIN names as the query sees them — an alias REPLACES its
     base name (reference + Spark both hide the original). Falls back to
     the table-map keys when no FROM target parses."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     vis: list[str] = []
     for m in _FROM_ITEM_RE.finditer(q):
         if mask[m.start()]:
@@ -596,7 +591,7 @@ def _from_scope(q: str, tables) -> set[str]:
     with an alias is HIDDEN (both the reference and Spark reject
     ``FROM users u ... users.id``)."""
     scope = {t for t in (tables or {})}
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     aliased_bases: set[str] = set()
     unaliased: set[str] = set()
     for m in _FROM_ITEM_RE.finditer(q):
@@ -654,7 +649,7 @@ def _validate_dotted_from(q: str) -> None:
     the reference has no schemas, so ``FROM dataset.parquet`` never
     resolves unquoted even when 'dataset.parquet' is a flat table-map
     key (execute.dot tests). Static — needs no session."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     for m in re.finditer(
         r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*\.[A-Za-z_]\w*)", q, re.I
     ):
@@ -675,7 +670,7 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
 
     from .sqldialect import _ref_dtype
 
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     scope = _from_scope(q, tables)
     # double-dotted chains a.b.c: the reference parser stops at the second
     # dot — 'Unexpected "." in "b.c"' (execute.dot tests) — unless the
@@ -716,7 +711,7 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
 
 
 def _validate_joins(q: str, tables) -> None:
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     table_names = set(tables or {})
     # comma-FROM with a regular table
     fm = re.search(r"\bFROM\s+[A-Za-z_]\w*(?:\s+\w+)?\s*,\s*([A-Za-z_]\w*)",
@@ -735,7 +730,7 @@ def _validate_joins(q: str, tables) -> None:
 
 
 def _validate_lateral(q: str) -> None:
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     for m in re.finditer(r"\bLATERAL\s+(?!VIEW\b)(\w+)", q, re.I):
         if mask[m.start()]:
             continue
@@ -785,7 +780,7 @@ def _validate_table_functions(q: str) -> None:
     """UNNEST/EXPLODE/JSON_EACH are table functions: FROM-position only
     (reference parse — 'X is a table function and can only be used in
     FROM clauses')."""
-    mask = _string_mask(q)
+    mask, _, partner = _scan(q)
     for m in re.finditer(r"\b(UNNEST|EXPLODE|JSON_EACH)\s*\(", q, re.I):
         if mask[m.start()]:
             continue
@@ -806,13 +801,12 @@ def _validate_table_functions(q: str) -> None:
     ):
         if mask[m.start()]:
             continue
-        open_idx = q.index("(", m.end() - 1)
-        try:
-            end = _balanced_arg(q, open_idx)
-        except Exception:  # noqa: BLE001 — unbalanced: Spark will error
-            continue
+        close = partner[m.end() - 1]
+        if close < 0:
+            continue  # unbalanced: Spark will error
         am = re.match(
-            r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q[end:], re.I
+            r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q[close + 1 :],
+            re.I,
         )
         if not am:
             continue
@@ -834,7 +828,7 @@ def _validate_unnest_alias_select(q: str, tables=None) -> None:
     bare ``u`` is an unknown column in the reference
     (execute.unnest.test.js:402-411); the error lists the qualified
     columns in scope."""
-    mask = _string_mask(q)
+    mask = _scan(q).mask
     aliases = []
     for m in re.finditer(
         r"\b(?:UNNEST|EXPLODE)\s*\([^)]*\)\s*(?:AS\s+)?([A-Za-z_]\w*)"
@@ -887,29 +881,11 @@ _AGGREGATE_FUNCS = {
 }
 
 
-def _iter_calls_span(q: str):
-    """Like _iter_calls but also yields the index just past the closing
-    paren, for validating call SUFFIXES (WITHIN GROUP / FILTER)."""
-    mask = _string_mask(q)
-    for m in _CALL_RE.finditer(q):
-        if mask[m.start()]:
-            continue
-        open_idx = q.index("(", m.end() - 1)
-        try:
-            arg_end = _balanced_arg(q, open_idx)
-        except Exception:  # noqa: BLE001 — unbalanced: Spark will error
-            continue
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
-        if args == [""]:
-            args = []
-        yield m.group(1).upper(), m.start(), args, arg_end
-
-
 def _validate_aggregate_modifiers(q: str) -> None:
     """WITHIN GROUP is PERCENTILE_CONT-only (and excludes the positional
     value-argument form); FILTER attaches to aggregates only — reference
     validation messages asserted verbatim by execute.aggregate tests."""
-    for name, pos, args, end in _iter_calls_span(q):
+    for name, pos, args, end in _iter_calls(q):
         tail = q[end:]
         if re.match(r"\s*WITHIN\s+GROUP\b", tail, re.I):
             if name != "PERCENTILE_CONT":
@@ -933,21 +909,11 @@ def _validate_aggregate_modifiers(q: str) -> None:
 
 
 def _validate_window_groupby(q: str) -> None:
-    mask = _string_mask(q)
-
-    def depth_at(idx: int) -> int:
-        d = 0
-        for i in range(idx):
-            if not mask[i]:
-                if q[i] == "(":
-                    d += 1
-                elif q[i] == ")":
-                    d -= 1
-        return d
+    mask, depth, partner = _scan(q)
 
     def depth0(pat):
         for m in re.finditer(pat, q, re.I):
-            if not mask[m.start()] and depth_at(m.start()) == 0:
+            if not mask[m.start()] and depth[m.start()] == 0:
                 return True
         return False
 
@@ -957,12 +923,10 @@ def _validate_window_groupby(q: str) -> None:
     ):
         if mask[m.start()]:
             continue
-        open_idx = q.index("(", m.end() - 1)
-        try:
-            end = _balanced_arg(q, open_idx)
-        except Exception:  # noqa: BLE001
-            continue
-        if not re.match(r"\s*OVER\b", q[end:], re.I):
+        close = partner[m.end() - 1]
+        if close < 0:
+            continue  # unbalanced: Spark will error
+        if not re.match(r"\s*OVER\b", q[close + 1 :], re.I):
             raise StrictDialectError(
                 f"{m.group(1).upper()}() requires an OVER clause at "
                 f"position {m.start()}"
@@ -971,9 +935,7 @@ def _validate_window_groupby(q: str) -> None:
         # window call is rejected with the function named (reference)
         wm = None
         for w in re.finditer(r"\bWHERE\b", q[: m.start()], re.I):
-            if not mask[w.start()] and depth_at(w.start()) == depth_at(
-                m.start()
-            ):
+            if not mask[w.start()] and depth[w.start()] == depth[m.start()]:
                 wm = w
         if wm is not None and not re.search(
             r"\b(?:GROUP\s+BY|ORDER\s+BY|HAVING|SELECT)\b",
@@ -994,22 +956,13 @@ def _validate_setop_names(q: str) -> None:
     """Set-operation branches must agree on output column NAMES
     (execute.union tests). Checked only when every branch's select-list
     names are statically derivable."""
-    mask = _string_mask(q)
+    mask, depth, _ = _scan(q)
     parts = []
     last = 0
     for m in re.finditer(
         r"\b(UNION|EXCEPT|INTERSECT)(\s+ALL|\s+DISTINCT)?\b", q, re.I
     ):
-        if mask[m.start()]:
-            continue
-        d = 0
-        for i in range(m.start()):
-            if not mask[i]:
-                if q[i] == "(":
-                    d += 1
-                elif q[i] == ")":
-                    d -= 1
-        if d == 0:
+        if not mask[m.start()] and depth[m.start()] == 0:
             parts.append(q[last : m.start()])
             last = m.end()
     if not parts:
@@ -1048,29 +1001,13 @@ def _validate_setop_names(q: str) -> None:
 def _validate_array_literals(q: str) -> None:
     """Reference array literals hold LITERAL elements only
     (execute.unnest 'should reject non-literal elements')."""
-    from .sqldialect import _LITERAL_BRACKET_KEYWORDS
-
-    mask = _string_mask(q)
+    mask, _, partner = _scan(q)
     for i, ch in enumerate(q):
-        if ch != "[" or mask[i]:
+        if ch != "[" or mask[i] or not _bracket_is_literal(q, i):
             continue
-        before = q[:i].rstrip()
-        if before and (
-            before[-1] in ")]'\"`" or re.search(r"[\w$]$", before)
-            and re.search(r"([A-Za-z_]\w*)$", before).group(1).upper()
-            not in _LITERAL_BRACKET_KEYWORDS
-        ):
-            continue  # subscript, not a literal
-        depth = 0
-        j = i
-        while j < len(q):
-            if q[j] == "[" and not mask[j]:
-                depth += 1
-            elif q[j] == "]" and not mask[j]:
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = partner[i]
+        if j < 0:
+            continue  # unbalanced: Spark will error
         body = q[i + 1 : j]
         # strip nested brackets and strings, then any identifier left
         # (except TRUE/FALSE/NULL) is a non-literal element

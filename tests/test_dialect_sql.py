@@ -7,7 +7,10 @@ src/expression/binary.js:57-66 (case-insensitive LIKE)."""
 import pytest
 
 from squirreling_spark.engine import execute_sql
-from squirreling_spark.functions.sqldialect import rewrite_reference_sql
+from squirreling_spark.functions.sqldialect import (
+    _scan,
+    rewrite_reference_sql,
+)
 
 TABLE_A = [
     {"id": 1, "name": "Alice"},
@@ -226,6 +229,34 @@ def test_like_ci_does_not_touch_literals(spark):
 # ---------------------------------------------------------------------------
 # Rewriter unit behavior
 # ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "text, pairs, depth",
+    [
+        # '' escapes stay inside the literal
+        ("f('a''(', x)", [(1, 11)], "00" + "1" * 10 + "0"),
+        # brackets inside "..." and `...` identifiers are quoted
+        ('f("(", `]`)[0]', [(1, 10), (11, 13)], "00" + "1" * 9 + "0110"),
+        ("[(a[1])]", [(0, 7), (1, 6), (3, 5)], "012233210"),
+        # mismatched: ']' cannot close '('
+        ("f(a]", [], "00111"),
+        # unbalanced: a stray closer, an opener never closed
+        ("x) + (y", [], "00000011"),
+        ("[1, (2", [], "0111122"),
+    ],
+)
+def test_scan_partners_and_depths(text, pairs, depth):
+    s = _scan(text)
+    want = [-1] * len(text)
+    for a, b in pairs:
+        want[a], want[b] = b, a
+    assert list(s.partner) == want
+    assert "".join(map(str, s.depth)) == depth
+    if not pairs:
+        # no partner: the rewrite leaves the text for Spark to report
+        q = f"SELECT {text} FROM t"
+        assert rewrite_reference_sql(q) == q
 
 
 def test_rewrite_noop_on_plain_sql(spark):

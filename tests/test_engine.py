@@ -274,6 +274,24 @@ def test_dynamic_order_by_numeric_coercion(spark):
     assert [r["value"] for r in rows] == ['"5"', "10", "15", "20"]
 
 
+@pytest.mark.parametrize(
+    "order_by",
+    ["v", "concat('(', 'x'), v", "concat(')', 'x'), v"],
+)
+def test_dynamic_order_by_item_after_quoted_paren(spark, order_by):
+    # a bracket inside a string literal must not hide the later dynamic
+    # item from the numeric coercion: "x" is NULL (first), then 9, 10, 100
+    rows = execute_sql(
+        spark,
+        f"SELECT id FROM data ORDER BY {order_by}",
+        tables={"data": [
+            {"id": 1, "v": 10}, {"id": 2, "v": 9},
+            {"id": 3, "v": "x"}, {"id": 4, "v": 100},
+        ]},
+    ).collect()
+    assert [r["id"] for r in rows] == [3, 2, 1, 4]
+
+
 def test_dynamic_where_truthiness(spark):
     rows = execute_sql(
         spark,

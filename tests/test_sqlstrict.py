@@ -9,6 +9,7 @@ error cases are additionally replayed by the conformance harness
 (execute.errors.test.js floor in tests/test_ref_conformance.py)."""
 import pytest
 
+from squirreling_spark.engine import execute_sql
 from squirreling_spark.functions.sqlstrict import (
     StrictDialectError,
     strict_guards,
@@ -177,6 +178,21 @@ def test_setop_name_agreement():
 def test_array_literal_elements():
     _rejects("SELECT [x + 1] AS arr FROM singleRow")
     _accepts("SELECT [1, 2, 3] AS arr FROM singleRow")
+
+
+@pytest.mark.parametrize(
+    "q", ["SELECT 1[0] FROM t", "SELECT a FROM t WHERE x$[0] = 1"]
+)
+def test_subscript_after_number_or_dollar(spark, q):
+    # a '[' after a number or a '$' identifier is a subscript: strict mode
+    # raises what the loose mode raises
+    tables = {"t": [{"a": 1, "x": 2}]}
+    with pytest.raises(Exception) as loose:
+        execute_sql(spark, q, tables=tables).collect()
+    with pytest.raises(Exception) as strict:
+        execute_sql(spark, q, tables=tables, strict=True).collect()
+    assert not isinstance(strict.value, AttributeError)
+    assert type(strict.value) is type(loose.value)
 
 
 def test_dotted_from_table_requires_quotes():

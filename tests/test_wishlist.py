@@ -132,6 +132,18 @@ def test_arrows_execute(spark):
     assert [r["b0"] for r in rows] == ["5", "1", None]
 
 
+def test_arrow_operand_with_quoted_paren(spark):
+    # the ')' inside the fallback literal is quoted: the operand is the
+    # whole call (the literal is valid JSON, or JSON_VALUE would raise)
+    rows = execute_sql(
+        spark,
+        "SELECT id, coalesce(j, '{\"b\": \")\"}') ->> 'a' AS a FROM t "
+        "ORDER BY id",
+        tables={"t": [{"id": 1, "j": '{"a": 7}'}, {"id": 2, "j": None}]},
+    ).collect()
+    assert rows == [{"id": 1, "a": "7"}, {"id": 2, "a": None}]
+
+
 def test_distinct_on_execute(spark):
     rows = run(
         spark,
