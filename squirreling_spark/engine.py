@@ -19,6 +19,7 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
+import re
 import threading
 import uuid
 from collections.abc import Iterator
@@ -60,6 +61,18 @@ class ColumnNotFoundError(QueryError):
 class UnknownFunctionError(QueryError):
     """Raised with a did-you-mean suggestion (reference
     src/validation/parseErrors.js:105-178)."""
+
+
+def _unquote(name: str) -> str:
+    """A Spark message parameter's quoted name (`` `t`.`c` ``) as
+    ``t.c``."""
+    return name.strip("`").replace("`.`", ".")
+
+
+def _type_name(sql_type: str) -> str:
+    """Leading type word of a Spark message parameter's quoted SQL type
+    (``"STRUCT<a: INT>"`` → ``STRUCT``)."""
+    return re.match(r'"?([A-Z_]*)', sql_type).group(1)
 
 
 def _position_of(exc: Exception, query: str) -> dict | None:
@@ -328,8 +341,6 @@ def extract_tables(spark: SparkSession, query: str) -> list[str]:
         # plan walk above doesn't reach): strip comments first so keywords
         # inside them can't match, skip string literals, and honor quoted
         # identifiers ("name" / `name`).
-        import re
-
         from squirreling_spark.functions.sqldialect import _scan
 
         stripped = re.sub(r"--[^\n]*", " ", query)
@@ -471,21 +482,19 @@ def execute_sql(
         # register under a safe name; the query text is rewritten to match
         # in quoted ("..."/`...`) and bare FROM/JOIN positions.
         import hashlib
-        import re as _re
-
         renames = {
             name: "__sq_tbl_" + hashlib.md5(name.encode()).hexdigest()[:10]
             for name in tables
-            if not _re.fullmatch(r"[A-Za-z_]\w*", name)
+            if not re.fullmatch(r"[A-Za-z_]\w*", name)
         }
         if renames:
             tables = {renames.get(k, k): v for k, v in tables.items()}
             for orig, safe in renames.items():
                 for pat in (f'"{orig}"', f"`{orig}`"):
                     query = query.replace(pat, safe)
-                query = _re.sub(
+                query = re.sub(
                     r"(\bFROM\s+|\bJOIN\s+|,\s*)"
-                    + _re.escape(orig)
+                    + re.escape(orig)
                     + r"(?=[\s,)]|$)",
                     lambda m: m.group(1) + safe,
                     query,
@@ -538,9 +547,15 @@ def _analyze(
         df = spark.sql(query)
     except Exception as exc:
         msg = str(exc)
+        # Dispatch on Spark's error condition (``A.B``) and read names from
+        # its message parameters: the message text also embeds the
+        # analyzed plan, literals included.
+        cond = getattr(exc, "getCondition", lambda: None)() or ""
+        cond = set(cond.split("."))
+        params = getattr(exc, "getMessageParameters", lambda: None)() or {}
         # Reference-style loose GROUP BY: retry once with non-aggregated
         # bare select columns wrapped in any_value (sqldialect.loosen_group_by)
-        if "MISSING_AGGREGATION" in msg or "MISSING_GROUP_BY" in msg:
+        if cond & {"MISSING_AGGREGATION", "MISSING_GROUP_BY"}:
             from squirreling_spark.functions.sqldialect import loosen_group_by
 
             loose = loosen_group_by(query, spark=spark)
@@ -555,10 +570,7 @@ def _analyze(
         # chained select alias (lateral-column-alias) and select aliases
         # nested inside ORDER BY aggregates. Retry with the aliases
         # inlined (sqldialect.inline_select_aliases).
-        if (
-            "LATERAL_COLUMN_ALIAS_IN_GROUP_BY" in msg
-            or "MISSING_ATTRIBUTES" in msg
-        ):
+        if cond & {"LATERAL_COLUMN_ALIAS_IN_GROUP_BY", "MISSING_ATTRIBUTES"}:
             from squirreling_spark.functions.sqldialect import (
                 inline_select_aliases,
             )
@@ -576,40 +588,33 @@ def _analyze(
         # (reference test/execute/execute.dot.test.js). Spark resolves
         # table.column only — when that fails and the suggestion list
         # shows the flat name exists, retry with the ref backtick-quoted.
-        if "UNRESOLVED_COLUMN" in msg:
-            import re as _re
-
-            um = _re.search(r"name `((?:[^`]+`\.`)*[^`]+)` cannot", msg)
-            if um:
-                dotted = um.group(1).replace("`.`", ".")
-                if "." in dotted and f"`{dotted}`" in msg:
-                    retry = _re.sub(
-                        r"(?<![`\w])" + _re.escape(dotted) + r"(?![`\w])",
-                        f"`{dotted}`",
-                        query,
-                    )
-                    if retry != query:
-                        try:
-                            return QueryResult(
-                                spark.sql(retry), job_group, _spark=spark
-                            )
-                        except Exception:  # noqa: BLE001
-                            pass
+        if "UNRESOLVED_COLUMN" in cond:
+            dotted = _unquote(params.get("objectName", ""))
+            if "." in dotted and f"`{dotted}`" in params.get("proposal", ""):
+                retry = re.sub(
+                    r"(?<![`\w])" + re.escape(dotted) + r"(?![`\w])",
+                    f"`{dotted}`",
+                    query,
+                )
+                if retry != query:
+                    try:
+                        return QueryResult(
+                            spark.sql(retry), job_group, _spark=spark
+                        )
+                    except Exception:  # noqa: BLE001
+                        pass
         first = msg.splitlines()[0]
         pos = _position_of(exc, query)
         # Reference-shaped structured errors (validation/tables.js:166-211,
         # validation/parseErrors.js:105-178): Table/Column not found carry
         # the available-name lists; unknown functions carry did-you-mean
         # suggestions ranked by prefix + edit distance.
-        if "TABLE_OR_VIEW_NOT_FOUND" in msg:
-            import re as _re
-
+        if "TABLE_OR_VIEW_NOT_FOUND" in cond:
             from squirreling_spark.functions.sqldialect import (
                 session_temp_views,
             )
 
-            tm = _re.search(r"`([^`\s]+)`(?:\s*,)?\s+cannot be found", msg)
-            bad = tm.group(1).split("`.`")[-1] if tm else "?"
+            bad = _unquote(params.get("relationName", "?")).split(".")[-1]
             if orig_tables:
                 available = list(orig_tables)
             else:
@@ -619,9 +624,7 @@ def _analyze(
                 + ", ".join(available),
                 pos,
             ) from exc
-        if "UNRESOLVED_COLUMN" in msg:
-            import re as _re
-
+        if "UNRESOLVED_COLUMN" in cond:
             def _cols_of(v) -> list[str]:
                 if hasattr(v, "columns"):
                     return list(v.columns)
@@ -629,21 +632,20 @@ def _analyze(
                     return list(v[0].keys())
                 return []
 
-            cm = _re.search(r"name `((?:[^`]+`\.`)*[^`]+)` cannot", msg)
-            bad = cm.group(1).replace("`.`", ".") if cm else "?"
+            bad = _unquote(params.get("objectName", "?"))
             # a column reference inside FROM/JOIN UNNEST(...) is a
             # correlation the reference rejects with guidance
             # (execute.unnest tests, verbatim)
             from squirreling_spark.functions.sqldialect import _scan
 
             partner = _scan(orig_query).partner
-            for um in _re.finditer(
-                r"\b(?:FROM|JOIN|,)\s*UNNEST\s*\(", orig_query, _re.I
+            for um in re.finditer(
+                r"\b(?:FROM|JOIN|,)\s*UNNEST\s*\(", orig_query, re.I
             ):
                 # an unbalanced call (no partner) gives an empty span
                 span = orig_query[um.end() - 1 : partner[um.end() - 1] + 1]
-                if _re.search(
-                    r"(?<![\w.])" + _re.escape(bad) + r"(?![\w.])", span
+                if re.search(
+                    r"(?<![\w.])" + re.escape(bad) + r"(?![\w.])", span
                 ):
                     raise ColumnNotFoundError(
                         f'UNNEST argument cannot reference column "{bad}"'
@@ -662,10 +664,10 @@ def _analyze(
                     if qual in orig_tables:
                         target = qual
                     else:
-                        am = _re.search(
+                        am = re.search(
                             r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)\s+"
-                            r"(?:AS\s+)?" + _re.escape(qual) + r"\b",
-                            orig_query, _re.I,
+                            r"(?:AS\s+)?" + re.escape(qual) + r"\b",
+                            orig_query, re.I,
                         )
                         if am and am.group(1) in orig_tables:
                             target = am.group(1)
@@ -675,10 +677,10 @@ def _analyze(
                 if not available:
                     scoped = [
                         t for t in orig_tables
-                        if _re.search(
-                            r"\b(?:FROM|JOIN)\s+[\"`]?" + _re.escape(t)
+                        if re.search(
+                            r"\b(?:FROM|JOIN)\s+[\"`]?" + re.escape(t)
                             + r"[\"`]?(?![\w.])",
-                            orig_query, _re.I,
+                            orig_query, re.I,
                         )
                     ] or list(orig_tables)
                     for t in scoped:
@@ -696,30 +698,24 @@ def _analyze(
                     f'Column "{bad}" not found', pos
                 ) from exc
             raise ColumnNotFoundError(first, pos) from exc
-        if "CANNOT_RESOLVE_STAR_EXPAND" in msg:
-            import re as _re
-
+        if "CANNOT_RESOLVE_STAR_EXPAND" in cond:
             from squirreling_spark.functions.sqlstrict import (
                 _visible_tables,
             )
 
-            sm = _re.search(r"Cannot resolve `([^`]+)`\.?\*", msg)
-            star = sm.group(1).replace("`.`", ".") if sm else "?"
+            star = _unquote(params.get("targetString", "?"))
             vis = ", ".join(_visible_tables(orig_query, orig_tables))
             raise TableNotFoundError(
                 f'Table "{star}" not found in "{star}.*". '
                 f"Available tables: {vis}",
                 pos,
             ) from exc
-        if "UNRESOLVED_ROUTINE" in msg:
-            import re
-
+        if "UNRESOLVED_ROUTINE" in cond:
             from squirreling_spark.functions.sqlstrict import (
                 suggest_functions,
             )
 
-            m = re.search(r"routine `?(\w+)`?", msg)
-            bad = m.group(1) if m else "?"
+            bad = _unquote(params.get("routineName", "?"))
             # Word-boundary + call-paren match so the position is the
             # CALL site, not a longer identifier containing the name
             # (e.g. "SELECT myupperx, upperx(a)" — r9 advice).
@@ -741,16 +737,13 @@ def _analyze(
             raise UnknownFunctionError(
                 f'Unknown function "{bad}"{at}.', pos
             ) from exc
-        if "DATATYPE_MISMATCH" in msg and "cannot cast" in msg:
-            import re as _re
-
-            cast_m = _re.search(
-                r'cannot cast "([A-Z_]+)[^"]*" to "([A-Z_]+)', msg
-            )
-            if cast_m and cast_m.group(1) in ("STRUCT", "MAP"):
-                tgt = {"INT": "INTEGER", "BOOLEAN": "BOOL"}.get(
-                    cast_m.group(2), cast_m.group(2)
-                )
+        if "DATATYPE_MISMATCH" in cond and any(
+            c.startswith("CAST_") for c in cond
+        ):
+            src = _type_name(params.get("srcType", ""))
+            if src in ("STRUCT", "MAP"):
+                tgt = _type_name(params.get("targetType", ""))
+                tgt = {"INT": "INTEGER", "BOOLEAN": "BOOL"}.get(tgt, tgt)
                 raise QueryError(
                     f"Cannot CAST object to {tgt}", pos
                 ) from exc

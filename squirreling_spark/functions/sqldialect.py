@@ -1,23 +1,44 @@
-"""Reference-dialect SQL front end: a thin pre-parse rewrite so SQL written
-for the reference engine runs through ``engine.execute_sql`` unchanged.
+"""Reference-dialect SQL front end: a pre-parse rewrite of the query TEXT
+so SQL written for the reference engine runs through
+``engine.execute_sql`` unchanged, mapped onto Spark built-ins and the
+operator implementations that already exist
+(`operators/positional_join.py`, `operators/json_each.py`).
 
-The reference's grammar accepts four things Spark's parser rejects:
+Every pass reads one quote- and bracket-aware scan of the text
+(``_scan``): a construct inside a string literal is never rewritten, and
+text whose brackets do not balance is left for Spark to report.
+``rewrite_reference_sql`` runs, in order:
 
-- ``POSITIONAL JOIN`` (reference src/parse/joins.js:219-241, DuckDB-style
-  row-position zip with NULL padding, src/execute/join.js:176-215)
-- ``JSON_EACH(expr)`` as a FROM-clause table function, standalone or
-  laterally joined ``JOIN JSON_EACH(t.col) AS j ON TRUE``
-  (src/execute/execute.js:193-242)
-- BigInt literals ``123n`` (src/parse/tokenize.js:49-57)
-- case-insensitive ``LIKE`` by default (src/expression/binary.js:57-66)
+1. ANSI ``"ident"`` quoting (``ident_quotes="ansi"``) and DuckDB-style
+   FROM-first queries;
+2. wish-list operator sugar (syntax.md): JSON arrows ``->``/``->>``,
+   ``GLOB``, Postgres ``~``, ``* EXCLUDE``, ``DISTINCT ON``;
+3. reference-derived names for unaliased select items (alias.js), read
+   before any function rewrite changes the text;
+4. array literals ``[1, 2]``, then FROM-clause table functions:
+   correlated ``UNNEST`` counts, ``UNNEST``/``EXPLODE``, ``POSITIONAL
+   JOIN`` (src/parse/joins.js:219-241, a row-position zip) and
+   ``JSON_EACH`` (src/execute/execute.js:193-242);
+5. the date calls, ``_DATE_CALLS`` (src/expression/date.js);
+6. with a session, the dtype-directed rewrites: subscripts that are NULL
+   by static type, the dynamic-typing calls (array-family guards,
+   LEN/LENGTH of arrays, auto-stringify, dynamic-column aggregates,
+   CAST), then ORDER BY and WHERE on dynamic columns;
+7. ``||`` re-associated below ``+`` (src/parse/expression.js:11-12);
+8. the function calls, ``_FUNCTION_CALLS`` (renames and argument-shape
+   fixes), then typed literals, ``FORTNIGHT`` intervals, order-less rank
+   windows and ``± INTERVAL n MONTH``;
+9. BigInt literals ``123n`` (src/parse/tokenize.js:49-57) and, with
+   ``like_mode="ci"``, case-insensitive LIKE
+   (src/expression/binary.js:57-66).
 
-Design: rewrite the query TEXT before Spark parses it, mapping each
-construct onto the operator implementations that already exist
-(`operators/positional_join.py`, `operators/json_each.py`,
-`functions/dialect.like_ci`). The rewriter is string-literal aware (a
-``POSITIONAL JOIN`` inside a quoted string is untouched) but is not a full
-parser — it targets the reference's tested query shapes, which are all
-single-level SELECTs.
+Function calls go through one walker, ``_rewrite_calls(q, table)``, over
+one call iterator, ``_iter_calls``, which strict validation
+(``sqlstrict``) reads too. A new function rewrite is one entry in the
+table of the stage it belongs to: the call's upper-cased name mapped to
+a function from its arguments to the replacement text (None leaves the
+call alone), or to a plain new name. The rewriter is not a full parser;
+it targets the reference's tested query shapes.
 
 Semantics notes (documented divergences, all at the type edge where a
 dynamically-typed JS engine meets SQL):
@@ -167,6 +188,80 @@ def _balanced_arg(q: str, open_idx: int) -> int:
             f"position {open_idx}"
         )
     return close + 1
+
+
+_CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
+_FILTER_RE = re.compile(r"\s*FILTER\s*\(", re.I)
+
+
+def _call_parts(q: str, m: re.Match) -> tuple[list[str], int]:
+    """Top-level arguments ([] for none) of the closed call ``m``
+    (a ``_CALL_RE`` match) and the index just past its ``)``."""
+    close = _scan(q).partner[m.end() - 1]
+    args = _split_top_args(q[m.end() : close])
+    return (args if args != [""] else []), close + 1
+
+
+def _iter_calls(q: str, names=None):
+    """Yield (name_upper, start, args, end) for every call outside
+    strings whose parenthesis closes, left to right (only the calls
+    named in ``names`` when given); ``end`` is the index just past the
+    ``)``, for reading call suffixes (WITHIN GROUP / FILTER / OVER)."""
+    partner = _scan(q).partner
+    for m in _CALL_RE.finditer(q):
+        name = m.group(1).upper()
+        if names is not None and name not in names:
+            continue
+        if partner[m.end() - 1] < 0:
+            continue  # quoted, or unbalanced: Spark will error
+        args, end = _call_parts(q, m)
+        yield name, m.start(), args, end
+
+
+def _with_filter(build):
+    """Mark a ``_rewrite_calls`` entry that also takes the call's trailing
+    ``FILTER (...)`` clause."""
+    build.with_filter = True
+    return build
+
+
+def _rewrite_calls(q: str, table: dict) -> str:
+    """The one function-call rewrite. Every call (``_iter_calls``) whose
+    upper-cased name is a key of ``table`` is replaced by
+    ``table[NAME](args)``; a None result leaves the call alone. A str
+    entry renames the call and keeps its argument text byte for byte. An
+    entry marked ``_with_filter`` is called as ``build(args, clause)``,
+    where ``clause`` is the raw ``FILTER (...)`` text after the call ('' if
+    none), and its result replaces that clause too.
+
+    Calls are visited right to left, each read from the current text: an
+    enclosing call sees its arguments already rewritten, and replacement
+    text is never rescanned, so an entry may emit its own name."""
+    starts = [start for _, start, _, _ in _iter_calls(q, table)]
+    for start in reversed(starts):
+        m = _CALL_RE.match(q, start)
+        build = table[m.group(1).upper()]
+        if isinstance(build, str):
+            q = q[:start] + build + "(" + q[m.end() :]
+            continue
+        args, end = _call_parts(q, m)
+        if getattr(build, "with_filter", False):
+            fm = _FILTER_RE.match(q, end)
+            close = _scan(q).partner[fm.end() - 1] if fm else -1
+            clause_end = close + 1 if close >= 0 else end
+            repl = build(args, q[end:clause_end])
+            end = clause_end
+        else:
+            repl = build(args)
+        if repl is not None:
+            q = q[:start] + repl + q[end:]
+    return q
+
+
+def _fixed(arity: int, template: str):
+    """Table entry for a call rewritten only at one arity: the template's
+    ``{0}``, ``{1}``, ... are the call's arguments."""
+    return lambda args: template.format(*args) if len(args) == arity else None
 
 
 _LITERAL_BRACKET_KEYWORDS = {
@@ -502,6 +597,7 @@ _DON_RE = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.I)
 _FROM_KW = re.compile(r"\bFROM\b", re.I)
 _ORDER_KW = re.compile(r"\bORDER\s+BY\b", re.I)
 _LIMIT_KW = re.compile(r"\bLIMIT\b", re.I)
+_LIMIT_OFFSET_KW = re.compile(r"\b(?:LIMIT|OFFSET)\b", re.I)
 
 
 def _rewrite_distinct_on(q: str) -> str:
@@ -1005,80 +1101,41 @@ def _date_diff_sql(unit: str, a: str, b: str) -> str:
     return "CAST(NULL AS BIGINT)"
 
 
-_DATE_DIFF_RE = re.compile(r"\b(?:DATE_DIFF|DATEDIFF)\s*\(", re.I)
-_EXTRACT_RE = re.compile(
-    r"\bEXTRACT\s*\(\s*(DOW|EPOCH|SECOND)\s+FROM\b", re.I
-)
-_DATE_PART_RE = re.compile(
-    r"\bDATE_PART\s*\(\s*'(dow|epoch|second)'\s*,", re.I
-)
+def _date_diff(args):
+    """DATE_DIFF/DATEDIFF('unit', a, b); Spark's own DATEDIFF forms (2
+    args, or an unquoted unit) are left alone."""
+    um = re.fullmatch(r"'([A-Za-z]+)'", args[0]) if len(args) == 3 else None
+    return _date_diff_sql(um.group(1), args[1], args[2]) if um else None
 
 
-def _rewrite_date_dialect(q: str) -> str:
-    """DATE_DIFF/DATEDIFF('unit', a, b), EXTRACT(DOW|EPOCH|SECOND ...),
-    DATE_PART('dow'|'epoch'|'second', x), EPOCH(x) → reference semantics
-    (integer seconds, JS getUTCDay() DOW, fractional epoch)."""
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (c for c in _DATE_DIFF_RE.finditer(q) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            break
-        open_idx = q.index("(", m.start())
-        arg_end = _balanced_arg(q, open_idx)
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
-        if len(args) != 3:
-            break  # wrong arity: let Spark error (reference errors too)
-        um = re.match(r"^'([A-Za-z]+)'$", args[0])
-        if not um:
-            break  # non-literal unit unsupported
-        q = (
-            q[: m.start()]
-            + _date_diff_sql(um.group(1), args[1], args[2])
-            + q[arg_end:]
-        )
-    # EXTRACT variants — rewrite the whole call
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (c for c in _EXTRACT_RE.finditer(q) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            break
-        open_idx = q.index("(", m.start())
-        arg_end = _balanced_arg(q, open_idx)
-        inner = q[open_idx + 1 : arg_end - 1]
-        field = m.group(1).upper()
-        expr = inner[inner.upper().index("FROM") + 4 :].strip()
-        q = q[: m.start()] + _extract_sql(field, expr) + q[arg_end:]
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (c for c in _DATE_PART_RE.finditer(q) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            break
-        open_idx = q.index("(", m.start())
-        arg_end = _balanced_arg(q, open_idx)
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
-        if len(args) != 2:
-            break
-        q = (
-            q[: m.start()]
-            + _extract_sql(args[0].strip("'").upper(), args[1])
-            + q[arg_end:]
-        )
-    # EPOCH(x) scalar function
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bEPOCH\s*\(", re.I),
-        lambda args: _extract_sql("EPOCH", args[0]) if len(args) == 1 else None,
+def _extract(args):
+    """EXTRACT(DOW|EPOCH|SECOND FROM x); other fields are Spark's."""
+    m = len(args) == 1 and re.fullmatch(
+        r"(DOW|EPOCH|SECOND)\s+FROM\b(.*)", args[0], re.I | re.S
     )
-    return q
+    return _extract_sql(m.group(1).upper(), m.group(2).strip()) if m else None
+
+
+def _date_part(args):
+    """DATE_PART('dow'|'epoch'|'second', x) — EXTRACT's fields."""
+    if len(args) != 2 or not re.fullmatch(
+        r"'(dow|epoch|second)'", args[0], re.I
+    ):
+        return None
+    return _extract_sql(args[0].strip("'").upper(), args[1])
+
+
+# Reference date semantics (src/expression/date.js): integer seconds, JS
+# getUTCDay() DOW, fractional epoch.
+_DATE_CALLS = {
+    "DATE_DIFF": _date_diff,
+    "DATEDIFF": _date_diff,
+    "EXTRACT": _extract,
+    "DATE_PART": _date_part,
+    "EPOCH": lambda args: (
+        _extract_sql("EPOCH", args[0]) if len(args) == 1 else None
+    ),
+}
 
 
 def _extract_sql(field: str, x: str) -> str:
@@ -1133,71 +1190,6 @@ def _rewrite_orderless_windows(q: str) -> str:
         )
 
 
-_NK_AGG_RE = re.compile(r"\b(ARRAY_AGG|JSON_ARRAYAGG)\s*\(", re.I)
-
-
-def _rewrite_null_keeping_aggs(q: str) -> str:
-    mask = _scan(q).mask
-    starts = [
-        (m.start(), m.group(1).upper())
-        for m in _NK_AGG_RE.finditer(q)
-        if not mask[m.start()]
-    ]
-    for start, fname in reversed(starts):
-        open_idx = q.index("(", start)
-        arg_end = _balanced_arg(q, open_idx)
-        arg = q[open_idx + 1 : arg_end - 1].strip()
-        if not arg:
-            continue
-        dm = re.match(r"DISTINCT\s+(.*)$", arg, re.I | re.S)
-        if dm:
-            # DISTINCT de-dupes; ARRAY_AGG(DISTINCT x) is native Spark,
-            # JSON_ARRAYAGG needs the collect_set mapping
-            if fname == "JSON_ARRAYAGG":
-                q = (
-                    q[:start]
-                    + f"to_json(collect_set({dm.group(1).strip()}))"
-                    + q[arg_end:]
-                )
-            continue
-        fm = re.match(r"\s*FILTER\s*\(", q[arg_end:], re.I)
-        filt = ""
-        tail = arg_end
-        if fm:
-            fend = _balanced_arg(q, arg_end + fm.end() - 1)
-            filt = " " + q[arg_end:fend].strip()
-            tail = fend
-        inner = (
-            f"transform(collect_list(named_struct('v', {arg})){filt},"
-            f" s -> s.v)"
-        )
-        if fname == "JSON_ARRAYAGG":
-            inner = f"to_json({inner})"
-        q = q[:start] + inner + q[tail:]
-    return q
-
-
-def _rewrite_wrap_call(q: str, pattern: re.Pattern, build) -> str:
-    """Rewrite every call matching ``pattern`` via ``build(args) -> str``
-    (return None to leave the call untouched). Matches are processed
-    RIGHT-TO-LEFT so a replacement that itself contains the pattern (e.g.
-    ARRAY_POSITION → nullif(array_position(...))) is never rescanned —
-    left-of-match offsets stay valid throughout."""
-    mask = _scan(q).mask
-    starts = [m.start() for m in pattern.finditer(q) if not mask[m.start()]]
-    for start in reversed(starts):
-        open_idx = q.index("(", start)
-        arg_end = _balanced_arg(q, open_idx)
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
-        if args == [""]:
-            args = []
-        repl = build(args)
-        if repl is None:
-            continue
-        q = q[:start] + repl + q[arg_end:]
-    return q
-
-
 # ---------------------------------------------------------------------------
 # Dynamic typing: the reference evaluates JS values per row, so an array
 # function applied to a string/number/null COLUMN yields null per row
@@ -1207,14 +1199,6 @@ def _rewrite_wrap_call(q: str, pattern: re.Pattern, build) -> str:
 # the column dtype resolvable we fold the reference's answer (NULL for
 # every row) at rewrite time instead.
 # ---------------------------------------------------------------------------
-
-_ARR_FAMILY_RE = re.compile(
-    r"\b(?:ARRAY_LENGTH|LIST_LENGTH|LEN|CARDINALITY|SIZE|ARRAY_POSITION|"
-    r"LIST_POSITION|ARRAY_CONTAINS|LIST_CONTAINS|ARRAY_SORT|ARRAY_APPEND|"
-    r"LIST_APPEND|ARRAY_CONCAT|LIST_CONCAT)\s*\(",
-    re.I,
-)
-
 
 _OB_ITEM_RE = re.compile(
     r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)"
@@ -1234,9 +1218,9 @@ def _rewrite_dynamic_orderby(q: str, spark) -> str:
     for m in reversed(list(re.finditer(r"(?i)\bORDER\s+BY\s+", q))):
         if mask[m.start()]:
             continue
-        # the item list runs to the end of the statement, so a trailing
-        # LIMIT/OFFSET stays in the last item (which then is no bare ref)
-        end = _stmt_end(q, m.end())
+        end = _toplevel_kw(q, _LIMIT_OFFSET_KW, m.end())
+        if end == -1:
+            end = _stmt_end(q, m.end())
         cuts = [m.end() - 1, *_top_commas(q, m.end(), end), end]
         items = [(a + 1, e) for a, e in zip(cuts, cuts[1:])]
         for s, e in reversed(items):
@@ -1285,74 +1269,44 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
     """Dtype-directed rewrites needing the session's view schemas."""
     from pyspark.sql import types as T
 
-    def _resolves_non_array(ref: str) -> bool:
-        dt = _ref_dtype(spark, ref.strip())
-        return dt is not None and not isinstance(dt, T.ArrayType)
+    def dtype(arg: str):
+        return _ref_dtype(spark, arg.strip())
 
     # Array family on a statically-non-array column → NULL (reference
     # returns null per row; a whole column of one non-array dtype is NULL
     # for every row). ARRAY_CONCAT guards BOTH args (evaluate.js:616-618).
-    def _arr_guard(name: str):
+    def arr_guard(n_guarded: int, otherwise=lambda args: None):
         def build(args):
-            if not args:
-                return None
-            guard_n = 2 if name in ("ARRAY_CONCAT", "LIST_CONCAT") else 1
-            for a in args[:guard_n]:
-                if _resolves_non_array(a):
+            for a in args[:n_guarded]:
+                dt = dtype(a)
+                if dt is not None and not isinstance(dt, T.ArrayType):
                     return "NULL"
-            return None  # fall through to the normal rewrites below
+            return otherwise(args)
 
         return build
 
-    mask = _scan(q).mask
-    starts = [
-        (m.start(), m.group(0)) for m in _ARR_FAMILY_RE.finditer(q)
-        if not mask[m.start()]
-    ]
-    for start, tok in reversed(starts):
-        name = re.sub(r"\s*\($", "", tok).upper()
-        open_idx = q.index("(", start)
-        arg_end = _balanced_arg(q, open_idx)
-        args = _split_top_args(q[open_idx + 1 : arg_end - 1])
-        repl = _arr_guard(name)(args)
-        if repl is None:
-            # LEN / LENGTH accept arrays in the reference (strings.js:38-39
-            # — `val.length` covers both); Spark's len/length reject them,
-            # so dispatch resolvable array inputs to size().
-            if name == "LEN" and len(args) == 1:
-                dt = _ref_dtype(spark, args[0].strip())
-                if isinstance(dt, T.ArrayType):
-                    repl = f"size({args[0]})"
-            # ARRAY_LENGTH(a, d): a dimension beyond the STATIC nesting
-            # depth is null for every row (evaluate.js:582-591)
-            if name == "ARRAY_LENGTH" and len(args) == 2:
-                dm = re.fullmatch(r"\s*(\d+)\s*", args[1])
-                dt = _ref_dtype(spark, args[0].strip())
-                if dm and dt is not None:
-                    for _ in range(int(dm.group(1)) - 1):
-                        if not isinstance(dt, T.ArrayType):
-                            break
-                        dt = dt.elementType
-                    if not isinstance(dt, T.ArrayType) and int(
-                        dm.group(1)
-                    ) > 1:
-                        repl = "NULL"
-            if repl is None:
-                continue
-        q = q[:start] + repl + q[arg_end:]
-
-    # LENGTH(arrayCol) → size (reference LENGTH = JS .length for both)
-    def _length_dispatch(args):
-        if len(args) != 1:
-            return None
-        dt = _ref_dtype(spark, args[0].strip())
-        if isinstance(dt, T.ArrayType):
+    # LEN / LENGTH accept arrays in the reference (strings.js:38-39 —
+    # `val.length` covers both); Spark's len/length reject them, so
+    # dispatch resolvable array inputs to size().
+    def array_size(args):
+        if len(args) == 1 and isinstance(dtype(args[0]), T.ArrayType):
             return f"size({args[0]})"
         return None
 
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bLENGTH\s*\(", re.I), _length_dispatch
-    )
+    # ARRAY_LENGTH(a, d): a dimension beyond the STATIC nesting depth is
+    # null for every row (evaluate.js:582-591)
+    def beyond_depth(args):
+        dm = len(args) == 2 and re.fullmatch(r"\s*(\d+)\s*", args[1])
+        dt = dtype(args[0]) if dm else None
+        if dt is None:
+            return None
+        for _ in range(int(dm.group(1)) - 1):
+            if not isinstance(dt, T.ArrayType):
+                break
+            dt = dt.elementType
+        if not isinstance(dt, T.ArrayType) and int(dm.group(1)) > 1:
+            return "NULL"
+        return None
 
     # Auto-stringify (syntax.md runtime table row 2: "SUBSTR/LOWER(...)
     # does not support object/array arguments. Use CAST" — 13 production
@@ -1361,29 +1315,21 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
     # to its JSON text. Spark's and DuckDB's to_json are both minified,
     # so the widened behavior stays cross-engine gradeable. LENGTH stays
     # out: the reference pins its string-or-array semantics explicitly.
-    def _stringify_first(args):
-        if not args or re.match(
-            r"\s*(BOTH|LEADING|TRAILING)\b", args[0], re.I
-        ):
-            return None
-        dt = _ref_dtype(spark, args[0].strip())
-        if isinstance(dt, (T.StructType, T.MapType)) or (
-            isinstance(dt, T.ArrayType)
-        ):
-            return "__SQ_STRINGIFY__"  # marker; name re-attached below
-        return None
-
-    for sfname in ("LOWER", "UPPER", "SUBSTR", "SUBSTRING", "TRIM"):
-        def _build(args, f=sfname.lower()):
-            if _stringify_first(args) is None:
+    def stringify_first(fname: str):
+        def build(args):
+            if not args or re.match(
+                r"\s*(BOTH|LEADING|TRAILING)\b", args[0], re.I
+            ):
+                return None
+            if not isinstance(
+                dtype(args[0]), (T.StructType, T.MapType, T.ArrayType)
+            ):
                 return None
             rest = ", ".join(a.strip() for a in args[1:])
             tail = f", {rest}" if rest else ""
-            return f"{f}(to_json({args[0].strip()}){tail})"
+            return f"{fname}(to_json({args[0].strip()}){tail})"
 
-        q = _rewrite_wrap_call(
-            q, re.compile(rf"\b{sfname}\s*\(", re.I), _build
-        )
+        return build
 
     # --- JSON-text DYNAMIC columns (engine._infer_memory_schema tags
     # memory-table columns that mix scalar JS types; values are JSON
@@ -1391,32 +1337,19 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
     # dynamic values (src/expression/evaluate.js): aggregates skip
     # non-numeric members; ORDER BY coerces numerically (JS < coercion);
     # a bare WHERE column is JS truthiness; CAST decodes first.
-    def _dyn_agg(fname: str):
+    def dyn_agg(fname: str):
         def build(args):
-            if len(args) != 1:
+            if len(args) != 1 or not _is_dynamic_ref(spark, args[0].strip()):
                 return None
-            ref = args[0].strip()
-            if not _is_dynamic_ref(spark, ref):
-                return None
-            return f"{fname}({_dyn_num(ref)})"
+            return f"{fname}({_dyn_num(args[0].strip())})"
 
         return build
-
-    for aggname in ("SUM", "AVG", "MIN", "MAX"):
-        q = _rewrite_wrap_call(
-            q,
-            re.compile(rf"\b{aggname}\s*\(", re.I),
-            _dyn_agg(aggname.lower()),
-        )
-
-    q = _rewrite_dynamic_orderby(q, spark)
-    q = _rewrite_dynamic_where_truthy(q, spark)
 
     # CAST dialect: JS Number(Date) is epoch MILLISECONDS (evaluate.js:
     # 707-726 casts primitives-and-Dates; Number coercion of a Date is
     # getTime()), and CAST(object AS STRING) is JSON.stringify
     # (evaluate.js:703-705).
-    def _cast_dialect(args):
+    def cast_dialect(args):
         if len(args) != 1:
             return None
         m = re.match(r"(?s)^(.*?)\s+AS\s+([A-Za-z]+)\s*$", args[0], re.I)
@@ -1467,10 +1400,26 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
                 return f"to_json({ref})"
         return None
 
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bCAST\s*\(", re.I), _cast_dialect
-    )
-    return q
+    table = {
+        **dict.fromkeys(
+            ("LIST_LENGTH", "CARDINALITY", "SIZE", "ARRAY_POSITION",
+             "LIST_POSITION", "ARRAY_CONTAINS", "LIST_CONTAINS",
+             "ARRAY_SORT", "ARRAY_APPEND", "LIST_APPEND"),
+            arr_guard(1),
+        ),
+        "ARRAY_CONCAT": arr_guard(2),
+        "LIST_CONCAT": arr_guard(2),
+        "LEN": arr_guard(1, array_size),
+        "ARRAY_LENGTH": arr_guard(1, beyond_depth),
+        "LENGTH": array_size,
+        **{f: stringify_first(f.lower())
+           for f in ("LOWER", "UPPER", "SUBSTR", "SUBSTRING", "TRIM")},
+        **{f: dyn_agg(f.lower()) for f in ("SUM", "AVG", "MIN", "MAX")},
+        "CAST": cast_dialect,
+    }
+    q = _rewrite_calls(q, table)
+    q = _rewrite_dynamic_orderby(q, spark)
+    return _rewrite_dynamic_where_truthy(q, spark)
 
 
 # Keywords that bound a concat operand at its own nesting depth
@@ -1495,116 +1444,64 @@ def _rewrite_concat_precedence(q: str) -> str:
     Additive, Multiplicative): ``a || a + b`` is ``a || (a + b)``.
     Spark groups ``(a || a) + b``. Re-associate by parenthesizing every
     concat operand that contains a top-level additive/multiplicative
-    operator. Parenthesized groups are rewritten recursively first, so
-    the depth-0 pass below only reasons about its own level."""
+    operator. Bracket groups, ``(...)`` and ``[...]``, are rewritten
+    recursively first, so the depth-0 pass below only reasons about its
+    own level."""
     if "||" not in q:
         return q
-    # Recurse into every top-level paren group.
-    mask = _scan(q).mask
-    i = 0
-    while i < len(q):
-        if q[i] == "(" and not mask[i]:
-            j = _balanced_arg(q, i)
-            inner = q[i + 1 : j - 1]
-            new_inner = _rewrite_concat_precedence(inner)
-            if new_inner != inner:
-                q = q[: i + 1] + new_inner + q[j - 1 :]
-                mask = _scan(q).mask
-                j = i + 1 + len(new_inner) + 1
-            i = j
-        else:
-            i += 1
-    toks = [
-        (m.group(0), m.start(), m.end())
-        for m in _CONCAT_TOKEN_RE.finditer(q)
-    ]
-
-    def is_boundary(tok: str) -> bool:
-        return (
+    s = _scan(q)
+    out, last = [], 0
+    for m in re.finditer(r"[(\[]", q):
+        i = m.start()
+        if s.mask[i] or s.depth[i] or s.partner[i] < 0:
+            continue
+        inner = _rewrite_concat_precedence(q[i + 1 : s.partner[i]])
+        out += [q[last : i + 1], inner]
+        last = s.partner[i]
+    q = "".join(out) + q[last:]
+    depth = _scan(q).depth
+    # Depth-0 runs between boundaries; a run with a depth-0 || is a
+    # concat chain whose operands may need grouping.
+    runs = [[]]
+    for m in _CONCAT_TOKEN_RE.finditer(q):
+        tok = m.group(0)
+        if depth[m.start()] == 0 and (
             tok in (",", "=", "<>", "<=", ">=", "!=", "<", ">")
             or tok.upper() in _CONCAT_BOUNDARY_KW
-        )
-
-    # Maximal depth-0 runs between boundaries that contain a ||.
-    segments = []
-    run_start = 0
-    d = 0
-    for idx, (tok, s, e) in enumerate(toks):
-        if tok == "(":
-            d += 1
-        elif tok == ")":
-            d -= 1
-        elif d == 0 and is_boundary(tok):
-            if any(
-                t == "||" and _depth_at(toks, run_start, k) == 0
-                for k, (t, _, _) in enumerate(toks[run_start:idx], run_start)
-            ):
-                segments.append((run_start, idx))
-            run_start = idx + 1
-    if any(
-        t == "||" and _depth_at(toks, run_start, k) == 0
-        for k, (t, _, _) in enumerate(toks[run_start:], run_start)
-    ):
-        segments.append((run_start, len(toks)))
-
-    for seg_start, seg_end in reversed(segments):
-        pieces = []
-        d = 0
-        piece_start = toks[seg_start][1]
-        last_end = piece_start
-        for tok, s, e in toks[seg_start:seg_end]:
-            if tok == "(":
-                d += 1
-            elif tok == ")":
-                d -= 1
-            elif tok == "||" and d == 0:
-                pieces.append((piece_start, last_end))
-                piece_start = e
-            last_end = e
-        pieces.append((piece_start, last_end))
-        if len(pieces) < 2:
+        ):
+            runs.append([])
+        else:
+            runs[-1].append(m)
+    for run in reversed(runs):
+        bars = [m for m in run if m.group(0) == "||" and depth[m.start()] == 0]
+        if not bars:
             continue
-        rebuilt = []
-        changed = False
-        for ps, pe in pieces:
-            frag = q[ps:pe].strip()
-            if _has_top_level_arith(frag):
-                rebuilt.append(f"({frag})")
-                changed = True
-            else:
-                rebuilt.append(frag)
-        if changed:
+        edges = [run[0].start()]
+        for m in bars:
+            edges += [m.start(), m.end()]
+        edges.append(run[-1].end())
+        pieces = list(zip(edges[::2], edges[1::2]))
+        grouped = [_has_top_level_arith(q, depth, a, b) for a, b in pieces]
+        if any(grouped):
             q = (
-                q[: pieces[0][0]]
-                + " || ".join(rebuilt)
-                + q[pieces[-1][1] :]
+                q[: edges[0]]
+                + " || ".join(
+                    f"({q[a:b].strip()})" if g else q[a:b].strip()
+                    for (a, b), g in zip(pieces, grouped)
+                )
+                + q[edges[-1] :]
             )
     return q
 
 
-def _depth_at(toks, start: int, idx: int) -> int:
-    """Paren depth of token idx relative to token start."""
-    d = 0
-    for t, _, _ in toks[start:idx]:
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-    return d
-
-
-def _has_top_level_arith(frag: str) -> bool:
-    """True when the fragment contains a BINARY +-*/% at paren depth 0
-    (a leading unary minus is not binary: it must follow a value)."""
-    d = 0
+def _has_top_level_arith(q: str, depth, start: int, end: int) -> bool:
+    """True when ``q[start:end]`` contains a BINARY +-*/% at bracket
+    depth 0 (a leading unary minus is not binary: it must follow a
+    value)."""
     prev_val = False
-    for m in _CONCAT_TOKEN_RE.finditer(frag):
+    for m in _CONCAT_TOKEN_RE.finditer(q, start, end):
         t = m.group(0)
-        if t == "(":
-            d += 1
-        elif t == ")":
-            d -= 1
-        elif d == 0 and t in ("+", "-", "*", "/", "%") and prev_val:
+        if prev_val and t in ("+", "-", "*", "/", "%") and not depth[m.start()]:
             return True
         prev_val = t not in ("(", ",", "+", "-", "*", "/", "%")
     return False
@@ -1743,31 +1640,6 @@ def _rewrite_dynamic_access(q: str, spark=None) -> str:
 # Scalar-function dialect: name maps + arg-shape fixes
 # ---------------------------------------------------------------------------
 
-# plain name→name renames (args compatible)
-_FN_RENAMES = {
-    "LIST_LENGTH": "size",
-    "CARDINALITY": "size",
-    "JSON_ARRAY_LENGTH": "json_array_length",
-    "LIST_APPEND": "array_append",
-    "LIST_CONTAINS": "array_contains",
-    "COUNTIF": "count_if",
-    "STRPOS": "instr",
-    "APPROX_QUANTILE": "approx_percentile",
-    "REGEXP_MATCHES": "regexp_like",
-    "LIST": "collect_list",
-    # syntax.md wish-list pure renames (items 3, 6, 8, 10, 14)
-    "ARG_MIN": "min_by",
-    "ARG_MAX": "max_by",
-    "JSON_EXTRACT_STRING": "json_value",
-    "REGEXP_SPLIT_TO_ARRAY": "split",
-    "CHARINDEX": "locate",  # CHARINDEX(sub, str[, start]) = locate
-    "JSON_GROUP_ARRAY": "JSON_ARRAYAGG",  # null-keeping agg rewrite below
-}
-_FN_RENAME_RE = re.compile(
-    r"\b(" + "|".join(_FN_RENAMES) + r")\s*\(", re.I
-)
-
-
 # C-style strftime %-codes → Java DateTimeFormatter pattern letters
 # (syntax.md item 13). %-X strips zero-padding (single pattern letter).
 _STRF_MAP = {
@@ -1823,225 +1695,251 @@ def _strftime_java(fmt: str) -> str | None:
     return "".join(out)
 
 
-def _rewrite_function_dialect(q: str) -> str:
-    """Reference scalar/aggregate function surface onto Spark built-ins."""
-    q = _sub_outside_strings(
-        q,
-        _FN_RENAME_RE,
-        lambda m: _FN_RENAMES[m.group(1).upper()] + "(",
-    )
-    # ARRAY_LENGTH(a[, dim]) — reference evaluate.js:574-594: dim 1 =
-    # size; dim 2 = inner length when RECTANGULAR else NULL; dim < 1 or
-    # non-literal → NULL
-    def _array_length(args):
-        if len(args) == 1:
-            return f"size({args[0]})"
-        if len(args) != 2:
-            return None
-        dm = re.fullmatch(r"\s*(\d+)\s*", args[1])
-        if not dm:
-            return "NULL"
-        d = int(dm.group(1))
-        if d < 1:
-            return "NULL"
-        a = args[0]
-        for _ in range(d - 1):
-            a = (
-                f"(CASE WHEN size({a}) > 0 AND "
-                f"size(array_distinct(transform({a}, __x -> size(__x)))) = 1"
-                f" THEN element_at({a}, 1) END)"
-            )
-        return f"size({a})"
-
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bARRAY_LENGTH\s*\(", re.I), _array_length
-    )
-    # ARRAY_POSITION: reference returns NULL when absent (Spark returns 0)
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:ARRAY_POSITION|LIST_POSITION)\s*\(", re.I),
-        lambda args: f"nullif(array_position({args[0]}, {args[1]}), 0)"
-        if len(args) == 2
-        else None,
-    )
-    # ARRAY_CONCAT/LIST_CONCAT need exactly 2 array args in the reference;
-    # other arities stay unrenamed so Spark raises like the reference
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:ARRAY_CONCAT|LIST_CONCAT)\s*\(", re.I),
-        lambda args: f"concat({args[0]}, {args[1]})"
-        if len(args) == 2
-        else None,
-    )
-    # REGEXP_SUBSTR/REGEXP_EXTRACT(t, p[, pos[, occ]]) — reference
-    # regexp.js:18-78: always the FULL match, from 1-based position,
-    # nth occurrence, NULL when absent (Spark's regexp_extract returns
-    # '' and takes a group index instead)
-    def _regexp_substr(args):
-        if len(args) == 2:
-            return (
-                f"try_element_at(regexp_extract_all({args[0]},"
-                f" {args[1]}, 0), 1)"
-            )
-        if len(args) in (3, 4):
-            occ = args[3] if len(args) == 4 else "1"
-            return (
-                f"try_element_at(regexp_extract_all("
-                f"substr({args[0]}, {args[2]}), {args[1]}, 0), {occ})"
-            )
+# ARRAY_LENGTH(a[, dim]) — reference evaluate.js:574-594: dim 1 = size;
+# dim 2 = inner length when RECTANGULAR else NULL; dim < 1 or non-literal
+# → NULL
+def _array_length(args):
+    if len(args) == 1:
+        return f"size({args[0]})"
+    if len(args) != 2:
         return None
+    dm = re.fullmatch(r"\s*(\d+)\s*", args[1])
+    if not dm:
+        return "NULL"
+    d = int(dm.group(1))
+    if d < 1:
+        return "NULL"
+    a = args[0]
+    for _ in range(d - 1):
+        a = (
+            f"(CASE WHEN size({a}) > 0 AND "
+            f"size(array_distinct(transform({a}, __x -> size(__x)))) = 1"
+            f" THEN element_at({a}, 1) END)"
+        )
+    return f"size({a})"
 
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:REGEXP_SUBSTR|REGEXP_EXTRACT)\s*\(", re.I),
-        _regexp_substr,
-    )
-    # REGEXP_REPLACE 5-arg (occurrence) → registered UDF; 3/4-arg match
-    # Spark's builtin semantics already. Postgres-habit 4th-arg FLAG
-    # string (syntax.md runtime table: regexp_replace(..., 'g')): 'g' is
-    # Spark's default (replace all) so it drops; 'i' folds into the
-    # pattern as (?i). A flagless-Postgres (first-match-only) call has no
-    # cheap Spark form and stays unrewritten.
-    def _regexp_replace(args):
-        if len(args) == 5:
-            return f"ref_regexp_replace({', '.join(args)})"
-        if len(args) == 4:
-            fm = re.fullmatch(r"\s*'([gis]*)'\s*", args[3])
-            if fm and "g" in fm.group(1):
-                pat = args[1]
-                if "i" in fm.group(1):
-                    pm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", pat)
-                    pat = (
-                        f"'(?i){pm.group(1)}'"
-                        if pm
-                        else f"concat('(?i)', {pat})"
-                    )
-                return f"regexp_replace({args[0]}, {pat}, {args[2]})"
-        return None
 
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bREGEXP_REPLACE\s*\(", re.I), _regexp_replace
-    )
-    # ARRAY_AGG / JSON_ARRAYAGG keep NULL elements in the reference;
-    # Spark's collect_list drops them — struct-wrap to preserve. A
-    # trailing FILTER (WHERE ...) clause must attach to the inner
-    # collect_list (aggregate), not the outer transform/to_json.
-    q = _rewrite_null_keeping_aggs(q)
-    # STRING_SPLIT/STR_SPLIT(x, d) → split on \Q..\E-quoted literal
-    # delimiter; empty delimiter returns the whole string as one element
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:STRING_SPLIT|STR_SPLIT)\s*\(", re.I),
-        lambda args: (
-            f"(CASE WHEN ({args[1]}) = '' THEN array({args[0]}) ELSE "
-            f"split({args[0]}, concat('\\\\Q', {args[1]}, '\\\\E')) END)"
-            if len(args) == 2
-            else None
-        ),
-    )
-    # --- syntax.md wish-list function shapes -----------------------------
-    # REGEXP_SPLIT_TO_TABLE(s, p) (item 3) → generator in select position
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bREGEXP_SPLIT_TO_TABLE\s*\(", re.I),
-        lambda args: f"explode(split({args[0]}, {args[1]}))"
-        if len(args) == 2
-        else None,
-    )
-    # JSON_GROUP_OBJECT(k, v) (item 6) → sorted-by-key map → JSON text.
-    # DuckDB is insertion-ordered; a distributed engine has no stable
-    # arrival order, so keys sort — deterministic at any parallelism.
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bJSON_GROUP_OBJECT\s*\(", re.I),
-        lambda args: (
-            f"to_json(map_from_entries(array_sort(collect_list("
-            f"struct(CAST({args[0]} AS STRING) AS key, {args[1]} AS value)))))"
-            if len(args) == 2
-            else None
-        ),
-    )
-    # STRUCT_EXTRACT(s, 'f') / STRUCT_PACK(a := x, ...) (item 12)
-    def _struct_extract(args):
-        if len(args) != 2:
-            return None
-        fm = re.fullmatch(r"\s*'(\w+)'\s*", args[1])
-        return f"({args[0]}).{fm.group(1)}" if fm else None
-
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bSTRUCT_EXTRACT\s*\(", re.I), _struct_extract
-    )
-
-    def _struct_pack(args):
-        parts = []
-        for a in args:
-            am = re.match(r"\s*([A-Za-z_]\w*)\s*:=\s*(.+)$", a, re.S)
-            if not am:
-                return None
-            parts.append(f"'{am.group(1)}', {am.group(2).strip()}")
-        return f"named_struct({', '.join(parts)})" if parts else None
-
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bSTRUCT_PACK\s*\(", re.I), _struct_pack
-    )
-    # STRFTIME(x, '%Y-%m-%d') (item 13) → date_format with the %-codes
-    # mapped to a Java pattern; literal runs are single-quoted so pattern
-    # letters can't leak. Unmapped codes leave the call unrewritten.
-    def _strftime(args):
-        if len(args) != 2:
-            return None
-        x, fmt = args[0], args[1]
-        if re.fullmatch(r"\s*'(?:[^']|'')*'\s*", x) and not re.fullmatch(
-            r"\s*'(?:[^']|'')*'\s*", fmt
-        ):
-            x, fmt = fmt, x  # strftime(fmt, ts) arg order also seen
-        fm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", fmt)
-        if not fm:
-            return None
-        java = _strftime_java(fm.group(1).replace("''", "'"))
-        if java is None:
-            return None
+# REGEXP_SUBSTR/REGEXP_EXTRACT(t, p[, pos[, occ]]) — reference
+# regexp.js:18-78: always the FULL match, from 1-based position, nth
+# occurrence, NULL when absent (Spark's regexp_extract returns '' and
+# takes a group index instead)
+def _regexp_substr(args):
+    if len(args) == 2:
         return (
-            f"date_format(CAST({x} AS TIMESTAMP), "
-            f"'{java.replace(chr(39), chr(39) * 2)}')"
+            f"try_element_at(regexp_extract_all({args[0]},"
+            f" {args[1]}, 0), 1)"
         )
+    if len(args) in (3, 4):
+        occ = args[3] if len(args) == 4 else "1"
+        return (
+            f"try_element_at(regexp_extract_all("
+            f"substr({args[0]}, {args[2]}), {args[1]}, 0), {occ})"
+        )
+    return None
 
-    q = _rewrite_wrap_call(
-        q, re.compile(r"\bSTRFTIME\s*\(", re.I), _strftime
-    )
-    # DAYOFWEEK (item 13) = the reference's DATE_PART('dow'): JS
-    # getUTCDay(), Sunday=0 (Spark's builtin is Sunday=1). WEEKDAY
-    # (Monday=0) is Spark-native and already matches.
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bDAYOFWEEK\s*\(", re.I),
-        lambda args: _extract_sql("DOW", args[0]) if len(args) == 1 else None,
-    )
-    # LTRIM/RTRIM(str, chars) (item 14): Postgres/DuckDB arg order;
-    # Spark's 2-arg form is (trimStr, str) — swap
-    for tfn in ("LTRIM", "RTRIM"):
-        q = _rewrite_wrap_call(
-            q,
-            re.compile(rf"\b{tfn}\s*\(", re.I),
-            lambda args, f=tfn.lower(): f"{f}({args[1]}, {args[0]})"
-            if len(args) == 2
-            else None,
+
+# REGEXP_REPLACE 5-arg (occurrence) → registered UDF; 3/4-arg match
+# Spark's builtin semantics already. Postgres-habit 4th-arg FLAG string
+# (syntax.md runtime table: regexp_replace(..., 'g')): 'g' is Spark's
+# default (replace all) so it drops; 'i' folds into the pattern as (?i).
+# A flagless-Postgres (first-match-only) call has no cheap Spark form and
+# stays unrewritten.
+def _regexp_replace(args):
+    if len(args) == 5:
+        return f"ref_regexp_replace({', '.join(args)})"
+    if len(args) == 4:
+        fm = re.fullmatch(r"\s*'([gis]*)'\s*", args[3])
+        if fm and "g" in fm.group(1):
+            pat = args[1]
+            if "i" in fm.group(1):
+                pm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", pat)
+                pat = (
+                    f"'(?i){pm.group(1)}'"
+                    if pm
+                    else f"concat('(?i)', {pat})"
+                )
+            return f"regexp_replace({args[0]}, {pat}, {args[2]})"
+    return None
+
+
+# ARRAY_AGG / JSON_ARRAYAGG keep NULL elements in the reference; Spark's
+# collect_list drops them — struct-wrap to preserve. A trailing FILTER
+# (WHERE ...) clause must attach to the inner collect_list (aggregate),
+# not the outer transform/to_json.
+def _null_keeping_agg(to_json: bool):
+    @_with_filter
+    def build(args, clause):
+        if len(args) != 1:
+            return None
+        dm = re.match(r"DISTINCT\s+(.*)$", args[0], re.I | re.S)
+        if dm:
+            # DISTINCT de-dupes; ARRAY_AGG(DISTINCT x) is native Spark,
+            # JSON_ARRAYAGG needs the collect_set mapping
+            if not to_json:
+                return None
+            return f"to_json(collect_set({dm.group(1).strip()}))" + clause
+        filt = f" {clause.strip()}" if clause else ""
+        inner = (
+            f"transform(collect_list(named_struct('v', {args[0]})){filt},"
+            f" s -> s.v)"
         )
-    # --- end wish-list function shapes -----------------------------------
-    # ATAN(y, x) 2-arg → atan2 (JS Math.atan2, reference trig pack)
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bATAN\s*\(", re.I),
-        lambda args: f"atan2({args[0]}, {args[1]})"
-        if len(args) == 2
-        else None,
+        return f"to_json({inner})" if to_json else inner
+
+    return build
+
+
+# STRUCT_EXTRACT(s, 'f') / STRUCT_PACK(a := x, ...) (syntax.md item 12)
+def _struct_extract(args):
+    if len(args) != 2:
+        return None
+    fm = re.fullmatch(r"\s*'(\w+)'\s*", args[1])
+    return f"({args[0]}).{fm.group(1)}" if fm else None
+
+
+def _struct_pack(args):
+    parts = []
+    for a in args:
+        am = re.match(r"\s*([A-Za-z_]\w*)\s*:=\s*(.+)$", a, re.S)
+        if not am:
+            return None
+        parts.append(f"'{am.group(1)}', {am.group(2).strip()}")
+    return f"named_struct({', '.join(parts)})" if parts else None
+
+
+# STRFTIME(x, '%Y-%m-%d') (syntax.md item 13) → date_format with the
+# %-codes mapped to a Java pattern; literal runs are single-quoted so
+# pattern letters can't leak. Unmapped codes leave the call unrewritten.
+def _strftime(args):
+    if len(args) != 2:
+        return None
+    x, fmt = args[0], args[1]
+    if re.fullmatch(r"\s*'(?:[^']|'')*'\s*", x) and not re.fullmatch(
+        r"\s*'(?:[^']|'')*'\s*", fmt
+    ):
+        x, fmt = fmt, x  # strftime(fmt, ts) arg order also seen
+    fm = re.fullmatch(r"\s*'((?:[^']|'')*)'\s*", fmt)
+    if not fm:
+        return None
+    java = _strftime_java(fm.group(1).replace("''", "'"))
+    if java is None:
+        return None
+    return (
+        f"date_format(CAST({x} AS TIMESTAMP), "
+        f"'{java.replace(chr(39), chr(39) * 2)}')"
     )
-    # GREATEST/LEAST accept a single argument in the reference
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:GREATEST|LEAST)\s*\(", re.I),
-        lambda args: f"({args[0]})" if len(args) == 1 else None,
+
+
+# TRIM(x) 1-arg → JS String.trim() (all whitespace, not just spaces);
+# TRIM(BOTH.. FROM ..) forms pass through
+def _js_trim(args):
+    if len(args) != 1 or re.match(
+        r"\s*(BOTH|LEADING|TRAILING)\b", args[0], re.I
+    ):
+        return None
+    return f"regexp_replace(CAST({args[0]} AS STRING), '^\\\\s+|\\\\s+$', '')"
+
+
+# LN/LOG10/LOG2: JS math — negative → NaN, zero → -Infinity (Spark
+# returns NULL for both; reference evaluates Math.log)
+def _js_log(fn: str):
+    return _fixed(
+        1,
+        "(CASE WHEN ({0}) < 0 THEN CAST('NaN' AS DOUBLE) "
+        "WHEN ({0}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
+        f"ELSE {fn}({{0}}) END)",
     )
+
+
+# Reference scalar/aggregate function surface onto Spark built-ins, one
+# entry per name (see _rewrite_calls). A str entry is a plain rename.
+_FUNCTION_CALLS = {
+    "LIST_LENGTH": "size",
+    "CARDINALITY": "size",
+    "JSON_ARRAY_LENGTH": "json_array_length",
+    "LIST_APPEND": "array_append",
+    "LIST_CONTAINS": "array_contains",
+    "COUNTIF": "count_if",
+    "STRPOS": "instr",
+    "APPROX_QUANTILE": "approx_percentile",
+    "REGEXP_MATCHES": "regexp_like",
+    "LIST": "collect_list",
+    # syntax.md wish-list pure renames (items 3, 6, 8, 10, 14)
+    "ARG_MIN": "min_by",
+    "ARG_MAX": "max_by",
+    "JSON_EXTRACT_STRING": "json_value",
+    "REGEXP_SPLIT_TO_ARRAY": "split",
+    "CHARINDEX": "locate",  # CHARINDEX(sub, str[, start]) = locate
+    "ARRAY_LENGTH": _array_length,
+    # the reference returns NULL when the value is absent (Spark: 0)
+    **dict.fromkeys(
+        ("ARRAY_POSITION", "LIST_POSITION"),
+        _fixed(2, "nullif(array_position({0}, {1}), 0)"),
+    ),
+    # exactly 2 array args in the reference; other arities stay
+    # unrenamed so Spark raises like the reference
+    **dict.fromkeys(
+        ("ARRAY_CONCAT", "LIST_CONCAT"), _fixed(2, "concat({0}, {1})")
+    ),
+    **dict.fromkeys(("REGEXP_SUBSTR", "REGEXP_EXTRACT"), _regexp_substr),
+    "REGEXP_REPLACE": _regexp_replace,
+    "ARRAY_AGG": _null_keeping_agg(False),
+    **dict.fromkeys(
+        ("JSON_ARRAYAGG", "JSON_GROUP_ARRAY"), _null_keeping_agg(True)
+    ),
+    # split on the \Q..\E-quoted literal delimiter; an empty delimiter
+    # returns the whole string as one element
+    **dict.fromkeys(
+        ("STRING_SPLIT", "STR_SPLIT"),
+        _fixed(
+            2,
+            "(CASE WHEN ({1}) = '' THEN array({0}) ELSE "
+            "split({0}, concat('\\\\Q', {1}, '\\\\E')) END)",
+        ),
+    ),
+    # --- syntax.md wish-list function shapes ----------------------------
+    # generator in select position (item 3)
+    "REGEXP_SPLIT_TO_TABLE": _fixed(2, "explode(split({0}, {1}))"),
+    # (item 6) sorted-by-key map → JSON text. DuckDB is insertion-ordered;
+    # a distributed engine has no stable arrival order, so keys sort —
+    # deterministic at any parallelism.
+    "JSON_GROUP_OBJECT": _fixed(
+        2,
+        "to_json(map_from_entries(array_sort(collect_list("
+        "struct(CAST({0} AS STRING) AS key, {1} AS value)))))",
+    ),
+    "STRUCT_EXTRACT": _struct_extract,
+    "STRUCT_PACK": _struct_pack,
+    "STRFTIME": _strftime,
+    # (item 13) the reference's DATE_PART('dow'): JS getUTCDay(),
+    # Sunday=0 (Spark's builtin is Sunday=1). WEEKDAY (Monday=0) is
+    # Spark-native and already matches.
+    "DAYOFWEEK": lambda args: (
+        _extract_sql("DOW", args[0]) if len(args) == 1 else None
+    ),
+    # (item 14) Postgres/DuckDB arg order; Spark's 2-arg form is
+    # (trimStr, str) — swap
+    "LTRIM": _fixed(2, "ltrim({1}, {0})"),
+    "RTRIM": _fixed(2, "rtrim({1}, {0})"),
+    # --- end wish-list function shapes ----------------------------------
+    "ATAN": _fixed(2, "atan2({0}, {1})"),  # JS Math.atan2
+    # a single argument is accepted in the reference
+    **dict.fromkeys(("GREATEST", "LEAST"), _fixed(1, "({0})")),
+    "PERCENTILE_CONT": _fixed(2, "percentile({1}, {0})"),  # interpolating
+    # comma form → instr (the SQL-standard POSITION(needle IN haystack)
+    # form passes through to Spark)
+    "POSITION": _fixed(2, "instr({0}, {1})"),
+    "TRIM": _js_trim,
+    "LN": _js_log("ln"),
+    "LOG10": _js_log("log10"),
+    "LOG2": _js_log("log2"),
+}
+
+
+def _rewrite_function_dialect(q: str) -> str:
+    """Reference scalar/aggregate function surface onto Spark built-ins:
+    the ``_FUNCTION_CALLS`` walk, then the operator and literal shapes
+    that are not calls."""
+    q = _rewrite_calls(q, _FUNCTION_CALLS)
     # TIMESTAMP/DATE typed literals: the reference yields NULL for
     # unparseable values instead of a parse error — CAST matches that in
     # non-ANSI sessions and is identical for valid literals
@@ -2050,58 +1948,12 @@ def _rewrite_function_dialect(q: str) -> str:
         re.compile(r"\b(TIMESTAMP|DATE)\s+('(?:[^']|'')*')", re.I),
         lambda m: f"CAST({m.group(2)} AS {m.group(1).upper()})",
     )
-    # PERCENTILE_CONT(p, v) 2-arg → percentile(v, p) (interpolating)
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bPERCENTILE_CONT\s*\(", re.I),
-        lambda args: f"percentile({args[1]}, {args[0]})"
-        if len(args) == 2
-        else None,
-    )
-    # POSITION(haystack, needle) comma form → instr (the SQL-standard
-    # POSITION(needle IN haystack) form passes through to Spark)
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bPOSITION\s*\(", re.I),
-        lambda args: f"instr({args[0]}, {args[1]})"
-        if len(args) == 2
-        else None,
-    )
-    # TRIM(x) 1-arg → JS String.trim() (all whitespace, not just spaces);
-    # TRIM(BOTH.. FROM ..) forms pass through
-    q = _rewrite_wrap_call(
-        q,
-        re.compile(r"\bTRIM\s*\(", re.I),
-        lambda args: (
-            f"regexp_replace(CAST({args[0]} AS STRING), "
-            f"'^\\\\s+|\\\\s+$', '')"
-            if len(args) == 1
-            and not re.match(
-                r"\s*(BOTH|LEADING|TRAILING)\b", args[0], re.I
-            )
-            else None
-        ),
-    )
     # INTERVAL n FORTNIGHT → INTERVAL 14n DAY
     q = _sub_outside_strings(
         q,
         re.compile(r"\bINTERVAL\s+(\d+)\s+FORTNIGHTS?\b", re.I),
         lambda m: f"INTERVAL {int(m.group(1)) * 14} DAY",
     )
-    # LN/LOG10/LOG2: JS math — negative → NaN, zero → -Infinity (Spark
-    # returns NULL for both; reference evaluates Math.log)
-    for fname, sql in (("LN", "ln"), ("LOG10", "log10"), ("LOG2", "log2")):
-        q = _rewrite_wrap_call(
-            q,
-            re.compile(rf"\b{fname}\s*\(", re.I),
-            lambda args, s=sql: (
-                f"(CASE WHEN ({args[0]}) < 0 THEN CAST('NaN' AS DOUBLE) "
-                f"WHEN ({args[0]}) = 0 THEN CAST('-Infinity' AS DOUBLE) "
-                f"ELSE {s}({args[0]}) END)"
-                if len(args) == 1
-                else None
-            ),
-        )
     # rank-family OVER clauses without ORDER BY: the reference numbers
     # input order; monotonically_increasing_id() is ascending in input
     # order per partition
@@ -2719,9 +2571,7 @@ def _rewrite_reference_sql_inner(
             up = query.upper()
     if "JSON_EACH" in up:
         query = _rewrite_json_each_from(query, spark)
-    up = query.upper()
-    if re.search(r"DATE_DIFF|DATEDIFF|EXTRACT|DATE_PART|EPOCH", up):
-        query = _rewrite_date_dialect(query)
+    query = _rewrite_calls(query, _DATE_CALLS)
     if spark is not None:
         if "[" in query:
             query = _rewrite_dynamic_access(query, spark)

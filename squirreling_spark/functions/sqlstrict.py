@@ -34,9 +34,10 @@ import re
 from .sqldialect import (
     _balanced_arg,
     _bracket_is_literal,
+    _iter_calls,
+    _rewrite_calls,
     _scan,
     _split_top_args,
-    _sub_outside_strings,
 )
 
 
@@ -172,7 +173,6 @@ _CAST_TYPES = {
 }
 _INTERVAL_UNITS = {"DAY", "MONTH", "YEAR", "HOUR", "MINUTE", "SECOND"}
 
-_CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 _NUM_LIT_RE = re.compile(r"\s*-?\d+\s*$")
 
 
@@ -242,22 +242,17 @@ def _validate_known_tables(q: str, tables) -> None:
     catalog-backed sessions resolve names Spark-side."""
     if not tables:
         return
-    mask, _, partner = _scan(q)
+    mask = _scan(q).mask
     known = {t.lower() for t in tables}
     known |= _cte_names(q, mask)
     # FROM is also a keyword inside EXTRACT/TRIM/SUBSTRING/POSITION/
     # OVERLAY calls — mask those call spans out (a subquery nested inside
     # one would only be under-checked, never falsely rejected)
     call_mask = bytearray(len(q))
-    for cm in re.finditer(
-        r"\b(?:EXTRACT|TRIM|SUBSTRING|SUBSTR|POSITION|OVERLAY)\s*\(",
-        q, re.I,
+    for _, start, _, end in _iter_calls(
+        q, ("EXTRACT", "TRIM", "SUBSTRING", "SUBSTR", "POSITION", "OVERLAY")
     ):
-        if mask[cm.start()]:
-            continue
-        # an unbalanced call (no partner) masks nothing
-        for i in range(cm.start(), partner[cm.end() - 1] + 1):
-            call_mask[i] = 1
+        call_mask[start:end] = b"\x01" * (end - start)
     for m in re.finditer(
         r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)(?![\w.])", q, re.I
     ):
@@ -282,21 +277,6 @@ def _validate_known_tables(q: str, tables) -> None:
 def _literal_int(arg: str) -> int | None:
     m = re.fullmatch(r"\s*(-?\d+)\s*", arg)
     return int(m.group(1)) if m else None
-
-
-def _iter_calls(q: str):
-    """Yield (name_upper, start, args, end) for every call outside
-    strings whose parenthesis closes; ``end`` is the index just past
-    it, for validating call suffixes (WITHIN GROUP / FILTER)."""
-    partner = _scan(q).partner
-    for m in _CALL_RE.finditer(q):
-        close = partner[m.end() - 1]
-        if close < 0:
-            continue  # quoted, or unbalanced: Spark will error
-        args = _split_top_args(q[m.end() : close])
-        if args == [""]:
-            args = []
-        yield m.group(1).upper(), m.start(), args, close + 1
 
 
 def _validate_arity(q: str, functions) -> None:
@@ -780,7 +760,7 @@ def _validate_table_functions(q: str) -> None:
     """UNNEST/EXPLODE/JSON_EACH are table functions: FROM-position only
     (reference parse — 'X is a table function and can only be used in
     FROM clauses')."""
-    mask, _, partner = _scan(q)
+    mask = _scan(q).mask
     for m in re.finditer(r"\b(UNNEST|EXPLODE|JSON_EACH)\s*\(", q, re.I):
         if mask[m.start()]:
             continue
@@ -796,30 +776,22 @@ def _validate_table_functions(q: str) -> None:
         )
     # column-alias-list arity: UNNEST exposes ONE column, JSON_EACH two
     # (key, value) — reference parse errors, asserted verbatim
-    for m in re.finditer(
-        r"\b(UNNEST|JSON_EACH)\s*\(", q, re.I
-    ):
-        if mask[m.start()]:
-            continue
-        close = partner[m.end() - 1]
-        if close < 0:
-            continue  # unbalanced: Spark will error
+    for name, start, _, end in _iter_calls(q, ("UNNEST", "JSON_EACH")):
         am = re.match(
-            r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q[close + 1 :],
-            re.I,
+            r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q[end:], re.I
         )
         if not am:
             continue
         n_alias = len([c for c in am.group(1).split(",") if c.strip()])
-        if m.group(1).upper() == "UNNEST" and n_alias > 1:
+        if name == "UNNEST" and n_alias > 1:
             raise StrictDialectError(
                 "UNNEST produces a single column; only one column alias "
-                f"is allowed (at position {m.start()})"
+                f"is allowed (at position {start})"
             )
-        if m.group(1).upper() == "JSON_EACH" and n_alias > 2:
+        if name == "JSON_EACH" and n_alias > 2:
             raise StrictDialectError(
                 "JSON_EACH produces at most 2 columns (key, value); too "
-                f"many column aliases (at position {m.start()})"
+                f"many column aliases (at position {start})"
             )
 
 
@@ -909,7 +881,7 @@ def _validate_aggregate_modifiers(q: str) -> None:
 
 
 def _validate_window_groupby(q: str) -> None:
-    mask, depth, partner = _scan(q)
+    mask, depth, _ = _scan(q)
 
     def depth0(pat):
         for m in re.finditer(pat, q, re.I):
@@ -918,32 +890,23 @@ def _validate_window_groupby(q: str) -> None:
         return False
 
     # window-only functions need OVER (reference parse error, verbatim)
-    for m in re.finditer(
-        r"\b(" + "|".join(_WINDOW_ONLY_FUNCS) + r")\s*\(", q, re.I
-    ):
-        if mask[m.start()]:
-            continue
-        close = partner[m.end() - 1]
-        if close < 0:
-            continue  # unbalanced: Spark will error
-        if not re.match(r"\s*OVER\b", q[close + 1 :], re.I):
+    for name, start, _, end in _iter_calls(q, _WINDOW_ONLY_FUNCS):
+        if not re.match(r"\s*OVER\b", q[end:], re.I):
             raise StrictDialectError(
-                f"{m.group(1).upper()}() requires an OVER clause at "
-                f"position {m.start()}"
+                f"{name}() requires an OVER clause at position {start}"
             )
         # window functions are select-list/ORDER BY only — a WHERE-clause
         # window call is rejected with the function named (reference)
         wm = None
-        for w in re.finditer(r"\bWHERE\b", q[: m.start()], re.I):
-            if not mask[w.start()] and depth[w.start()] == depth[m.start()]:
+        for w in re.finditer(r"\bWHERE\b", q[:start], re.I):
+            if not mask[w.start()] and depth[w.start()] == depth[start]:
                 wm = w
         if wm is not None and not re.search(
             r"\b(?:GROUP\s+BY|ORDER\s+BY|HAVING|SELECT)\b",
-            q[wm.end(): m.start()], re.I,
+            q[wm.end(): start], re.I,
         ):
             raise StrictDialectError(
-                f"Window function {m.group(1).upper()} is not allowed in "
-                "WHERE clause"
+                f"Window function {name} is not allowed in WHERE clause"
             )
     if depth0(r"\bOVER\s*\(") and depth0(r"\bGROUP\s+BY\b"):
         raise StrictDialectError(
@@ -1090,10 +1053,6 @@ def strict_guards(q: str) -> str:
             f"ELSE substring(({x}), ({s}), ({ln})) END)"
         )
 
-    from .sqldialect import _rewrite_wrap_call
-
-    return _rewrite_wrap_call(
-        q,
-        re.compile(r"\b(?:SUBSTRING|SUBSTR)\s*\(", re.I),
-        _wrap_substring,
+    return _rewrite_calls(
+        q, dict.fromkeys(("SUBSTRING", "SUBSTR"), _wrap_substring)
     )

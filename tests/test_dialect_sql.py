@@ -4,6 +4,8 @@ test shapes: test/execute/positional.test.js, test/execute/execute.json.test.js
 (JSON_EACH in FROM), src/parse/tokenize.js:49-57 (``123n`` literals),
 src/expression/binary.js:57-66 (case-insensitive LIKE)."""
 
+import math
+
 import pytest
 
 from squirreling_spark.engine import execute_sql
@@ -259,6 +261,13 @@ def test_scan_partners_and_depths(text, pairs, depth):
         assert rewrite_reference_sql(q) == q
 
 
+def test_concat_precedence_inside_subscript():
+    # `||` binds below `+` inside a subscript too; the inserted group
+    # closes before the subscript's `]`
+    q = rewrite_reference_sql("SELECT a[b || c + 1] AS v FROM t")
+    assert q == "SELECT a[b || (c + 1)] AS v FROM t"
+
+
 def test_rewrite_noop_on_plain_sql(spark):
     q = "SELECT a, b FROM t WHERE a > 1 ORDER BY b"
     assert rewrite_reference_sql(q, spark=spark) == q
@@ -401,6 +410,20 @@ def test_array_literals_and_subscripts(spark):
     )
     rows = _rows(res)
     assert rows == [{"arr": [1, 2, 3], "third": 30}]  # 0-based like JS
+    # evaluate.js:574-618: a position is 1-based and NULL when the value
+    # is absent; ARRAY_CONCAT/LIST_CONCAT join exactly two arrays
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT ARRAY_POSITION(arr, 5) AS p, LIST_POSITION(arr, 2) AS lp,"
+            " ARRAY_CONCAT(arr, [4]) AS c, LIST_CONCAT([0], arr) AS lc"
+            " FROM data",
+            tables={"data": [{"arr": [1, 2, 3]}]},
+        )
+    )
+    assert rows == [
+        {"p": None, "lp": 2, "c": [1, 2, 3, 4], "lc": [0, 1, 2, 3]}
+    ]
 
 
 def test_unnest_from_and_lateral(spark):
@@ -462,6 +485,53 @@ def test_date_dialect_semantics(spark):
         )
     )
     assert rows == [{"dow": 1, "s": 45}]  # JS getUTCDay; integer seconds
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT DATE_PART('dow', ts) AS dow, DATE_PART('epoch', ts) AS e,"
+            " DATE_PART('second', ts) AS s FROM events",
+            tables={"events": ev},
+        )
+    )
+    # date.js: DATE_PART shares EXTRACT's fields; epoch is getTime()/1000
+    assert rows == [{"dow": 1, "e": 1721053845.0, "s": 45}]
+
+
+def test_date_diff_after_unrewritable_call(spark):
+    # Spark's own 2-arg DATEDIFF is left alone; the reference-dialect
+    # DATE_DIFF after it is still rewritten
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT DATEDIFF(d2, d1) AS a, DATE_DIFF('day', d1, d2) AS b"
+            " FROM t",
+            tables={"t": [{"d1": "2024-01-01", "d2": "2024-01-05"}]},
+        )
+    )
+    assert rows == [{"a": 4, "b": 4}]
+
+
+def test_math_dialect_js_semantics(spark):
+    # JS Math.atan2 for 2-arg ATAN; Math.log family: a negative input is
+    # NaN and zero is -Infinity (Spark returns NULL for both)
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT x, ATAN(x, 1) AS a, LN(x) AS ln, LOG10(x) AS l10,"
+            " LOG2(x) AS l2 FROM nums ORDER BY x",
+            tables={"nums": [{"x": 8}, {"x": -1}, {"x": 0}]},
+        )
+    )
+    assert [r["x"] for r in rows] == [-1, 0, 8]
+    assert [r["a"] for r in rows] == pytest.approx(
+        [math.atan2(-1, 1), 0.0, math.atan2(8, 1)]
+    )
+    for col in ("ln", "l10", "l2"):
+        assert math.isnan(rows[0][col])
+        assert rows[1][col] == -math.inf
+    assert rows[2]["ln"] == pytest.approx(math.log(8))
+    assert rows[2]["l10"] == pytest.approx(math.log10(8))
+    assert rows[2]["l2"] == pytest.approx(3.0)
 
 
 def test_loose_group_by_retry(spark):

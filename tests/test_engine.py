@@ -81,6 +81,17 @@ def test_column_not_found(spark):
         ).collect()
 
 
+def test_error_type_ignores_literals_in_the_plan(spark):
+    # Spark's message embeds the analyzed plan, literals included; the
+    # error type follows Spark's error condition, not the message text
+    with pytest.raises(ColumnNotFoundError, match='"nope" not found'):
+        execute_sql(
+            spark,
+            "SELECT nope FROM ct WHERE a = 'TABLE_OR_VIEW_NOT_FOUND'",
+            tables={"ct": [{"a": "x"}]},
+        ).collect()
+
+
 def test_unknown_function_suggestion(spark):
     with pytest.raises(UnknownFunctionError, match="Did you mean LOWER"):
         execute_sql(spark, "SELECT lowerr(a) FROM ft", tables={"ft": [{"a": "x"}]})
@@ -276,11 +287,15 @@ def test_dynamic_order_by_numeric_coercion(spark):
 
 @pytest.mark.parametrize(
     "order_by",
-    ["v", "concat('(', 'x'), v", "concat(')', 'x'), v"],
+    [
+        "v", "concat('(', 'x'), v", "concat(')', 'x'), v",
+        "v LIMIT 10", "v OFFSET 0",
+    ],
 )
 def test_dynamic_order_by_item_after_quoted_paren(spark, order_by):
-    # a bracket inside a string literal must not hide the later dynamic
-    # item from the numeric coercion: "x" is NULL (first), then 9, 10, 100
+    # neither a bracket inside a string literal nor a trailing LIMIT /
+    # OFFSET may hide the dynamic item from the numeric coercion: "x" is
+    # NULL (first), then 9, 10, 100
     rows = execute_sql(
         spark,
         f"SELECT id FROM data ORDER BY {order_by}",
