@@ -275,9 +275,12 @@ def _coerce_row(row: dict, schema) -> tuple:
 
 
 def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
-    """Register each table-map entry as a temp view and return {view
-    name: schema} — the namespace the dialect rewrites resolve column
-    references against."""
+    """Register each table-map entry as a temp view under its own name
+    and return {table name: schema} — the namespace the dialect rewrites
+    resolve column references against. A name that is not a plain
+    identifier (``dataset.parquet`` is one flat name in the reference's
+    table map) registers backtick-quoted; the rewrite quotes it in the
+    query text to match (``sqldialect._quote_table_names``)."""
     schemas = {}
     for name, source in tables.items():
         schema = None
@@ -304,7 +307,10 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
             )
         else:
             raise TypeError(f"unsupported table source for {name!r}: {type(source)}")
-        df.createOrReplaceTempView(name)
+        plain = re.fullmatch(r"[A-Za-z_]\w*", name)
+        df.createOrReplaceTempView(
+            name if plain else "`" + name.replace("`", "``") + "`"
+        )
         schemas[name] = df.schema if schema is None else schema
     return schemas
 
@@ -340,29 +346,13 @@ def extract_tables(spark: SparkSession, query: str) -> list[str]:
         # Textual fallback (subquery relations live inside expressions the
         # plan walk above doesn't reach): strip comments first so keywords
         # inside them can't match, skip string literals, and honor quoted
-        # identifiers ("name" / `name`).
-        from squirreling_spark.functions.sqldialect import _scan
+        # identifiers ("name" / `name`); table functions and subqueries
+        # are not tables.
+        from squirreling_spark.functions.sqldialect import _from_items
 
         stripped = re.sub(r"--[^\n]*", " ", query)
         stripped = re.sub(r"/\*.*?\*/", " ", stripped, flags=re.S)
-        mask = _scan(stripped).mask
-        pat = re.compile(
-            r"(?:\bfrom|\bjoin)\s+"
-            r"([A-Za-z_][\w.]*|\"[^\"]+\"|`[^`]+`)",
-            re.I,
-        )
-        names = []
-        for m in pat.finditer(stripped):
-            if mask[m.start()]:
-                continue  # inside a string literal
-            name = m.group(1)
-            if name.startswith(('"', "`")):
-                name = name[1:-1]
-            elif name.lower() in ("select", "lateral", "values", "unnest"):
-                continue  # FROM (SELECT ...) and table functions
-            elif re.match(r"\s*\(", stripped[m.end():]):
-                continue  # table function call (JSON_EACH(...), range(...))
-            names.append(name)
+        names = [it.name for it in _from_items(stripped) if it.kind == "table"]
         if not names and parse_exc is not None:
             raise ValueError(f"parse error: {parse_exc}") from parse_exc
     seen, out = set(), []
@@ -394,6 +384,7 @@ class QueryResult:
 
     df: DataFrame
     job_group: str
+    description: str
     _spark: SparkSession = field(repr=False, default=None)
 
     @property
@@ -404,7 +395,7 @@ class QueryResult:
         # Job groups are thread-local: attach the group in the thread that
         # actually submits the job, so cancel() from any thread reaches it.
         self._spark.sparkContext.setJobGroup(
-            self.job_group, "squirreling query", interruptOnCancel=True
+            self.job_group, self.description, interruptOnCancel=True
         )
 
     def rows(self, prefetch: bool = True) -> Iterator[dict[str, Any]]:
@@ -457,6 +448,13 @@ def execute_sql(
     (functions/sqldialect.py); ``like_mode="ci"`` opts into the
     reference's case-insensitive LIKE (src/expression/binary.js:57-66).
 
+    Table names are flat, as in the reference's table map: a key such as
+    ``dataset.parquet`` is one name, not a schema path. It registers as
+    the temp view `` `dataset.parquet` ``, and the query may name it bare
+    in FROM/JOIN position, as ``"dataset.parquet"`` or as
+    `` `dataset.parquet` ``: the rewrite backtick-quotes the FROM items
+    and ``"..."`` identifiers that name it, never a string literal.
+
     ``cache_tables`` memoizes the named tables across queries
     (``df.cache()`` — the reference's cachedDataSource cell memoization,
     src/backend/dataSource.js:80-129, at DataFrame granularity)."""
@@ -470,36 +468,7 @@ def execute_sql(
     )
 
     register_reference_functions(spark)
-    # Strict validation runs on the PRE-rename text with the PRE-rename
-    # table keys: the reference rejects `FROM dataset.parquet` unquoted
-    # even when "dataset.parquet" is a flat table-map key, and the rename
-    # shim below would erase exactly that evidence.
-    orig_query, orig_tables = query, tables
-    views = None
-    if tables:
-        # Names Spark can't hold in a temp view (dots: ``dataset.parquet``
-        # is a FLAT name in the reference's table map, not a schema path)
-        # register under a safe name; the query text is rewritten to match
-        # in quoted ("..."/`...`) and bare FROM/JOIN positions.
-        import hashlib
-        renames = {
-            name: "__sq_tbl_" + hashlib.md5(name.encode()).hexdigest()[:10]
-            for name in tables
-            if not re.fullmatch(r"[A-Za-z_]\w*", name)
-        }
-        if renames:
-            tables = {renames.get(k, k): v for k, v in tables.items()}
-            for orig, safe in renames.items():
-                for pat in (f'"{orig}"', f"`{orig}`"):
-                    query = query.replace(pat, safe)
-                query = re.sub(
-                    r"(\bFROM\s+|\bJOIN\s+|,\s*)"
-                    + re.escape(orig)
-                    + r"(?=[\s,)]|$)",
-                    lambda m: m.group(1) + safe,
-                    query,
-                )
-        views = _register_tables(spark, tables)
+    views = _register_tables(spark, tables) if tables else None
     for name in cache_tables or []:
         spark.catalog.cacheTable(name)
     if functions:
@@ -514,32 +483,34 @@ def execute_sql(
             )
 
             validate_reference_sql(
-                orig_query, spark=spark, tables=orig_tables,
-                functions=functions,
+                query, spark=spark, tables=tables, functions=functions
             )
-        query = rewrite_reference_sql(
+        rewritten = rewrite_reference_sql(
             query, spark=spark, like_mode=like_mode, pos_order=pos_order,
             ident_quotes=ident_quotes,
         )
     if strict:
-        query = strict_guards(query)
+        rewritten = strict_guards(rewritten)
 
     job_group = f"squirreling-{uuid.uuid4().hex[:12]}"
-    spark.sparkContext.setJobGroup(job_group, query[:200], interruptOnCancel=True)
+    description = rewritten[:200]
+    spark.sparkContext.setJobGroup(
+        job_group, description, interruptOnCancel=True
+    )
     try:
-        return _analyze(spark, query, job_group, orig_query, orig_tables)
+        df = _analyze(spark, rewritten, query, tables)
+        return QueryResult(df, job_group, description, _spark=spark)
     finally:
         # every statement built from the text is analyzed by now
-        drop_scratch_views(spark, query)
+        drop_scratch_views(spark, rewritten)
 
 
 def _analyze(
     spark: SparkSession,
     query: str,
-    job_group: str,
     orig_query: str,
     orig_tables: dict[str, Any] | None,
-) -> QueryResult:
+) -> DataFrame:
     """spark.sql the rewritten statement, retrying the reference shapes
     Spark rejects, and map analysis errors onto the reference's error
     types (``orig_*`` are the caller's text and table map)."""
@@ -561,9 +532,7 @@ def _analyze(
             loose = loosen_group_by(query, spark=spark)
             if loose is not None:
                 try:
-                    return QueryResult(
-                        spark.sql(loose), job_group, _spark=spark
-                    )
+                    return spark.sql(loose)
                 except Exception:  # noqa: BLE001 — report the original
                     pass
         # Reference alias-chaining shapes Spark rejects: GROUP BY on a
@@ -578,9 +547,7 @@ def _analyze(
             inlined = inline_select_aliases(query)
             if inlined is not None:
                 try:
-                    return QueryResult(
-                        spark.sql(inlined), job_group, _spark=spark
-                    )
+                    return spark.sql(inlined)
                 except Exception:  # noqa: BLE001 — report the original
                     pass
         # Reference resolution order: a dotted ref `a.b` matches a FLAT
@@ -598,9 +565,7 @@ def _analyze(
                 )
                 if retry != query:
                     try:
-                        return QueryResult(
-                            spark.sql(retry), job_group, _spark=spark
-                        )
+                        return spark.sql(retry)
                     except Exception:  # noqa: BLE001
                         pass
         first = msg.splitlines()[0]
@@ -636,16 +601,14 @@ def _analyze(
             # a column reference inside FROM/JOIN UNNEST(...) is a
             # correlation the reference rejects with guidance
             # (execute.unnest tests, verbatim)
-            from squirreling_spark.functions.sqldialect import _scan
+            from squirreling_spark.functions.sqldialect import _from_items
 
-            partner = _scan(orig_query).partner
-            for um in re.finditer(
-                r"\b(?:FROM|JOIN|,)\s*UNNEST\s*\(", orig_query, re.I
-            ):
-                # an unbalanced call (no partner) gives an empty span
-                span = orig_query[um.end() - 1 : partner[um.end() - 1] + 1]
-                if re.search(
-                    r"(?<![\w.])" + re.escape(bad) + r"(?![\w.])", span
+            items = _from_items(orig_query)
+            ref = re.compile(r"(?<![\w.])" + re.escape(bad) + r"(?![\w.])")
+            for it in items:
+                if (
+                    it.kind == "call" and it.name == "UNNEST"
+                    and not it.lateral and ref.search(", ".join(it.args))
                 ):
                     raise ColumnNotFoundError(
                         f'UNNEST argument cannot reference column "{bad}"'
@@ -655,33 +618,26 @@ def _analyze(
                     ) from exc
             available: list[str] = []
             if orig_tables:
+                tables = [it for it in items if it.kind == "table"]
                 if "." in bad:
                     # reference resolves a qualified ref against ITS
                     # table (alias or name) and lists that table's
                     # columns; the message carries the bare column
                     qual, bare = bad.rsplit(".", 1)
-                    target = None
-                    if qual in orig_tables:
-                        target = qual
-                    else:
-                        am = re.search(
-                            r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)\s+"
-                            r"(?:AS\s+)?" + re.escape(qual) + r"\b",
-                            orig_query, re.I,
-                        )
-                        if am and am.group(1) in orig_tables:
-                            target = am.group(1)
-                    if target is not None:
+                    target = qual if qual in orig_tables else next(
+                        (
+                            it.name for it in tables
+                            if (it.alias or "").lower() == qual.lower()
+                        ),
+                        None,
+                    )
+                    if target in orig_tables:
                         available = _cols_of(orig_tables[target])
                         bad = bare
                 if not available:
+                    named = {it.name.lower() for it in tables}
                     scoped = [
-                        t for t in orig_tables
-                        if re.search(
-                            r"\b(?:FROM|JOIN)\s+[\"`]?" + re.escape(t)
-                            + r"[\"`]?(?![\w.])",
-                            orig_query, re.I,
-                        )
+                        t for t in orig_tables if t.lower() in named
                     ] or list(orig_tables)
                     for t in scoped:
                         for c in _cols_of(orig_tables[t]):
@@ -748,7 +704,7 @@ def _analyze(
                     f"Cannot CAST object to {tgt}", pos
                 ) from exc
         raise
-    return QueryResult(df=df, job_group=job_group, _spark=spark)
+    return df
 
 
 # camelCase aliases matching the reference export names

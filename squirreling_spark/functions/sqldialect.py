@@ -9,16 +9,18 @@ Every pass reads one quote- and bracket-aware scan of the text
 text whose brackets do not balance is left for Spark to report.
 ``rewrite_reference_sql`` runs, in order:
 
-1. ANSI ``"ident"`` quoting (``ident_quotes="ansi"``) and DuckDB-style
-   FROM-first queries;
+1. table names that are not plain identifiers backtick-quoted
+   (``_quote_table_names``), ANSI ``"ident"`` quoting
+   (``ident_quotes="ansi"``) and DuckDB-style FROM-first queries;
 2. wish-list operator sugar (syntax.md): JSON arrows ``->``/``->>``,
    ``GLOB``, Postgres ``~``, ``* EXCLUDE``, ``DISTINCT ON``;
 3. reference-derived names for unaliased select items (alias.js), read
    before any function rewrite changes the text;
-4. array literals ``[1, 2]``, then FROM-clause table functions:
-   correlated ``UNNEST`` counts, ``UNNEST``/``EXPLODE``, ``POSITIONAL
-   JOIN`` (src/parse/joins.js:219-241, a row-position zip) and
-   ``JSON_EACH`` (src/execute/execute.js:193-242);
+4. array literals ``[1, 2]``, then FROM items via ``_from_items``:
+   correlated ``UNNEST`` counts, the table functions
+   ``_TABLE_FUNCTIONS`` (``UNNEST``/``EXPLODE``, ``JSON_EACH``:
+   src/execute/execute.js:160-242) and ``POSITIONAL JOIN``
+   (src/parse/joins.js:219-241, a row-position zip);
 5. the date calls, ``_DATE_CALLS`` (src/expression/date.js);
 6. with a session, the dtype-directed rewrites: subscripts that are NULL
    by static type, the dynamic-typing calls (array-family guards,
@@ -37,8 +39,13 @@ one call iterator, ``_iter_calls``, which strict validation
 (``sqlstrict``) reads too. A new function rewrite is one entry in the
 table of the stage it belongs to: the call's upper-cased name mapped to
 a function from its arguments to the replacement text (None leaves the
-call alone), or to a plain new name. The rewriter is not a full parser;
-it targets the reference's tested query shapes.
+call alone), or to a plain new name. FROM clauses are read by one
+reader, ``_from_items`` (tables, table-function calls and subqueries
+with their join keywords, aliases, column-alias lists and ON
+predicates), which ``sqlstrict`` and ``engine`` read too; a new
+FROM-clause table function is one entry in ``_TABLE_FUNCTIONS``. The
+rewriter is not a full parser; it targets the reference's tested query
+shapes.
 
 Semantics notes (documented divergences, all at the type edge where a
 dynamically-typed JS engine meets SQL):
@@ -262,6 +269,160 @@ def _fixed(arity: int, template: str):
     """Table entry for a call rewritten only at one arity: the template's
     ``{0}``, ``{1}``, ... are the call's arguments."""
     return lambda args: template.format(*args) if len(args) == arity else None
+
+
+# ---------------------------------------------------------------------------
+# FROM items (reference src/parse/joins.js:16-293)
+# ---------------------------------------------------------------------------
+
+# Words that end a relation rather than alias it.
+_NOT_ALIAS = frozenset({
+    "AS", "SELECT", "FROM", "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT",
+    "OFFSET", "QUALIFY", "WINDOW", "UNION", "INTERSECT", "EXCEPT", "ON",
+    "USING", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "CROSS", "OUTER",
+    "NATURAL", "SEMI", "ANTI", "POSITIONAL", "LATERAL", "SORT", "CLUSTER",
+    "DISTRIBUTE",
+})
+# Clauses that end a FROM clause (and an ON predicate).
+_CLAUSE_KW = (
+    r"\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET|QUALIFY|WINDOW"
+    r"|UNION|INTERSECT|EXCEPT|(?:SORT|CLUSTER|DISTRIBUTE)\s+BY)\b"
+)
+_CLAUSE_RE = re.compile(_CLAUSE_KW, re.I)
+_JOIN_KW = (
+    r"\b(?:NATURAL\s+)?(?:(?:(?:LEFT\s+)?(?:SEMI|ANTI)|(?:LEFT|RIGHT|FULL)"
+    r"(?:\s+OUTER)?|INNER|CROSS|POSITIONAL)\s+)?JOIN\b"
+)
+_JOIN_RE = re.compile(r"\s*(" + _JOIN_KW + r")", re.I)
+_ON_END_RE = re.compile(
+    rf"{_JOIN_KW}|{_CLAUSE_KW}|\bLATERAL\s+VIEW\b|,", re.I
+)
+_IDENT = r"(?:[A-Za-z_]\w*|\"[^\"]*\"|`[^`]*`)"
+_REL_NAME_RE = re.compile(rf"{_IDENT}(?:\s*\.\s*{_IDENT})*")
+_LATERAL_RE = re.compile(r"\s*(LATERAL\b\s*)?", re.I)
+_ALIAS_RE = re.compile(r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(\()?", re.I)
+_ON_RE = re.compile(r"\s*(ON\b|USING\s*\()\s*", re.I)
+_COMMA_RE = re.compile(r"\s*,")
+# Calls whose arguments use FROM as a keyword, not as a clause.
+_FROM_ARG_CALLS = (
+    "EXTRACT", "TRIM", "SUBSTRING", "SUBSTR", "POSITION", "OVERLAY",
+)
+_DISTINCT_END_RE = re.compile(r"\bDISTINCT\s*$", re.I)
+
+
+class _FromItem(NamedTuple):
+    """One relation of a FROM clause (see ``_from_items``)."""
+
+    kw: int  # start of the FROM, the JOIN keywords or the comma before it
+    join: str  # "FROM", "," or the join keywords, upper-cased: "LEFT JOIN"
+    lateral: bool  # written after LATERAL
+    start: int  # start of the relation text
+    rel_end: int  # end of the name, or just past the call's/subquery's ")"
+    kind: str  # "table", "call" or "subquery"
+    name: str  # table name without quotes, upper-cased call name, or ""
+    quoted: bool  # the table name was written in "..." or `...`
+    args: tuple  # the call's arguments
+    alias: str | None
+    cols: tuple | None  # column-alias list: ``AS u(x, y)``
+    end: int  # end of the relation with its alias and column list
+    on: tuple | None  # (start, end) of the ON predicate, spaces trimmed
+
+
+def _unquote_name(raw: str) -> str:
+    """``"a"."b"``, `` `a.b` `` or ``a . b`` as ``a.b``."""
+    parts = re.findall(_IDENT, raw)
+    return ".".join(p[1:-1] if p[0] in "\"`" else p for p in parts)
+
+
+def _from_keywords(q: str):
+    """Start of every FROM that opens a FROM clause: outside strings, not
+    ``IS [NOT] DISTINCT FROM`` and not among the arguments of a call that
+    uses FROM as a keyword (EXTRACT, TRIM, SUBSTRING, ...)."""
+    s = _scan(q)
+    in_call = set()
+    for _, start, _, end in _iter_calls(q, _FROM_ARG_CALLS):
+        open_idx = q.index("(", start)
+        in_call |= {
+            m.start() for m in _FROM_KW.finditer(q, open_idx, end)
+            if s.depth[m.start()] == s.depth[open_idx] + 1
+        }
+    for m in _FROM_KW.finditer(q):
+        f = m.start()
+        if not (s.mask[f] or f in in_call or _DISTINCT_END_RE.search(q, 0, f)):
+            yield f
+
+
+def _read_relation(q: str, kw: int, join: str, pos: int):
+    """The relation after the FROM/JOIN keyword or comma that ends at
+    ``pos``, and the index just past its ON or USING clause; None when
+    no relation starts there."""
+    s = _scan(q)
+    lat = _LATERAL_RE.match(q, pos)
+    start, name, quoted, args = lat.end(), "", False, ()
+    if q.startswith("(", start) and s.partner[start] >= 0:
+        kind, rel_end = "subquery", s.partner[start] + 1
+    else:
+        m = _REL_NAME_RE.match(q, start)
+        if m is None or m.group().upper() in _NOT_ALIAS:
+            return None
+        call = _CALL_RE.match(q, start)
+        if call and call.end() > m.end() and s.partner[call.end() - 1] >= 0:
+            kind, name = "call", call.group(1).upper()
+            args, rel_end = _call_parts(q, call)
+            args = tuple(args)
+        else:
+            kind, name = "table", _unquote_name(m.group())
+            quoted, rel_end = m.group()[0] in "\"`", m.end()
+    alias, cols, end = None, None, rel_end
+    am = _ALIAS_RE.match(q, rel_end)
+    if am and am.group(1).upper() not in _NOT_ALIAS:
+        alias, end = am.group(1), am.end(1)
+        close = s.partner[am.end() - 1] if am.group(2) else -1
+        if close >= 0:
+            cols = tuple(c for c in _split_top_args(q[am.end() : close]) if c)
+            end = close + 1
+    on, after = None, end
+    om = _ON_RE.match(q, end)
+    if om and om.group(1).upper() == "ON":
+        stop = _toplevel_kw(q, _ON_END_RE, om.end())
+        stop = _stmt_end(q, om.end()) if stop == -1 else stop
+        on = (om.end(), om.end() + len(q[om.end() : stop].rstrip()))
+        after = on[1]
+    elif om and s.partner[om.end(1) - 1] >= 0:
+        after = s.partner[om.end(1) - 1] + 1  # USING (...)
+    item = _FromItem(
+        kw, join, bool(lat.group(1)), start, rel_end, kind, name, quoted,
+        args, alias, cols, end, on,
+    )
+    return item, after
+
+
+@functools.lru_cache(maxsize=64)
+def _from_items(q: str) -> tuple:
+    """The one FROM-clause reader: every relation of every FROM clause
+    outside strings, at any depth, as ``_FromItem``s — clause by clause
+    in the order of their FROM keywords, each clause's relations in text
+    order. A clause is FROM, then relations joined by commas or JOIN
+    keywords, each with an optional alias (``_NOT_ALIAS`` words are not
+    aliases), column-alias list and ON predicate (cut at the next join,
+    comma or clause keyword of its statement) or USING list. The clause
+    ends at anything else: a clause keyword, ``LATERAL VIEW``, the end
+    of its statement. Cached: the rewrites and checks of one text read
+    it many times."""
+    items = []
+    for f in _from_keywords(q):
+        kw, join, pos = f, "FROM", f + 4
+        while (read := _read_relation(q, kw, join, pos)) is not None:
+            item, pos = read
+            items.append(item)
+            if cm := _COMMA_RE.match(q, pos):
+                kw, join, pos = cm.end() - 1, ",", cm.end()
+            elif jm := _JOIN_RE.match(q, pos):
+                kw, pos = jm.start(1), jm.end()
+                join = " ".join(jm.group(1).upper().split())
+            else:
+                break
+    return tuple(items)
 
 
 _LITERAL_BRACKET_KEYWORDS = {
@@ -666,19 +827,6 @@ def _rewrite_wishlist(q: str) -> str:
     return q
 
 
-_JE_RE = re.compile(r"\bJSON_EACH\s*\(", re.I)
-_JE_ALIAS_RE = re.compile(
-    r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(?:\(\s*([A-Za-z_]\w*)"
-    r"\s*(?:,\s*([A-Za-z_]\w*))?\s*\))?",
-    re.I,
-)
-_KEYWORDS = {
-    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "ON", "JOIN", "UNION",
-    "INTERSECT", "EXCEPT", "INNER", "LEFT", "RIGHT", "FULL", "CROSS",
-    "LATERAL", "OFFSET", "QUALIFY", "WINDOW", "AS", "SELECT", "FROM",
-}
-
-
 # Column references resolve against ONE snapshot, {view name: schema},
 # held for the duration of a rewrite. engine.execute_sql installs the
 # call's own table map as that snapshot (engine._register_tables returns
@@ -752,15 +900,56 @@ def _resolution_views(spark) -> dict:
     return c["views"]
 
 
+# A simple column reference: ``col``, ``tbl.col`` or ```tbl.name`.col``.
+_REF_RE = re.compile(
+    r"(?:([A-Za-z_]\w*)|`([^`]+)`)\.([A-Za-z_]\w*)|[A-Za-z_]\w*"
+)
+_PLAIN_NAME_RE = re.compile(r"[A-Za-z_]\w*")
+
+
+def _quote_table_names(q: str, spark) -> str:
+    """Backtick every table name of the resolution snapshot that is not a
+    plain identifier (``dataset.parquet`` is one flat name in the
+    reference's table map, not a schema path) where the text names it:
+    as a FROM item (bare, ``"quoted"`` or dotted) and as a ``"..."``
+    identifier anywhere outside string literals. The views are registered
+    under the same backtick-quoted names (engine._register_tables)."""
+    if "." not in q and '"' not in q:
+        return q
+    c = getattr(_REF_CACHE, "c", None)
+    if spark is None and not (c and "views" in c):
+        return q
+    names = {
+        n for n in _resolution_views(spark)
+        if not _PLAIN_NAME_RE.fullmatch(n)
+    }
+    if not names:
+        return q
+    edits = {
+        it.start: it.rel_end for it in _from_items(q)
+        if it.kind == "table" and it.name in names and q[it.start] != "`"
+    }
+    for m in _SCAN_RE.finditer(q):
+        text = m.group()
+        quoted = len(text) > 1 and text[0] == text[-1] == '"'
+        if quoted and text[1:-1] in names:
+            edits[m.start()] = m.end()
+    for start in sorted(edits, reverse=True):
+        name = _unquote_name(q[start : edits[start]])
+        q = q[:start] + "`" + name.replace("`", "``") + "`" + q[edits[start] :]
+    return q
+
+
 def _ref_field(spark, ref: str):
     """StructField of a simple column reference (``col`` or ``tbl.col``)
     in the resolution snapshot, or None when it can't be resolved
     (expression args, unknown tables). A bare name matches the first
     view that has it."""
-    if spark is None or not re.fullmatch(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)?", ref):
+    m = _REF_RE.fullmatch(ref)
+    if spark is None or m is None:
         return None
     views = _resolution_views(spark)
-    table, _, col = ref.rpartition(".")
+    table, col = m.group(1) or m.group(2) or "", m.group(3) or ref
     if table:
         # view names are case-insensitive, as in Spark's catalog
         schemas = [s for n, s in views.items() if n.lower() == table.lower()]
@@ -798,81 +987,6 @@ def _dyn_num(ref: str) -> str:
     return f"TRY_CAST(get_json_object({ref}, '$') AS DOUBLE)"
 
 
-def _rewrite_json_each_from(q: str, spark=None) -> str:
-    """Rewrite FROM-clause JSON_EACH into Spark constructs:
-
-    - ``FROM JSON_EACH(x) [AS j[(k[, v])]]`` →
-      ``FROM (SELECT key AS k, value AS v FROM
-      (SELECT inline(<dispatch>)) __sq_je_i) AS j``
-    - ``<t> JOIN JSON_EACH(x) [AS j[(k[, v])]] ON TRUE`` →
-      ``<t> LATERAL VIEW inline(<dispatch>) j AS k, v``
-      (zero JSON rows → row dropped, matching JOIN ON TRUE over an empty
-      table function).
-    """
-    while True:
-        mask = _scan(q).mask
-        m = None
-        for cand in _JE_RE.finditer(q):
-            if not mask[cand.start()]:
-                # Only FROM-position occurrences: preceding non-space token
-                # must be FROM, JOIN, or ','. (Scalar JSON_EACH in SELECT is
-                # an error in the reference too.)
-                before = q[: cand.start()].rstrip()
-                if re.search(r"(\bFROM|\bJOIN|,)$", before, re.I):
-                    m = cand
-                    break
-        if m is None:
-            return q
-        open_idx = q.index("(", m.start())
-        arg_end = _balanced_arg(q, open_idx)
-        arg = q[open_idx + 1 : arg_end - 1].strip()
-        # JS-object fixtures surface as struct/array/map columns — their
-        # STRING cast ('{1, Alice}') is not JSON; to_json(col) is
-        from pyspark.sql import types as T
-
-        dt = _ref_dtype(spark, arg)
-        if isinstance(dt, (T.StructType, T.ArrayType, T.MapType)):
-            arg = f"to_json({arg})"
-        dispatch = _JE_DISPATCH.format(x=arg)
-
-        # Optional alias / column aliases after the call.
-        alias, k_name, v_name = None, "key", "value"
-        tail_end = arg_end
-        am = _JE_ALIAS_RE.match(q, arg_end)
-        if am and am.group(1) and am.group(1).upper() not in _KEYWORDS:
-            alias = am.group(1)
-            if am.group(2):
-                k_name = am.group(2)
-            if am.group(3):
-                v_name = am.group(3)
-            tail_end = am.end()
-
-        before = q[: m.start()].rstrip()
-        is_lateral = bool(re.search(r"\bJOIN$", before, re.I))
-        if is_lateral:
-            # `<t> JOIN JSON_EACH(expr) AS j ON TRUE` — consume the JOIN
-            # keyword and the trailing ON TRUE, emit LATERAL VIEW.
-            join_kw = re.search(r"\bJOIN\s*$", q[: m.start()], re.I)
-            on_m = re.match(r"\s*ON\s+TRUE", q[tail_end:], re.I)
-            on_end = tail_end + (on_m.end() if on_m else 0)
-            alias = alias or f"__sq_je_{uuid.uuid4().hex[:8]}"
-            q = (
-                q[: join_kw.start()]
-                + f" LATERAL VIEW inline({dispatch}) {alias} "
-                + f"AS {k_name}, {v_name} "
-                + q[on_end:]
-            )
-        else:
-            alias = alias or f"__sq_je_{uuid.uuid4().hex[:8]}"
-            inner = f"__sq_jei_{uuid.uuid4().hex[:8]}"
-            q = (
-                q[: m.start()]
-                + f"(SELECT key AS {k_name}, value AS {v_name} FROM "
-                + f"(SELECT inline({dispatch})) {inner}) AS {alias}"
-                + q[tail_end:]
-            )
-
-
 # ---------------------------------------------------------------------------
 # Array literals: [1, 2, 3] → array(1, 2, 3)
 # ---------------------------------------------------------------------------
@@ -897,178 +1011,164 @@ def _rewrite_array_literals(q: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# UNNEST / EXPLODE table functions (reference src/execute/execute.js:160-242)
+# FROM-clause table functions: UNNEST / EXPLODE (reference
+# src/execute/execute.js:160-242) and JSON_EACH (execute.js:193-242)
 # ---------------------------------------------------------------------------
 
-_UNNEST_FROM_RE = re.compile(
-    r"\b(FROM|,)(\s+|\s*)(UNNEST|EXPLODE)\s*\(", re.I
-)
-_UNNEST_JOIN_RE = re.compile(
-    r"((?:\b(?:LEFT|RIGHT|FULL|CROSS)\s+(?:OUTER\s+)?JOIN|\bINNER\s+JOIN"
-    r"|\bJOIN|,)\s*(?:LATERAL\s+)?)(UNNEST|EXPLODE)\s*\(",
-    re.I,
-)
-_UNNEST_ALIAS_RE = re.compile(
-    r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(?:\(\s*([A-Za-z_]\w*)\s*\))?", re.I
-)
+
+def _rewrite_items(q: str, starts, rewrite) -> str:
+    """Right to left over the FROM items starting at ``starts``, each read
+    from the current text: ``q = rewrite(q, items, i)`` with
+    ``items[i]`` the item. A rewrite edits its own item and text to its
+    right, so the items still to visit keep their positions."""
+    for start in sorted(set(starts), reverse=True):
+        items = _from_items(q)
+        i = next((i for i, it in enumerate(items) if it.start == start), None)
+        if i is not None:
+            q = rewrite(q, items, i)
+    return q
 
 
-def _rewrite_unnest_from(q: str, spark=None) -> str:
-    """Table-function UNNEST/EXPLODE onto Spark explode:
+def _on_true(q: str, it) -> bool:
+    return it.on is not None and q[it.on[0] : it.on[1]].upper() == "TRUE"
 
-    - ``FROM UNNEST(arr) AS t``           → derived table, column ``unnest``
-      (``EXPLODE`` names it ``explode``) — reference names the output
-      column after the function (execute.js:168-181)
-    - ``FROM UNNEST(arr) AS t(x)``        → column ``x``
-    - ``<t> [LEFT] JOIN UNNEST(expr) AS u[(x)] ON TRUE`` → ``LATERAL VIEW
-      [OUTER] explode(expr) __lv AS <x or u>`` — the element column takes
-      the alias name so ``u.field`` resolves as struct access
-    - FULL/RIGHT JOIN forms stay untouched (the reference rejects them;
-      Spark's error stands in for the reference's)
-    """
-    # lateral-join forms first (their FROM keyword must not re-match)
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (
-                c
-                for c in _UNNEST_JOIN_RE.finditer(q)
-                if not mask[c.start()]
-                # RIGHT/FULL stay untouched: the reference rejects them
-                # on table functions; Spark's error stands in. CROSS JOIN
-                # UNNEST is valid lateral syntax in the reference.
-                and not re.match(r"\s*(RIGHT|FULL)\b", c.group(1), re.I)
-            ),
-            None,
-        )
-        if m is None:
-            break
-        join_kw = m.group(1).upper().strip()
-        open_idx = q.index("(", m.end() - 1)
-        arg_end = _balanced_arg(q, open_idx)
-        arg = q[open_idx + 1 : arg_end - 1].strip()
-        alias, col = None, None
-        tail_end = arg_end
-        am = _UNNEST_ALIAS_RE.match(q, arg_end)
-        if am and am.group(1) and am.group(1).upper() not in _KEYWORDS:
-            alias = am.group(1)
-            col = am.group(2)
-            tail_end = am.end()
-        on_m = re.match(r"\s*ON\s+TRUE\b", q[tail_end:], re.I)
-        on_end = tail_end + (on_m.end() if on_m else 0)
-        pred = None
-        if on_m is None and not join_kw.startswith("LEFT"):
-            # inner-join ON <predicate> (reference: lateral + filter);
-            # predicate runs to the next top-level clause keyword
-            pm = re.match(r"\s*ON\s+", q[tail_end:], re.I)
-            if pm:
-                rest = q[tail_end + pm.end():]
-                km = re.search(
-                    r"\b(WHERE|GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|OFFSET"
-                    r"|UNION|INTERSECT|EXCEPT|JOIN|LATERAL|LEFT|RIGHT"
-                    r"|FULL|CROSS|INNER)\b",
-                    rest,
-                    re.I,
-                )
-                plen = km.start() if km else len(rest)
-                pred = rest[:plen].strip()
-                on_end = tail_end + pm.end() + plen
-        outer = "OUTER " if join_kw.startswith("LEFT") else ""
-        if col:
-            # `AS u(x)`: view alias u, element column x → u.x resolves
-            view_alias, colname = alias, col
-        else:
-            # `AS tc`: the ELEMENT takes the alias name so tc / tc.field
-            # resolve (the reference binds the element to the alias)
-            view_alias = f"__sq_lv_{uuid.uuid4().hex[:8]}"
-            colname = alias or "unnest"
-        if arg.upper() == "NULL":
-            # reference: UNNEST(NULL) yields zero rows; bare explode(NULL)
-            # won't type-check
-            arg = "CAST(NULL AS ARRAY<INT>)"
-        q = (
-            q[: m.start()]
-            + f" LATERAL VIEW {outer}explode({arg}) {view_alias} "
-            + f"AS {colname} "
-            + q[on_end:]
-        )
-        if pred:
-            # fold the ON predicate into WHERE (inner lateral semantics)
-            wm = re.search(r"\bWHERE\b", q, re.I)
-            if wm and not _scan(q).mask[wm.start()]:
-                q = (
-                    q[: wm.end()] + f" ({pred}) AND" + q[wm.end():]
-                )
-            else:
-                km = re.search(
-                    r"\b(GROUP\s+BY|ORDER\s+BY|HAVING|LIMIT|OFFSET|UNION"
-                    r"|INTERSECT|EXCEPT)\b",
-                    q,
-                    re.I,
-                )
-                at = km.start() if km else len(q)
-                q = q[:at] + f" WHERE {pred} " + q[at:]
-    # standalone FROM-position forms
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (c for c in _UNNEST_FROM_RE.finditer(q) if not mask[c.start()]),
-            None,
-        )
-        if m is None:
-            break
-        fn = m.group(3).lower()
-        open_idx = q.index("(", m.end() - 1)
-        arg_end = _balanced_arg(q, open_idx)
-        arg = q[open_idx + 1 : arg_end - 1].strip()
-        if not arg:
-            return q  # zero-arg: leave for Spark to reject (reference does)
-        alias, col = None, None
-        tail_end = arg_end
-        am = _UNNEST_ALIAS_RE.match(q, arg_end)
-        if am and am.group(1) and am.group(1).upper() not in _KEYWORDS:
-            alias = am.group(1)
-            col = am.group(2)
-            tail_end = am.end()
-        colname = col or fn
-        alias = alias or f"__sq_un_{uuid.uuid4().hex[:8]}"
-        if arg.upper() == "NULL":
-            arg = "CAST(NULL AS ARRAY<INT>)"
-        # struct elements: ALSO spread the fields as columns so
-        # ``alias.field`` resolves (the reference resolves object-element
-        # fields through the alias, test/execute/execute.unnest.test.js)
-        from pyspark.sql import types as T
 
-        dt = _ref_dtype(spark, arg)
+def _fold_into_where(q: str, pos: int, pred: str) -> str:
+    """AND ``pred`` into the WHERE of the statement containing ``pos``
+    (after its FROM clause), adding a WHERE where it has none."""
+    at = _toplevel_kw(q, _CLAUSE_RE, pos)
+    if at != -1 and q[at : at + 5].upper() == "WHERE":
+        return q[: at + 5] + f" ({pred}) AND" + q[at + 5 :]
+    at = _stmt_end(q, pos) if at == -1 else at
+    return q[:at] + f" WHERE {pred} " + q[at:]
+
+
+def _unnest_from(q: str, it: _FromItem, spark) -> str:
+    """UNNEST/EXPLODE onto Spark explode:
+
+    - ``FROM UNNEST(arr) [AS t]`` → derived table, column ``unnest``
+      (``EXPLODE`` names it ``explode``): the reference names the output
+      column after the function (execute.js:168-181); ``AS t(x)`` names
+      it ``x``. Struct elements also spread their fields as columns, so
+      ``t.field`` resolves (test/execute/execute.unnest.test.js).
+    - ``<t> [LEFT|INNER|CROSS] JOIN [LATERAL] UNNEST(expr) AS u[(x)]`` and
+      ``<t>, UNNEST(expr) AS u`` → ``LATERAL VIEW [OUTER] explode(expr)``;
+      without a column list the element column takes the alias name, so
+      ``u.field`` resolves as struct access. An inner join's ON predicate
+      folds into the statement's WHERE (lateral + filter).
+    - RIGHT/FULL joins stay untouched: the reference rejects them on
+      table functions and Spark's error stands in."""
+    from pyspark.sql import types as T
+
+    if not it.args or "RIGHT" in it.join or "FULL" in it.join:
+        return q  # zero-arg: left for Spark to reject, as the reference does
+    arg = ", ".join(it.args)
+    if arg.upper() == "NULL":
+        # UNNEST(NULL) yields zero rows; explode(NULL) won't type-check
+        arg = "CAST(NULL AS ARRAY<INT>)"
+    col = it.cols[0] if it.cols else None
+    if it.join == "FROM":
+        colname = col or it.name.lower()
+        alias = it.alias or f"__sq_un_{uuid.uuid4().hex[:8]}"
         body = f"SELECT explode({arg}) AS {colname}"
+        dt = _ref_dtype(spark, arg)
         if isinstance(dt, T.ArrayType) and isinstance(
             dt.elementType, T.StructType
         ):
             inner = f"__sq_ue_{uuid.uuid4().hex[:8]}"
             body = (
                 f"SELECT {inner}.{colname} AS {colname},"
-                f" {inner}.{colname}.* FROM "
-                f"(SELECT explode({arg}) AS {colname}) {inner}"
+                f" {inner}.{colname}.* FROM ({body}) {inner}"
             )
-        q = (
-            q[: m.start(1)]
-            + m.group(1)
-            + f" ({body}) AS {alias} "
-            + q[tail_end:]
+        return q[: it.start] + f"({body}) AS {alias}" + q[it.end :]
+    left = it.join.startswith("LEFT")
+    on_true = _on_true(q, it)
+    pred = q[it.on[0] : it.on[1]] if it.on and not (on_true or left) else None
+    end = it.on[1] if on_true or pred else it.end
+    if col:
+        view_alias, colname = it.alias, col
+    else:
+        view_alias = f"__sq_lv_{uuid.uuid4().hex[:8]}"
+        colname = it.alias or "unnest"
+    repl = (
+        f" LATERAL VIEW {'OUTER ' if left else ''}explode({arg}) "
+        f"{view_alias} AS {colname} "
+    )
+    q = q[: it.kw] + repl + q[end:]
+    return _fold_into_where(q, it.kw + len(repl), pred) if pred else q
+
+
+def _json_each_from(q: str, it: _FromItem, spark) -> str:
+    """JSON_EACH onto ``inline`` of one JVM-side dispatch expression:
+
+    - ``FROM JSON_EACH(x) [AS j[(k[, v])]]`` → ``FROM (SELECT key AS k,
+      value AS v FROM (SELECT inline(<dispatch>)) __sq_jei) AS j``
+    - ``<t> [LEFT] JOIN JSON_EACH(x) [AS j[(k[, v])]] ON TRUE`` →
+      ``<t> LATERAL VIEW [OUTER] inline(<dispatch>) j AS k, v`` (zero
+      JSON rows drop the row, as JOIN ON TRUE over an empty table
+      function does)."""
+    from pyspark.sql import types as T
+
+    if len(it.args) != 1:
+        return q
+    arg = it.args[0]
+    # JS-object fixtures surface as struct/array/map columns: their
+    # STRING cast ('{1, Alice}') is not JSON; to_json(col) is
+    dt = _ref_dtype(spark, arg)
+    if isinstance(dt, (T.StructType, T.ArrayType, T.MapType)):
+        arg = f"to_json({arg})"
+    dispatch = _JE_DISPATCH.format(x=arg)
+    cols = it.cols or ()
+    k = cols[0] if cols else "key"
+    v = cols[1] if len(cols) > 1 else "value"
+    alias = it.alias or f"__sq_je_{uuid.uuid4().hex[:8]}"
+    if it.join.endswith("JOIN"):
+        outer = "OUTER " if it.join.startswith("LEFT") else ""
+        end = it.on[1] if _on_true(q, it) else it.end
+        return (
+            q[: it.kw] + f" LATERAL VIEW {outer}inline({dispatch}) {alias} "
+            f"AS {k}, {v} " + q[end:]
         )
-    # LATERAL EXPLODE(...) without VIEW → LATERAL VIEW EXPLODE(...)
-    q = _sub_outside_strings(
-        q,
-        re.compile(r"\bLATERAL\s+(?=(?:EXPLODE|UNNEST)\s*\()", re.I),
-        lambda m: "LATERAL VIEW ",
+    inner = f"__sq_jei_{uuid.uuid4().hex[:8]}"
+    return (
+        q[: it.start] + f"(SELECT key AS {k}, value AS {v} FROM "
+        f"(SELECT inline({dispatch})) {inner}) AS {alias}" + q[it.end :]
     )
-    # LATERAL VIEW UNNEST( → LATERAL VIEW explode(
-    q = _sub_outside_strings(
-        q,
-        re.compile(r"(\bLATERAL\s+VIEW\s+(?:OUTER\s+)?)UNNEST\s*\(", re.I),
-        lambda m: m.group(1) + "explode(",
+
+
+# One entry per FROM-clause table function: (text, item, spark) → the
+# text with that item rewritten.
+_TABLE_FUNCTIONS = {
+    "UNNEST": _unnest_from,
+    "EXPLODE": _unnest_from,
+    "JSON_EACH": _json_each_from,
+}
+_LATERAL_CALL_RE = re.compile(
+    r"\bLATERAL\s+(?=(?:EXPLODE|UNNEST)\s*\()", re.I
+)
+_LATERAL_UNNEST_RE = re.compile(
+    r"(\bLATERAL\s+VIEW\s+(?:OUTER\s+)?)UNNEST\s*\(", re.I
+)
+
+
+def _rewrite_table_functions(q: str, spark=None) -> str:
+    """Every FROM-clause table function (``_TABLE_FUNCTIONS``), in FROM,
+    JOIN and comma positions, then Spark's own ``LATERAL VIEW`` spelled
+    for ``LATERAL EXPLODE(...)`` and ``LATERAL VIEW UNNEST(...)``."""
+    starts = [
+        it.start for it in _from_items(q)
+        if it.kind == "call" and it.name in _TABLE_FUNCTIONS
+    ]
+    q = _rewrite_items(
+        q, starts,
+        lambda q, items, i: _TABLE_FUNCTIONS[items[i].name](
+            q, items[i], spark
+        ),
     )
-    return q
+    q = _sub_outside_strings(q, _LATERAL_CALL_RE, lambda m: "LATERAL VIEW ")
+    return _sub_outside_strings(
+        q, _LATERAL_UNNEST_RE, lambda m: m.group(1) + "explode("
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1201,7 +1301,7 @@ def _rewrite_orderless_windows(q: str) -> str:
 # ---------------------------------------------------------------------------
 
 _OB_ITEM_RE = re.compile(
-    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)"
+    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?|`[^`]+`\.[A-Za-z_]\w*)"
     r"(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?\s*$",
     re.I,
 )
@@ -1508,17 +1608,7 @@ def _has_top_level_arith(q: str, depth, start: int, end: int) -> bool:
 
 
 _CORR_COUNT_RE = re.compile(r"\(\s*SELECT\s+COUNT\s*\(\s*\*\s*\)\s+FROM\b", re.I)
-_CORR_UNNEST_RE = re.compile(
-    r"\s*(?:INNER\s+|CROSS\s+)?JOIN\s+UNNEST\s*\(\s*"
-    r"([A-Za-z_]\w*\.[A-Za-z_]\w*)\s*\)\s*"
-    r"(?:AS\s+)?([A-Za-z_]\w*)\s*(?:\(\s*([A-Za-z_]\w*)\s*\))?"
-    r"\s*ON\s+TRUE\b",
-    re.I,
-)
-_FROM_ALIAS_RE = re.compile(
-    r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)(?:\s+(?:AS\s+)?([A-Za-z_]\w*))?",
-    re.I,
-)
+_QUALIFIED_REF_RE = re.compile(r"[A-Za-z_]\w*\.[A-Za-z_]\w*")
 
 
 def _rewrite_correlated_unnest_count(q: str) -> str:
@@ -1531,40 +1621,43 @@ def _rewrite_correlated_unnest_count(q: str) -> str:
     hoists OUT of the subquery as a row-local multiplier (NULL/empty
     arrays → 0 rows → coalesce(size, 0)). Conditioned or referenced
     unnest aliases are left alone (Spark raises its correlation error,
-    matching the documented limitation)."""
-    pos = 0
-    while True:
-        mask = _scan(q).mask
-        m = next(
-            (c for c in _CORR_COUNT_RE.finditer(q, pos) if not mask[c.start()]),
+    matching the documented limitation). Subqueries are visited right
+    to left, so each one's position holds while the later ones change."""
+    s = _scan(q)
+    opens = [
+        m.start() for m in _CORR_COUNT_RE.finditer(q)
+        if not s.mask[m.start()] and s.partner[m.start()] >= 0
+    ]
+    for open_idx in reversed(opens):
+        close = _scan(q).partner[open_idx]
+        body = q[open_idx + 1 : close]
+        items = _from_items(body)
+        um = next(
+            (
+                it for it in items
+                if it.name == "UNNEST" and it.kind == "call"
+                and it.join in ("JOIN", "INNER JOIN", "CROSS JOIN")
+                and not it.lateral and it.alias and len(it.args) == 1
+                and _QUALIFIED_REF_RE.fullmatch(it.args[0])
+                and _on_true(body, it)
+            ),
             None,
         )
-        if m is None:
-            return q
-        sub_end = _balanced_arg(q, m.start())
-        body = q[m.start() + 1 : sub_end - 1]
-        um = _CORR_UNNEST_RE.search(body)
         if um is None:
-            pos = sub_end
             continue
-        qualifier = um.group(1).split(".")[0]
-        local_aliases = set()
-        for fm in _FROM_ALIAS_RE.finditer(body):
-            local_aliases.add(fm.group(1))
-            if fm.group(2):
-                local_aliases.add(fm.group(2))
-        rest = body[: um.start()] + body[um.end():]
-        alias = um.group(2)
-        refs_alias = re.search(rf"\b{alias}\b", rest, re.I)
-        if qualifier in local_aliases or refs_alias:
-            pos = sub_end  # not correlated / alias used — leave it
-            continue
+        tables = [it for it in items if it.kind == "table"]
+        local = {it.name for it in tables} | {it.alias for it in tables}
+        rest = body[: um.kw].rstrip() + body[um.on[1] :]
+        if um.args[0].split(".")[0] in local or re.search(
+            rf"\b{um.alias}\b", rest, re.I
+        ):
+            continue  # not correlated / alias used — leave it
         q = (
-            q[: m.start()]
-            + f"(({rest.strip()}) * coalesce(size({um.group(1)}), 0))"
-            + q[sub_end:]
+            q[:open_idx]
+            + f"(({rest.strip()}) * coalesce(size({um.args[0]}), 0))"
+            + q[close + 1 :]
         )
-        pos = m.start()
+    return q
 
 
 _SUBSCRIPT_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*\[")
@@ -2230,10 +2323,10 @@ def loosen_group_by(q: str, spark=None) -> str | None:
     # for every non-key column. Expand the star from the (single, bare)
     # FROM table so each column can be wrapped individually.
     if spark is not None and any(i.strip() == "*" for i in items):
-        tm = re.match(r"\s*FROM\s+([A-Za-z_]\w*)", q[end:], re.I)
-        if tm:
+        it = next((it for it in _from_items(q) if it.kw == end), None)
+        if it is not None and it.kind == "table":
             try:
-                cols = spark.table(tm.group(1)).columns
+                cols = spark.table(q[it.start : it.rel_end]).columns
             except Exception:  # noqa: BLE001 — leave the star alone
                 cols = None
             if cols:
@@ -2428,18 +2521,8 @@ def _rewrite_auto_alias(q: str) -> str:
     return q[:start] + " " + ", ".join(i.strip() for i in new_items) + " " + q[end:]
 
 
-_KW_GUARD = (
-    r"(?!(?:WHERE|GROUP|ORDER|HAVING|LIMIT|ON|JOIN|UNION|INTERSECT|EXCEPT"
-    r"|POSITIONAL|FULL|LEFT|RIGHT|INNER|CROSS|OFFSET|QUALIFY|WINDOW)\b)"
-)
-_POS_RE = re.compile(
-    r"\bFROM\s+([A-Za-z_][\w.]*)"
-    rf"(?:\s+(?:AS\s+)?{_KW_GUARD}([A-Za-z_]\w*))?"
-    r"\s+POSITIONAL\s+JOIN\s+([A-Za-z_][\w.]*)"
-    rf"(?:\s+(?:AS\s+)?{_KW_GUARD}([A-Za-z_]\w*))?",
-    re.I,
-)
-_STAR_RE = re.compile(r"(\bSELECT\s+)\*", re.I)
+_SELECT_RE = re.compile(r"\bSELECT\b", re.I)
+_STAR_RE = re.compile(r"\bSELECT\s+\*", re.I)
 
 
 # Row-numbered views of the two POSITIONAL JOIN sides, one pair per
@@ -2456,43 +2539,57 @@ def _rewrite_positional_join(
     """``FROM a POSITIONAL JOIN b`` → full outer join of the two sides'
     row-numbered views on the window-free global row number
     (`operators/positional_join._with_rn` — parallel range numbering, no
-    single-task WindowExec). ``SELECT *`` is expanded to the explicit
-    column list so the internal row-number column stays hidden."""
-    mask = _scan(q).mask
-    m = _POS_RE.search(q)
-    while m and mask[m.start()]:
-        m = _POS_RE.search(q, m.end())
-    if not m:
-        return q
-    lt, la, rt, ra = m.group(1), m.group(2), m.group(3), m.group(4)
-    la = la or lt.split(".")[-1]
-    ra = ra or rt.split(".")[-1]
+    single-task WindowExec). The statement's ``SELECT *`` is expanded to
+    the explicit column list so the internal row-number column stays
+    hidden."""
     pos_order = pos_order or {}
-    sides = []
-    for table in (lt, rt):
-        src = spark.table(table)
-        view = f"{_SCRATCH_PREFIX}{uuid.uuid4().hex[:8]}"
-        rn = _with_rn(src, pos_order.get(table))
-        rn.createOrReplaceTempView(view)
-        c = getattr(_REF_CACHE, "c", None)
-        if c is not None and "views" in c:
-            c["views"][view] = rn.schema
-        sides.append((view, src))
-    (lv, lsrc), (rv, rsrc) = sides
-    frag = (
-        f"FROM {lv} AS {la} FULL OUTER JOIN {rv} AS {ra} "
-        f"ON {la}.{_RN} = {ra}.{_RN}"
-    )
-    q = q[: m.start()] + frag + q[m.end() :]
-    # Expand a bare SELECT * (the rn columns must not leak into it).
-    star = _STAR_RE.search(q)
-    if star and not _scan(q).mask[star.start()]:
-        cols = ", ".join(
-            [f"{la}.{c}" for c in lsrc.columns]
-            + [f"{ra}.{c}" for c in rsrc.columns]
+
+    def rewrite(q, items, i):
+        left, right = items[i - 1], items[i]
+        if i == 0 or left.join != "FROM" or (left.kind, right.kind) != (
+            "table", "table"
+        ):
+            return q
+        sides = []
+        for it in (left, right):
+            raw = q[it.start : it.rel_end]
+            src = spark.table(raw)
+            view = f"{_SCRATCH_PREFIX}{uuid.uuid4().hex[:8]}"
+            rn = _with_rn(src, pos_order.get(it.name))
+            rn.createOrReplaceTempView(view)
+            c = getattr(_REF_CACHE, "c", None)
+            if c is not None and "views" in c:
+                c["views"][view] = rn.schema
+            alias = it.alias or (raw if it.quoted else it.name.split(".")[-1])
+            sides.append((view, alias, src))
+        (lv, la, lsrc), (rv, ra, rsrc) = sides
+        q = (
+            q[: left.kw]
+            + f"FROM {lv} AS {la} FULL OUTER JOIN {rv} AS {ra} "
+            + f"ON {la}.{_RN} = {ra}.{_RN}"
+            + q[right.end :]
         )
-        q = q[: star.start()] + star.group(1) + cols + q[star.end() :]
-    return q
+        # Expand the statement's bare SELECT * (the rn columns must not
+        # leak into it): its SELECT is the last one before the FROM at
+        # the FROM's depth.
+        s = _scan(q)
+        sel = [
+            m.start() for m in _SELECT_RE.finditer(q, 0, left.kw)
+            if not s.mask[m.start()] and s.depth[m.start()] == s.depth[left.kw]
+        ]
+        star = _STAR_RE.match(q, sel[-1]) if sel else None
+        if star:
+            cols = ", ".join(
+                [f"{la}.{c}" for c in lsrc.columns]
+                + [f"{ra}.{c}" for c in rsrc.columns]
+            )
+            q = q[: star.end() - 1] + cols + q[star.end() :]
+        return q
+
+    starts = [
+        it.start for it in _from_items(q) if it.join == "POSITIONAL JOIN"
+    ]
+    return _rewrite_items(q, starts, rewrite)
 
 
 def drop_scratch_views(spark: SparkSession, query: str) -> None:
@@ -2540,6 +2637,7 @@ def rewrite_reference_sql(
 def _rewrite_reference_sql_inner(
     query, spark, like_mode, pos_order, ident_quotes
 ):
+    query = _quote_table_names(query, spark)
     if ident_quotes == "ansi" and '"' in query:
         query = _rewrite_double_quoted_idents(query)
     query = _rewrite_from_first(query)
@@ -2557,20 +2655,12 @@ def _rewrite_reference_sql_inner(
     up = query.upper()
     if "UNNEST" in up and "COUNT" in up:
         query = _rewrite_correlated_unnest_count(query)
-    if "UNNEST" in up or "EXPLODE" in up:
-        query = _rewrite_unnest_from(query, spark)
-    up = query.upper()
+    if "UNNEST" in up or "EXPLODE" in up or "JSON_EACH" in up:
+        query = _rewrite_table_functions(query, spark)
     if "POSITIONAL" in up:
         if spark is None:
             raise ValueError("POSITIONAL JOIN rewrite needs a SparkSession")
-        # Iterate: each pass rewrites the first positional join found.
-        prev = None
-        while prev != query:
-            prev = query
-            query = _rewrite_positional_join(query, spark, pos_order)
-            up = query.upper()
-    if "JSON_EACH" in up:
-        query = _rewrite_json_each_from(query, spark)
+        query = _rewrite_positional_join(query, spark, pos_order)
     query = _rewrite_calls(query, _DATE_CALLS)
     if spark is not None:
         if "[" in query:

@@ -34,6 +34,7 @@ import re
 from .sqldialect import (
     _balanced_arg,
     _bracket_is_literal,
+    _from_items,
     _iter_calls,
     _rewrite_calls,
     _scan,
@@ -242,34 +243,16 @@ def _validate_known_tables(q: str, tables) -> None:
     catalog-backed sessions resolve names Spark-side."""
     if not tables:
         return
-    mask = _scan(q).mask
-    known = {t.lower() for t in tables}
-    known |= _cte_names(q, mask)
-    # FROM is also a keyword inside EXTRACT/TRIM/SUBSTRING/POSITION/
-    # OVERLAY calls — mask those call spans out (a subquery nested inside
-    # one would only be under-checked, never falsely rejected)
-    call_mask = bytearray(len(q))
-    for _, start, _, end in _iter_calls(
-        q, ("EXTRACT", "TRIM", "SUBSTRING", "SUBSTR", "POSITION", "OVERLAY")
-    ):
-        call_mask[start:end] = b"\x01" * (end - start)
-    for m in re.finditer(
-        r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)(?![\w.])", q, re.I
-    ):
-        if mask[m.start()] or call_mask[m.start()]:
+    known = {t.lower() for t in tables} | _cte_names(q, _scan(q).mask)
+    for it in _from_items(q):
+        # dotted and quoted names are _validate_dotted_from's and Spark's
+        if it.kind != "table" or it.quoted or "." in it.name:
             continue
-        # IS [NOT] DISTINCT FROM x — comparison operator, not a table ref
-        before = q[: m.start()].rstrip()
-        if re.search(r"\bDISTINCT$", before, re.I):
+        if it.name.upper() in _TABLE_FUNCS:
             continue
-        name = m.group(1)
-        if name.upper() in _TABLE_FUNCS:
-            continue
-        if re.match(r"\s*\(", q[m.end():]):
-            continue  # table function / callable — not a table-map lookup
-        if name.lower() not in known:
+        if it.name.lower() not in known:
             raise StrictDialectError(
-                f'Table "{name}" not found. Available tables: '
+                f'Table "{it.name}" not found. Available tables: '
                 + ", ".join(tables)
             )
 
@@ -527,41 +510,14 @@ def _validate_order_by_star(q: str) -> None:
                 )
 
 
-_NOT_ALIAS = (
-    "ON", "WHERE", "GROUP", "ORDER", "LEFT", "RIGHT", "FULL",
-    "INNER", "CROSS", "JOIN", "POSITIONAL", "LIMIT", "HAVING",
-    "UNION", "EXCEPT", "INTERSECT", "LATERAL", "USING", "OFFSET",
-    "NATURAL", "SEMI", "ANTI",
-)
-
-# FROM/JOIN item with optional alias; the alias alternative is a negative
-# lookahead over clause keywords so a following keyword is NOT consumed
-# (a consuming match would swallow the next JOIN and skip its table)
-_FROM_ITEM_RE = re.compile(
-    r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*)"
-    r"(?:\s+(?:AS\s+)?(?!(?:"
-    + "|".join(_NOT_ALIAS)
-    + r")\b)([A-Za-z_]\w*))?",
-    re.I,
-)
-
-
 def _visible_tables(q: str, tables) -> list[str]:
-    """FROM/JOIN names as the query sees them — an alias REPLACES its
-    base name (reference + Spark both hide the original). Falls back to
-    the table-map keys when no FROM target parses."""
-    mask = _scan(q).mask
+    """FROM-item table names as the query sees them — an alias REPLACES
+    its base name (reference + Spark both hide the original). Falls back
+    to the table-map keys when no FROM table parses."""
     vis: list[str] = []
-    for m in _FROM_ITEM_RE.finditer(q):
-        if mask[m.start()]:
-            continue
-        # table function (UNNEST/JSON_EACH), not a table; whitespace is
-        # tolerated before the paren ("FROM UNNEST (x)"), matching
-        # _validate_known_tables (r9 advice)
-        if re.match(r"\s*\(", q[m.end(1):]):
-            continue
-        name = m.group(2) or m.group(1)
-        if name not in vis:
+    for it in _from_items(q):
+        name = it.alias or it.name
+        if it.kind == "table" and name not in vis:
             vis.append(name)
     return vis or list(tables or {})
 
@@ -570,49 +526,24 @@ def _from_scope(q: str, tables) -> set[str]:
     """Table names and aliases visible to dotted references. A base name
     with an alias is HIDDEN (both the reference and Spark reject
     ``FROM users u ... users.id``)."""
-    scope = {t for t in (tables or {})}
+    scope = set(tables or {})
     mask = _scan(q).mask
     aliased_bases: set[str] = set()
     unaliased: set[str] = set()
-    for m in _FROM_ITEM_RE.finditer(q):
-        if mask[m.start()]:
-            continue
-        alias = m.group(2)
-        if alias:
-            scope.add(alias)
-            aliased_bases.add(m.group(1))
-        else:
-            scope.add(m.group(1))
-            unaliased.add(m.group(1))
-    # table-function / subquery aliases: ") AS j", ") j", "UNNEST(..) AS
-    # u(x)", LATERAL VIEW ... v AS c
-    for m in re.finditer(r"\)\s*(?:AS\s+)?([A-Za-z_]\w*)", q, re.I):
-        if not mask[m.start()]:
-            if m.group(1).upper() not in (
-                "ON", "WHERE", "GROUP", "ORDER", "AND", "OR", "THEN",
-                "ELSE", "END", "WHEN", "FROM", "JOIN", "AS", "IS", "NOT",
-                "IN", "LIKE", "ASC", "DESC", "LIMIT", "OFFSET", "HAVING",
-                "UNION", "EXCEPT", "INTERSECT", "CROSS", "LEFT", "RIGHT",
-                "FULL", "INNER", "OUTER", "LATERAL", "USING", "OVER", "BY",
-            ):
-                scope.add(m.group(1))
+    for it in _from_items(q):
+        if it.kind == "table":
+            (aliased_bases if it.alias else unaliased).add(it.name)
+        if it.alias or it.kind == "table":
+            scope.add(it.alias or it.name)
+        # `UNNEST(..) AS u(x, y)` exposes x/y directly, and a struct-typed
+        # element alias makes `x.field` a legal dotted reference
+        scope.update(it.cols or ())
     for m in re.finditer(
-        r"\bLATERAL\s+VIEW\s+\w+\s*\([^)]*\)\s*(\w+)?", q, re.I
+        r"\bLATERAL\s+(?:VIEW\s+)?(?:OUTER\s+)?\w+\s*\([^)]*\)\s*(\w+)?", q,
+        re.I,
     ):
         if not mask[m.start()] and m.group(1):
             scope.add(m.group(1))
-    # column aliases of a table-function alias list — `UNNEST(..) AS
-    # u(x, y)` exposes x/y directly, and a struct-typed element alias
-    # makes `x.field` a legal dotted reference.
-    for m in re.finditer(
-        r"\)\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q, re.I
-    ):
-        if mask[m.start()]:
-            continue
-        for col in m.group(1).split(","):
-            col = col.strip()
-            if re.fullmatch(r"[A-Za-z_]\w*", col):
-                scope.add(col)
     for m in re.finditer(r"\bWITH\s+([A-Za-z_]\w*)\s+AS\b", q, re.I):
         if not mask[m.start()]:
             scope.add(m.group(1))
@@ -625,20 +556,17 @@ def _from_scope(q: str, tables) -> set[str]:
 
 
 def _validate_dotted_from(q: str) -> None:
-    """A dotted table name directly in FROM/JOIN position is rejected —
-    the reference has no schemas, so ``FROM dataset.parquet`` never
-    resolves unquoted even when 'dataset.parquet' is a flat table-map
-    key (execute.dot tests). Static — needs no session."""
-    mask = _scan(q).mask
-    for m in re.finditer(
-        r"\b(?:FROM|JOIN)\s+([A-Za-z_]\w*\.[A-Za-z_]\w*)", q, re.I
-    ):
-        if not mask[m.start()]:
+    """A dotted table name written bare as a FROM item is rejected — the
+    reference has no schemas, so ``FROM dataset.parquet`` never resolves
+    unquoted even when 'dataset.parquet' is a flat table-map key
+    (execute.dot tests). Static — needs no session."""
+    for it in _from_items(q):
+        if it.kind == "table" and not it.quoted and "." in it.name:
             # reference parse-layer text (execute.dot tests, verbatim)
             raise StrictDialectError(
-                f'Unexpected "." in "{m.group(1)}". If this is an '
-                f'identifier, use double quotes: "{m.group(1)}" '
-                f"(at position {m.start()})"
+                f'Unexpected "." in "{it.name}". If this is an '
+                f'identifier, use double quotes: "{it.name}" '
+                f"(at position {it.kw})"
             )
 
 
@@ -691,22 +619,22 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
 
 
 def _validate_joins(q: str, tables) -> None:
-    mask = _scan(q).mask
+    """Comma-FROM and CROSS JOIN take only table functions (reference
+    src/parse/joins.js)."""
     table_names = set(tables or {})
-    # comma-FROM with a regular table
-    fm = re.search(r"\bFROM\s+[A-Za-z_]\w*(?:\s+\w+)?\s*,\s*([A-Za-z_]\w*)",
-                   q, re.I)
-    if fm and not mask[fm.start()] and fm.group(1) in table_names:
-        raise StrictDialectError(
-            "Comma-separated FROM is only supported with table functions "
-            "like UNNEST; use explicit JOIN ... ON ... for regular tables"
-        )
-    cm = re.search(r"\bCROSS\s+JOIN\s+([A-Za-z_]\w*)\b(?!\s*\()", q, re.I)
-    if cm and not mask[cm.start()] and cm.group(1) in table_names:
-        raise StrictDialectError(
-            "CROSS JOIN is currently supported only with table functions "
-            "like UNNEST"
-        )
+    for it in _from_items(q):
+        if it.kind != "table" or it.name not in table_names:
+            continue
+        if it.join == ",":
+            raise StrictDialectError(
+                "Comma-separated FROM is only supported with table functions "
+                "like UNNEST; use explicit JOIN ... ON ... for regular tables"
+            )
+        if it.join == "CROSS JOIN":
+            raise StrictDialectError(
+                "CROSS JOIN is currently supported only with table functions "
+                "like UNNEST"
+            )
 
 
 def _validate_lateral(q: str) -> None:
@@ -756,42 +684,35 @@ def _validate_lateral(q: str) -> None:
             )
 
 
+_LATERAL_VIEW_END_RE = re.compile(r"\bLATERAL\s+VIEW(?:\s+OUTER)?\s*$", re.I)
+
+
 def _validate_table_functions(q: str) -> None:
-    """UNNEST/EXPLODE/JSON_EACH are table functions: FROM-position only
+    """UNNEST/EXPLODE/JSON_EACH are table functions: FROM items only
     (reference parse — 'X is a table function and can only be used in
-    FROM clauses')."""
-    mask = _scan(q).mask
-    for m in re.finditer(r"\b(UNNEST|EXPLODE|JSON_EACH)\s*\(", q, re.I):
-        if mask[m.start()]:
-            continue
-        before = q[: m.start()].rstrip()
-        # LATERAL VIEW [OUTER] EXPLODE / JOIN LATERAL UNNEST both keep the
-        # call in FROM position.
-        if re.search(r"(\bFROM|\bJOIN|\bVIEW|\bOUTER|\bLATERAL|,)$",
-                     before, re.I):
+    FROM clauses'), or Spark's ``LATERAL VIEW [OUTER] EXPLODE(...)``."""
+    items = [it for it in _from_items(q) if it.kind == "call"]
+    in_from = {it.start for it in items}
+    names = ("UNNEST", "EXPLODE", "JSON_EACH")
+    for name, start, _, _ in _iter_calls(q, names):
+        if start in in_from or _LATERAL_VIEW_END_RE.search(q, 0, start):
             continue
         raise StrictDialectError(
-            f"{m.group(1).upper()} is a table function and can only be "
-            f"used in FROM clauses at position {m.start()}"
+            f"{name} is a table function and can only be "
+            f"used in FROM clauses at position {start}"
         )
     # column-alias-list arity: UNNEST exposes ONE column, JSON_EACH two
     # (key, value) — reference parse errors, asserted verbatim
-    for name, start, _, end in _iter_calls(q, ("UNNEST", "JSON_EACH")):
-        am = re.match(
-            r"\s*(?:AS\s+)?[A-Za-z_]\w*\s*\(([^)]*)\)", q[end:], re.I
-        )
-        if not am:
-            continue
-        n_alias = len([c for c in am.group(1).split(",") if c.strip()])
-        if name == "UNNEST" and n_alias > 1:
+    for it in items:
+        if it.name == "UNNEST" and len(it.cols or ()) > 1:
             raise StrictDialectError(
                 "UNNEST produces a single column; only one column alias "
-                f"is allowed (at position {start})"
+                f"is allowed (at position {it.start})"
             )
-        if name == "JSON_EACH" and n_alias > 2:
+        if it.name == "JSON_EACH" and len(it.cols or ()) > 2:
             raise StrictDialectError(
                 "JSON_EACH produces at most 2 columns (key, value); too "
-                f"many column aliases (at position {start})"
+                f"many column aliases (at position {it.start})"
             )
 
 
@@ -800,15 +721,11 @@ def _validate_unnest_alias_select(q: str, tables=None) -> None:
     bare ``u`` is an unknown column in the reference
     (execute.unnest.test.js:402-411); the error lists the qualified
     columns in scope."""
-    mask = _scan(q).mask
-    aliases = []
-    for m in re.finditer(
-        r"\b(?:UNNEST|EXPLODE)\s*\([^)]*\)\s*(?:AS\s+)?([A-Za-z_]\w*)"
-        r"\s*(\()?",
-        q, re.I,
-    ):
-        if not mask[m.start()] and not m.group(2):
-            aliases.append(m.group(1))
+    aliases = [
+        it.alias for it in _from_items(q)
+        if it.kind == "call" and it.name in ("UNNEST", "EXPLODE")
+        and it.alias and it.cols is None
+    ]
     if not aliases:
         return
     sel = re.search(r"\bSELECT\s+(DISTINCT\s+)?(.*?)\s+FROM\b", q,

@@ -700,3 +700,91 @@ def test_correlated_unnest_count_guards(spark):
         )
     )
     assert rows == [{"n": 3}, {"n": 3}]
+
+
+# ---------------------------------------------------------------------------
+# FROM-clause table functions in FROM, JOIN and comma positions
+# (sqldialect._from_items; reference src/parse/joins.js)
+# ---------------------------------------------------------------------------
+
+_FROM_TABLES = {
+    "t": [{"id": 1, "arr": [1, 2, 3]}, {"id": 2, "arr": [5]}],
+    "s": [{"id": 1, "items": [{"name": "a", "n": 1}, {"name": "b", "n": 2}]}],
+}
+_T_BY_ELEMENT = [(1, 1), (1, 2), (1, 3), (2, 5)]
+
+
+def _sorted_tuples(spark, query):
+    rows = execute_sql(spark, query, tables=_FROM_TABLES).collect()
+    return sorted(tuple(r.values()) for r in rows)
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        ("SELECT explode FROM EXPLODE([3, 4])", [(3,), (4,)]),
+        ("SELECT * FROM UNNEST(NULL) AS u", []),
+        (
+            "SELECT t.id, u.x FROM t LEFT JOIN UNNEST(t.arr) AS u(x) ON TRUE",
+            _T_BY_ELEMENT,
+        ),
+        (
+            "SELECT t.id, u.x FROM t CROSS JOIN UNNEST(t.arr) AS u(x)",
+            _T_BY_ELEMENT,
+        ),
+        (
+            "SELECT t.id, u.x FROM t JOIN LATERAL UNNEST(t.arr) AS u(x)"
+            " ON TRUE",
+            _T_BY_ELEMENT,
+        ),
+        ("SELECT u.name FROM s, UNNEST(s.items) AS u", [("a",), ("b",)]),
+        (
+            "SELECT it.name FROM s JOIN UNNEST(s.items) AS it ON TRUE",
+            [("a",), ("b",)],
+        ),
+        (
+            "SELECT id, (SELECT COUNT(*) FROM t JOIN UNNEST(o.arr) AS u(x)"
+            " ON TRUE) AS c FROM t o ORDER BY id",
+            [(1, 6), (2, 2)],
+        ),
+    ],
+)
+def test_table_function_from_items(spark, query, expected):
+    assert _sorted_tuples(spark, query) == expected
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        # a keyword inside a string literal is not the statement's WHERE
+        (
+            "SELECT 'WHERE' AS w, id, x FROM t JOIN UNNEST(t.arr) AS u(x)"
+            " ON x > 1 WHERE id = 1",
+            [("WHERE", 1, 2), ("WHERE", 1, 3)],
+        ),
+        # ... and does not end the ON predicate
+        (
+            "SELECT id, x FROM t JOIN UNNEST(t.arr) AS u(x)"
+            " ON x > 1 AND 'LIMIT' <> '' WHERE id = 1",
+            [(1, 2), (1, 3)],
+        ),
+        # a derived table's WHERE is not the outer statement's
+        (
+            "SELECT s.id, x FROM (SELECT * FROM t WHERE id > 0) s"
+            " JOIN UNNEST(s.arr) AS u(x) ON x > 1",
+            [(1, 2), (1, 3), (2, 5)],
+        ),
+    ],
+)
+def test_join_unnest_on_predicate_folds_into_its_where(spark, query, expected):
+    assert _sorted_tuples(spark, query) == expected
+
+
+def test_json_each_alias_followed_by_a_clause(spark):
+    # the alias keeps its distance from the WHERE after it
+    rows = execute_sql(
+        spark,
+        "SELECT key, value FROM JSON_EACH('{\"a\": 1, \"b\": 2}') AS j"
+        " WHERE key = 'a'",
+    ).collect()
+    assert rows == [{"key": "a", "value": "1"}]

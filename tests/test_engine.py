@@ -537,3 +537,60 @@ def test_qualified_column_not_found_lists_its_table_only(spark):
     assert 'Column "bogus" not found' in msg
     assert "Available columns: id, name" in msg
     assert "amount" not in msg
+
+
+_DOTTED_TABLES = {
+    "t": [{"id": 1, "arr": [1, 2, 3]}, {"id": 2, "arr": [5]}],
+    # a flat table-map name with a dot; v is a dynamic (mixed) column
+    "dataset.parquet": [
+        {"id": 1, "v": 10}, {"id": 2, "v": "5"}, {"id": 3, "v": 9},
+    ],
+}
+
+
+@pytest.mark.parametrize(
+    "query, ids",
+    [
+        (
+            'SELECT id FROM "dataset.parquet" ORDER BY "dataset.parquet".v',
+            [2, 3, 1],
+        ),
+        ("SELECT id FROM dataset.parquet ORDER BY v", [2, 3, 1]),
+        (
+            "SELECT d.id FROM t JOIN dataset.parquet d ON d.id = t.id"
+            " ORDER BY d.id",
+            [1, 2],
+        ),
+    ],
+)
+def test_dotted_table_name(spark, query, ids):
+    rows = execute_sql(spark, query, tables=_DOTTED_TABLES).collect()
+    assert [r["id"] for r in rows] == ids
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        # FROM in lower case
+        ("select id from dataset.parquet", {"id": 1}),
+        # string literals naming the table stay as written
+        (
+            "SELECT 'x, dataset.parquet y' AS s FROM \"dataset.parquet\"",
+            {"s": "x, dataset.parquet y"},
+        ),
+        (
+            "SELECT '\"dataset.parquet\"' AS s FROM dataset.parquet",
+            {"s": '"dataset.parquet"'},
+        ),
+    ],
+)
+def test_dotted_table_name_is_quoted_not_renamed(spark, query, expected):
+    tables = {"dataset.parquet": [{"id": 1, "a": 2}]}
+    assert execute_sql(spark, query, tables=tables).collect() == [expected]
+
+
+def test_collect_keeps_the_query_as_job_description(spark):
+    res = execute_sql(spark, "SELECT id FROM jd", tables={"jd": [{"id": 1}]})
+    res.collect()
+    desc = spark.sparkContext.getLocalProperty("spark.job.description")
+    assert desc == "SELECT id FROM jd"
