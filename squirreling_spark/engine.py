@@ -517,6 +517,8 @@ def _analyze(
     try:
         df = spark.sql(query)
     except Exception as exc:
+        from squirreling_spark.functions import sqldialect, sqlstrict
+
         msg = str(exc)
         # Dispatch on Spark's error condition (``A.B``) and read names from
         # its message parameters: the message text also embeds the
@@ -527,9 +529,7 @@ def _analyze(
         # Reference-style loose GROUP BY: retry once with non-aggregated
         # bare select columns wrapped in any_value (sqldialect.loosen_group_by)
         if cond & {"MISSING_AGGREGATION", "MISSING_GROUP_BY"}:
-            from squirreling_spark.functions.sqldialect import loosen_group_by
-
-            loose = loosen_group_by(query, spark=spark)
+            loose = sqldialect.loosen_group_by(query, spark=spark)
             if loose is not None:
                 try:
                     return spark.sql(loose)
@@ -540,11 +540,7 @@ def _analyze(
         # nested inside ORDER BY aggregates. Retry with the aliases
         # inlined (sqldialect.inline_select_aliases).
         if cond & {"LATERAL_COLUMN_ALIAS_IN_GROUP_BY", "MISSING_ATTRIBUTES"}:
-            from squirreling_spark.functions.sqldialect import (
-                inline_select_aliases,
-            )
-
-            inlined = inline_select_aliases(query)
+            inlined = sqldialect.inline_select_aliases(query)
             if inlined is not None:
                 try:
                     return spark.sql(inlined)
@@ -558,10 +554,9 @@ def _analyze(
         if "UNRESOLVED_COLUMN" in cond:
             dotted = _unquote(params.get("objectName", ""))
             if "." in dotted and f"`{dotted}`" in params.get("proposal", ""):
-                retry = re.sub(
-                    r"(?<![`\w])" + re.escape(dotted) + r"(?![`\w])",
-                    f"`{dotted}`",
-                    query,
+                ref = re.compile(rf"(?<![`\w]){re.escape(dotted)}(?![`\w])")
+                retry = sqldialect._sub_outside_strings(
+                    query, ref, lambda m: f"`{dotted}`"
                 )
                 if retry != query:
                     try:
@@ -575,35 +570,22 @@ def _analyze(
         # the available-name lists; unknown functions carry did-you-mean
         # suggestions ranked by prefix + edit distance.
         if "TABLE_OR_VIEW_NOT_FOUND" in cond:
-            from squirreling_spark.functions.sqldialect import (
-                session_temp_views,
-            )
-
             bad = _unquote(params.get("relationName", "?")).split(".")[-1]
             if orig_tables:
                 available = list(orig_tables)
             else:
-                available = session_temp_views(spark)
+                available = sqldialect.session_temp_views(spark)
             raise TableNotFoundError(
                 f'Table "{bad}" not found. Available tables: '
                 + ", ".join(available),
                 pos,
             ) from exc
         if "UNRESOLVED_COLUMN" in cond:
-            def _cols_of(v) -> list[str]:
-                if hasattr(v, "columns"):
-                    return list(v.columns)
-                if isinstance(v, list) and v:
-                    return list(v[0].keys())
-                return []
-
             bad = _unquote(params.get("objectName", "?"))
             # a column reference inside FROM/JOIN UNNEST(...) is a
             # correlation the reference rejects with guidance
             # (execute.unnest tests, verbatim)
-            from squirreling_spark.functions.sqldialect import _from_items
-
-            items = _from_items(orig_query)
+            items = sqldialect._from_items(orig_query)
             ref = re.compile(r"(?<![\w.])" + re.escape(bad) + r"(?![\w.])")
             for it in items:
                 if (
@@ -632,7 +614,9 @@ def _analyze(
                         None,
                     )
                     if target in orig_tables:
-                        available = _cols_of(orig_tables[target])
+                        available = sqlstrict._table_columns(
+                            orig_tables[target]
+                        )
                         bad = bare
                 if not available:
                     named = {it.name.lower() for it in tables}
@@ -640,7 +624,7 @@ def _analyze(
                         t for t in orig_tables if t.lower() in named
                     ] or list(orig_tables)
                     for t in scoped:
-                        for c in _cols_of(orig_tables[t]):
+                        for c in sqlstrict._table_columns(orig_tables[t]):
                             if c not in available:
                                 available.append(c)
             if available:
@@ -655,35 +639,24 @@ def _analyze(
                 ) from exc
             raise ColumnNotFoundError(first, pos) from exc
         if "CANNOT_RESOLVE_STAR_EXPAND" in cond:
-            from squirreling_spark.functions.sqlstrict import (
-                _visible_tables,
-            )
-
             star = _unquote(params.get("targetString", "?"))
-            vis = ", ".join(_visible_tables(orig_query, orig_tables))
+            vis = sqlstrict._visible_tables(orig_query, orig_tables)
             raise TableNotFoundError(
                 f'Table "{star}" not found in "{star}.*". '
-                f"Available tables: {vis}",
+                f"Available tables: {', '.join(vis)}",
                 pos,
             ) from exc
         if "UNRESOLVED_ROUTINE" in cond:
-            from squirreling_spark.functions.sqlstrict import (
-                suggest_functions,
-            )
-
             bad = _unquote(params.get("routineName", "?"))
-            # Word-boundary + call-paren match so the position is the
-            # CALL site, not a longer identifier containing the name
-            # (e.g. "SELECT myupperx, upperx(a)" — r9 advice).
-            call = re.search(
-                r"\b" + re.escape(bad) + r"\s*\(", orig_query, re.I
-            )
-            qpos = (
-                call.start() if call else orig_query.upper().find(bad.upper())
-            )
+            # the position is the CALL site: not a longer identifier
+            # containing the name ("SELECT myupperx, upperx(a)"), not a
+            # string literal
+            name = bad.upper()
+            calls = sqldialect._iter_calls(orig_query, {name})
+            qpos = next((c[1] for c in calls), orig_query.upper().find(name))
             at = f" at position {qpos}" if qpos >= 0 else ""
             extra = [r.name for r in spark.catalog.listFunctions()]
-            sugg = suggest_functions(bad, extra=extra)
+            sugg = sqlstrict.suggest_functions(bad, extra=extra)
             if sugg:
                 raise UnknownFunctionError(
                     f'Unknown function "{bad}"{at}. Did you mean '

@@ -43,9 +43,12 @@ call alone), or to a plain new name. FROM clauses are read by one
 reader, ``_from_items`` (tables, table-function calls and subqueries
 with their join keywords, aliases, column-alias lists and ON
 predicates), which ``sqlstrict`` and ``engine`` read too; a new
-FROM-clause table function is one entry in ``_TABLE_FUNCTIONS``. The
-rewriter is not a full parser; it targets the reference's tested query
-shapes.
+FROM-clause table function is one entry in ``_TABLE_FUNCTIONS``.
+Statement clauses are read by one reader, ``_selects`` (each SELECT's
+items and aliases and its FROM, WHERE, GROUP BY, HAVING, ORDER BY,
+LIMIT and OFFSET spans), and CTEs by ``_ctes``; ``sqlstrict`` reads both.
+The rewriter is not a full parser; it targets the reference's tested
+query shapes.
 
 Semantics notes (documented divergences, all at the type edge where a
 dynamically-typed JS engine meets SQL):
@@ -186,17 +189,6 @@ def _split_top_args(s: str) -> list[str]:
     return [s[a + 1 : b].strip() for a, b in zip(bounds, bounds[1:])]
 
 
-def _balanced_arg(q: str, open_idx: int) -> int:
-    """Index just past the bracket matching the one at ``open_idx``."""
-    close = _scan(q).partner[open_idx]
-    if close < 0:
-        raise ValueError(
-            f"unbalanced SQL: no bracket closes {q[open_idx]!r} at "
-            f"position {open_idx}"
-        )
-    return close + 1
-
-
 _CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 _FILTER_RE = re.compile(r"\s*FILTER\s*\(", re.I)
 
@@ -283,12 +275,13 @@ _NOT_ALIAS = frozenset({
     "NATURAL", "SEMI", "ANTI", "POSITIONAL", "LATERAL", "SORT", "CLUSTER",
     "DISTRIBUTE",
 })
-# Clauses that end a FROM clause (and an ON predicate).
+# Clauses and set operators: they end a FROM clause (and an ON
+# predicate). A window() call is no WINDOW clause.
 _CLAUSE_KW = (
-    r"\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET|QUALIFY|WINDOW"
-    r"|UNION|INTERSECT|EXCEPT|(?:SORT|CLUSTER|DISTRIBUTE)\s+BY)\b"
+    r"\b(?:WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|OFFSET|QUALIFY"
+    r"|WINDOW(?!\s*\()|UNION|INTERSECT|EXCEPT"
+    r"|(?:SORT|CLUSTER|DISTRIBUTE)\s+BY)\b"
 )
-_CLAUSE_RE = re.compile(_CLAUSE_KW, re.I)
 _JOIN_KW = (
     r"\b(?:NATURAL\s+)?(?:(?:(?:LEFT\s+)?(?:SEMI|ANTI)|(?:LEFT|RIGHT|FULL)"
     r"(?:\s+OUTER)?|INNER|CROSS|POSITIONAL)\s+)?JOIN\b"
@@ -425,6 +418,202 @@ def _from_items(q: str) -> tuple:
     return tuple(items)
 
 
+# ---------------------------------------------------------------------------
+# SELECT statements and WITH lists (reference src/parse/parse.js:51-57,
+# 110-181, 332-352, 391-419)
+# ---------------------------------------------------------------------------
+
+_HEAD_RE = re.compile(
+    r"\bSELECT\b(?:\s+ALL\b|\s+DISTINCT\b(\s+ON\s*\()?)?", re.I
+)
+_STMT_KW_RE = re.compile(_CLAUSE_KW + "|;", re.I)
+_SETOP_RE = re.compile(
+    r"(?:UNION|INTERSECT|EXCEPT)\b(?:\s+(?:ALL|DISTINCT)\b)?", re.I
+)
+_ITEM_ALIAS_RE = re.compile(rf"\s+AS\s+({_IDENT})\s*$", re.I)
+
+
+class _SelectItem(NamedTuple):
+    """One top-level select item (see ``_selects``); spans are trimmed."""
+
+    start: int
+    expr_end: int  # end of the expression, before its ``AS name``
+    end: int
+    alias: str | None  # the explicit ``AS name``, as written
+
+
+class _Select(NamedTuple):
+    """One SELECT statement (see ``_selects``)."""
+
+    start: int  # the SELECT keyword
+    head_end: int  # just past SELECT [ALL | DISTINCT [ON (...)]]
+    on: tuple | None  # (start, end) of the DISTINCT ON keys, brackets excluded
+    items: tuple  # the top-level select items, as _SelectItem
+    # clause name ("FROM", "WHERE", "GROUP BY", "ORDER BY", ...) →
+    # (keyword start, body start, body end), the body trimmed
+    clauses: dict
+    end: int  # the set operator, ";" or closer that ends it, or len(q)
+
+
+def _trim(q: str, a: int, b: int) -> tuple[int, int]:
+    """``(a, b)`` with the whitespace at both ends of ``q[a:b]`` left out."""
+    while a < b and q[a].isspace():
+        a += 1
+    while b > a and q[b - 1].isspace():
+        b -= 1
+    return a, b
+
+
+@functools.lru_cache(maxsize=64)
+def _selects(q: str) -> tuple:
+    """The one statement reader: every SELECT outside strings, at any
+    depth, as a ``_Select``, in text order. A statement runs to the first
+    set operator or ``;`` at its own depth, else to the closer of its
+    enclosing bracket. Its select list runs to its first FROM as
+    ``_from_keywords`` finds it (so ``EXTRACT(YEAR FROM d)`` and ``IS
+    DISTINCT FROM`` do not end it), else to its first clause keyword; the
+    list splits into items at its top-level commas. Each clause (FROM,
+    WHERE, GROUP BY, HAVING, QUALIFY, WINDOW, ORDER BY, LIMIT, OFFSET and
+    Spark's SORT/CLUSTER/DISTRIBUTE BY) is cut at the next clause keyword
+    at the statement's depth. Cached like ``_from_items``."""
+    s = _scan(q)
+    kws = [
+        m for m in _STMT_KW_RE.finditer(q)
+        if not s.mask[m.start()]
+        # ``* EXCEPT (cols)`` is Spark's star exclusion, not a set operator
+        and not q[: m.start()].rstrip().endswith("*")
+    ]
+    froms = list(_from_keywords(q))
+    out = []
+    for h in _HEAD_RE.finditer(q):
+        p = h.start()
+        if s.mask[p]:
+            continue
+        d, end = s.depth[p], _stmt_end(q, p)
+        own = [
+            m for m in kws if p < m.start() < end and s.depth[m.start()] == d
+        ]
+        end = next(
+            (m.start() for m in own
+             if m.group() == ";" or _SETOP_RE.match(m.group())),
+            end,
+        )
+        on, head_end = None, h.end()
+        close = s.partner[h.end() - 1] if h.group(1) else -1
+        if close >= 0:
+            on, head_end = _trim(q, h.end(), close), close + 1
+        own = [m for m in own if head_end <= m.start() < end]
+        frm = next(
+            (f for f in froms if head_end <= f < end and s.depth[f] == d), -1
+        )
+        list_end = frm if frm != -1 else (own[0].start() if own else end)
+        # (keyword start, body start, name) of each clause, in text order
+        marks = [(frm, frm + 4, "FROM")] if frm != -1 else []
+        marks += [
+            (m.start(), m.end(), " ".join(m.group().upper().split()))
+            for m in own if m.start() >= list_end
+        ]
+        clauses = {}
+        for (kw, body, name), nxt in zip(marks, [m[0] for m in marks[1:]]
+                                         + [end]):
+            clauses.setdefault(name, (kw, *_trim(q, body, nxt)))
+        items = []
+        cuts = [head_end - 1, *_top_commas(q, head_end, list_end), list_end]
+        for a, b in zip(cuts, cuts[1:]):
+            a, b = _trim(q, a + 1, b)
+            am = _ITEM_ALIAS_RE.search(q, a, b)
+            cut, alias = (am.start(), am.group(1)) if am else (b, None)
+            items.append(_SelectItem(a, cut, b, alias))
+        out.append(_Select(p, head_end, on, tuple(items), clauses, end))
+    return tuple(out)
+
+
+def _stmt_of(q: str, pos: int):
+    """The innermost statement (``_selects``) whose text holds ``pos``
+    (its end included), or None."""
+    holding = [sel for sel in _selects(q) if sel.start <= pos <= sel.end]
+    return holding[-1] if holding else None
+
+
+class _Cte(NamedTuple):
+    """One common table expression of a WITH list (see ``_ctes``)."""
+
+    name: str  # without quotes
+    cols: tuple | None  # column list: ``c(x, y) AS (...)``
+    open: int  # the "(" of its body
+    close: int  # the ")" of its body
+
+
+_WITH_RE = re.compile(r"\bWITH\s+(?:RECURSIVE\s+)?", re.I)
+_CTE_NAME_RE = re.compile(rf"\s*({_IDENT})\s*(\()?")
+_CTE_AS_RE = re.compile(r"\s*AS\s*(?:(?:NOT\s+)?MATERIALIZED\s*)?\(", re.I)
+
+
+@functools.lru_cache(maxsize=64)
+def _ctes(q: str) -> tuple:
+    """The one WITH reader: every CTE of every WITH list outside strings,
+    at any depth, in text order. A list is WITH [RECURSIVE], then
+    ``name [(cols)] AS [[NOT] MATERIALIZED] (body)`` items joined by
+    commas; it ends at anything else."""
+    s = _scan(q)
+    out = []
+    for w in _WITH_RE.finditer(q):
+        pos = w.end()
+        while not s.mask[w.start()]:
+            nm = _CTE_NAME_RE.match(q, pos)
+            if nm is None:
+                break
+            cols, after = None, nm.end()
+            if nm.group(2):
+                close = s.partner[nm.end() - 1]
+                if close < 0:
+                    break
+                cols = _split_top_args(q[nm.end() : close])
+                cols, after = tuple(c for c in cols if c), close + 1
+            am = _CTE_AS_RE.match(q, after)
+            if am is None or s.partner[am.end() - 1] < 0:
+                break
+            close = s.partner[am.end() - 1]
+            name = _unquote_name(nm.group(1))
+            out.append(_Cte(name, cols, am.end() - 1, close))
+            cm = _COMMA_RE.match(q, close + 1)
+            if cm is None:
+                break
+            pos = cm.end()
+    return tuple(out)
+
+
+def _main_select(q: str):
+    """The outermost statement: the first SELECT outside every CTE body
+    (with set operations, their first branch), or None."""
+    ctes = _ctes(q)
+    return next(
+        (
+            sel for sel in _selects(q)
+            if not any(c.open < sel.start < c.close for c in ctes)
+        ),
+        None,
+    )
+
+
+def _branches(q: str) -> list:
+    """The set-operation branches of the outermost statement, in order
+    (one for a plain SELECT). A branch may be written in brackets,
+    ``(SELECT ...) UNION (SELECT ...)``: its set operator then follows
+    the closer that ends it."""
+    sel, out = _main_select(q), []
+    while sel is not None:
+        out.append(sel)
+        k = sel.end
+        while k < len(q) and (q[k].isspace() or q[k] == ")"):
+            k += 1
+        op = _SETOP_RE.match(q, k)
+        if op is None:
+            break
+        sel = next((x for x in _selects(q) if x.start >= op.end()), None)
+    return out
+
+
 _LITERAL_BRACKET_KEYWORDS = {
     "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "IN", "AND", "OR", "NOT",
     "ON", "BY", "HAVING", "RETURN", "AS", "FROM", "LIMIT", "OFFSET",
@@ -480,7 +669,8 @@ def _rewrite_from_first(q: str) -> str:
     return q[: m.start()] + "SELECT * " + q[m.end() - 4 :]
 
 
-_DQUOTE_RE = re.compile(r'"((?:[^"]|"")*)"')
+# A string literal, or a "..." identifier ("" escapes a quote) as group 1
+_DQUOTE_RE = re.compile(r"'(?:[^']|'')*'?|\"((?:[^\"]|\"\")*)\"")
 
 
 def _rewrite_double_quoted_idents(q: str) -> str:
@@ -489,34 +679,12 @@ def _rewrite_double_quoted_idents(q: str) -> str:
     Spark reads double quotes as string literals). Only applied under
     ``ident_quotes="ansi"`` — in the default dialect '"..."' stays a
     Spark string literal."""
-    out, last = [], 0
-    # process left-to-right, skipping single-quoted strings manually
-    i, n = 0, len(q)
-    while i < n:
-        ch = q[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if q[j] == "'":
-                    if j + 1 < n and q[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch == '"':
-            m = _DQUOTE_RE.match(q, i)
-            if m:
-                out.append(q[last : i])
-                ident = m.group(1).replace('""', '"').replace("`", "``")
-                out.append(f"`{ident}`")
-                last = m.end()
-                i = m.end()
-                continue
-        i += 1
-    out.append(q[last:])
-    return "".join(out)
+    return _DQUOTE_RE.sub(
+        lambda m: m.group() if m.group(1) is None else "`{}`".format(
+            m.group(1).replace('""', '"').replace("`", "``")
+        ),
+        q,
+    )
 
 
 _BIGINT_RE = re.compile(r"(?<![\w$.])(\d+)n\b")
@@ -754,60 +922,45 @@ def _rewrite_exclude(q: str) -> str:
     )
 
 
-_DON_RE = re.compile(r"\bSELECT\s+DISTINCT\s+ON\s*\(", re.I)
 _FROM_KW = re.compile(r"\bFROM\b", re.I)
-_ORDER_KW = re.compile(r"\bORDER\s+BY\b", re.I)
-_LIMIT_KW = re.compile(r"\bLIMIT\b", re.I)
 _LIMIT_OFFSET_KW = re.compile(r"\b(?:LIMIT|OFFSET)\b", re.I)
 
 
 def _rewrite_distinct_on(q: str) -> str:
     """Postgres/DuckDB ``SELECT DISTINCT ON (keys) ...`` (syntax.md item
     16) → first-row-per-key via ROW_NUMBER: the ON keys partition, the
-    query's ORDER BY (or the keys themselves) ranks, rn=1 survives. The
-    outer ORDER BY/LIMIT are preserved. Single-SELECT shapes only — keys
-    and ORDER BY must resolve against the FROM relations (not select-list
-    aliases), which covers the production queries in the wish-list."""
-    while True:
-        mask = _scan(q).mask
-        m = next((c for c in _DON_RE.finditer(q) if not mask[c.start()]), None)
-        if m is None:
-            return q
-        open_idx = q.index("(", m.end() - 1)
-        key_end = _balanced_arg(q, open_idx)
-        keys = q[open_idx + 1 : key_end - 1].strip()
-        from_idx = _toplevel_kw(q, _FROM_KW, key_end)
-        if not keys or from_idx == -1:
-            return q
-        sel = q[key_end:from_idx].strip()
-        # bound everything at the enclosing subquery's close paren (a
-        # DISTINCT ON inside `(SELECT ...) x` must not swallow the tail)
-        send = _stmt_end(q, key_end)
-        order_idx = _toplevel_kw(q, _ORDER_KW, from_idx)
-        limit_idx = _toplevel_kw(q, _LIMIT_KW, from_idx)
-        body_end = min(x for x in (order_idx, limit_idx, send) if x != -1)
-        frombody = q[from_idx:body_end].rstrip()
-        order_clause = ""
-        if order_idx != -1:
-            oend = limit_idx if limit_idx != -1 else send
-            order_clause = q[order_idx:oend].strip()
-        limit_clause = q[limit_idx:send].strip() if limit_idx != -1 else ""
-        win_order = (
-            re.sub(r"^ORDER\s+BY\s+", "", order_clause, flags=re.I)
-            or keys
+    statement's ORDER BY (or the keys themselves) ranks, rn=1 survives.
+    Its ORDER BY, LIMIT and OFFSET stay on the outer query. Keys and
+    ORDER BY must resolve against the FROM relations (not select-list
+    aliases), which covers the production queries in the wish-list.
+    Statements are visited right to left, each read from the current
+    text, so a rewrite never moves a statement still to visit."""
+    starts = [sel.start for sel in _selects(q) if sel.on]
+    for start in reversed(starts):
+        sel = next(x for x in _selects(q) if x.start == start)
+        keys = q[sel.on[0] : sel.on[1]]
+        if not keys or "FROM" not in sel.clauses:
+            continue
+        end = len(q[: sel.end].rstrip())  # the spaces after it stay
+        cut = min(
+            [sel.clauses[c][0] for c in ("ORDER BY", "LIMIT", "OFFSET")
+             if c in sel.clauses] or [end]
         )
-        if sel == "*":
-            sel = "* EXCEPT (__sq_don)"
-        tail = f" {order_clause}" if order_clause else ""
-        if limit_clause:
-            tail += f" {limit_clause}"
+        frombody = q[sel.clauses["FROM"][0] : cut].rstrip()
+        tail = q[cut:end]
+        order = sel.clauses.get("ORDER BY")
+        win_order = q[order[1] : order[2]] if order else keys
+        items = q[sel.head_end : sel.clauses["FROM"][0]].strip()
+        if items == "*":
+            items = "* EXCEPT (__sq_don)"
         q = (
-            q[: m.start()]
-            + f"SELECT {sel} FROM (SELECT *, ROW_NUMBER() OVER "
+            q[:start]
+            + f"SELECT {items} FROM (SELECT *, ROW_NUMBER() OVER "
             f"(PARTITION BY {keys} ORDER BY {win_order}) AS __sq_don "
-            f"{frombody}) WHERE __sq_don = 1{tail}"
-            + q[send:]
+            f"{frombody}) WHERE __sq_don = 1{' ' + tail if tail else ''}"
+            + q[end:]
         )
+    return q
 
 
 def _rewrite_wishlist(q: str) -> str:
@@ -1035,11 +1188,12 @@ def _on_true(q: str, it) -> bool:
 
 def _fold_into_where(q: str, pos: int, pred: str) -> str:
     """AND ``pred`` into the WHERE of the statement containing ``pos``
-    (after its FROM clause), adding a WHERE where it has none."""
-    at = _toplevel_kw(q, _CLAUSE_RE, pos)
-    if at != -1 and q[at : at + 5].upper() == "WHERE":
-        return q[: at + 5] + f" ({pred}) AND" + q[at + 5 :]
-    at = _stmt_end(q, pos) if at == -1 else at
+    (in its FROM clause), adding a WHERE where it has none."""
+    sel = _stmt_of(q, pos)
+    if "WHERE" in sel.clauses:
+        at = sel.clauses["WHERE"][0] + 5
+        return q[:at] + f" ({pred}) AND" + q[at:]
+    at = min([c[0] for c in sel.clauses.values() if c[0] > pos] or [sel.end])
     return q[:at] + f" WHERE {pred} " + q[at:]
 
 
@@ -1269,24 +1423,26 @@ def _rewrite_orderless_windows(q: str) -> str:
         for m in re.finditer(r"\bOVER\s*\(", q, re.I):
             if mask[m.start()]:
                 continue
-            end = _balanced_arg(q, m.end() - 1)
-            inner = q[m.end(): end - 1]
+            close = _scan(q).partner[m.end() - 1]
+            if close < 0:
+                continue  # unbalanced: Spark will error
+            inner = q[m.end() : close]
             if re.search(r"\bORDER\s+BY\b", inner, re.I):
                 continue
             if re.fullmatch(r"\s*[A-Za-z_]\w*\s*", inner):
                 continue  # named-window reference: OVER (w1)
             if not _RANK_FAMILY.search(q[: m.end()]):
                 continue
-            target = (m.end(), end, inner)
+            target = (close, inner)
             break
         if target is None:
             return q
-        start, end, inner = target
+        close, inner = target
         sep = " " if inner.strip() else ""
         q = (
-            q[: end - 1]
+            q[:close]
             + f"{sep}ORDER BY monotonically_increasing_id()"
-            + q[end - 1:]
+            + q[close:]
         )
 
 
@@ -1335,25 +1491,15 @@ def _rewrite_dynamic_orderby(q: str, spark) -> str:
     return out
 
 
-_WHERE_BARE_RE = re.compile(
-    r"(?i)\bWHERE\s+([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*"
-    r"(?=$|\)|;|\bGROUP\b|\bORDER\b|\bLIMIT\b|\bOFFSET\b|\bHAVING\b"
-    r"|\bUNION\b|\bEXCEPT\b|\bINTERSECT\b)"
-)
-
-
 def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
-    """``WHERE dyncol`` (the whole condition is one bare DYNAMIC column)
-    → JS truthiness over the JSON text: null/false/0/'' are falsy, any
-    JSON string (even '"0"') is truthy, numbers by ≠ 0
+    """``WHERE dyncol`` (a statement's whole WHERE is one bare DYNAMIC
+    column) → JS truthiness over the JSON text: null/false/0/'' are
+    falsy, any JSON string (even '"0"') is truthy, numbers by ≠ 0
     (execute.test.js 'should handle falsy values in WHERE clause')."""
-    mask = _scan(q).mask
-    out = q
-    for m in reversed(list(_WHERE_BARE_RE.finditer(q))):
-        if mask[m.start()]:
-            continue
-        ref = m.group(1)
-        if not _is_dynamic_ref(spark, ref):
+    wheres = [sel.clauses.get("WHERE") for sel in _selects(q)]
+    for _, start, end in sorted(filter(None, wheres), reverse=True):
+        ref = q[start:end]
+        if not _REF_RE.fullmatch(ref) or not _is_dynamic_ref(spark, ref):
             continue
         num = _dyn_num(ref)
         cond = (
@@ -1361,8 +1507,8 @@ def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
             f" THEN FALSE WHEN {ref} NOT LIKE '\"%' AND {num} IS NOT NULL"
             f" THEN {num} <> 0.0D ELSE TRUE END)"
         )
-        out = out[: m.start(1)] + cond + out[m.end(1):]
-    return out
+        q = q[:start] + cond + q[end:]
+    return q
 
 
 def _rewrite_dynamic_typing(q: str, spark=None) -> str:
@@ -2283,75 +2429,53 @@ def _collapse_dots(item: str) -> str:
     return "".join(out)
 
 
-_SELECT_HEAD_RE = re.compile(r"\bSELECT\b(\s+(?:DISTINCT|ALL)\b)?", re.I)
-
-
 def loosen_group_by(q: str, spark=None) -> str | None:
     """Reference-style loose GROUP BY: non-aggregated bare columns in the
-    select list take the group's first value (the reference's row-object
-    evaluation keeps whatever the first row held). Rewrites them to
-    ``any_value(col) AS col``; returns None when nothing applies — the
-    engine retries with this ONLY after Spark raises MISSING_AGGREGATION,
-    so strict queries keep strict errors."""
-    gm = re.search(r"\bGROUP\s+BY\b", q, re.I)
-    if gm and not _scan(q).mask[gm.start()]:
-        # group-by keys: up to the next top-level clause keyword
-        tail = q[gm.end():]
-        km = re.search(
-            r"\b(HAVING|ORDER\s+BY|LIMIT|OFFSET|WINDOW|UNION|INTERSECT"
-            r"|EXCEPT)\b",
-            tail,
-            re.I,
-        )
-        keys = {
-            k.strip().lower()
-            for k in _split_top_args(tail[: km.start() if km else len(tail)])
-        }
-        keys |= {k.rsplit(".", 1)[-1] for k in keys}
-    else:
-        # no GROUP BY at all (MISSING_GROUP_BY retry): the whole input is
-        # one group, every bare column takes its first value
-        keys = set()
-    m = _SELECT_HEAD_RE.search(q)
-    if not m or _scan(q).mask[m.start()]:
+    outermost statement's select list (``_main_select``) take the group's
+    first value (the reference's row-object evaluation keeps whatever the
+    first row held). Rewrites them to ``any_value(col) AS col``; returns
+    None when nothing applies — the engine retries with this ONLY after
+    Spark raises MISSING_AGGREGATION, so strict queries keep strict
+    errors."""
+    sel = _main_select(q)
+    if sel is None:
         return None
-    start = m.end()
-    fm = re.search(r"\bFROM\b", q[start:], re.I)
-    end = start + (fm.start() if fm else len(q) - start)
-    items = _split_top_args(q[start:end])
+    # no GROUP BY at all (MISSING_GROUP_BY retry): the whole input is one
+    # group, every bare column takes its first value
+    group = sel.clauses.get("GROUP BY")
+    keys = {
+        k.lower() for k in _split_top_args(q[group[1] : group[2]])
+    } if group else set()
+    keys |= {k.rsplit(".", 1)[-1] for k in keys}
+    items = [q[it.start : it.end] for it in sel.items]
     # `SELECT * .. GROUP BY k`: the reference keeps the group's first row
     # for every non-key column. Expand the star from the (single, bare)
     # FROM table so each column can be wrapped individually.
-    if spark is not None and any(i.strip() == "*" for i in items):
-        it = next((it for it in _from_items(q) if it.kw == end), None)
+    if spark is not None and "*" in items and "FROM" in sel.clauses:
+        it = next(
+            (it for it in _from_items(q) if it.kw == sel.clauses["FROM"][0]),
+            None,
+        )
         if it is not None and it.kind == "table":
             try:
                 cols = spark.table(q[it.start : it.rel_end]).columns
             except Exception:  # noqa: BLE001 — leave the star alone
                 cols = None
             if cols:
-                expanded = []
-                for i in items:
-                    expanded.extend(cols if i.strip() == "*" else [i])
-                items = expanded
+                items = [c for i in items for c in (cols if i == "*" else [i])]
     changed = False
     out = []
     for item in items:
-        stripped = item.strip()
-        bare = re.fullmatch(r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)*", stripped)
-        if (
-            bare
-            and stripped.lower() not in keys
-            and stripped.rsplit(".", 1)[-1].lower() not in keys
-        ):
-            col = stripped.rsplit(".", 1)[-1]
-            out.append(f"any_value({stripped}) AS {col}")
+        bare = re.fullmatch(r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)*", item)
+        col = item.rsplit(".", 1)[-1]
+        if bare and item.lower() not in keys and col.lower() not in keys:
+            out.append(f"any_value({item}) AS {col}")
             changed = True
         else:
-            out.append(stripped)
+            out.append(item)
     if not changed:
         return None
-    return q[:start] + " " + ", ".join(out) + " " + q[end:]
+    return q[: sel.items[0].start] + ", ".join(out) + q[sel.items[-1].end :]
 
 
 _AGG_TOKEN_RE = re.compile(
@@ -2377,7 +2501,8 @@ def _alias_sub(expr: str, amap: dict[str, str]) -> str:
 def inline_select_aliases(q: str) -> str | None:
     """Retry rewrite for the reference's alias-chaining GROUP BY / ORDER
     BY shapes Spark rejects (execute.group 'chained SELECT alias',
-    execute.orderby 'alias nested inside aggregate'):
+    execute.orderby 'alias nested inside aggregate'), over the outermost
+    statement (``_main_select``):
 
     - select-list aliases are inlined transitively (``x AS a, a+1 AS b``
       → ``x AS a, (x)+1 AS b``), so a GROUP BY on the chained alias stops
@@ -2391,138 +2516,86 @@ def inline_select_aliases(q: str) -> str | None:
       ``any_value`` (same convention as ``loosen_group_by``).
 
     Returns None when nothing applies."""
-    mask = _scan(q).mask
-    m = _SELECT_HEAD_RE.search(q)
-    if not m or mask[m.start()]:
+    sel = _main_select(q)
+    if sel is None:
         return None
-    start = m.end()
-    fm = re.search(r"\bFROM\b", q[start:], re.I)
-    end = start + (fm.start() if fm else len(q) - start)
     amap: dict[str, str] = {}
-    items = []
-    for item in _split_top_args(q[start:end]):
-        mm = re.match(
-            r"(.*\S)\s+AS\s+([A-Za-z_]\w*)\s*$", item.strip(),
-            re.I | re.S,
-        )
-        if mm:
-            expr = _alias_sub(mm.group(1).strip(), amap)
-            amap[mm.group(2)] = expr
-            items.append((expr, mm.group(2)))
-        else:
-            items.append((item.strip(), None))
+    aliased = []
+    for it in sel.items:
+        if it.alias and _PLAIN_NAME_RE.fullmatch(it.alias):
+            expr = _alias_sub(q[it.start : it.expr_end], amap)
+            amap[it.alias] = expr
+            aliased.append((it, expr))
     if not amap:
         return None
 
     def norm(e: str) -> str:
         return re.sub(r"[\s()]", "", e).lower()
 
-    tail = q[end:]
-    gm = re.search(r"\bGROUP\s+BY\b", tail, re.I)
+    edits = {}  # (start, end) → replacement text
+    group = sel.clauses.get("GROUP BY")
     keys_norm: set[str] = set()
-    if gm:
-        gtail = tail[gm.end():]
-        km = re.search(
-            r"\b(HAVING|ORDER\s+BY|LIMIT|OFFSET|WINDOW|UNION|INTERSECT"
-            r"|EXCEPT)\b", gtail, re.I,
-        )
-        kend = km.start() if km else len(gtail)
-        new_keys = []
-        for k in _split_top_args(gtail[:kend]):
-            ks = k.strip()
-            if ks in amap:
-                ks = f"({amap[ks]})"
-            new_keys.append(ks)
-            keys_norm.add(norm(ks))
-        tail = (
-            tail[: gm.end()] + " " + ", ".join(new_keys) + " "
-            + gtail[kend:]
-        )
+    if group:
+        keys = [
+            f"({amap[k]})" if k in amap else k
+            for k in _split_top_args(q[group[1] : group[2]])
+        ]
+        keys_norm = {norm(k) for k in keys}
+        edits[group[1:]] = ", ".join(keys)
     # ORDER BY / HAVING: substitute aliases inside larger expressions
     # only — a whole-key alias resolves natively and (for `count`-style
     # aliases of aggregates) substituting it is never necessary.
-    om = re.search(r"\b(ORDER\s+BY|HAVING)\b", tail, re.I)
-    if om:
-        seg = tail[om.start():]
-        lm = re.search(r"\b(LIMIT|OFFSET)\b", seg, re.I)
-        send = lm.start() if lm else len(seg)
-        body = seg[:send]
-        head_kw = re.match(r"\b(ORDER\s+BY|HAVING)\b", body, re.I).group(0)
-        rest = body[len(head_kw):]
-        parts = []
-        for p in _split_top_args(rest):
-            ps = p.strip()
-            bare = re.fullmatch(
-                r"([A-Za-z_]\w*)(\s+(ASC|DESC))?(\s+NULLS\s+\w+)?", ps,
-                re.I,
-            )
-            if bare and bare.group(1) in amap:
-                parts.append(ps)  # whole-key alias: Spark-native
-            else:
-                parts.append(_alias_sub(ps, amap))
-        tail = (
-            tail[: om.start()] + head_kw + " " + ", ".join(parts)
-            + seg[send:]
-        )
-    changed_groupby = bool(gm)
-    new_items = []
-    for expr, alias in items:
-        wrapped = expr
-        if (
-            changed_groupby
-            and alias is not None
-            and norm(expr) not in keys_norm
-            and not _AGG_TOKEN_RE.search(expr)
+    for name in ("HAVING", "ORDER BY"):
+        if name in sel.clauses:
+            _, start, end = sel.clauses[name]
+            parts = []
+            for p in _split_top_args(q[start:end]):
+                # a whole-key alias is Spark-native
+                bare = _OB_ITEM_RE.fullmatch(p)
+                whole = bare and bare.group(1) in amap
+                parts.append(p if whole else _alias_sub(p, amap))
+            edits[start, end] = ", ".join(parts)
+    for it, expr in aliased:
+        if group and norm(expr) not in keys_norm and not _AGG_TOKEN_RE.search(
+            expr
         ):
-            wrapped = f"any_value({expr})"
-        new_items.append(f"{wrapped} AS {alias}" if alias else wrapped)
-    out = q[:start] + " " + ", ".join(new_items) + " " + tail
+            expr = f"any_value({expr})"
+        edits[it.start, it.expr_end] = expr
+    out = q
+    for start, end in sorted(edits, reverse=True):
+        out = out[:start] + edits[start, end] + out[end:]
     return out if out != q else None
 
 
 def _rewrite_auto_alias(q: str) -> str:
-    """Append reference-style aliases to unaliased top-level select items."""
-    mask = _scan(q).mask
-    m = _SELECT_HEAD_RE.search(q)
-    if not m or mask[m.start()]:
-        return q
-    # the select list ends at its FROM or at the end of the statement
-    start = m.end()
-    end = _toplevel_kw(q, _FROM_KW, start)
-    if end == -1:
-        end = _stmt_end(q, start)
-    items = _split_top_args(q[start:end])
-    changed = False
-    new_items = []
-    for item in items:
-        stripped = item.strip()
-        if (
-            not stripped
-            or stripped == "*"
-            or stripped.endswith(".*")
-            or re.search(r"\bAS\s+[`\"']?[\w ]+[`\"']?\s*$", stripped, re.I)
-            or re.fullmatch(r"[A-Za-z_][\w$]*", stripped)
-            or re.fullmatch(r"`[^`]+`", stripped)
-        ):
-            new_items.append(item)
-            continue
-        # implicit alias `expr name`? only if last token is a bare ident
-        # NOT part of the expression — undecidable cheaply; restrict to
-        # expressions we can fully parse, which excludes that shape
-        name = _derived_alias(stripped)
-        if name is None:
-            new_items.append(item)
-            continue
-        esc = name.replace("`", "``")
-        new_items.append(f"{item} AS `{esc}`")
-        changed = True
-    if not changed:
-        return q
-    return q[:start] + " " + ", ".join(i.strip() for i in new_items) + " " + q[end:]
-
-
-_SELECT_RE = re.compile(r"\bSELECT\b", re.I)
-_STAR_RE = re.compile(r"\bSELECT\s+\*", re.I)
+    """Append reference-style aliases to the unaliased select items of
+    the outermost statement and of each CTE body's statement (the names a
+    ``SELECT *`` over the CTE shows)."""
+    heads = [_main_select(q)] + [
+        next((x for x in _selects(q) if c.open < x.start < c.close), None)
+        for c in _ctes(q)
+    ]
+    edits = []
+    for sel in filter(None, heads):
+        for it in sel.items:
+            item = q[it.start : it.end]
+            if (
+                it.alias
+                or not item
+                or item.endswith("*")  # ``*`` and ``t.*``
+                or re.fullmatch(r"[A-Za-z_][\w$]*|`[^`]+`", item)
+            ):
+                continue
+            # implicit alias `expr name`? only if last token is a bare
+            # ident NOT part of the expression — undecidable cheaply;
+            # restrict to expressions we can fully parse, which excludes
+            # that shape
+            name = _derived_alias(item)
+            if name is not None:
+                edits.append((it.end, name.replace("`", "``")))
+    for end, name in sorted(edits, reverse=True):
+        q = q[:end] + f" AS `{name}`" + q[end:]
+    return q
 
 
 # Row-numbered views of the two POSITIONAL JOIN sides, one pair per
@@ -2569,21 +2642,15 @@ def _rewrite_positional_join(
             + f"ON {la}.{_RN} = {ra}.{_RN}"
             + q[right.end :]
         )
-        # Expand the statement's bare SELECT * (the rn columns must not
-        # leak into it): its SELECT is the last one before the FROM at
-        # the FROM's depth.
-        s = _scan(q)
-        sel = [
-            m.start() for m in _SELECT_RE.finditer(q, 0, left.kw)
-            if not s.mask[m.start()] and s.depth[m.start()] == s.depth[left.kw]
-        ]
-        star = _STAR_RE.match(q, sel[-1]) if sel else None
-        if star:
-            cols = ", ".join(
-                [f"{la}.{c}" for c in lsrc.columns]
-                + [f"{ra}.{c}" for c in rsrc.columns]
-            )
-            q = q[: star.end() - 1] + cols + q[star.end() :]
+        # Expand the bare ``*`` items of the statement that owns the FROM:
+        # the rn columns must not leak into it.
+        cols = ", ".join(
+            [f"{la}.{c}" for c in lsrc.columns]
+            + [f"{ra}.{c}" for c in rsrc.columns]
+        )
+        for it in reversed(_stmt_of(q, left.kw).items):
+            if q[it.start : it.end] == "*":
+                q = q[: it.start] + cols + q[it.end :]
         return q
 
     starts = [

@@ -32,13 +32,17 @@ from __future__ import annotations
 import re
 
 from .sqldialect import (
-    _balanced_arg,
+    _PLAIN_NAME_RE,
+    _branches,
     _bracket_is_literal,
+    _ctes,
     _from_items,
     _iter_calls,
     _rewrite_calls,
     _scan,
+    _selects,
     _split_top_args,
+    _stmt_of,
 )
 
 
@@ -174,8 +178,6 @@ _CAST_TYPES = {
 }
 _INTERVAL_UNITS = {"DAY", "MONTH", "YEAR", "HOUR", "MINUTE", "SECOND"}
 
-_NUM_LIT_RE = re.compile(r"\s*-?\d+\s*$")
-
 
 def _edit_distance(a: str, b: str) -> int:
     """Levenshtein distance (reference parseErrors.js:160-178)."""
@@ -224,18 +226,6 @@ _TABLE_FUNCS = {
 }
 
 
-def _cte_names(q: str, mask) -> set[str]:
-    names: set[str] = set()
-    for pat in (
-        r"\bWITH\s+(?:RECURSIVE\s+)?([A-Za-z_]\w*)\s*(?:\([^)]*\))?\s*AS\s*\(",
-        r",\s*([A-Za-z_]\w*)\s*(?:\([^)]*\))?\s*AS\s*\(",
-    ):
-        for m in re.finditer(pat, q, re.I):
-            if not mask[m.start()]:
-                names.add(m.group(1).lower())
-    return names
-
-
 def _validate_known_tables(q: str, tables) -> None:
     """Reference TableNotFoundError (validation/tables.js:166-211): a bare
     FROM/JOIN table name absent from the table map raises with the
@@ -243,7 +233,7 @@ def _validate_known_tables(q: str, tables) -> None:
     catalog-backed sessions resolve names Spark-side."""
     if not tables:
         return
-    known = {t.lower() for t in tables} | _cte_names(q, _scan(q).mask)
+    known = {t.lower() for t in tables} | {c.name.lower() for c in _ctes(q)}
     for it in _from_items(q):
         # dotted and quoted names are _validate_dotted_from's and Spark's
         if it.kind != "table" or it.quoted or "." in it.name:
@@ -460,8 +450,6 @@ def _validate_intervals(q: str) -> None:
         tail = q[m.end():]
         um = re.match(r"\s+'?-?\d+'?\s+([A-Za-z]+)", tail)
         if um:
-            unit = um.group(1).upper().rstrip("S") if um.group(1).upper() \
-                not in _INTERVAL_UNITS else um.group(1).upper()
             unit = um.group(1).upper()
             if unit.endswith("S") and unit[:-1] in _INTERVAL_UNITS:
                 unit = unit[:-1]
@@ -484,30 +472,33 @@ def _validate_intervals(q: str) -> None:
 
 
 def _validate_order_by_star(q: str) -> None:
-    """ORDER BY <n> where select item n is ``*`` (reference resolves
-    positional ORDER BY against the select list; * has no single
-    value)."""
-    mask = _scan(q).mask
-    m = re.search(r"\bORDER\s+BY\s+", q, re.I)
-    if not m or mask[m.start()]:
-        return
-    sel = re.search(r"\bSELECT\s+(DISTINCT\s+)?(.*?)\s+FROM\b", q,
-                    re.I | re.S)
-    if not sel:
-        return
-    items = _split_top_args(sel.group(2))
-    tail = q[m.end():]
-    for item in _split_top_args(re.split(
-        r"\bLIMIT\b|\bOFFSET\b", tail, flags=re.I
-    )[0]):
-        im = re.fullmatch(r"\s*(\d+)\s*(ASC|DESC)?\s*", item, re.I)
-        if im:
-            n = int(im.group(1))
-            if 1 <= n <= len(items) and items[n - 1].strip() == "*":
-                raise StrictDialectError(
-                    f"ORDER BY position {n} refers to * which is not "
-                    "supported"
-                )
+    """ORDER BY <n> where select item n of its statement is ``*``
+    (reference resolves positional ORDER BY against the select list; *
+    has no single value)."""
+    for sel in _selects(q):
+        if "ORDER BY" not in sel.clauses:
+            continue
+        _, start, end = sel.clauses["ORDER BY"]
+        items = [q[it.start : it.end] for it in sel.items]
+        for key in _split_top_args(q[start:end]):
+            im = re.fullmatch(r"(\d+)\s*(ASC|DESC)?", key, re.I)
+            if im:
+                n = int(im.group(1))
+                if 1 <= n <= len(items) and items[n - 1] == "*":
+                    raise StrictDialectError(
+                        f"ORDER BY position {n} refers to * which is not "
+                        "supported"
+                    )
+
+
+def _table_columns(value) -> list[str]:
+    """Column names of a table-map value: a DataFrame or a list of row
+    dicts (the first row's keys); [] for anything else."""
+    if hasattr(value, "columns"):
+        return list(value.columns)
+    if isinstance(value, list) and value:
+        return list(value[0].keys())
+    return []
 
 
 def _visible_tables(q: str, tables) -> list[str]:
@@ -544,12 +535,7 @@ def _from_scope(q: str, tables) -> set[str]:
     ):
         if not mask[m.start()] and m.group(1):
             scope.add(m.group(1))
-    for m in re.finditer(r"\bWITH\s+([A-Za-z_]\w*)\s+AS\b", q, re.I):
-        if not mask[m.start()]:
-            scope.add(m.group(1))
-    for m in re.finditer(r",\s*([A-Za-z_]\w*)\s+AS\s*\(", q, re.I):
-        if not mask[m.start()]:
-            scope.add(m.group(1))
+    scope.update(c.name for c in _ctes(q))
     # an aliased base name is hidden even when it is a table-map key —
     # unless the same table is ALSO referenced unaliased elsewhere
     return scope - (aliased_bases - unaliased)
@@ -669,8 +655,10 @@ def _validate_lateral(q: str) -> None:
     for m in re.finditer(r"\bLATERAL\s+VIEW\s+\w+\s*\(", q, re.I):
         if mask[m.start()]:
             continue
-        open_idx = q.index("(", m.end() - 1)
-        end = _balanced_arg(q, open_idx)
+        close = _scan(q).partner[m.end() - 1]
+        if close < 0:
+            continue  # unbalanced: Spark will error
+        end = close + 1
         tail = q[end:]
         am = re.match(r"\s*(AS\b|([A-Za-z_]\w*)\s*(AS\b)?)", tail, re.I)
         if am and am.group(1).upper() == "AS":
@@ -721,29 +709,23 @@ def _validate_unnest_alias_select(q: str, tables=None) -> None:
     bare ``u`` is an unknown column in the reference
     (execute.unnest.test.js:402-411); the error lists the qualified
     columns in scope."""
-    aliases = [
-        it.alias for it in _from_items(q)
+    unnests = [
+        it for it in _from_items(q)
         if it.kind == "call" and it.name in ("UNNEST", "EXPLODE")
         and it.alias and it.cols is None
     ]
-    if not aliases:
-        return
-    sel = re.search(r"\bSELECT\s+(DISTINCT\s+)?(.*?)\s+FROM\b", q,
-                    re.I | re.S)
-    if not sel:
-        return
-    for item in _split_top_args(sel.group(2)):
-        bare = item.strip()
-        if bare not in aliases:
+    for sel in _selects(q):
+        # the aliases of the UNNEST items in this statement's own FROM
+        aliases = [
+            u.alias for u in unnests if _stmt_of(q, u.kw).start == sel.start
+        ]
+        items = [q[it.start : it.end] for it in sel.items]
+        bare = next((item for item in items if item in aliases), None)
+        if bare is None:
             continue
         avail: list[str] = []
         for v in _visible_tables(q, tables):
-            tv = (tables or {}).get(v)
-            cols = (
-                list(tv.columns) if hasattr(tv, "columns")
-                else list(tv[0].keys())
-                if isinstance(tv, list) and tv else []
-            )
+            cols = _table_columns((tables or {}).get(v))
             avail += [f"{v}.{c}" for c in cols]
         avail += [f"{a}.unnest" for a in aliases]
         raise StrictDialectError(
@@ -798,34 +780,26 @@ def _validate_aggregate_modifiers(q: str) -> None:
 
 
 def _validate_window_groupby(q: str) -> None:
-    mask, depth, _ = _scan(q)
-
-    def depth0(pat):
-        for m in re.finditer(pat, q, re.I):
-            if not mask[m.start()] and depth[m.start()] == 0:
-                return True
-        return False
-
     # window-only functions need OVER (reference parse error, verbatim)
     for name, start, _, end in _iter_calls(q, _WINDOW_ONLY_FUNCS):
         if not re.match(r"\s*OVER\b", q[end:], re.I):
             raise StrictDialectError(
                 f"{name}() requires an OVER clause at position {start}"
             )
-        # window functions are select-list/ORDER BY only — a WHERE-clause
-        # window call is rejected with the function named (reference)
-        wm = None
-        for w in re.finditer(r"\bWHERE\b", q[:start], re.I):
-            if not mask[w.start()] and depth[w.start()] == depth[start]:
-                wm = w
-        if wm is not None and not re.search(
-            r"\b(?:GROUP\s+BY|ORDER\s+BY|HAVING|SELECT)\b",
-            q[wm.end(): start], re.I,
-        ):
+        # window functions are select-list/ORDER BY only — a call in its
+        # statement's WHERE is rejected with the function named (reference)
+        sel = _stmt_of(q, start)
+        where = sel.clauses.get("WHERE") if sel else None
+        if where and where[1] <= start < where[2]:
             raise StrictDialectError(
                 f"Window function {name} is not allowed in WHERE clause"
             )
-    if depth0(r"\bOVER\s*\(") and depth0(r"\bGROUP\s+BY\b"):
+    s = _scan(q)
+    over = (m.start() for m in re.finditer(r"\bOVER\s*\(", q, re.I))
+    if any(not (s.mask[i] or s.depth[i]) for i in over) and any(
+        "GROUP BY" in sel.clauses for sel in _selects(q)
+        if not s.depth[sel.start]
+    ):
         raise StrictDialectError(
             "Window functions are not supported in queries with "
             "aggregation (GROUP BY)"
@@ -836,37 +810,18 @@ def _validate_setop_names(q: str) -> None:
     """Set-operation branches must agree on output column NAMES
     (execute.union tests). Checked only when every branch's select-list
     names are statically derivable."""
-    mask, depth, _ = _scan(q)
-    parts = []
-    last = 0
-    for m in re.finditer(
-        r"\b(UNION|EXCEPT|INTERSECT)(\s+ALL|\s+DISTINCT)?\b", q, re.I
-    ):
-        if not mask[m.start()] and depth[m.start()] == 0:
-            parts.append(q[last : m.start()])
-            last = m.end()
-    if not parts:
-        return
-    parts.append(q[last:])
-
-    def names(part: str) -> list[str] | None:
-        sel = re.search(r"\bSELECT\s+(DISTINCT\s+)?(.*?)\s+FROM\b", part,
-                        re.I | re.S)
-        if not sel:
-            return None
+    def names(sel) -> list[str] | None:
         out = []
-        for item in _split_top_args(sel.group(2)):
-            item = item.strip()
-            am = re.search(r"\sAS\s+([A-Za-z_]\w*)\s*$", item, re.I)
-            if am:
-                out.append(am.group(1).lower())
-            elif re.fullmatch(r"[A-Za-z_]\w*", item):
-                out.append(item.lower())
-            else:
+        for it in sel.items:
+            name = it.alias or q[it.start : it.end]
+            if not _PLAIN_NAME_RE.fullmatch(name):
                 return None
+            out.append(name.lower())
         return out
 
-    derived = [names(p) for p in parts]
+    derived = [names(sel) for sel in _branches(q)]
+    if len(derived) < 2:
+        return
     if any(d is None for d in derived):
         return
     first = derived[0]

@@ -788,3 +788,120 @@ def test_json_each_alias_followed_by_a_clause(spark):
         " WHERE key = 'a'",
     ).collect()
     assert rows == [{"key": "a", "value": "1"}]
+
+
+# ---------------------------------------------------------------------------
+# SELECT statements: each clause is read from its own statement
+# (sqldialect._selects; reference src/parse/parse.js)
+# ---------------------------------------------------------------------------
+
+_STMT_TABLES = {
+    "t": [
+        {"id": 1, "name": "a", "d": "2020-05-01", "arr": [1, 2, 3]},
+        {"id": 1, "name": "b", "d": "2021-05-01", "arr": [5]},
+        {"id": 2, "name": "c", "d": "2021-06-01", "arr": [7]},
+    ],
+    "kv": [
+        {"k": 1, "v": 5}, {"k": 1, "v": 7}, {"k": 2, "v": 3}, {"k": 3, "v": 9},
+    ],
+    "data": [{"x": 1}, {"x": 1}, {"x": 2}],
+}
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        # only the first branch names the columns
+        (
+            "SELECT id + 1 FROM t UNION ALL SELECT id + 2 FROM t",
+            [{"id_+_1": v} for v in (2, 2, 3, 3, 3, 4)],
+        ),
+        (
+            "SELECT * FROM (SELECT DISTINCT ON (k) k, v FROM kv"
+            " ORDER BY k, v DESC) s ORDER BY k",
+            [{"k": 1, "v": 7}, {"k": 2, "v": 3}, {"k": 3, "v": 9}],
+        ),
+    ],
+)
+def test_select_statement_shapes(spark, query, expected):
+    rows = execute_sql(spark, query, tables=_STMT_TABLES).collect()
+    assert sorted(rows, key=lambda r: tuple(r.values())) == expected
+
+
+def test_loose_group_by_retry_with_limit(spark):
+    rows = execute_sql(
+        spark,
+        "SELECT id, name, COUNT(*) AS n FROM t GROUP BY id ORDER BY id"
+        " LIMIT 1",
+        tables=_STMT_TABLES,
+    ).collect()
+    assert [(r["id"], r["n"]) for r in rows] == [(1, 2)]
+    assert rows[0]["name"] in ("a", "b")
+
+
+@pytest.mark.parametrize(
+    "query, expected",
+    [
+        # the loose GROUP BY retry reads the outer statement, not the CTE
+        (
+            "WITH c AS (SELECT id, name FROM t) SELECT name, id FROM c"
+            " GROUP BY id ORDER BY id",
+            [{"id": 1}, {"id": 2}],
+        ),
+        # EXTRACT's FROM does not end the select list
+        (
+            "SELECT EXTRACT(YEAR FROM d) AS y, name FROM t GROUP BY y"
+            " ORDER BY y",
+            [{"y": 2020}, {"y": 2021}],
+        ),
+        # the alias-inlining retry: outer statement after a CTE, a FROM
+        # inside a literal, a subquery's GROUP BY in the WHERE
+        (
+            "WITH c AS (SELECT id FROM t) SELECT id * 2 AS a, a + 1 AS b"
+            " FROM c GROUP BY b ORDER BY b",
+            [{"a": 2, "b": 3}, {"a": 4, "b": 5}],
+        ),
+        (
+            "SELECT 'x from' AS s, id * 2 AS a, a + 1 AS b FROM t"
+            " GROUP BY s, b ORDER BY b",
+            [
+                {"s": "x from", "a": 2, "b": 3},
+                {"s": "x from", "a": 4, "b": 5},
+            ],
+        ),
+        (
+            "SELECT x AS a, a + 1 AS b FROM data WHERE x IN"
+            " (SELECT x FROM data GROUP BY x) GROUP BY b ORDER BY b",
+            [{"a": 1, "b": 2}, {"a": 2, "b": 3}],
+        ),
+        # derived names for the outer statement's items, not the CTE's
+        (
+            "WITH c AS (SELECT id FROM t) SELECT id + 1 FROM c ORDER BY 1",
+            [{"id_+_1": 2}, {"id_+_1": 2}, {"id_+_1": 3}],
+        ),
+        # OFFSET stays on the outer query, out of the window's ORDER BY
+        (
+            "SELECT DISTINCT ON (k) k, v FROM kv ORDER BY k, v DESC OFFSET 1",
+            [{"k": 2, "v": 3}, {"k": 3, "v": 9}],
+        ),
+        # each branch of a set operation is its own DISTINCT ON statement
+        (
+            "SELECT DISTINCT ON (k) k FROM kv UNION ALL"
+            " SELECT DISTINCT ON (v) v FROM kv ORDER BY 1",
+            [{"k": k} for k in (1, 2, 3, 3, 5, 7, 9)],
+        ),
+    ],
+)
+def test_clauses_are_read_from_their_own_statement(spark, query, expected):
+    rows = execute_sql(spark, query, tables=_STMT_TABLES).collect()
+    assert len(rows) == len(expected)
+    assert [{k: r[k] for k in e} for r, e in zip(rows, expected)] == expected
+
+
+def test_positional_join_star_in_a_derived_table(spark):
+    res = execute_sql(
+        spark,
+        "SELECT s.* FROM (SELECT * FROM tableA POSITIONAL JOIN tableB) s",
+        tables={"tableA": TABLE_A, "tableB": TABLE_B},
+    )
+    assert res.columns == ["id", "name", "code", "value"]

@@ -128,6 +128,22 @@ def test_unknown_function_position_is_call_site(spark):
     assert f"at position {q.index('upperx(')}" in str(e.value)
 
 
+def test_unknown_function_position_skips_string_literals(spark):
+    with pytest.raises(UnknownFunctionError, match="at position 21"):
+        execute_sql(
+            spark, "SELECT 'nope(' AS s, nope(id) AS r FROM t",
+            tables={"t": [{"id": 1}]},
+        )
+
+
+def test_flat_dotted_column_retry_leaves_string_literals(spark):
+    rows = execute_sql(
+        spark, "SELECT a.b, 'a.b' AS s FROM t",
+        tables={"t": [{"a.b": 7, "id": 1}]},
+    ).collect()
+    assert [r["s"] for r in rows] == ["a.b"]
+
+
 def test_cache_tables(spark):
     res = execute_sql(
         spark,
@@ -317,6 +333,19 @@ def test_dynamic_where_truthiness(spark):
         ]},
     ).collect()
     assert sorted(r["id"] for r in rows) == [2, 4]
+
+
+def test_dynamic_where_truthiness_in_a_subquery(spark):
+    rows = execute_sql(
+        spark,
+        "SELECT id FROM data WHERE id IN (SELECT id FROM data WHERE value)"
+        " ORDER BY id",
+        tables={"data": [
+            {"id": 1, "value": 0}, {"id": 2, "value": 1},
+            {"id": 3, "value": False}, {"id": 4, "value": True},
+        ]},
+    ).collect()
+    assert [r["id"] for r in rows] == [2, 4]
 
 
 def test_dynamic_equals_null_matches_nothing(spark):

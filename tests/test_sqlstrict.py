@@ -175,6 +175,80 @@ def test_setop_name_agreement():
     )
 
 
+@pytest.mark.parametrize(
+    "q",
+    [
+        "(SELECT id AS a FROM users) UNION (SELECT id AS b FROM users)",
+        "SELECT id AS a FROM users UNION SELECT age AS b FROM users"
+        " UNION SELECT id AS a FROM users",
+        "SELECT id, * FROM users ORDER BY 2",
+    ],
+)
+def test_statement_shape_rejections(q):
+    _rejects(q)
+
+
+def test_order_by_position_of_a_column_after_star():
+    _accepts("SELECT *, id FROM users ORDER BY 2")
+
+
+def test_window_call_in_where_after_a_subquery():
+    with pytest.raises(StrictDialectError, match="ROW_NUMBER is not allowed"):
+        validate_reference_sql(
+            "SELECT id FROM users WHERE id IN (SELECT id FROM t WHERE x = 1)"
+            " AND ROW_NUMBER() OVER (ORDER BY id) = 1"
+        )
+
+
+_T = {"t": [
+    {"id": 1, "name": "a", "d": "2020-05-01", "arr": [1, 2, 3]},
+    {"id": 1, "name": "b", "d": "2021-05-01", "arr": [5]},
+    {"id": 2, "name": "c", "d": "2021-06-01", "arr": [7]},
+]}
+
+
+@pytest.mark.parametrize(
+    "q, expected",
+    [
+        # a subquery's ORDER BY is checked against its own select list
+        (
+            "SELECT * FROM (SELECT id FROM t ORDER BY 1 LIMIT 2) s",
+            [{"id": 1}, {"id": 1}],
+        ),
+        # set-operation names come from the branches, not from the CTE
+        (
+            "WITH c AS (SELECT id AS x FROM t) SELECT x AS y FROM c"
+            " UNION SELECT id AS y FROM t",
+            [{"y": 1}, {"y": 2}],
+        ),
+    ],
+)
+def test_strict_reads_each_statement(spark, q, expected):
+    rows = execute_sql(spark, q, tables=_T, strict=True).collect()
+    assert sorted(rows, key=lambda r: tuple(r.values())) == expected
+
+
+def test_unnest_alias_after_a_from_in_a_literal(spark):
+    with pytest.raises(
+        StrictDialectError,
+        match='Column "u" not found. Available columns: t.id, t.name, t.d,'
+        " t.arr, u.unnest",
+    ):
+        execute_sql(
+            spark, "SELECT 'a from b' AS f, u FROM t, UNNEST(t.arr) AS u",
+            tables=_T, strict=True,
+        )
+
+
+def test_unbalanced_lateral_view_raises_what_loose_mode_raises(spark):
+    q = "SELECT * FROM t LATERAL VIEW explode(arr"
+    with pytest.raises(Exception) as loose:
+        execute_sql(spark, q, tables=_T).collect()
+    with pytest.raises(Exception) as strict:
+        execute_sql(spark, q, tables=_T, strict=True).collect()
+    assert type(strict.value) is type(loose.value)
+
+
 def test_array_literal_elements():
     _rejects("SELECT [x + 1] AS arr FROM singleRow")
     _accepts("SELECT [1, 2, 3] AS arr FROM singleRow")
