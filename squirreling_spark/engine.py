@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from squirreling_spark.functions.registry import FunctionSpec, register_functions
 from squirreling_spark.qutil import local_df
+from squirreling_spark.tables import _source
 
 
 class QueryError(Exception):
@@ -293,7 +294,8 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
             elif source.endswith(".json") or source.endswith(".jsonl"):
                 df = spark.read.json(source)
             else:
-                df = spark.read.parquet(source)
+                # schema inferred once per file state (tables.source)
+                df, schema = _source(spark, source)
         elif isinstance(source, list):
             # list-of-dicts in-memory table (reference memorySource,
             # src/backend/dataSource.js:29-71). Every row is typed by
@@ -455,9 +457,13 @@ def execute_sql(
     `` `dataset.parquet` ``: the rewrite backtick-quotes the FROM items
     and ``"..."`` identifiers that name it, never a string literal.
 
-    ``cache_tables`` memoizes the named tables across queries
-    (``df.cache()`` — the reference's cachedDataSource cell memoization,
-    src/backend/dataSource.js:80-129, at DataFrame granularity)."""
+    A parquet path's schema is always cached: ``tables.source`` infers it
+    once per file state and parquet settings, so a repeat call over an
+    unchanged file runs no schema-inference job. Rows are never cached
+    unless asked: ``cache_tables`` memoizes the named tables' data
+    across queries (``df.cache()`` — the reference's cachedDataSource
+    cell memoization, src/backend/dataSource.js:80-129, at DataFrame
+    granularity) until ``spark.catalog.clearCache()``."""
     from squirreling_spark.functions.sqldialect import (
         drop_scratch_views,
         ref_resolution_cache,

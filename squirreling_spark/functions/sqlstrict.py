@@ -518,7 +518,7 @@ def _from_scope(q: str, tables) -> set[str]:
     with an alias is HIDDEN (both the reference and Spark reject
     ``FROM users u ... users.id``)."""
     scope = set(tables or {})
-    mask = _scan(q).mask
+    mask, _, partner = _scan(q)
     aliased_bases: set[str] = set()
     unaliased: set[str] = set()
     for it in _from_items(q):
@@ -530,11 +530,14 @@ def _from_scope(q: str, tables) -> set[str]:
         # element alias makes `x.field` a legal dotted reference
         scope.update(it.cols or ())
     for m in re.finditer(
-        r"\bLATERAL\s+(?:VIEW\s+)?(?:OUTER\s+)?\w+\s*\([^)]*\)\s*(\w+)?", q,
-        re.I,
+        r"\bLATERAL\s+(?:VIEW\s+)?(?:OUTER\s+)?\w+\s*\(", q, re.I
     ):
-        if not mask[m.start()] and m.group(1):
-            scope.add(m.group(1))
+        close = partner[m.end() - 1]
+        if mask[m.start()] or close < 0:
+            continue
+        am = re.match(r"\s*(\w+)", q[close + 1:])
+        if am:
+            scope.add(am.group(1))
     scope.update(c.name for c in _ctes(q))
     # an aliased base name is hidden even when it is a table-map key —
     # unless the same table is ALSO referenced unaliased elsewhere
@@ -624,7 +627,7 @@ def _validate_joins(q: str, tables) -> None:
 
 
 def _validate_lateral(q: str) -> None:
-    mask = _scan(q).mask
+    mask, _, partner = _scan(q)
     for m in re.finditer(r"\bLATERAL\s+(?!VIEW\b)(\w+)", q, re.I):
         if mask[m.start()]:
             continue
@@ -652,10 +655,11 @@ def _validate_lateral(q: str) -> None:
                 "LATERAL VIEW requires a table function like EXPLODE, "
                 f'got "{m.group(1)}" at position {m.start(1)}'
             )
-    for m in re.finditer(r"\bLATERAL\s+VIEW\s+\w+\s*\(", q, re.I):
+    for m in re.finditer(r"\bLATERAL\s+VIEW\s+(?:OUTER\s+)?\w+\s*\(",
+                         q, re.I):
         if mask[m.start()]:
             continue
-        close = _scan(q).partner[m.end() - 1]
+        close = partner[m.end() - 1]
         if close < 0:
             continue  # unbalanced: Spark will error
         end = close + 1

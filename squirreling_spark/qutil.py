@@ -18,7 +18,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType
 
-from squirreling_spark.tables import load_table, register_views  # noqa: F401
+from squirreling_spark.tables import (  # noqa: F401
+    load_table,
+    register_views,
+    source,
+)
 
 DEC = "decimal(27,6)"
 
@@ -69,7 +73,7 @@ def events_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     - TIMESTAMP: pass through.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = source(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

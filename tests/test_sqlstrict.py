@@ -130,6 +130,20 @@ def test_lateral_shapes():
     _accepts("SELECT t.id, u.x FROM t JOIN LATERAL UNNEST(t.arr) AS u(x) ON TRUE")
 
 
+@pytest.mark.parametrize(
+    "tail, message",
+    [
+        ("EXPLODE(tags) AS tag", "LATERAL VIEW requires a table alias before AS"),
+        ("EXPLODE(tags) e", 'Expected AS after "e"'),
+    ],
+)
+def test_lateral_view_outer_alias_shapes(tail, message):
+    # OUTER is a modifier, not the function: the alias rules still apply
+    for view in ("LATERAL VIEW", "LATERAL VIEW OUTER"):
+        with pytest.raises(StrictDialectError, match=message):
+            validate_reference_sql(f"SELECT id FROM t {view} {tail}")
+
+
 def test_table_function_position():
     _rejects("SELECT EXPLODE([1, 2, 3])")
     _accepts("SELECT * FROM UNNEST([1, 2, 3]) AS u")
@@ -238,6 +252,15 @@ def test_unnest_alias_after_a_from_in_a_literal(spark):
             spark, "SELECT 'a from b' AS f, u FROM t, UNNEST(t.arr) AS u",
             tables=_T, strict=True,
         )
+
+
+def test_lateral_view_alias_after_a_nested_call(spark):
+    # the view alias follows the call's own closing bracket, not the
+    # first `)` inside its arguments
+    q = "SELECT v.x FROM t LATERAL VIEW explode(split(name, ',')) v AS x"
+    loose = execute_sql(spark, q, tables=_T).collect()
+    assert sorted(r["x"] for r in loose) == ["a", "b", "c"]
+    assert execute_sql(spark, q, tables=_T, strict=True).collect() == loose
 
 
 def test_unbalanced_lateral_view_raises_what_loose_mode_raises(spark):
