@@ -19,7 +19,8 @@ text whose brackets do not balance is left for Spark to report.
 4. array literals ``[1, 2]``, then FROM items via ``_from_items``:
    correlated ``UNNEST`` counts, the table functions
    ``_TABLE_FUNCTIONS`` (``UNNEST``/``EXPLODE``, ``JSON_EACH``:
-   src/execute/execute.js:160-242) and ``POSITIONAL JOIN``
+   src/execute/execute.js:160-242), Spark's spelling of the lateral
+   views ``LATERAL EXPLODE``/``UNNEST`` and ``POSITIONAL JOIN``
    (src/parse/joins.js:219-241, a row-position zip);
 5. the date calls, ``_DATE_CALLS`` (src/expression/date.js);
 6. with a session, the dtype-directed rewrites: subscripts that are NULL
@@ -40,15 +41,19 @@ one call iterator, ``_iter_calls``, which strict validation
 table of the stage it belongs to: the call's upper-cased name mapped to
 a function from its arguments to the replacement text (None leaves the
 call alone), or to a plain new name. FROM clauses are read by one
-reader, ``_from_items`` (tables, table-function calls and subqueries
-with their join keywords, aliases, column-alias lists and ON
-predicates), which ``sqlstrict`` and ``engine`` read too; a new
-FROM-clause table function is one entry in ``_TABLE_FUNCTIONS``.
+reader, ``_from_items`` (tables, table-function calls, subqueries and
+``LATERAL VIEW`` clauses with their join keywords, aliases, column-alias
+lists and ON predicates), which ``sqlstrict`` and ``engine`` read too; a
+new FROM-clause table function is one entry in ``_TABLE_FUNCTIONS``.
 Statement clauses are read by one reader, ``_selects`` (each SELECT's
 items and aliases and its FROM, WHERE, GROUP BY, HAVING, ORDER BY,
-LIMIT and OFFSET spans), and CTEs by ``_ctes``; ``sqlstrict`` reads both.
-The rewriter is not a full parser; it targets the reference's tested
-query shapes.
+LIMIT and OFFSET spans), and CTEs by ``_ctes``; windows by ``_windows``
+(each call's ``OVER (...)`` with its PARTITION BY, ORDER BY and frame
+spans) and values with postfix steps by ``_chains`` (a base, then its
+subscripts, ``.name`` fields and JSON arrows, read forward as the
+reference's primary.js does). ``sqlstrict`` reads them too. The
+rewriter is not a full parser; it targets the reference's tested query
+shapes.
 
 Semantics notes (documented divergences, all at the type edge where a
 dynamically-typed JS engine meets SQL):
@@ -69,6 +74,7 @@ from __future__ import annotations
 
 import contextlib
 import functools
+import itertools
 import json
 import re
 import threading
@@ -152,21 +158,6 @@ def _stmt_end(q: str, start: int) -> int:
         if not s.mask[m.start()] and s.partner[m.start()] < start:
             return m.start()
     return len(q)
-
-
-def _toplevel_kw(q: str, pattern: re.Pattern, start: int = 0) -> int:
-    """Start index of the first outside-string match of ``pattern`` at
-    the nesting depth of ``start`` and before the statement's end
-    (``_stmt_end``); -1 when absent."""
-    s = _scan(q)
-    end = _stmt_end(q, start)
-    m = pattern.search(q, start)
-    while m and m.start() < end:
-        i = m.start()
-        if not s.mask[i] and s.depth[i] == s.depth[start]:
-            return i
-        m = pattern.search(q, i + 1)
-    return -1
 
 
 def _top_commas(q: str, start: int = 0, end: int | None = None) -> list[int]:
@@ -296,6 +287,13 @@ _LATERAL_RE = re.compile(r"\s*(LATERAL\b\s*)?", re.I)
 _ALIAS_RE = re.compile(r"\s*(?:AS\s+)?([A-Za-z_]\w*)\s*(\()?", re.I)
 _ON_RE = re.compile(r"\s*(ON\b|USING\s*\()\s*", re.I)
 _COMMA_RE = re.compile(r"\s*,")
+_LATERAL_VIEW_RE = re.compile(
+    r"\s*(LATERAL\s+(VIEW\s+)?(OUTER\s+)?)(?=[A-Za-z_]\w*\s*\()", re.I
+)
+_VIEW_ALIAS_RE = re.compile(r"\s*([A-Za-z_]\w*)")
+_VIEW_COLS_RE = re.compile(
+    r"\s*(AS\s+)?([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)", re.I
+)
 # Calls whose arguments use FROM as a keyword, not as a clause.
 _FROM_ARG_CALLS = (
     "EXTRACT", "TRIM", "SUBSTRING", "SUBSTR", "POSITION", "OVERLAY",
@@ -306,8 +304,10 @@ _DISTINCT_END_RE = re.compile(r"\bDISTINCT\s*$", re.I)
 class _FromItem(NamedTuple):
     """One relation of a FROM clause (see ``_from_items``)."""
 
-    kw: int  # start of the FROM, the JOIN keywords or the comma before it
-    join: str  # "FROM", "," or the join keywords, upper-cased: "LEFT JOIN"
+    kw: int  # start of the FROM, JOIN or LATERAL keywords or the comma
+    # "FROM", ",", the join keywords ("LEFT JOIN") or, for a lateral
+    # view, "LATERAL [VIEW] [OUTER]"; upper-cased
+    join: str
     lateral: bool  # written after LATERAL
     start: int  # start of the relation text
     rel_end: int  # end of the name, or just past the call's/subquery's ")"
@@ -377,8 +377,11 @@ def _read_relation(q: str, kw: int, join: str, pos: int):
     on, after = None, end
     om = _ON_RE.match(q, end)
     if om and om.group(1).upper() == "ON":
-        stop = _toplevel_kw(q, _ON_END_RE, om.end())
-        stop = _stmt_end(q, om.end()) if stop == -1 else stop
+        stop, d = _stmt_end(q, om.end()), s.depth[om.end()]
+        stop = next((
+            m.start() for m in _ON_END_RE.finditer(q, om.end(), stop)
+            if not s.mask[m.start()] and s.depth[m.start()] == d
+        ), stop)
         on = (om.end(), om.end() + len(q[om.end() : stop].rstrip()))
         after = on[1]
     elif om and s.partner[om.end(1) - 1] >= 0:
@@ -390,6 +393,31 @@ def _read_relation(q: str, kw: int, join: str, pos: int):
     return item, after
 
 
+def _read_lateral_view(q: str, pos: int):
+    """The ``LATERAL [VIEW] [OUTER] fn(args) alias [[AS] c1, c2]`` clause
+    at ``pos`` and the index just past it; None when none starts there."""
+    m = _LATERAL_VIEW_RE.match(q, pos)
+    call = m and _CALL_RE.match(q, m.end())
+    if not call or _scan(q).partner[call.end() - 1] < 0:
+        return None
+    args, rel_end = _call_parts(q, call)
+    alias, cols, end = None, None, rel_end
+    am = _VIEW_ALIAS_RE.match(q, end)
+    if am and am.group(1).upper() not in _NOT_ALIAS:
+        alias, end = am.group(1), am.end()
+    cm = _VIEW_COLS_RE.match(q, end)
+    if cm and (cm.group(1) or cm.group(2).split(",")[0].strip().upper()
+               not in _NOT_ALIAS):
+        cols = tuple(c.strip() for c in cm.group(2).split(","))
+        end = cm.end()
+    join = " ".join(m.group(1).upper().split())
+    item = _FromItem(
+        m.start(1), join, True, call.start(), rel_end, "call",
+        call.group(1).upper(), False, tuple(args), alias, cols, end, None,
+    )
+    return item, end
+
+
 @functools.lru_cache(maxsize=64)
 def _from_items(q: str) -> tuple:
     """The one FROM-clause reader: every relation of every FROM clause
@@ -398,10 +426,12 @@ def _from_items(q: str) -> tuple:
     order. A clause is FROM, then relations joined by commas or JOIN
     keywords, each with an optional alias (``_NOT_ALIAS`` words are not
     aliases), column-alias list and ON predicate (cut at the next join,
-    comma or clause keyword of its statement) or USING list. The clause
-    ends at anything else: a clause keyword, ``LATERAL VIEW``, the end
-    of its statement. Cached: the rewrites and checks of one text read
-    it many times."""
+    comma or clause keyword of its statement) or USING list, then its
+    lateral views: ``LATERAL [VIEW] [OUTER] fn(args) alias [[AS] c1,
+    c2]``, each a "call" item whose ``join`` records VIEW and OUTER. The
+    clause ends at anything else: a clause keyword, the end of its
+    statement. Cached: the rewrites and checks of one text read it many
+    times."""
     items = []
     for f in _from_keywords(q):
         kw, join, pos = f, "FROM", f + 4
@@ -415,6 +445,9 @@ def _from_items(q: str) -> tuple:
                 join = " ".join(jm.group(1).upper().split())
             else:
                 break
+        while (read := _read_lateral_view(q, pos)) is not None:
+            item, pos = read
+            items.append(item)
     return tuple(items)
 
 
@@ -614,6 +647,163 @@ def _branches(q: str) -> list:
     return out
 
 
+# ---------------------------------------------------------------------------
+# Window specs: ``fn(args) OVER ([PARTITION BY ..] [ORDER BY ..] [frame])``
+# ---------------------------------------------------------------------------
+
+class _Window(NamedTuple):
+    """One call with an ``OVER (spec)`` window (see ``_windows``); each
+    clause is a trimmed (start, end) span, None when absent."""
+
+    name: str  # the call's name, upper-cased
+    start: int  # the call's start
+    open: int  # the "(" after OVER
+    close: int  # its ")"
+    partition: tuple | None  # the PARTITION BY list
+    order: tuple | None  # the ORDER BY list
+    frame: tuple | None  # ROWS/RANGE/GROUPS to the end of the spec
+
+
+_SPEC_KW_RE = re.compile(
+    r"\b(?:(PARTITION|ORDER)\s+BY\b|(?:ROWS|RANGE|GROUPS)\s+"
+    r"(?=BETWEEN\b|UNBOUNDED\b|CURRENT\b|INTERVAL\b|\d))",
+    re.I,
+)
+_OVER_RE = re.compile(r"\s*(?:(?:IGNORE|RESPECT)\s+NULLS\s+)?OVER\s*\(", re.I)
+
+
+def _spec(q: str, open_: int) -> tuple:
+    """The (PARTITION BY, ORDER BY, frame) spans of the closed bracket
+    opened at ``open_``, found at its own depth: a window spec, or a
+    call's arguments (``array_agg(x ORDER BY y)``). Each clause runs to
+    the next one or to the closer."""
+    s = _scan(q)
+    close, spans = s.partner[open_], {}
+    marks = [
+        m for m in _SPEC_KW_RE.finditer(q, open_ + 1, close)
+        if not s.mask[m.start()] and s.depth[m.start()] == s.depth[open_] + 1
+    ]
+    for m, nxt in zip(marks, [m.start() for m in marks[1:]] + [close]):
+        key = (m.group(1) or "").upper()
+        spans.setdefault(key, _trim(q, m.end() if key else m.start(), nxt))
+    return spans.get("PARTITION"), spans.get("ORDER"), spans.get("")
+
+
+@functools.lru_cache(maxsize=64)
+def _windows(q: str) -> tuple:
+    """The one window reader: every call outside strings followed by
+    ``[FILTER (...)] [IGNORE | RESPECT NULLS] OVER (spec)``, in text
+    order, with its spec's clauses (``_spec``). A named window, ``OVER
+    w``, has no spec and is not read. Cached like ``_from_items``."""
+    if "OVER" not in q.upper():
+        return ()
+    partner = _scan(q).partner
+    out = {}
+    for name, start, _, end in _iter_calls(q):
+        fm = _FILTER_RE.match(q, end)
+        if fm and partner[fm.end() - 1] >= 0:
+            end = partner[fm.end() - 1] + 1
+        om = _OVER_RE.match(q, end)
+        if om and partner[om.end() - 1] >= 0:
+            o = om.end() - 1
+            # setdefault: FILTER (...) reads as a call of its own too
+            out.setdefault(
+                o, _Window(name, start, o, partner[o], *_spec(q, o))
+            )
+    return tuple(out.values())
+
+
+# ---------------------------------------------------------------------------
+# Postfix chains: a value and its subscripts, fields and JSON arrows
+# (reference src/parse/primary.js:33-64 reads ``arr[0].field`` the same
+# way, base first)
+# ---------------------------------------------------------------------------
+
+class _Chain(NamedTuple):
+    """One value with its postfix steps (see ``_chains``)."""
+
+    start: int  # start of the base
+    base_end: int  # end of the base
+    kind: str  # "ident", "call", "group" (``(..)``, ``[..]``) or "string"
+    # (op, start, end) per step, op "[", ".", "->" or "->>"; an arrow's
+    # span runs through its literal key
+    steps: tuple
+    holder: int  # the innermost bracket holding the chain, or -1
+
+
+_CHAIN_TOKEN_RE = re.compile(
+    r"'(?:[^']|'')*'?|\"[^\"]*\"?|`[^`]*`?|[A-Za-z_][\w$]*|\d[\w.]*|->>?"
+    r"|[()\[\].]"
+)
+_BASE_RE = re.compile(
+    r"'(?:[^']|'')*'|[(\[]|(?:[A-Za-z_][\w$]*|`[^`]*`)(?=(\())?"
+)
+_STEP_RE = re.compile(
+    r"\s*(\[)|\s*(->>?)\s*(?:'(?:[^']|'')*'|\d+)|\.[A-Za-z_][\w$]*"
+)
+
+
+def _chain(q: str, start: int, holder: int = -1):
+    """The chain whose base starts at ``start`` — an identifier, a call
+    written against its ``(``, a closed ``(..)`` group or ``[..]``
+    literal, or a string literal — with every step after it: a subscript
+    (not an array literal), a JSON arrow with a literal key (``->'k'``,
+    ``->>0``) or ``.name``. None when no base starts there."""
+    partner = _scan(q).partner
+    m = _BASE_RE.match(q, start)
+    if m is None:
+        return None
+    kind, end = "string" if q[start] == "'" else "ident", m.end()
+    bracket = start if m.group() in "([" else end if m.group(1) else -1
+    if bracket >= 0 and partner[bracket] >= 0:
+        kind = "group" if bracket == start else "call"
+        end = partner[bracket] + 1
+    elif bracket == start:
+        return None  # an unclosed group
+    base_end, steps = end, []
+    while m := _STEP_RE.match(q, end):
+        if m.group(1):  # a subscript, unless the bracket opens a literal
+            i = m.start(1)
+            if partner[i] < 0 or _bracket_is_literal(q, i):
+                break
+            step = "[", i, partner[i] + 1
+        elif m.group(2):
+            step = m.group(2), m.start(2), m.end()
+        else:
+            step = ".", end, m.end()
+        steps.append(step)
+        end = step[2]
+    return _Chain(start, base_end, kind, tuple(steps), holder)
+
+
+@functools.lru_cache(maxsize=64)
+def _chains(q: str) -> tuple:
+    """The one postfix-chain reader: every value outside strings with at
+    least one step (``_chain``), in text order, nested ones (in a call's
+    arguments, a subscript) included. A base never follows a ``.`` nor
+    starts in an arrow's key, and a ``(`` written against a name opens
+    its call's arguments. Cached like ``_from_items``."""
+    s = _scan(q)
+    out, holders, keys, prev = [], [], [], ""
+    for m in _CHAIN_TOKEN_RE.finditer(q):
+        tok, i = m.group(), m.start()
+        if tok in ")]" and holders and s.partner[i] == holders[-1]:
+            holders.pop()
+        base = tok[0] in "'`_" or tok[0].isalpha() or (
+            tok == "(" and not (i and (q[i - 1].isalnum() or q[i - 1] in "_$"))
+            or tok == "[" and _bracket_is_literal(q, i)
+        )
+        if base and prev != "." and not any(a <= i < b for a, b in keys):
+            ch = _chain(q, i, holders[-1] if holders else -1)
+            if ch is not None and ch.steps:
+                out.append(ch)
+                keys += [(a, b) for op, a, b in ch.steps if op[0] == "-"]
+        if tok in "([" and s.partner[i] >= 0:
+            holders.append(i)
+        prev = tok
+    return tuple(out)
+
+
 _LITERAL_BRACKET_KEYWORDS = {
     "SELECT", "WHERE", "WHEN", "THEN", "ELSE", "IN", "AND", "OR", "NOT",
     "ON", "BY", "HAVING", "RETURN", "AS", "FROM", "LIMIT", "OFFSET",
@@ -714,108 +904,58 @@ def _rewrite_like_ci(q: str) -> str:
 # untouched so the strict validator surfaces a real error.
 # ---------------------------------------------------------------------------
 
-_ARROW_RE = re.compile(r"->>?")
-_ARROW_RHS_RE = re.compile(r"\s*('(?:[^']|'')*'|\d+)")
+# A lambda head: one parameter, or a bracketed list of them
+_LAMBDA_HEAD_RE = re.compile(
+    r"[A-Za-z_][\w.$]*|\(\s*[A-Za-z_]\w*(\s*,\s*[A-Za-z_]\w*)+\s*\)"
+)
 
 
-def _operand_left(q: str, i: int) -> tuple[int, int]:
-    """(start, end) span of the value operand ending just before position
-    ``i`` — an identifier chain, call/paren/subscript group (possibly
-    chained), or a string literal. (-1, end) when there is none."""
-    end = i
-    while end > 0 and q[end - 1].isspace():
-        end -= 1
-    if end == 0:
-        return -1, end
-    start = end
-    while start > 0:
-        c = q[start - 1]
-        if c in ")]":
-            start = _scan(q).partner[start - 1]
-            if start < 0:
-                return -1, end
-            # a function/array name may precede the group
-            while start > 0 and (q[start - 1].isalnum() or q[start - 1] in "_$."):
-                start -= 1
-            if start > 0 and q[start - 1] in ")]":
-                continue  # chained groups: a(..)[..]
-            break
-        if c == "'":
-            # scan back to the OPENING quote, treating '' as an escaped
-            # quote (skip both chars) so the span covers the whole literal
-            # — e.g. 'it''s' must not split at the '' pair (r8 advice).
-            k = start - 2
-            while k >= 0:
-                if q[k] == "'":
-                    if k > 0 and q[k - 1] == "'":
-                        k -= 2  # escaped '' pair inside the literal
-                        continue
-                    return k, end
-                k -= 1
-            return -1, end
-        if c.isalnum() or c in "_$.":
-            while start > 0 and (q[start - 1].isalnum() or q[start - 1] in "_$."):
-                start -= 1
-            break
-        return -1, end
-    if start >= end:
-        return -1, end
-    return start, end
+def _json_path(lit: str) -> str | None:
+    """The JSON path of an arrow's literal key: ``0`` → ``$[0]``,
+    ``'k'`` → ``$.k``, ``'$.a[1]'`` as written; None for a key that is
+    no plain word."""
+    if lit.isdigit():
+        return f"$[{lit}]"
+    key = lit[1:-1].replace("''", "'")
+    if key.startswith("$"):
+        return key
+    return f"$.{key}" if re.fullmatch(r"\w+", key) else None
 
 
 def _rewrite_json_arrows(q: str) -> str:
     """DuckDB/Postgres JSON arrows (syntax.md item 11): ``x->'k'`` →
     json_query, ``x->>'k'`` → json_value, ``x->0`` → ``$[0]`` paths;
-    chains rewrite left-associatively. Only literal string/int RHS —
-    a lambda arrow (``v -> expr``) never has a literal body, and an
-    integer-RHS arrow on a bare identifier directly after ``(`` or ``,``
-    (the only spot a lambda param can sit) is skipped as a guard."""
-    pos = 0
-    while True:
-        mask = _scan(q).mask
-        m = None
-        for cand in _ARROW_RE.finditer(q, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return q
-        start, end = _operand_left(q, m.start())
-        rm = _ARROW_RHS_RE.match(q, m.end())
-        if start < 0 or rm is None:
-            pos = m.end()
+    chains (``_chains``) rewrite left-associatively. Only literal
+    string/int keys. A lambda (``v -> expr``) never has a literal body,
+    but ``v -> 5`` does: a ``->`` with an integer key on a bare
+    identifier or identifier list, directly after the ``(`` or a ``,``
+    of a call's arguments, is a lambda head and left alone. ``->>`` is
+    never one. Chains are visited right to left, each read from the
+    current text, so a rewritten inner chain is part of its outer one."""
+    partner = _scan(q).partner
+    call_args = {partner[end - 1] for _, _, _, end in _iter_calls(q)}
+    for found in reversed(_chains(q)):
+        if not any(op[0] == "-" for op, _, _ in found.steps):
             continue
-        rhs = rm.group(1)
-        if rhs.isdigit():
-            lead = q[:start].rstrip()
-            operand = q[start:end]
-            is_param = re.match(r"[A-Za-z_][\w.$]*$", operand)
-            # (x, i) -> body: a parenthesized identifier list directly
-            # after '(' or ',' is a multi-param lambda head (r8 advice)
-            is_param_list = re.match(
-                r"\(\s*[A-Za-z_]\w*(\s*,\s*[A-Za-z_]\w*)+\s*\)$", operand
+        ch = _chain(q, found.start)
+        text, last = q[ch.start : ch.base_end], ch.base_end
+        for op, a, b in ch.steps:
+            lit = q[a + len(op) : b].strip()
+            path = _json_path(lit) if op[0] == "-" else None
+            lambda_head = (
+                op == "->" and lit.isdigit() and found.holder in call_args
+                and _LAMBDA_HEAD_RE.fullmatch(text)
+                and q[: ch.start].rstrip().endswith(("(", ","))
             )
-            if (is_param or is_param_list) and lead.endswith(("(", ",")):
-                pos = m.end()  # plausible lambda param(s) — don't touch
-                continue
-            path = f"$[{rhs}]"
-        else:
-            key = rhs[1:-1].replace("''", "'")
-            if key.startswith("$"):
-                path = key
-            elif re.fullmatch(r"\w+", key):
-                path = f"$.{key}"
+            if path is None or lambda_head:
+                text += q[last:b]
             else:
-                pos = m.end()  # quoted-key paths unsupported — leave as-is
-                continue
-        fn = "json_value" if m.group(0) == "->>" else "json_query"
-        path_lit = path.replace("'", "''")
-        q = (
-            q[:start]
-            + f"{fn}({q[start:end]}, '{path_lit}')"
-            + q[m.end() + (rm.end() - m.end()):]
-        )
-        pos = start  # rescan from the rewritten operand (chains)
+                fn = "json_value" if op == "->>" else "json_query"
+                path = path.replace("'", "''")
+                text = f"{fn}({text}, '{path}')"
+            last = b
+        q = q[: ch.start] + text + q[last:]
+    return q
 
 
 def _glob_to_rlike(pat: str) -> str:
@@ -923,7 +1063,6 @@ def _rewrite_exclude(q: str) -> str:
 
 
 _FROM_KW = re.compile(r"\bFROM\b", re.I)
-_LIMIT_OFFSET_KW = re.compile(r"\b(?:LIMIT|OFFSET)\b", re.I)
 
 
 def _rewrite_distinct_on(q: str) -> str:
@@ -1297,21 +1436,17 @@ _TABLE_FUNCTIONS = {
     "EXPLODE": _unnest_from,
     "JSON_EACH": _json_each_from,
 }
-_LATERAL_CALL_RE = re.compile(
-    r"\bLATERAL\s+(?=(?:EXPLODE|UNNEST)\s*\()", re.I
-)
-_LATERAL_UNNEST_RE = re.compile(
-    r"(\bLATERAL\s+VIEW\s+(?:OUTER\s+)?)UNNEST\s*\(", re.I
-)
 
 
 def _rewrite_table_functions(q: str, spark=None) -> str:
     """Every FROM-clause table function (``_TABLE_FUNCTIONS``), in FROM,
     JOIN and comma positions, then Spark's own ``LATERAL VIEW`` spelled
-    for ``LATERAL EXPLODE(...)`` and ``LATERAL VIEW UNNEST(...)``."""
+    for the lateral views ``LATERAL EXPLODE(...)`` and ``LATERAL [VIEW]
+    [OUTER] UNNEST(...)``."""
     starts = [
         it.start for it in _from_items(q)
         if it.kind == "call" and it.name in _TABLE_FUNCTIONS
+        and not it.join.startswith("LATERAL")
     ]
     q = _rewrite_items(
         q, starts,
@@ -1319,10 +1454,18 @@ def _rewrite_table_functions(q: str, spark=None) -> str:
             q, items[i], spark
         ),
     )
-    q = _sub_outside_strings(q, _LATERAL_CALL_RE, lambda m: "LATERAL VIEW ")
-    return _sub_outside_strings(
-        q, _LATERAL_UNNEST_RE, lambda m: m.group(1) + "explode("
-    )
+    views = [
+        it for it in _from_items(q)
+        if it.join == "LATERAL" and it.name in ("EXPLODE", "UNNEST")
+        or it.join.startswith("LATERAL VIEW") and it.name == "UNNEST"
+    ]
+    for it in sorted(views, key=lambda it: it.kw, reverse=True):
+        head = "LATERAL VIEW " if it.join == "LATERAL" else q[it.kw : it.start]
+        call = q[it.start : it.rel_end]
+        if it.name == "UNNEST":
+            call = "explode(" + call[call.index("(") + 1 :]
+        q = q[: it.kw] + head + call + q[it.rel_end :]
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -1406,44 +1549,33 @@ def _extract_sql(field: str, x: str) -> str:
     raise ValueError(field)
 
 
-_RANK_FAMILY = re.compile(
-    r"\b(ROW_NUMBER|RANK|DENSE_RANK|LAG|LEAD|NTILE|CUME_DIST|PERCENT_RANK)"
-    r"\s*\([^()]*\)\s*OVER\s*\($",
-    re.I,
-)
+# Window functions that Spark runs only over an ordered window
+_ORDERED_WINDOW_FUNCS = frozenset({
+    "ROW_NUMBER", "RANK", "DENSE_RANK", "LAG", "LEAD", "NTILE", "CUME_DIST",
+    "PERCENT_RANK",
+})
+_INPUT_ORDER = "ORDER BY monotonically_increasing_id()"
 
 
 def _rewrite_orderless_windows(q: str) -> str:
-    """``ROW_NUMBER() OVER ()`` / ``OVER (PARTITION BY x)`` → append
-    ``ORDER BY monotonically_increasing_id()`` (reference: rows number in
-    input order when no ORDER BY is given)."""
-    while True:
-        mask = _scan(q).mask
-        target = None
-        for m in re.finditer(r"\bOVER\s*\(", q, re.I):
-            if mask[m.start()]:
-                continue
-            close = _scan(q).partner[m.end() - 1]
-            if close < 0:
-                continue  # unbalanced: Spark will error
-            inner = q[m.end() : close]
-            if re.search(r"\bORDER\s+BY\b", inner, re.I):
-                continue
-            if re.fullmatch(r"\s*[A-Za-z_]\w*\s*", inner):
-                continue  # named-window reference: OVER (w1)
-            if not _RANK_FAMILY.search(q[: m.end()]):
-                continue
-            target = (close, inner)
-            break
-        if target is None:
-            return q
-        close, inner = target
-        sep = " " if inner.strip() else ""
-        q = (
-            q[:close]
-            + f"{sep}ORDER BY monotonically_increasing_id()"
-            + q[close:]
-        )
+    """``ROW_NUMBER() OVER ()`` / ``OVER (PARTITION BY x [frame])`` →
+    ``ORDER BY monotonically_increasing_id()`` before the frame, or at
+    the end of the spec (reference: rows number in input order when no
+    ORDER BY is given). A named window, ``OVER (w1)``, is left alone."""
+    edits = {}
+    for w in _windows(q):
+        inner = q[w.open + 1 : w.close]
+        if w.name not in _ORDERED_WINDOW_FUNCS or w.order or (
+            _PLAIN_NAME_RE.fullmatch(inner.strip())
+        ):
+            continue
+        if w.frame:
+            edits[w.frame[0]] = _INPUT_ORDER + " "
+        else:
+            edits[w.close] = (" " if inner.strip() else "") + _INPUT_ORDER
+    for at in sorted(edits, reverse=True):
+        q = q[:at] + edits[at] + q[at:]
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -1458,7 +1590,7 @@ def _rewrite_orderless_windows(q: str) -> str:
 
 _OB_ITEM_RE = re.compile(
     r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?|`[^`]+`\.[A-Za-z_]\w*)"
-    r"(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?\s*$",
+    r"(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?",
     re.I,
 )
 
@@ -1468,27 +1600,32 @@ def _rewrite_dynamic_orderby(q: str, spark) -> str:
     (``TRY_CAST(get_json_object(c,'$') AS DOUBLE)``): the reference's
     dynamic comparator is the JS ``<`` operator, which coerces the
     string '5' to the number 5 against numeric members
-    (execute.orderby.test.js 'should sort mixed types')."""
-    mask = _scan(q).mask
-    out = q
-    for m in reversed(list(re.finditer(r"(?i)\bORDER\s+BY\s+", q))):
-        if mask[m.start()]:
-            continue
-        end = _toplevel_kw(q, _LIMIT_OFFSET_KW, m.end())
-        if end == -1:
-            end = _stmt_end(q, m.end())
-        cuts = [m.end() - 1, *_top_commas(q, m.end(), end), end]
-        items = [(a + 1, e) for a, e in zip(cuts, cuts[1:])]
-        for s, e in reversed(items):
-            im = _OB_ITEM_RE.match(q[s:e].strip())
-            if im is None:
-                continue
+    (execute.orderby.test.js 'should sort mixed types'). The ORDER BY
+    lists are each statement's (``_selects``), each window's
+    (``_windows``) and each call's own, ``array_agg(x ORDER BY y)``
+    (``_spec``; ``WITHIN GROUP (...)`` reads as a call)."""
+    if "ORDER" not in q.upper():
+        return q
+    partner = _scan(q).partner
+    lists = {
+        order[0]: order for _, _, _, end in _iter_calls(q)
+        if (order := _spec(q, partner[end - 1])[1])
+    }
+    lists.update({w.order[0]: w.order for w in _windows(q) if w.order})
+    lists.update({
+        sel.clauses["ORDER BY"][1]: sel.clauses["ORDER BY"][1:]
+        for sel in _selects(q) if "ORDER BY" in sel.clauses
+    })
+    items = []
+    for start, end in lists.values():
+        cuts = [start - 1, *_top_commas(q, start, end), end]
+        items += [(a + 1, b) for a, b in zip(cuts, cuts[1:])]
+    for a, b in sorted(items, reverse=True):
+        im = _OB_ITEM_RE.fullmatch(q[a:b].strip())
+        if im and _is_dynamic_ref(spark, im.group(1)):
             ref = im.group(1)
-            if _is_dynamic_ref(spark, ref):
-                seg = q[s:e]
-                new_seg = seg.replace(ref, _dyn_num(ref), 1)
-                out = out[:s] + new_seg + out[e:]
-    return out
+            q = q[:a] + q[a:b].replace(ref, _dyn_num(ref), 1) + q[b:]
+    return q
 
 
 def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
@@ -1806,72 +1943,50 @@ def _rewrite_correlated_unnest_count(q: str) -> str:
     return q
 
 
-_SUBSCRIPT_RE = re.compile(r"\b([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)\s*\[")
+_STRING_KEY_RE = re.compile(r"'((?:[^']|'')*)'")
 
 
 def _rewrite_dynamic_access(q: str, spark=None) -> str:
-    """Subscript / field chains whose STATIC type makes the reference
-    return null — ``name[0]`` on a string column, any access on an
-    all-null (void) column, ``arr[0].missing`` on a struct without the
+    """Subscript / field chains (``_chains``) whose STATIC type makes the
+    reference return null — ``name[0]`` on a string column, any access on
+    an all-null (void) column, ``arr[0].missing`` on a struct without the
     field (evaluate.js:140-146: non-array subscript → null; missing
-    object key → null). Unresolvable bases pass through unchanged."""
+    object key → null). The chain starts with a column reference (``col``
+    or ``tbl.col``) and a subscript; unresolvable references pass
+    through unchanged. Chains are visited right to left, each read from
+    the current text."""
     from pyspark.sql import types as T
 
-    mask = _scan(q).mask
-    matches = [
-        m for m in _SUBSCRIPT_RE.finditer(q) if not mask[m.start()]
-    ]
-    for m in reversed(matches):
-        dt = _ref_dtype(spark, m.group(1))
+    for found in reversed(_chains(q)):
+        steps = _chain(q, found.start).steps
+        first = next((st for st in steps if st[0] != "."), None)
+        if found.kind != "ident" or first is None or first[0] != "[":
+            continue
+        dt = _ref_dtype(spark, q[found.start : first[1]].rstrip())
         if dt is None:
             continue
-        # walk the accessor chain: [expr] and .field steps
-        pos = q.index("[", m.end() - 1)
-        end = pos
-        null_out = False
-        while True:
-            if end < len(q) and q[end] == "[":
-                close = _scan(q).partner[end]
-                if close < 0:
-                    break  # unbalanced — leave it to Spark
-                inner = q[end + 1 : close].strip()
-                end = close + 1
-                if isinstance(dt, T.ArrayType):
-                    dt = dt.elementType
-                elif isinstance(dt, T.MapType):
-                    dt = dt.valueType
-                elif isinstance(dt, T.StructType):
-                    # struct['field'] string-literal subscript is field
-                    # access in both engines; missing field → null
-                    sm = re.fullmatch(r"'((?:[^']|'')*)'", inner)
-                    if sm and sm.group(1) in dt.fieldNames():
-                        dt = dt[sm.group(1)].dataType
-                    else:
-                        null_out = True
-                else:
-                    null_out = True
+        run = list(itertools.takewhile(
+            lambda st: st[0] in ("[", "."), steps[steps.index(first) :]
+        ))
+        for op, a, b in run:
+            if op == "[":
+                # struct['field'] is field access in both engines
+                key = _STRING_KEY_RE.fullmatch(q[a + 1 : b - 1].strip())
+                name = key and key.group(1)
             else:
-                fm = re.match(r"\.([A-Za-z_]\w*)", q[end:])
-                if not fm:
-                    break
-                if isinstance(dt, T.StructType):
-                    if fm.group(1) in dt.fieldNames():
-                        dt = dt[fm.group(1)].dataType
-                    else:
-                        null_out = True
-                elif not isinstance(dt, (T.ArrayType, T.MapType)):
-                    null_out = True
-                end += fm.end()
-            if null_out:
-                # consume the REST of the chain too: NULL.field is invalid
-                while True:
-                    fm = re.match(r"\.[A-Za-z_]\w*|\s*\[[^\]]*\]", q[end:])
-                    if not fm:
-                        break
-                    end += fm.end()
+                name = q[a + 1 : b]
+            if isinstance(dt, T.StructType):
+                dt = dt[name].dataType if name in dt.fieldNames() else None
+            elif op == "[" and isinstance(dt, T.ArrayType):
+                dt = dt.elementType
+            elif op == "[" and isinstance(dt, T.MapType):
+                dt = dt.valueType
+            elif not isinstance(dt, (T.ArrayType, T.MapType)):
+                dt = None
+            if dt is None:
+                # NULL.field is invalid: the rest of the chain goes too
+                q = q[: found.start] + "NULL" + q[run[-1][2] :]
                 break
-        if null_out:
-            q = q[: m.start()] + "NULL" + q[end:]
     return q
 
 
@@ -2412,21 +2527,15 @@ def _derived_alias(item: str) -> str | None:
     return name
 
 
+_DOTTED_RE = re.compile(r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)+")
+
+
 def _collapse_dots(item: str) -> str:
     """`t.c` → `c` for naming purposes (identifier rule uses the column
     name); applied to qualified refs outside strings."""
-    mask = _scan(item).mask
-    out, last = [], 0
-    for m in re.finditer(
-        r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)+", item
-    ):
-        if mask[m.start()]:
-            continue
-        out.append(item[last : m.start()])
-        out.append(m.group(0).rsplit(".", 1)[-1])
-        last = m.end()
-    out.append(item[last:])
-    return "".join(out)
+    return _sub_outside_strings(
+        item, _DOTTED_RE, lambda m: m.group().rsplit(".", 1)[-1]
+    )
 
 
 def loosen_group_by(q: str, spark=None) -> str | None:

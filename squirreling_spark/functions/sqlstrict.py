@@ -35,6 +35,7 @@ from .sqldialect import (
     _PLAIN_NAME_RE,
     _branches,
     _bracket_is_literal,
+    _chains,
     _ctes,
     _from_items,
     _iter_calls,
@@ -43,6 +44,7 @@ from .sqldialect import (
     _selects,
     _split_top_args,
     _stmt_of,
+    _windows,
 )
 
 
@@ -518,7 +520,6 @@ def _from_scope(q: str, tables) -> set[str]:
     with an alias is HIDDEN (both the reference and Spark reject
     ``FROM users u ... users.id``)."""
     scope = set(tables or {})
-    mask, _, partner = _scan(q)
     aliased_bases: set[str] = set()
     unaliased: set[str] = set()
     for it in _from_items(q):
@@ -526,18 +527,10 @@ def _from_scope(q: str, tables) -> set[str]:
             (aliased_bases if it.alias else unaliased).add(it.name)
         if it.alias or it.kind == "table":
             scope.add(it.alias or it.name)
-        # `UNNEST(..) AS u(x, y)` exposes x/y directly, and a struct-typed
-        # element alias makes `x.field` a legal dotted reference
+        # `UNNEST(..) AS u(x, y)` and `LATERAL VIEW explode(..) v AS x`
+        # expose x/y directly, and a struct-typed element alias makes
+        # `x.field` a legal dotted reference
         scope.update(it.cols or ())
-    for m in re.finditer(
-        r"\bLATERAL\s+(?:VIEW\s+)?(?:OUTER\s+)?\w+\s*\(", q, re.I
-    ):
-        close = partner[m.end() - 1]
-        if mask[m.start()] or close < 0:
-            continue
-        am = re.match(r"\s*(\w+)", q[close + 1:])
-        if am:
-            scope.add(am.group(1))
     scope.update(c.name for c in _ctes(q))
     # an aliased base name is hidden even when it is a table-map key —
     # unless the same table is ALSO referenced unaliased elsewhere
@@ -560,50 +553,42 @@ def _validate_dotted_from(q: str) -> None:
 
 
 def _validate_dotted_refs(q: str, spark, tables) -> None:
-    """Unquoted ``a.b`` resolves ONLY when ``a`` is a table/alias in
-    scope or a struct column; the reference rejects dotted access to
-    FLAT columns named 'a.b' unless quoted (execute.dot tests)."""
+    """Unquoted ``a.b`` (a chain, ``_chains``, whose first step is a
+    field) resolves ONLY when ``a`` is a table/alias in scope or a struct
+    column; the reference rejects dotted access to FLAT columns named
+    'a.b' unless quoted (execute.dot tests)."""
     from pyspark.sql import types as T
 
     from .sqldialect import _ref_dtype
 
-    mask = _scan(q).mask
     scope = _from_scope(q, tables)
-    # double-dotted chains a.b.c: the reference parser stops at the second
-    # dot — 'Unexpected "." in "b.c"' (execute.dot tests) — unless the
-    # head is a struct-typed column or in-scope table (chained access)
-    for m in re.finditer(
-        r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b", q
-    ):
-        if mask[m.start()] or q[max(0, m.start() - 1)] in ".]'\"`":
+    bad = []  # (position, head, fields) of a.b whose head resolves to nothing
+    for ch in _chains(q):
+        head = q[ch.start : ch.base_end]
+        if ch.kind != "ident" or head[0] == "`" or ch.steps[0][0] != ".":
             continue
-        head = m.group(1)
-        if head in scope or isinstance(
+        if head not in scope and not isinstance(
             _ref_dtype(spark, head), T.StructType
         ):
-            continue
-        raise StrictDialectError(
-            f'Unexpected "." in "{m.group(2)}.{m.group(3)}". If this is '
-            f'an identifier, use double quotes: '
-            f'"{m.group(2)}.{m.group(3)}" (at position {m.start()})'
-        )
-    for m in re.finditer(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\b", q):
-        if mask[m.start()]:
-            continue
-        if q[max(0, m.start() - 1)] in ".]'\"`":
-            continue  # chained access / quoted
-        qual = m.group(1)
-        if qual in scope:
-            continue
-        dt = _ref_dtype(spark, qual)
-        if isinstance(dt, (T.StructType,)):
-            continue  # struct field access
+            fields = [q[a + 1 : b] for op, a, b in ch.steps[:2] if op == "."]
+            bad.append((ch.start, head, fields))
+    # a.b.c: the reference parser stops at the second dot, before any
+    # table is looked up (execute.dot tests)
+    for at, _, fields in bad:
+        if len(fields) == 2:
+            name = ".".join(fields)
+            raise StrictDialectError(
+                f'Unexpected "." in "{name}". If this is an identifier, '
+                f'use double quotes: "{name}" (at position {at})'
+            )
+    if bad:
         # reference TableNotFoundError with qualified usage
         # (validation/tables.js:166-211, asserted by execute.dot tests)
+        at, head, fields = bad[0]
         avail = ", ".join(_visible_tables(q, tables))
         raise StrictDialectError(
-            f'Table "{qual}" not found in "{qual}.{m.group(2)}". '
-            f"Available tables: {avail} (at position {m.start()})"
+            f'Table "{head}" not found in "{head}.{fields[0]}". '
+            f"Available tables: {avail} (at position {at})"
         )
 
 
@@ -626,57 +611,56 @@ def _validate_joins(q: str, tables) -> None:
             )
 
 
+_LATERAL_VIEW_FUNCS = {
+    "EXPLODE", "POSEXPLODE", "EXPLODE_OUTER", "POSEXPLODE_OUTER", "INLINE",
+    "INLINE_OUTER", "JSON_TUPLE", "STACK", "UNNEST", "JSON_EACH",
+}
+
+
 def _validate_lateral(q: str) -> None:
-    mask, _, partner = _scan(q)
-    for m in re.finditer(r"\bLATERAL\s+(?!VIEW\b)(\w+)", q, re.I):
-        if mask[m.start()]:
+    """LATERAL shapes, read from ``_from_items``: ``JOIN LATERAL fn(..)``
+    is the reference's explicit-LATERAL join form
+    (execute.unnest.test.js "explicit LATERAL keyword"); any other
+    LATERAL needs VIEW, and ``LATERAL VIEW`` takes a table function, a
+    table alias and ``AS`` column names. Positions are those of the
+    offending token (reference parse-layer convention, asserted by the
+    execute.unnest tests)."""
+    items = _from_items(q)
+    for it in items:
+        if it.join not in ("FROM", ",", "LATERAL", "LATERAL OUTER"):
             continue
-        # `JOIN LATERAL UNNEST(..)` is the reference's explicit-LATERAL
-        # join form (execute.unnest.test.js "explicit LATERAL keyword");
-        # only the bare `t LATERAL fn(..)` shape requires VIEW.
-        if re.search(r"\bJOIN\s*$", q[: m.start()], re.I):
-            continue
-        # position = offset of the FOUND token (reference parse-layer
-        # convention, asserted by execute.unnest tests)
-        raise StrictDialectError(
-            f'Expected VIEW after "LATERAL" but found "{m.group(1)}" '
-            f"at position {m.start(1)}"
-        )
-    for m in re.finditer(r"\bLATERAL\s+VIEW\s+(?:OUTER\s+)?(\w+)\s*\(",
-                         q, re.I):
-        if mask[m.start()]:
-            continue
-        if m.group(1).upper() not in (
-            "EXPLODE", "POSEXPLODE", "EXPLODE_OUTER", "POSEXPLODE_OUTER",
-            "INLINE", "INLINE_OUTER", "JSON_TUPLE", "STACK", "UNNEST",
-            "JSON_EACH",
-        ):
+        # the word after LATERAL
+        at = it.start
+        if it.join.startswith("LATERAL"):
+            at = len(q) - len(q[it.kw + len("LATERAL") :].lstrip())
+        found = it.lateral and re.match(r"\w+", q[at:])
+        if found:
+            raise StrictDialectError(
+                f'Expected VIEW after "LATERAL" but found "{found.group()}" '
+                f"at position {at}"
+            )
+    views = [it for it in items if it.join.startswith("LATERAL VIEW")]
+    for it in views:
+        if it.name not in _LATERAL_VIEW_FUNCS:
             raise StrictDialectError(
                 "LATERAL VIEW requires a table function like EXPLODE, "
-                f'got "{m.group(1)}" at position {m.start(1)}'
+                f'got "{q[it.start : it.start + len(it.name)]}" at position '
+                f"{it.start}"
             )
-    for m in re.finditer(r"\bLATERAL\s+VIEW\s+(?:OUTER\s+)?\w+\s*\(",
-                         q, re.I):
-        if mask[m.start()]:
-            continue
-        close = partner[m.end() - 1]
-        if close < 0:
-            continue  # unbalanced: Spark will error
-        end = close + 1
-        tail = q[end:]
-        am = re.match(r"\s*(AS\b|([A-Za-z_]\w*)\s*(AS\b)?)", tail, re.I)
-        if am and am.group(1).upper() == "AS":
+    for it in views:
+        if it.alias is None and it.cols:
             raise StrictDialectError(
                 "LATERAL VIEW requires a table alias before AS"
             )
-        if am and am.group(2) and not am.group(3):
+        if it.alias is None:
+            continue
+        after = q.index(it.alias, it.rel_end) + len(it.alias)
+        at = len(q) - len(q[after:].lstrip())
+        if not re.match(r"AS\b", q[at:], re.I):
             raise StrictDialectError(
-                f'Expected AS after "{am.group(2)}" but found '
-                f"end of query at position {end + len(am.group(0))}"
+                f'Expected AS after "{it.alias}" but found end of query '
+                f"at position {at}"
             )
-
-
-_LATERAL_VIEW_END_RE = re.compile(r"\bLATERAL\s+VIEW(?:\s+OUTER)?\s*$", re.I)
 
 
 def _validate_table_functions(q: str) -> None:
@@ -687,7 +671,7 @@ def _validate_table_functions(q: str) -> None:
     in_from = {it.start for it in items}
     names = ("UNNEST", "EXPLODE", "JSON_EACH")
     for name, start, _, _ in _iter_calls(q, names):
-        if start in in_from or _LATERAL_VIEW_END_RE.search(q, 0, start):
+        if start in in_from:
             continue
         raise StrictDialectError(
             f"{name} is a table function and can only be "
@@ -696,6 +680,8 @@ def _validate_table_functions(q: str) -> None:
     # column-alias-list arity: UNNEST exposes ONE column, JSON_EACH two
     # (key, value) — reference parse errors, asserted verbatim
     for it in items:
+        if it.join.startswith("LATERAL"):
+            continue  # Spark's own LATERAL VIEW
         if it.name == "UNNEST" and len(it.cols or ()) > 1:
             raise StrictDialectError(
                 "UNNEST produces a single column; only one column alias "
@@ -799,8 +785,7 @@ def _validate_window_groupby(q: str) -> None:
                 f"Window function {name} is not allowed in WHERE clause"
             )
     s = _scan(q)
-    over = (m.start() for m in re.finditer(r"\bOVER\s*\(", q, re.I))
-    if any(not (s.mask[i] or s.depth[i]) for i in over) and any(
+    if any(not s.depth[w.start] for w in _windows(q)) and any(
         "GROUP BY" in sel.clauses for sel in _selects(q)
         if not s.depth[sel.start]
     ):

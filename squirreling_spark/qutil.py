@@ -64,15 +64,19 @@ def events_with_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet file stores it (this has changed across testdata
     generations):
 
-    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it, so we read
-      nanos as long (``nanosAsLong`` conf) and truncate to microseconds,
-      matching DuckDB's native ns->us truncation.
+    - TIMESTAMP(NANOS): Spark's reader rejects it unless
+      ``spark.sql.legacy.parquet.nanosAsLong`` is on, which
+      ``session.get_spark`` sets; it then arrives as bigint nanos, which
+      are truncated to microseconds, matching DuckDB's native ns->us
+      truncation. This function leaves the session's settings alone: in
+      a session without that setting (a foreign driver's), a nanos file
+      raises Spark's own error, which names the setting. Every testdata
+      scale and ``perfbench/datagen.py`` store ``ts`` as timestamp[us].
     - timestamp[us] (current testdata): arrives as TIMESTAMP_NTZ; cast to
       TIMESTAMP. With the session timezone pinned (UTC) this preserves the
       wall-clock value exactly, so both engines agree.
     - TIMESTAMP: pass through.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = source(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":

@@ -48,6 +48,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # parquet TIMESTAMP(NANOS) reads as bigint nanos, which
+        # qutil.events_with_ts truncates to microseconds; set once here
+        # so a parquet schema cached before an events load stays valid
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")

@@ -323,6 +323,45 @@ def test_dynamic_order_by_item_after_quoted_paren(spark, order_by):
     assert [r["id"] for r in rows] == [3, 2, 1, 4]
 
 
+def test_dynamic_order_by_in_a_framed_window(spark):
+    # the window's ORDER BY list ends where its frame starts: `v` still
+    # sorts by the JS numeric order (2, "9", 10), as without the frame
+    data = [{"id": 1, "v": 10}, {"id": 2, "v": "9"}, {"id": 3, "v": 2}]
+    for frame in ("", " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"):
+        rows = execute_sql(
+            spark,
+            f"SELECT id, SUM(id) OVER (ORDER BY v{frame}) AS s FROM data",
+            tables={"data": data},
+        ).collect()
+        assert {r["id"]: r["s"] for r in rows} == {3: 3, 2: 5, 1: 6}
+
+
+@pytest.mark.parametrize(
+    "window, expected",
+    [
+        # a rank-family call with nested brackets in its arguments
+        ("LAG(coalesce(x, 0)) OVER ()", [None, 1, 0]),
+        # the input order goes before the frame, not after it
+        (
+            "ROW_NUMBER() OVER (PARTITION BY g ROWS BETWEEN UNBOUNDED "
+            "PRECEDING AND CURRENT ROW)",
+            [1, 2, 1],
+        ),
+    ],
+)
+def test_orderless_rank_windows(spark, window, expected):
+    rows = execute_sql(
+        spark,
+        f"SELECT id, {window} AS p FROM t",
+        tables={"t": [
+            {"id": 1, "g": "a", "x": 1},
+            {"id": 2, "g": "a", "x": None},
+            {"id": 3, "g": "b", "x": 3},
+        ]},
+    ).collect()
+    assert [r["p"] for r in sorted(rows, key=lambda r: r["id"])] == expected
+
+
 def test_dynamic_where_truthiness(spark):
     rows = execute_sql(
         spark,

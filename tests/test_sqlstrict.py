@@ -263,6 +263,19 @@ def test_lateral_view_alias_after_a_nested_call(spark):
     assert execute_sql(spark, q, tables=_T, strict=True).collect() == loose
 
 
+def test_lateral_view_column_alias_in_scope(spark):
+    # `LATERAL VIEW explode(..) v AS c` puts `c` in scope, as
+    # `UNNEST(..) AS u(c)` does: `c.name` is a struct field access
+    q = "SELECT id, c.name AS n FROM t LATERAL VIEW explode(items) v AS c"
+    tables = {"t": [
+        {"id": 1, "items": [{"name": "a"}, {"name": "b"}]},
+        {"id": 2, "items": [{"name": "c"}]},
+    ]}
+    loose = execute_sql(spark, q, tables=tables).collect()
+    assert sorted(r["n"] for r in loose) == ["a", "b", "c"]
+    assert execute_sql(spark, q, tables=tables, strict=True).collect() == loose
+
+
 def test_unbalanced_lateral_view_raises_what_loose_mode_raises(spark):
     q = "SELECT * FROM t LATERAL VIEW explode(arr"
     with pytest.raises(Exception) as loose:

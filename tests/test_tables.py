@@ -9,6 +9,7 @@ import pytest
 from pyspark.errors import AnalysisException
 
 from squirreling_spark.engine import execute_sql
+from squirreling_spark.qutil import events_with_ts, t
 from squirreling_spark.tables import _file_state, load_table, source
 
 
@@ -101,3 +102,34 @@ def test_directory_state_ignores_spark_bookkeeping_files(tmp_path):
         "part-0.parquet", "part-1.parquet"
     ]
     assert _file_state(str(tmp_path / "missing")) is None
+
+
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_events_load_leaves_the_session_settings(spark, tmp_path):
+    _write(tmp_path / "events.parquet", {"ts": pa.array(
+        [1_700_000_000_000_000], pa.timestamp("us")
+    )})
+    before = spark.conf.get(_NANOS)
+    spark.conf.set(_NANOS, "false")
+    try:
+        events_with_ts(spark, str(tmp_path)).collect()
+        assert spark.conf.get(_NANOS) == "false"
+    finally:
+        spark.conf.set(_NANOS, before)
+
+
+def test_nanosecond_events_truncate_to_microseconds(spark, tmp_path):
+    # session.get_spark reads TIMESTAMP(NANOS) as bigint nanos; t() keeps
+    # the microseconds, as DuckDB's ns -> us cast does
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    _write(tmp_path / "events.parquet", {
+        "event_id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns")),
+    })
+    df = t(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    rows = df.selectExpr("event_id", "unix_micros(ts) AS us").collect()
+    assert sorted((r["event_id"], r["us"]) for r in rows) == [
+        (1, 1_700_000_000_123_456), (2, 1_700_000_001_000_000),
+    ]

@@ -144,6 +144,19 @@ def test_arrow_operand_with_quoted_paren(spark):
     assert rows == [{"id": 1, "a": "7"}, {"id": 2, "a": None}]
 
 
+def test_arrow_after_a_comma_is_no_lambda(spark):
+    # a `->` is a lambda head only inside a call's arguments, and `->>`
+    # never is: an arrow on a bare column after a select-list comma
+    # rewrites like the first select item
+    tables = {"t": [{"id": 1, "arr": "[5, 6]"}, {"id": 2, "arr": "[7]"}]}
+    for q in (
+        "SELECT id, arr->>0 AS e FROM t ORDER BY id",
+        "SELECT id, arr->0 AS e FROM t ORDER BY id",
+    ):
+        rows = execute_sql(spark, q, tables=tables).collect()
+        assert [r["e"] for r in rows] == ["5", "7"]
+
+
 def test_distinct_on_execute(spark):
     rows = run(
         spark,
