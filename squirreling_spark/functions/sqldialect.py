@@ -14,8 +14,9 @@ text whose brackets do not balance is left for Spark to report.
    (``ident_quotes="ansi"``) and DuckDB-style FROM-first queries;
 2. wish-list operator sugar (syntax.md): JSON arrows ``->``/``->>``,
    ``GLOB``, Postgres ``~``, ``* EXCLUDE``, ``DISTINCT ON``;
-3. reference-derived names for unaliased select items (alias.js), read
-   before any function rewrite changes the text;
+3. reference-derived names for unaliased select items (alias.js,
+   ``_namer``), built from the value reader before any function rewrite
+   changes the text;
 4. array literals ``[1, 2]``, then FROM items via ``_from_items``:
    correlated ``UNNEST`` counts, the table functions
    ``_TABLE_FUNCTIONS`` (``UNNEST``/``EXPLODE``, ``JSON_EACH``:
@@ -30,7 +31,8 @@ text whose brackets do not balance is left for Spark to report.
 7. ``||`` re-associated below ``+`` (src/parse/expression.js:11-12);
 8. the function calls, ``_FUNCTION_CALLS`` (renames and argument-shape
    fixes), then typed literals, ``FORTNIGHT`` intervals, order-less rank
-   windows and ``± INTERVAL n MONTH``;
+   windows and ``x ± INTERVAL n MONTH`` (``x`` the value before the
+   sign);
 9. BigInt literals ``123n`` (src/parse/tokenize.js:49-57) and, with
    ``like_mode="ci"``, case-insensitive LIKE
    (src/expression/binary.js:57-66).
@@ -49,11 +51,12 @@ Statement clauses are read by one reader, ``_selects`` (each SELECT's
 items and aliases and its FROM, WHERE, GROUP BY, HAVING, ORDER BY,
 LIMIT and OFFSET spans), and CTEs by ``_ctes``; windows by ``_windows``
 (each call's ``OVER (...)`` with its PARTITION BY, ORDER BY and frame
-spans) and values with postfix steps by ``_chains`` (a base, then its
-subscripts, ``.name`` fields and JSON arrows, read forward as the
-reference's primary.js does). ``sqlstrict`` reads them too. The
-rewriter is not a full parser; it targets the reference's tested query
-shapes.
+spans) and values by ``_chains`` (an identifier, literal, call or
+group, then its subscripts, ``.name`` fields and JSON arrows, read
+forward as the reference's primary.js does), the source of derived
+column names and of the ``± INTERVAL`` operand. ``sqlstrict`` reads
+them too. The rewriter is not a full parser; it targets the
+reference's tested query shapes.
 
 Semantics notes (documented divergences, all at the type edge where a
 dynamically-typed JS engine meets SQL):
@@ -724,7 +727,7 @@ class _Chain(NamedTuple):
 
     start: int  # start of the base
     base_end: int  # end of the base
-    kind: str  # "ident", "call", "group" (``(..)``, ``[..]``) or "string"
+    kind: str  # "ident", "call", "group", "string" or "number"
     # (op, start, end) per step, op "[", ".", "->" or "->>"; an arrow's
     # span runs through its literal key
     steps: tuple
@@ -737,6 +740,7 @@ _CHAIN_TOKEN_RE = re.compile(
 )
 _BASE_RE = re.compile(
     r"'(?:[^']|'')*'|[(\[]|(?:[A-Za-z_][\w$]*|`[^`]*`)(?=(\())?"
+    r"|\d+\.?\d*(?:[eE][+-]?\d+)?"
 )
 _STEP_RE = re.compile(
     r"\s*(\[)|\s*(->>?)\s*(?:'(?:[^']|'')*'|\d+)|\.[A-Za-z_][\w$]*"
@@ -746,14 +750,16 @@ _STEP_RE = re.compile(
 def _chain(q: str, start: int, holder: int = -1):
     """The chain whose base starts at ``start`` — an identifier, a call
     written against its ``(``, a closed ``(..)`` group or ``[..]``
-    literal, or a string literal — with every step after it: a subscript
-    (not an array literal), a JSON arrow with a literal key (``->'k'``,
-    ``->>0``) or ``.name``. None when no base starts there."""
+    literal, a string or a number — with every step after it: a
+    subscript (not an array literal), a JSON arrow with a literal key
+    (``->'k'``, ``->>0``) or ``.name``. None when no base starts there."""
     partner = _scan(q).partner
     m = _BASE_RE.match(q, start)
     if m is None:
         return None
     kind, end = "string" if q[start] == "'" else "ident", m.end()
+    if q[start].isdigit():
+        kind = "number"
     bracket = start if m.group() in "([" else end if m.group(1) else -1
     if bracket >= 0 and partner[bracket] >= 0:
         kind = "group" if bracket == start else "call"
@@ -778,24 +784,24 @@ def _chain(q: str, start: int, holder: int = -1):
 
 @functools.lru_cache(maxsize=64)
 def _chains(q: str) -> tuple:
-    """The one postfix-chain reader: every value outside strings with at
-    least one step (``_chain``), in text order, nested ones (in a call's
-    arguments, a subscript) included. A base never follows a ``.`` nor
-    starts in an arrow's key, and a ``(`` written against a name opens
-    its call's arguments. Cached like ``_from_items``."""
+    """The one value reader: every value outside strings (``_chain``),
+    with or without steps, in text order, nested ones (in a call's
+    arguments, a group, a subscript) included. A base never follows a
+    ``.`` nor starts in an arrow's key, and a ``(`` written against a
+    name opens its call's arguments. Cached like ``_from_items``."""
     s = _scan(q)
     out, holders, keys, prev = [], [], [], ""
     for m in _CHAIN_TOKEN_RE.finditer(q):
         tok, i = m.group(), m.start()
         if tok in ")]" and holders and s.partner[i] == holders[-1]:
             holders.pop()
-        base = tok[0] in "'`_" or tok[0].isalpha() or (
+        base = tok[0] in "'`_" or tok[0].isalnum() or (
             tok == "(" and not (i and (q[i - 1].isalnum() or q[i - 1] in "_$"))
             or tok == "[" and _bracket_is_literal(q, i)
         )
         if base and prev != "." and not any(a <= i < b for a, b in keys):
             ch = _chain(q, i, holders[-1] if holders else -1)
-            if ch is not None and ch.steps:
+            if ch is not None:
                 out.append(ch)
                 keys += [(a, b) for op, a, b in ch.steps if op[0] == "-"]
         if tok in "([" and s.partner[i] >= 0:
@@ -935,7 +941,8 @@ def _rewrite_json_arrows(q: str) -> str:
     partner = _scan(q).partner
     call_args = {partner[end - 1] for _, _, _, end in _iter_calls(q)}
     for found in reversed(_chains(q)):
-        if not any(op[0] == "-" for op, _, _ in found.steps):
+        arrows = any(op[0] == "-" for op, _, _ in found.steps)
+        if found.kind == "number" or not arrows:
             continue
         ch = _chain(q, found.start)
         text, last = q[ch.start : ch.base_end], ch.base_end
@@ -1284,22 +1291,14 @@ def _dyn_num(ref: str) -> str:
 # ---------------------------------------------------------------------------
 
 def _rewrite_array_literals(q: str) -> str:
-    """``[...]`` in literal position → ``array(...)``, nested literals
-    included. Subscripts (``arr[2]``, ``m[1][0]``) and brackets without a
-    partner are untouched."""
-    s = _scan(q)
-    swap = {}
-    i = q.find("[")
-    while i != -1:
-        if not s.mask[i] and s.partner[i] >= 0 and _bracket_is_literal(q, i):
-            swap[i], swap[s.partner[i]] = "array(", ")"
-        i = q.find("[", i + 1)
-    out, last = [], 0
-    for i in sorted(swap):
-        out += [q[last:i], swap[i]]
-        last = i + 1
-    out.append(q[last:])
-    return "".join(out)
+    """``[...]`` in literal position (a ``[..]`` value, ``_chains``) →
+    ``array(...)``, nested literals included. Subscripts (``arr[2]``,
+    ``m[1][0]``) and brackets without a partner are untouched."""
+    chars = list(q)
+    for ch in _chains(q):
+        if ch.kind == "group" and q[ch.start] == "[":
+            chars[ch.start], chars[ch.base_end - 1] = "array(", ")"
+    return "".join(chars)
 
 
 # ---------------------------------------------------------------------------
@@ -1958,7 +1957,7 @@ def _rewrite_dynamic_access(q: str, spark=None) -> str:
     from pyspark.sql import types as T
 
     for found in reversed(_chains(q)):
-        steps = _chain(q, found.start).steps
+        steps = found.steps and _chain(q, found.start).steps
         first = next((st for st in steps if st[0] != "."), None)
         if found.kind != "ident" or first is None or first[0] != "[":
             continue
@@ -2312,230 +2311,158 @@ def _rewrite_function_dialect(q: str) -> str:
     # input order; monotonically_increasing_id() is ascending in input
     # order per partition
     q = _rewrite_orderless_windows(q)
-    # x ± INTERVAL n MONTH/YEAR → add_months(x, ±n): the reference adds
-    # calendar months to ISO STRING dates too, which Spark's year-month
-    # interval arithmetic rejects on strings (add_months coerces)
-    q = _sub_outside_strings(
-        q,
-        re.compile(
-            r"([A-Za-z_][\w.$]*|\([^()]*\))\s*([+-])\s*INTERVAL\s+"
-            r"'?(-?\d+)'?\s+(MONTH|YEAR)S?\b",
-            re.I,
-        ),
-        lambda m: "add_months({}, {})".format(
-            m.group(1),
-            int(m.group(3))
-            * (12 if m.group(4).upper().startswith("YEAR") else 1)
-            * (-1 if m.group(2) == "-" else 1),
-        ),
-    )
-    return q
+    return _rewrite_month_intervals(q)
+
+
+_MONTH_INTERVAL_RE = re.compile(
+    r"([+-])\s*INTERVAL\s+'?(-?\d+)'?\s+(MONTH|YEAR)S?\b", re.I
+)
+
+
+def _rewrite_month_intervals(q: str) -> str:
+    """``x ± INTERVAL n MONTH|YEAR`` → ``add_months(x, ±n)``: the
+    reference adds calendar months to ISO STRING dates too, which Spark's
+    year-month interval arithmetic rejects on strings (add_months
+    coerces). ``x`` is the value (``_chains``) or windowed call ending
+    just before the sign; a sign with none, or whose value holds an
+    earlier rewrite, is left alone."""
+    mask = _scan(q).mask
+    found = [m for m in _MONTH_INTERVAL_RE.finditer(q) if not mask[m.start()]]
+    # the end of a value → the start of the outermost one (a window's call)
+    starts = {w.close + 1: w.start for w in (_windows(q) if found else ())}
+    for ch in _chains(q) if found else ():
+        end = ch.steps[-1][2] if ch.steps else ch.base_end
+        starts.setdefault(end, ch.start)
+    out, last = [], 0
+    for m in found:
+        end = len(q[: m.start()].rstrip())
+        start = starts.get(end, -1)
+        if start >= last:
+            n = int(m.group(2)) * (12 if m.group(3).upper() == "YEAR" else 1)
+            n = -n if m.group(1) == "-" else n
+            out += [q[last:start], f"add_months({q[start:end]}, {n})"]
+            last = m.end()
+    return "".join(out) + q[last:]
 
 
 # ---------------------------------------------------------------------------
 # Derived column names (reference src/expression/alias.js)
 # ---------------------------------------------------------------------------
-# The reference names every unaliased select item from its expression:
-# COUNT(*) → count_all, UPPER(name) → upper_name, a + b → a_+_b,
-# CAST(x AS INT) → x_as_int, literal 5 → '5'. Spark's auto-names differ
-# (count(1), upper(name)), so execute_sql appends the reference name as
-# an explicit alias when it can derive one.
 
-_ALIAS_TOKEN_RE = re.compile(
-    r"\s*(?:"
-    r"(?P<num>\d+\.?\d*(?:[eE][+-]?\d+)?|\.\d+)"
-    r"|(?P<str>'(?:[^']|'')*')"
-    r"|(?P<ident>[A-Za-z_][\w$]*|`[^`]+`)"
-    r"|(?P<op>\|\||<>|<=|>=|!=|->|[-+*/%=<>.])"
-    r"|(?P<punc>[(),\[\]])"
-    r")"
-)
+# Binary operators between values, longest first; AND and OR are words.
+_BINARY_OPS = "|| <> <= >= != -> - + * / % = < >".split()
+_LITERAL_NAMES = {"NULL": "null", "TRUE": "true", "FALSE": "false"}
+_UNNAMED = frozenset({"CASE", "SELECT", "INTERVAL", "EXISTS"})
 
 
-class _AliasParser:
-    """Minimal expression reader that mirrors derivedAlias(); returns None
-    for shapes the formula can't name (then the item stays unaliased)."""
-
-    def __init__(self, s: str):
-        self.toks: list[tuple[str, str]] = []
-        pos = 0
-        while pos < len(s):
-            m = _ALIAS_TOKEN_RE.match(s, pos)
-            if not m or m.end() == pos:
-                if s[pos:].strip():
-                    self.toks.append(("bad", s[pos:]))
-                break
-            pos = m.end()
-            for kind in ("num", "str", "ident", "op", "punc"):
-                if m.group(kind):
-                    self.toks.append((kind, m.group(kind)))
-                    break
-        self.i = 0
-
-    def peek(self):
-        return self.toks[self.i] if self.i < len(self.toks) else (None, None)
-
-    def next(self):
-        t = self.peek()
-        self.i += 1
-        return t
-
-    def expr(self):
-        name = self.operand()
-        if name is None:
-            return None
-        while True:
-            kind, val = self.peek()
-            if kind == "op":
-                self.i += 1
-                rhs = self.operand()
-                if rhs is None:
-                    return None
-                name = f"{name}_{val}_{rhs}"
-            elif kind == "ident" and val.upper() in ("AND", "OR"):
-                self.i += 1
-                rhs = self.operand()
-                if rhs is None:
-                    return None
-                name = f"{name}_{val.upper()}_{rhs}"
-            else:
-                return name
-
-    def operand(self):
-        kind, val = self.next()
-        if kind == "op" and val == "-":
-            arg = self.operand()
-            return None if arg is None else f"-_{arg}"
-        if kind == "ident" and val.upper() == "NOT":
-            arg = self.operand()
-            return None if arg is None else f"NOT_{arg}"
-        name = None
-        if kind == "num":
-            name = val
-        elif kind == "str":
-            name = val[1:-1].replace("''", "'")
-        elif kind == "punc" and val == "(":
-            inner = self.expr()
-            if inner is None or self.next() != ("punc", ")"):
-                return None
-            name = inner
-        elif kind == "ident":
-            word = val.upper()
-            if word in ("CASE", "SELECT", "INTERVAL", "EXISTS"):
-                return None  # reference falls back to 'expr'; skip
-            if word in ("NULL", "TRUE", "FALSE"):
-                name = {"NULL": "null", "TRUE": "true", "FALSE": "false"}[
-                    word
-                ]
-            elif self.peek() == ("punc", "("):
-                name = self.call(val)
-                if name is None:
-                    return None
-            else:
-                # identifier: dotted paths were collapsed to the final
-                # segment before tokenizing (_collapse_dots)
-                name = val.strip("`")
-        else:
-            return None
-        # postfix subscripts and dot-field access
-        while True:
-            if self.peek() == ("punc", "["):
-                self.i += 1
-                idx_kind, idx_val = self.peek()
-                idx = self.expr()
-                if idx is None or self.next() != ("punc", "]"):
-                    return None
-                if idx_kind == "str":
-                    name = idx  # struct field access aliases to the field
-                else:
-                    name = f"{name}[{idx}]"
-            elif self.peek() == ("op", "."):
-                self.i += 1
-                k, v = self.next()
-                if k != "ident":
-                    return None
-                name = v.strip("`")  # a.b aliases to the field name
-            else:
-                return name
-
-    def call(self, fname: str):
-        assert self.next() == ("punc", "(")
-        if fname.upper() == "CAST":
-            inner = self.expr()
-            k, v = self.next()
-            if inner is None or k != "ident" or v.upper() != "AS":
-                return None
-            tk, tv = self.next()
-            if tk != "ident" or self.next() != ("punc", ")"):
-                return None
-            return f"{inner}_as_{tv.lower()}"
-        args = []
-        kind, val = self.peek()
-        if (kind, val) == ("punc", ")"):
-            self.i += 1
-        elif (kind, val) == ("op", "*"):
-            self.i += 1
-            if self.next() != ("punc", ")"):
-                return None
-            # OVER → window alias (bare function name)
-            if self._over():
-                return fname.lower()
-            return f"{fname.lower()}_all"
-        else:
-            if kind == "ident" and val.upper() == "DISTINCT":
-                self.i += 1
-            while True:
-                a = self.expr()
-                if a is None:
-                    return None
-                args.append(a)
-                k, v = self.next()
-                if (k, v) == ("punc", ")"):
-                    break
-                if (k, v) != ("punc", ","):
-                    return None
-        if self._over():
-            return fname.lower()
-        return fname.lower() + ("_" + "_".join(args) if args else "")
-
-    def _over(self) -> bool:
-        k, v = self.peek()
-        if k == "ident" and v.upper() == "OVER":
-            # consume OVER (...)
-            self.i += 1
-            if self.peek() == ("punc", "("):
-                depth = 0
-                while self.i < len(self.toks):
-                    k2, v2 = self.next()
-                    if (k2, v2) == ("punc", "("):
-                        depth += 1
-                    elif (k2, v2) == ("punc", ")"):
-                        depth -= 1
-                        if depth == 0:
-                            break
-            return True
-        return False
+def _literal_name(lit: str) -> str:
+    return lit[1:-1].replace("''", "'") if lit[0] == "'" else lit
 
 
-def _derived_alias(item: str) -> str | None:
-    """Reference-style derived name for a select item, or None."""
-    item = item.strip()
-    p = _AliasParser(_collapse_dots(item))
-    name = p.expr()
-    if name is None or p.peek() != (None, None):
+def _namer(q: str):
+    """alias.js's derived names: a function from a span of ``q`` to the
+    name of the expression there, or None (CASE, subqueries, INTERVAL,
+    EXISTS and shapes the rule cannot name). It reads the values
+    (``_chains``), calls and windows of ``q`` once. A value is its base's
+    name (a group's: its contents') then its steps' (``x[1]``; ``k`` for
+    ``['k']`` and ``.k``); a call is ``f_arg1_arg2`` (no DISTINCT),
+    ``f_all``, ``x_as_t`` for ``CAST(x AS T)`` or ``f`` before ``OVER``;
+    ``-``/``NOT`` prefix (``-_x``), operators join (``a_+_b``)."""
+    values = {ch.start: ch for ch in _chains(q)}
+    calls = {c[1]: c for c in _iter_calls(q)}
+    windows = {w.start: w for w in _windows(q)}
+
+    def skip(i):
+        while i < len(q) and q[i].isspace():
+            i += 1
+        return i
+
+    def word(i):
+        m = i in values and _PLAIN_NAME_RE.match(q, i)
+        return m.group().upper() if m else ""
+
+    def whole(a, b):
+        got = expr(a)
+        return got[0] if got and got[1] <= b <= skip(got[1]) else None
+
+    def expr(i):
+        """(name, end) of the longest operator chain of values from i."""
+        got = operand(i)
+        while got:
+            name, j = got[0], skip(got[1])
+            op = word(j) if word(j) in ("AND", "OR") else next(
+                (op for op in _BINARY_OPS if q.startswith(op, j)), None
+            )
+            if op is None:
+                return got
+            rhs = operand(j + len(op))
+            got = rhs and (f"{name}_{op}_{rhs[0]}", rhs[1])
         return None
-    return name
 
+    def operand(i):
+        i = skip(i)
+        v, w = values.get(i), word(i)
+        if q.startswith("-", i) or w == "NOT":
+            got = operand(i + len(w or "-"))
+            return got and (f"{w or '-'}_{got[0]}", got[1])
+        if v is None and q.startswith("(", i):  # the group of ``NOT(x)``
+            v = _Chain(i, _scan(q).partner[i] + 1, "group", (), -1)
+        if v is None or w in _UNNAMED:
+            return None
+        name, end = None, v.base_end
+        if i in calls:
+            got = call(*calls[i])
+            if got is None:
+                return None
+            name, end = got
+            if v.kind == "ident":  # ``f (x)``: the steps follow its group
+                v = values.get(q.index("(", i), v)
+        elif v.kind in ("number", "string"):
+            name = _literal_name(q[i:end])
+        elif v.kind == "group" and q[i] == "(":
+            name = whole(i + 1, end - 1)
+        elif v.kind == "ident":
+            name = _LITERAL_NAMES.get(q[i:end].upper(), q[i:end].strip("`"))
+        steps = v.steps if end == v.base_end else ()  # none after OVER (..)
+        for op, a, b in steps if name is not None else ():
+            if op == "[":
+                idx = whole(a + 1, b - 1)
+                if idx is None:
+                    return None
+                name = idx if q[skip(a + 1)] == "'" else f"{name}[{idx}]"
+            elif op == ".":
+                name = q[a + 1 : b]
+            elif op == "->":  # a lambda ``x -> 5``
+                name = f"{name}_->_{_literal_name(q[a + 2 : b].strip())}"
+            else:
+                return None
+        return None if name is None else (name, steps[-1][2] if steps else end)
 
-_DOTTED_RE = re.compile(r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)+")
+    def call(name, start, args, end):
+        open_ = q.index("(", start)
+        if name == "CAST":
+            got = expr(open_ + 1)
+            j = skip(got[1]) if got else open_
+            typ = values.get(skip(j + 2))
+            if word(j) != "AS" or not typ or typ.kind != "ident" or (
+                typ.steps or skip(typ.base_end) != end - 1
+            ):
+                return None
+            return f"{got[0]}_as_{q[typ.start : typ.base_end].lower()}", end
+        parts = ["all"] if args == ["*"] else []
+        if args and not parts:
+            first = skip(open_ + 1)
+            first += len("DISTINCT") if word(first) == "DISTINCT" else 0
+            cuts = [first - 1, *_top_commas(q, open_ + 1, end - 1), end - 1]
+            parts = [whole(a + 1, b) for a, b in zip(cuts, cuts[1:])]
+        if None in parts:
+            return None
+        w = windows.get(start)
+        if w and q[end : w.open].strip().upper() == "OVER":
+            return name.lower(), w.close + 1
+        return "_".join([name.lower(), *parts]), end
 
-
-def _collapse_dots(item: str) -> str:
-    """`t.c` → `c` for naming purposes (identifier rule uses the column
-    name); applied to qualified refs outside strings."""
-    return _sub_outside_strings(
-        item, _DOTTED_RE, lambda m: m.group().rsplit(".", 1)[-1]
-    )
+    return whole
 
 
 def loosen_group_by(q: str, spark=None) -> str | None:
@@ -2587,11 +2514,21 @@ def loosen_group_by(q: str, spark=None) -> str | None:
     return q[: sel.items[0].start] + ", ".join(out) + q[sel.items[-1].end :]
 
 
-_AGG_TOKEN_RE = re.compile(
-    r"\b(SUM|COUNT|AVG|MIN|MAX|MEDIAN|STDDEV\w*|VAR\w*|PERCENTILE\w*"
-    r"|ARRAY_AGG|STRING_AGG|ANY_VALUE|COUNT_?IF|BOOL_AND|BOOL_OR)\s*\(",
-    re.I,
-)
+# Aggregate functions: the reference's, and the Spark ones its rewrites
+# emit (ARRAY_AGG → COLLECT_LIST, ARG_MIN → MIN_BY, ...), which
+# ``inline_select_aliases`` reads in rewritten text.
+_AGGREGATE_FUNCS = frozenset({
+    "COUNT", "SUM", "AVG", "MIN", "MAX", "COUNTIF", "COUNT_IF",
+    "ARRAY_AGG", "STRING_AGG", "GROUP_CONCAT", "LISTAGG", "STDDEV",
+    "STDDEV_SAMP", "STDDEV_POP", "VARIANCE", "VAR_SAMP", "VAR_POP",
+    "MEDIAN", "PERCENTILE_CONT", "PERCENTILE_DISC", "APPROX_QUANTILE",
+    "JSON_GROUP_ARRAY", "JSON_GROUP_OBJECT", "JSON_ARRAYAGG",
+    "JSON_OBJECTAGG", "BOOL_AND", "BOOL_OR",
+    "ANY_VALUE", "FIRST", "LAST", "MODE", "CORR", "COVAR_SAMP",
+    "COVAR_POP", "BIT_AND", "BIT_OR", "BIT_XOR", "EVERY", "SOME", "ANY",
+    "COLLECT_LIST", "COLLECT_SET", "PERCENTILE", "PERCENTILE_APPROX",
+    "APPROX_PERCENTILE", "MIN_BY", "MAX_BY",
+})
 
 
 def _alias_sub(expr: str, amap: dict[str, str]) -> str:
@@ -2665,8 +2602,8 @@ def inline_select_aliases(q: str) -> str | None:
                 parts.append(p if whole else _alias_sub(p, amap))
             edits[start, end] = ", ".join(parts)
     for it, expr in aliased:
-        if group and norm(expr) not in keys_norm and not _AGG_TOKEN_RE.search(
-            expr
+        if group and norm(expr) not in keys_norm and not any(
+            _iter_calls(expr, _AGGREGATE_FUNCS)
         ):
             expr = f"any_value({expr})"
         edits[it.start, it.expr_end] = expr
@@ -2684,26 +2621,19 @@ def _rewrite_auto_alias(q: str) -> str:
         next((x for x in _selects(q) if c.open < x.start < c.close), None)
         for c in _ctes(q)
     ]
-    edits = []
-    for sel in filter(None, heads):
-        for it in sel.items:
-            item = q[it.start : it.end]
-            if (
-                it.alias
-                or not item
-                or item.endswith("*")  # ``*`` and ``t.*``
-                or re.fullmatch(r"[A-Za-z_][\w$]*|`[^`]+`", item)
-            ):
-                continue
-            # implicit alias `expr name`? only if last token is a bare
-            # ident NOT part of the expression — undecidable cheaply;
-            # restrict to expressions we can fully parse, which excludes
-            # that shape
-            name = _derived_alias(item)
-            if name is not None:
-                edits.append((it.end, name.replace("`", "``")))
-    for end, name in sorted(edits, reverse=True):
-        q = q[:end] + f" AS `{name}`" + q[end:]
+    items = [
+        it for sel in filter(None, heads) for it in sel.items
+        if not it.alias and it.start < it.end
+        and q[it.end - 1] != "*"  # ``*`` and ``t.*``
+        and not re.fullmatch(r"[A-Za-z_][\w$]*|`[^`]+`", q[it.start : it.end])
+    ]
+    # An implicit alias, ``expr name``, is no chain the namer reads: such
+    # an item stays as written.
+    name_of = items and _namer(q)
+    for it in sorted(items, key=lambda it: it.end, reverse=True):
+        if (name := name_of(it.start, it.end)) is not None:
+            name = name.replace("`", "``")
+            q = q[: it.end] + f" AS `{name}`" + q[it.end :]
     return q
 
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 import re
 
 from .sqldialect import (
+    _AGGREGATE_FUNCS,
     _PLAIN_NAME_RE,
     _branches,
     _bracket_is_literal,
@@ -563,7 +564,7 @@ def _validate_dotted_refs(q: str, spark, tables) -> None:
 
     scope = _from_scope(q, tables)
     bad = []  # (position, head, fields) of a.b whose head resolves to nothing
-    for ch in _chains(q):
+    for ch in filter(lambda ch: ch.steps, _chains(q)):
         head = q[ch.start : ch.base_end]
         if ch.kind != "ident" or head[0] == "`" or ch.steps[0][0] != ".":
             continue
@@ -728,18 +729,6 @@ _WINDOW_ONLY_FUNCS = (
     "ROW_NUMBER", "RANK", "DENSE_RANK", "LAG", "LEAD", "NTILE",
     "PERCENT_RANK", "CUME_DIST", "FIRST_VALUE", "LAST_VALUE", "NTH_VALUE",
 )
-
-
-_AGGREGATE_FUNCS = {
-    "COUNT", "SUM", "AVG", "MIN", "MAX", "COUNTIF", "COUNT_IF",
-    "ARRAY_AGG", "STRING_AGG", "GROUP_CONCAT", "LISTAGG", "STDDEV",
-    "STDDEV_SAMP", "STDDEV_POP", "VARIANCE", "VAR_SAMP", "VAR_POP",
-    "MEDIAN", "PERCENTILE_CONT", "PERCENTILE_DISC", "APPROX_QUANTILE",
-    "JSON_GROUP_ARRAY", "JSON_GROUP_OBJECT", "JSON_ARRAYAGG",
-    "JSON_OBJECTAGG", "BOOL_AND", "BOOL_OR",
-    "ANY_VALUE", "FIRST", "LAST", "MODE", "CORR", "COVAR_SAMP",
-    "COVAR_POP", "BIT_AND", "BIT_OR", "BIT_XOR", "EVERY", "SOME", "ANY",
-}
 
 
 def _validate_aggregate_modifiers(q: str) -> None:

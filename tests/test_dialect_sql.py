@@ -4,6 +4,7 @@ test shapes: test/execute/positional.test.js, test/execute/execute.json.test.js
 (JSON_EACH in FROM), src/parse/tokenize.js:49-57 (``123n`` literals),
 src/expression/binary.js:57-66 (case-insensitive LIKE)."""
 
+import json
 import math
 
 import pytest
@@ -462,6 +463,62 @@ def test_derived_column_names(spark):
         tables={"users": users},
     )
     assert res.columns == ["count_all", "upper_name", "age_+_1", "age_as_int"]
+    # the names are derived before any rewrite, from the statement text
+    # alone: no session is needed (None: the item stays unaliased)
+    for item, name in DERIVED_NAMES.items():
+        out = rewrite_reference_sql(f"SELECT {item} FROM t")
+        at = out.find(" AS `")
+        got = out[at + 5 : out.rindex("`")] if at >= 0 else None
+        assert got == name, (item, out)
+
+
+DERIVED_NAMES = {
+    "t.a.b": "b",
+    "arr[0].f": "f",
+    "arr['k']": "k",
+    "x[1][2]": "x[1][2]",
+    "-x": "-_x",
+    "NOT y": "NOT_y",
+    "NOT(y)": "NOT_y",
+    "a AND b": "a_AND_b",
+    "a || b": "a_||_b",
+    "(a+b)*c": "a_+_b_*_c",
+    "f(g(x), 'lit')": "f_g_x_lit",
+    "f (x)": "f_x",
+    "count(DISTINCT a)": "count_a",
+    "f(*)": "f_all",
+    "ROW_NUMBER() OVER (PARTITION BY a ORDER BY (b))": "row_number",
+    "lag(x) OVER (ORDER BY y) + 1": "lag_+_1",
+    "`weird col` + 1": "weird col_+_1",
+    "1.5e3": "1.5e3",
+    "1[0]": "1[0]",
+    "CASE WHEN a THEN 1 ELSE 2 END": None,
+    "CAST(x AS DECIMAL(10,2))": None,
+    "x IS NULL": None,
+    "a BETWEEN 1 AND 2": None,
+    "first_value(x) IGNORE NULLS OVER (ORDER BY y)": None,
+    "count(*) FILTER (WHERE x > 0)": None,
+}
+
+
+def test_month_interval_operand_is_the_value_before_the_sign(spark):
+    # a call (nested ones too), a subscript-and-field chain and a
+    # windowed call are whole operands of ``± INTERVAL n MONTH|YEAR``
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT id, coalesce(d, '2024-01-31') + INTERVAL 1 MONTH AS m,"
+            " coalesce(d, concat('2024-01-', '31')) + INTERVAL 1 MONTH"
+            " AS n, arr[0].d + INTERVAL 2 YEAR AS y, FIRST_VALUE(d) OVER"
+            " (ORDER BY id) - INTERVAL 1 MONTH AS w FROM t",
+            tables={"t": [
+                {"id": 1, "d": "2024-01-15", "arr": [{"d": "2024-01-15"}]}
+            ]},
+        )
+    )
+    assert [tuple(str(r[c]) for c in "mnyw") for r in rows] == [
+        ("2024-02-15", "2024-02-15", "2026-01-15", "2023-12-15")
+    ]
 
 
 def test_date_dialect_semantics(spark):
@@ -565,6 +622,37 @@ def test_memory_table_void_columns(spark):
 # Alias-chaining retries (execute.group / execute.orderby shapes Spark
 # rejects natively; engine retries with sqldialect.inline_select_aliases)
 # ---------------------------------------------------------------------------
+
+
+def test_chained_alias_retry_keeps_rewritten_aggregates(spark):
+    # the retry reads rewritten text: array_agg is collect_list there,
+    # and an aggregate is never wrapped in any_value
+    users = [
+        {"id": 1, "name": "A", "age": 30, "city": "X"},
+        {"id": 2, "name": "B", "age": 30, "city": "X"},
+        {"id": 3, "name": "C", "age": 30, "city": "Y"},
+        {"id": 4, "name": "D", "age": 40, "city": "Y"},
+        {"id": 5, "name": "E", "age": 40, "city": "Y"},
+        {"id": 6, "name": "F", "age": 50, "city": "Z"},
+    ]
+
+    def by_b(agg):
+        rows = execute_sql(
+            spark,
+            f"SELECT age AS a, a + 1 AS b, {agg} AS v FROM users GROUP BY b",
+            tables={"users": users},
+        ).collect()
+        return {r["b"]: r["v"] for r in rows}
+
+    names = by_b("array_agg(name)")
+    assert {b: sorted(v) for b, v in names.items()} == {
+        31: ["A", "B", "C"], 41: ["D", "E"], 51: ["F"],
+    }
+    assert by_b("mode(city)") == {31: "X", 41: "Y", 51: "Z"}
+    names = by_b("json_group_array(name)")
+    assert {b: sorted(json.loads(v)) for b, v in names.items()} == {
+        31: ["A", "B", "C"], 41: ["D", "E"], 51: ["F"],
+    }
 
 
 def test_group_by_chained_alias_retry(spark):
