@@ -50,7 +50,8 @@ SKIP_FILES = {
     "scan.test.js",        # scan instrumentation
     "streamingAggregate.test.js",  # memory instrumentation
     "trackingSource.js",   # helper, not a test
-    "expensive.test.js",   # perf fixtures (covered by bench.py)
+    "expensive.test.js",   # evaluation counts: tests/test_udf_registry.py
+                           # ::test_expensive_udf_evaluated_for_returned_rows_only
 }
 
 

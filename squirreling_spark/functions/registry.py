@@ -19,8 +19,9 @@ Laziness discipline (reference lazy cells, src/types.d.ts:62-70): Spark has
 no cell-level laziness, so expensive UDF columns must be attached AFTER
 filters/limits. Marking the UDF non-deterministic stops Catalyst from
 pushing it through filters or collapsing it into earlier projects — that is
-``expensive=True`` below. No test counts evaluations yet the way the
-reference's expensive.test.js does (ROADMAP item 6).
+``expensive=True`` below. ``tests/test_udf_registry.py`` counts
+evaluations the way the reference's expensive.test.js does; that count is
+a strict xfail until cells are lazy (ROADMAP item 6).
 """
 
 from __future__ import annotations

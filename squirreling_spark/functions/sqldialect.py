@@ -2319,17 +2319,41 @@ _MONTH_INTERVAL_RE = re.compile(
 )
 
 
+_CASE_END_RE = re.compile(r"\b(?:(CASE)|END)\b", re.I)
+
+
+def _cases(q: str) -> list[tuple[int, int]]:
+    """``(start, end)`` of every ``CASE … END`` outside strings. An END
+    closes the innermost open CASE at its bracket depth."""
+    s = _scan(q)
+    open_, out = [], []
+    for m in _CASE_END_RE.finditer(q):
+        i = m.start()
+        if s.mask[i]:
+            continue
+        if m.group(1):
+            open_.append(i)
+            continue
+        while open_ and s.depth[open_[-1]] > s.depth[i]:
+            open_.pop()  # a CASE left open inside a closed bracket
+        if open_ and s.depth[open_[-1]] == s.depth[i]:
+            out.append((open_.pop(), m.end()))
+    return out
+
+
 def _rewrite_month_intervals(q: str) -> str:
     """``x ± INTERVAL n MONTH|YEAR`` → ``add_months(x, ±n)``: the
     reference adds calendar months to ISO STRING dates too, which Spark's
     year-month interval arithmetic rejects on strings (add_months
-    coerces). ``x`` is the value (``_chains``) or windowed call ending
-    just before the sign; a sign with none, or whose value holds an
-    earlier rewrite, is left alone."""
+    coerces). ``x`` is the value (``_chains``), windowed call or ``CASE
+    … END`` ending just before the sign; a sign with none, or whose
+    value holds an earlier rewrite, is left alone."""
     mask = _scan(q).mask
     found = [m for m in _MONTH_INTERVAL_RE.finditer(q) if not mask[m.start()]]
-    # the end of a value → the start of the outermost one (a window's call)
+    # the end of a value → the start of the outermost one (a window's
+    # call, a CASE rather than its END)
     starts = {w.close + 1: w.start for w in (_windows(q) if found else ())}
+    starts.update({end: start for start, end in (_cases(q) if found else ())})
     for ch in _chains(q) if found else ():
         end = ch.steps[-1][2] if ch.steps else ch.base_end
         starts.setdefault(end, ch.start)

@@ -33,6 +33,7 @@ import re
 
 from .sqldialect import (
     _AGGREGATE_FUNCS,
+    _DQUOTE_RE,
     _PLAIN_NAME_RE,
     _branches,
     _bracket_is_literal,
@@ -813,25 +814,30 @@ def _validate_setop_names(q: str) -> None:
 
 def _validate_array_literals(q: str) -> None:
     """Reference array literals hold LITERAL elements only
-    (execute.unnest 'should reject non-literal elements')."""
-    mask, _, partner = _scan(q)
-    for i, ch in enumerate(q):
-        if ch != "[" or mask[i] or not _bracket_is_literal(q, i):
+    (execute.unnest 'should reject non-literal elements'). Every value
+    (``_chains``) inside a ``[..]`` literal must be a string, a number,
+    a group or TRUE/FALSE/NULL; an identifier, a call or a "..."
+    identifier is rejected."""
+    values = _chains(q)
+    for lit in values:
+        if lit.kind != "group" or q[lit.start] != "[":
             continue
-        j = partner[i]
-        if j < 0:
-            continue  # unbalanced: Spark will error
-        body = q[i + 1 : j]
-        # strip nested brackets and strings, then any identifier left
-        # (except TRUE/FALSE/NULL) is a non-literal element
-        stripped = re.sub(r"'(?:[^']|'')*'", "", body)
-        stripped = re.sub(r"[\[\]]", "", stripped)
-        for idm in re.finditer(r"[A-Za-z_]\w*", stripped):
-            if idm.group(0).upper() not in ("TRUE", "FALSE", "NULL"):
-                raise StrictDialectError(
-                    f"Array literal elements must be constant literals — "
-                    f'found "{idm.group(0)}" at position {i}'
-                )
+        found = [
+            (v.start, q[v.start : v.base_end].split("(")[0])
+            for v in values
+            if lit.start < v.start < lit.base_end and v.kind in ("ident", "call")
+        ] + [
+            (m.start(), m.group(1))
+            for m in _DQUOTE_RE.finditer(q, lit.start, lit.base_end)
+            if m.group(1) is not None
+        ]
+        found = [f for f in found if f[1].upper() not in ("TRUE", "FALSE", "NULL")]
+        if found:
+            name = min(found)[1].strip("`")
+            raise StrictDialectError(
+                f"Array literal elements must be constant literals — "
+                f'found "{name}" at position {lit.start}'
+            )
 
 
 def validate_reference_sql(

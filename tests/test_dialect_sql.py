@@ -521,6 +521,21 @@ def test_month_interval_operand_is_the_value_before_the_sign(spark):
     ]
 
 
+def test_month_interval_case_operand(spark):
+    # CASE … END is one operand, not the keyword END
+    rows = _rows(
+        execute_sql(
+            spark,
+            "SELECT CASE WHEN a THEN d END + INTERVAL 1 MONTH AS m FROM t",
+            tables={"t": [
+                {"a": True, "d": "2024-01-15"},
+                {"a": False, "d": "2024-01-15"},
+            ]},
+        )
+    )
+    assert sorted(str(r["m"]) for r in rows) == ["2024-02-15", "None"]
+
+
 def test_date_dialect_semantics(spark):
     data = [{"a": "2023-12-31", "b": "2024-01-01"}]
     rows = _rows(

@@ -287,7 +287,20 @@ def test_unbalanced_lateral_view_raises_what_loose_mode_raises(spark):
 
 def test_array_literal_elements():
     _rejects("SELECT [x + 1] AS arr FROM singleRow")
+    _rejects("SELECT [x, 2] AS arr FROM singleRow")
     _accepts("SELECT [1, 2, 3] AS arr FROM singleRow")
+
+
+def test_array_literal_numbers_with_exponents(spark):
+    # numbers are read as values, so the letters of an exponent are no
+    # identifiers
+    res = execute_sql(
+        spark,
+        "SELECT [1e5, 2] AS a, [1.5e-3] AS b FROM t",
+        tables={"t": [{"id": 1}]},
+        strict=True,
+    )
+    assert [(r["a"], r["b"]) for r in res.collect()] == [([1e5, 2.0], [1.5e-3])]
 
 
 @pytest.mark.parametrize(

@@ -87,6 +87,31 @@ def test_expensive_udf_invocation_count(spark):
     assert calls2.value == 0
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="UDF cells are not lazy: the UDF runs below the sort, on every row",
+)
+def test_expensive_udf_evaluated_for_returned_rows_only(spark):
+    """The reference's expensive.test.js count: an ``expensive=True`` UDF
+    over ``ORDER BY id LIMIT 3`` is evaluated for the 3 returned rows."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def rate(s):
+        calls.add(1)
+        return float(len(s))
+
+    res = execute_sql(
+        spark,
+        "SELECT id, RATE(name) AS r FROM data WHERE id > 0 ORDER BY id LIMIT 3",
+        tables={"data": [{"id": i, "name": f"n{i}"} for i in range(1, 41)]},
+        functions={
+            "RATE": FunctionSpec(apply=rate, return_type=DoubleType(), expensive=True)
+        },
+    )
+    assert [r["id"] for r in res.collect()] == [1, 2, 3]
+    assert calls.value == 3
+
+
 def test_expensive_udf_not_pushed_into_scan(spark):
     """Plan discipline replacing reference lazy cells: an expensive
     (non-deterministic) UDF projected after a filter must stay above the
