@@ -125,11 +125,13 @@ def _py_kind(v) -> str:
 # Columns whose rows mix scalar JS types (int and string, bool and int…)
 # have no native Spark type; they register as STRING columns of JSON text
 # ('10' for number 10, '"10"' for string '10', 'false' for false) with
-# this StructField metadata marker. The dialect layer rewrites the
-# operations the reference defines on dynamic columns (aggregate
-# numeric-skip, ORDER BY numeric coercion, WHERE truthiness, CAST) —
-# see sqldialect._rewrite_dynamic_typing. Reference: the memorySource's
-# per-row dynamic JS values (src/backend/dataSource.js:29-71).
+# this StructField metadata marker. One walker,
+# sqldialect._rewrite_dynamic_refs, reads every use of such a column
+# through the JS coercion of its position (numeric for aggregates, ORDER
+# BY, arithmetic and < >; loose == for = <> IN BETWEEN; truthiness for
+# WHERE/ON/HAVING and AND/OR/NOT; decoded for CAST), all defined in
+# sqldialect._dyn_view. Reference: the memorySource's per-row dynamic JS
+# values (src/backend/dataSource.js:29-71).
 DYNAMIC_COL_META = "sq_dynamic"
 
 _DYNAMIC_SCALAR_KINDS = {"int", "float", "str", "bool", "datetime", "date"}

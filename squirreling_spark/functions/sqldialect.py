@@ -25,9 +25,9 @@ text whose brackets do not balance is left for Spark to report.
    (src/parse/joins.js:219-241, a row-position zip);
 5. the date calls, ``_DATE_CALLS`` (src/expression/date.js);
 6. with a session, the dtype-directed rewrites: subscripts that are NULL
-   by static type, the dynamic-typing calls (array-family guards,
-   LEN/LENGTH of arrays, auto-stringify, dynamic-column aggregates,
-   CAST), then ORDER BY and WHERE on dynamic columns;
+   by static type, each read of a dynamic column in its position's view
+   (``_rewrite_dynamic_refs``), array-family guards, LEN/LENGTH of arrays,
+   auto-stringify and CAST (first, ``WHERE (b)`` loses its brackets);
 7. ``||`` re-associated below ``+`` (src/parse/expression.js:11-12);
 8. the function calls, ``_FUNCTION_CALLS`` (renames and argument-shape
    fixes), then typed literals, ``FORTNIGHT`` intervals, order-less rank
@@ -897,7 +897,7 @@ _LIKE_RE = re.compile(r"\bLIKE\b", re.I)
 
 
 def _rewrite_like_ci(q: str) -> str:
-    """LIKE → ILIKE (reference default; `functions/dialect.like_ci`)."""
+    """LIKE → ILIKE (the reference's default, binary.js:57-66)."""
     return _sub_outside_strings(q, _LIKE_RE, lambda m: "ILIKE")
 
 
@@ -1272,18 +1272,36 @@ def _is_dynamic_ref(spark, ref: str) -> bool:
     memory-table column that mixed scalar JS types — engine.py tags the
     StructField with DYNAMIC_COL_META)."""
     f = _ref_field(spark, ref.strip())
-    try:
-        return bool(f is not None and f.metadata.get("sq_dynamic"))
-    except Exception:  # noqa: BLE001 — metadata access is best-effort
-        return False
+    return bool(f is not None and f.metadata.get("sq_dynamic"))
 
 
-def _dyn_num(ref: str) -> str:
-    """Numeric view of a dynamic column: decode the JSON text
-    (get_json_object strips string quotes, passes number/bool literals
-    through) and TRY_CAST — non-numeric members become NULL, which is
-    exactly the reference's skip-non-numeric rule."""
-    return f"TRY_CAST(get_json_object({ref}, '$') AS DOUBLE)"
+def _dyn_view(ref: str, view: str, arg: str = "") -> str:
+    """The one definition of the reference's JS coercions on a dynamic
+    column (JSON text; ``dec`` strips a string member's quotes):
+    ``numeric`` is JS ``Number()`` with NaN read as NULL (booleans too);
+    ``loose`` is the side of a JS ``==`` against a value of kind ``arg``:
+    against a string the decoded text, against a number the numeric view
+    with a non-numeric member as NaN, equal to no number (a NULL member
+    stays NULL); ``truthy`` is JS truthiness (null, false, 0 and '' are
+    falsy, any other string is truthy); ``decoded`` is ``CAST(ref AS
+    arg)``, a numeric member cast to TIMESTAMP being epoch ms."""
+    dec = f"get_json_object({ref}, '$')"
+    num = f"TRY_CAST({dec} AS DOUBLE)"
+    if view == "numeric":
+        return num
+    if view == "loose":
+        return dec if arg == "string" else (
+            f"CASE WHEN {ref} IS NOT NULL"
+            f" THEN coalesce({num}, CAST('NaN' AS DOUBLE)) END")
+    if view == "truthy":
+        return (f"(CASE WHEN {ref} IS NULL OR {ref} IN ('null','false','\"\"')"
+                f" THEN FALSE WHEN {ref} NOT LIKE '\"%' AND {num} IS NOT NULL"
+                f" THEN {num} <> 0.0D ELSE TRUE END)")
+    if arg == "TIMESTAMP":
+        return (f"CASE WHEN {ref} NOT LIKE '\"%' AND {num} IS NOT NULL"
+                f" THEN timestamp_millis(CAST({num} AS BIGINT))"
+                f" ELSE CAST({dec} AS TIMESTAMP) END")
+    return f"CAST({dec} AS {arg})"
 
 
 # ---------------------------------------------------------------------------
@@ -1578,73 +1596,155 @@ def _rewrite_orderless_windows(q: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Dynamic typing: the reference evaluates JS values per row, so an array
-# function applied to a string/number/null COLUMN yields null per row
-# (evaluate.js:574-618 guards every ARRAY_* with `if (!Array.isArray(x))
-# return null`), and a subscript on a non-array yields null
-# (evaluate.js:140-146). Spark's analyzer rejects those statically — with
-# the column dtype resolvable we fold the reference's answer (NULL for
-# every row) at rewrite time instead.
+# Dynamic typing: the reference evaluates JS values per row. An array
+# function or a subscript on a non-array column is null per row
+# (evaluate.js:140-146, 574-618), which Spark rejects statically, so the
+# NULL is folded in from the column dtype; a mixed-type column is read
+# through the coercion of the JS operator around it (``_dyn_view``).
 # ---------------------------------------------------------------------------
 
-_OB_ITEM_RE = re.compile(
-    r"([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?|`[^`]+`\.[A-Za-z_]\w*)"
-    r"(\s+(?:ASC|DESC))?(\s+NULLS\s+(?:FIRST|LAST))?",
-    re.I,
+_TOKEN = r"<=>|<>|!=|<=|>=|==|\|\||::|->>?|[-+*/%<>=(),;]|\w+"
+_PREV_TOKEN_RE = re.compile(rf"({_TOKEN})\s*\Z")
+_NEXT_TOKEN_RE = re.compile(rf"\s*({_TOKEN})?")
+_SIGN_RE = re.compile(r"\s*[-+(]?\s*")
+_CAST_TAIL_RE = re.compile(r"\s+AS\s+([A-Za-z]+)\s*", re.I)
+_ORDER_TAIL_RE = re.compile(
+    r"(?:\s+(?:ASC|DESC))?(?:\s+NULLS\s+(?:FIRST|LAST))?", re.I
 )
+_ORDERING = frozenset({"<", "<=", ">", ">="})
+_COMPARISONS = _ORDERING | {"=", "==", "<>", "!="}
+# operators that bind an operand tighter than AND, OR and NOT do
+_TIGHTER = frozenset("IS IN NOT BETWEEN LIKE ILIKE RLIKE REGEXP ESCAPE"
+                     " COLLATE || ::".split())
 
 
-def _rewrite_dynamic_orderby(q: str, spark) -> str:
-    """ORDER BY on a bare DYNAMIC column → numeric coercion
-    (``TRY_CAST(get_json_object(c,'$') AS DOUBLE)``): the reference's
-    dynamic comparator is the JS ``<`` operator, which coerces the
-    string '5' to the number 5 against numeric members
-    (execute.orderby.test.js 'should sort mixed types'). The ORDER BY
-    lists are each statement's (``_selects``), each window's
-    (``_windows``) and each call's own, ``array_agg(x ORDER BY y)``
-    (``_spec``; ``WITHIN GROUP (...)`` reads as a call)."""
-    if "ORDER" not in q.upper():
+def _rewrite_dynamic_refs(q: str, spark) -> str:
+    """The one walker over dynamic-column reads: each plain ``col`` or
+    ``tbl.col`` value (``_chains``) that ``_is_dynamic_ref`` resolves
+    becomes the ``_dyn_view`` its position asks for (src/expression/
+    binary.js). numeric: the sole argument of SUM/AVG/MIN/MAX, an ORDER
+    BY item, an operand of ``+ - * / %``, or of ``< <= > >=`` against a
+    number. loose: an operand of ``= <> !=``, an IN or BETWEEN subject,
+    an operand of ``< <= > >=`` against a string; the other side's kind
+    is its first value's (a literal or a non-dynamic column), and a read
+    against anything else stays. truthy: a whole WHERE, HAVING or ON
+    condition, an operand of AND, OR or NOT. decoded: ``CAST(col AS T)``.
+    ``(col)`` is read where its outermost bracket stands. Other reads (a
+    select item, NULLIF, GROUP BY) stay JSON text."""
+    from pyspark.sql import types as T
+
+    views = _resolution_views(spark).values()
+    if not any(f.metadata.get("sq_dynamic") for s in views for f in s.fields):
         return q
-    partner = _scan(q).partner
-    lists = {
-        order[0]: order for _, _, _, end in _iter_calls(q)
-        if (order := _spec(q, partner[end - 1])[1])
+    partner, chains = _scan(q).partner, _chains(q)
+
+    def end_of(ch):
+        return ch.steps[-1][2] if ch.steps else ch.base_end
+
+    starts = {ch.start: ch for ch in chains}
+    ends = {end_of(ch): ch for ch in reversed(chains)}  # the outermost wins
+
+    def prev(i):  # (token before i, upper-cased, and its start)
+        m = _PREV_TOKEN_RE.search(q, max(0, i - 64), i)
+        return (m.group(1).upper(), m.start(1)) if m else ("", i)
+
+    def nxt(i):  # (token after i, upper-cased, its start and its end)
+        m = _NEXT_TOKEN_RE.match(q, i)
+        return (m.group(1) or "").upper(), m.start(1), m.end()
+
+    def kind(ch):  # "number", "string" or None: what a comparison reads
+        if ch is None or ch.kind in ("number", "string"):
+            return ch and ch.kind
+        f = ch.kind == "ident" and _ref_field(spark, q[ch.start : end_of(ch)])
+        dt = f and not f.metadata.get("sq_dynamic") and f.dataType
+        if isinstance(dt, (T.NumericType, T.StringType)):
+            return "number" if isinstance(dt, T.NumericType) else "string"
+        return None
+
+    def after(i):  # the value after i and an optional sign or "("
+        return starts.get(_SIGN_RE.match(q, i).end())
+
+    def between_and(i):  # the AND at i ends a BETWEEN's lower bound
+        lo = ends.get(len(q[:i].rstrip()))
+        tok, at = prev(lo.start) if lo else ("", i)
+        return (prev(at)[0] if tok in ("-", "+") else tok) == "BETWEEN"
+
+    conds = {it.on for it in _from_items(q)} | {
+        sel.clauses.get(c, ())[1:] for sel in _selects(q)
+        for c in ("WHERE", "HAVING")
     }
-    lists.update({w.order[0]: w.order for w in _windows(q) if w.order})
-    lists.update({
-        sel.clauses["ORDER BY"][1]: sel.clauses["ORDER BY"][1:]
-        for sel in _selects(q) if "ORDER BY" in sel.clauses
-    })
-    items = []
-    for start, end in lists.values():
-        cuts = [start - 1, *_top_commas(q, start, end), end]
-        items += [(a + 1, b) for a, b in zip(cuts, cuts[1:])]
-    for a, b in sorted(items, reverse=True):
-        im = _OB_ITEM_RE.fullmatch(q[a:b].strip())
-        if im and _is_dynamic_ref(spark, im.group(1)):
-            ref = im.group(1)
-            q = q[:a] + q[a:b].replace(ref, _dyn_num(ref), 1) + q[b:]
-    return q
-
-
-def _rewrite_dynamic_where_truthy(q: str, spark) -> str:
-    """``WHERE dyncol`` (a statement's whole WHERE is one bare DYNAMIC
-    column) → JS truthiness over the JSON text: null/false/0/'' are
-    falsy, any JSON string (even '"0"') is truthy, numbers by ≠ 0
-    (execute.test.js 'should handle falsy values in WHERE clause')."""
-    wheres = [sel.clauses.get("WHERE") for sel in _selects(q)]
-    for _, start, end in sorted(filter(None, wheres), reverse=True):
-        ref = q[start:end]
-        if not _REF_RE.fullmatch(ref) or not _is_dynamic_ref(spark, ref):
+    orders = {}
+    if "ORDER" in q.upper():
+        lists = [_spec(q, partner[end - 1])[1] for *_, end in _iter_calls(q)]
+        lists += [w.order for w in _windows(q)]
+        lists += [sel.clauses.get("ORDER BY", ())[1:] for sel in _selects(q)]
+        for start, end in filter(None, lists):
+            cuts = [start - 1, *_top_commas(q, start, end), end]
+            orders.update(_trim(q, x + 1, y) for x, y in zip(cuts, cuts[1:]))
+    edits = []
+    for ch in chains:
+        a, b = span = ch.start, end_of(ch)
+        ref, view, arg = q[a:b], None, ""
+        if ch.kind != "ident" or any(op != "." for op, _, _ in ch.steps) \
+                or not _is_dynamic_ref(spark, ref):
             continue
-        num = _dyn_num(ref)
-        cond = (
-            f"(CASE WHEN {ref} IS NULL OR {ref} IN ('null','false','\"\"')"
-            f" THEN FALSE WHEN {ref} NOT LIKE '\"%' AND {num} IS NOT NULL"
-            f" THEN {num} <> 0.0D ELSE TRUE END)"
-        )
-        q = q[:start] + cond + q[end:]
+        (p, pi), (n, ni, nj) = prev(a), nxt(b)
+        while partner[pi] == ni >= 0 and starts.get(pi, ch).kind == "group":
+            a, b = pi, nj
+            (p, pi), (n, ni, nj) = prev(a), nxt(b)
+        call = prev(pi)[0] if p == "(" else ""
+        if call in ("SUM", "AVG", "MIN", "MAX") and partner[pi] == ni >= 0:
+            view = "numeric"
+        elif call == "CAST" and (
+            tail := _CAST_TAIL_RE.fullmatch(q, b, partner[pi])
+        ):
+            span = prev(pi)[1], partner[pi] + 1
+            view, arg = "decoded", tail.group(1).upper()
+        elif a in orders and _ORDER_TAIL_RE.fullmatch(q, b, orders[a]):
+            view = "numeric"
+        elif p in ("+", "-", "*", "/", "%") or n in ("+", "-", "*", "/", "%"):
+            view = "numeric"
+        elif p in _COMPARISONS or n in _COMPARISONS:
+            op, arg = (n, kind(after(nj))) if n in _COMPARISONS else (
+                p, kind(ends.get(len(q[:pi].rstrip())))
+            )
+            view = arg and (
+                "numeric" if op in _ORDERING and arg == "number" else "loose"
+            )
+        elif n in ("IN", "BETWEEN") or n == "NOT" and (
+            nxt(nj)[0] in ("IN", "BETWEEN")
+        ):
+            arg = kind(after(nxt(nj)[2] if n == "NOT" else nj))
+            view = arg and "loose"
+        elif (a, b) in conds or (
+            p in ("AND", "OR", "NOT") and not (p == "AND" and between_and(pi))
+            and n not in _TIGHTER
+        ) or (n in ("AND", "OR") and p not in _TIGHTER):
+            view = "truthy"
+        if view:
+            edits.append((*span, _dyn_view(ref, view, arg)))
+    for start, end, text in sorted(edits, reverse=True):
+        q = q[:start] + text + q[end:]
     return q
+
+
+_WHERE_GROUP_RE = re.compile(r"\bWHERE\s*\(", re.I)
+
+
+def _unwrap_where_groups(q: str) -> str:
+    """``WHERE (cond)`` → ``WHERE cond`` when the whole WHERE clause
+    (``_selects``) is one bracketed group and no subquery: Spark reads
+    ``FROM t WHERE (b)`` as the alias WHERE with a column list."""
+    partner, chars = _scan(q).partner, list(q)
+    for sel in _selects(q):
+        _, a, b = sel.clauses.get("WHERE", (0, 0, 0))
+        while b > a and q[a] == "(" and partner[a] == b - 1:
+            inner = _trim(q, a + 1, b - 1)
+            if _HEAD_RE.match(q, inner[0]):
+                break
+            chars[a] = chars[b - 1] = " "
+            a, b = inner
+    return "".join(chars)
 
 
 def _rewrite_dynamic_typing(q: str, spark=None) -> str:
@@ -1713,20 +1813,6 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
 
         return build
 
-    # --- JSON-text DYNAMIC columns (engine._infer_memory_schema tags
-    # memory-table columns that mix scalar JS types; values are JSON
-    # text: '10' vs '"10"' vs 'false'). The reference's operations on
-    # dynamic values (src/expression/evaluate.js): aggregates skip
-    # non-numeric members; ORDER BY coerces numerically (JS < coercion);
-    # a bare WHERE column is JS truthiness; CAST decodes first.
-    def dyn_agg(fname: str):
-        def build(args):
-            if len(args) != 1 or not _is_dynamic_ref(spark, args[0].strip()):
-                return None
-            return f"{fname}({_dyn_num(args[0].strip())})"
-
-        return build
-
     # CAST dialect: JS Number(Date) is epoch MILLISECONDS (evaluate.js:
     # 707-726 casts primitives-and-Dates; Number coercion of a Date is
     # getTime()), and CAST(object AS STRING) is JSON.stringify
@@ -1738,18 +1824,6 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
         if not m:
             return None
         ref, target = m.group(1).strip(), m.group(2).upper()
-        if _is_dynamic_ref(spark, ref):
-            dec = f"get_json_object({ref}, '$')"
-            if target == "TIMESTAMP":
-                # a numeric dynamic member is epoch ms (JS new Date(ms));
-                # string members cast as timestamp text
-                return (
-                    f"CASE WHEN {ref} NOT LIKE '\"%' AND"
-                    f" {_dyn_num(ref)} IS NOT NULL"
-                    f" THEN timestamp_millis(CAST({_dyn_num(ref)} AS"
-                    f" BIGINT)) ELSE CAST({dec} AS TIMESTAMP) END"
-                )
-            return f"CAST({dec} AS {target})"
         # CAST(number AS TIMESTAMP) is new Date(ms) in the reference
         # (evaluate.js:729-737) — Spark reads integral casts as SECONDS.
         # Numeric operands: resolved numeric column, numeric literal, or
@@ -1796,12 +1870,9 @@ def _rewrite_dynamic_typing(q: str, spark=None) -> str:
         "LENGTH": array_size,
         **{f: stringify_first(f.lower())
            for f in ("LOWER", "UPPER", "SUBSTR", "SUBSTRING", "TRIM")},
-        **{f: dyn_agg(f.lower()) for f in ("SUM", "AVG", "MIN", "MAX")},
         "CAST": cast_dialect,
     }
-    q = _rewrite_calls(q, table)
-    q = _rewrite_dynamic_orderby(q, spark)
-    return _rewrite_dynamic_where_truthy(q, spark)
+    return _rewrite_calls(_rewrite_dynamic_refs(q, spark), table)
 
 
 # Keywords that bound a concat operand at its own nesting depth
@@ -2621,8 +2692,10 @@ def inline_select_aliases(q: str) -> str | None:
             parts = []
             for p in _split_top_args(q[start:end]):
                 # a whole-key alias is Spark-native
-                bare = _OB_ITEM_RE.fullmatch(p)
-                whole = bare and bare.group(1) in amap
+                bare = _PLAIN_NAME_RE.match(p)
+                whole = bare and bare.group() in amap and (
+                    _ORDER_TAIL_RE.fullmatch(p, bare.end())
+                )
                 parts.append(p if whole else _alias_sub(p, amap))
             edits[start, end] = ", ".join(parts)
     for it, expr in aliased:
@@ -2792,6 +2865,8 @@ def _rewrite_reference_sql_inner(
             raise ValueError("POSITIONAL JOIN rewrite needs a SparkSession")
         query = _rewrite_positional_join(query, spark, pos_order)
     query = _rewrite_calls(query, _DATE_CALLS)
+    if _WHERE_GROUP_RE.search(query):
+        query = _unwrap_where_groups(query)
     if spark is not None:
         if "[" in query:
             query = _rewrite_dynamic_access(query, spark)

@@ -140,8 +140,8 @@ def null_semantics(spark, sf):
     """NULL handling matrix: IS [NOT] NULL, null propagation through
     arithmetic, three-valued comparison logic, aggregate null-skipping
     (reference deviates on comparisons — x = NULL → false,
-    src/expression/binary.js:33-35 — available via dialect.cmp_null_false;
-    the engine default follows standard SQL, which the oracle checks)."""
+    src/expression/binary.js:33-35; the engine follows standard SQL,
+    which the oracle checks)."""
     o = t(spark, sf, "orders")
     x = F.when(F.col("o_orderstatus") == "P", F.lit(None)).otherwise(
         F.col("o_totalprice")

@@ -451,6 +451,60 @@ def test_dynamic_typing_ignores_views_of_earlier_calls(spark, query, expected):
     assert rows == expected
 
 
+_AGES = [
+    {"id": 1, "age": 25}, {"id": 2, "age": "40"},
+    {"id": 3, "age": 35}, {"id": 4, "age": "x"},
+]
+_FLAGS = [
+    {"id": 1, "value": 0}, {"id": 2, "value": 1},
+    {"id": 3, "value": False}, {"id": 4, "value": True},
+]
+
+
+@pytest.mark.parametrize(
+    "select, rows, expected",
+    [
+        # JS Number() coercion: "40" is 40, "x" is NaN and never ordered
+        ("id FROM t WHERE age >= 30", _AGES, [2, 3]),
+        ("id FROM t WHERE 30 <= age", _AGES, [2, 3]),
+        ("id FROM t WHERE age BETWEEN 30 AND 45", _AGES, [2, 3]),
+        # loose ==: numbers as numbers, a string member against a string
+        # as text; <> is NOT of it, so "x" <> 25 holds
+        ("id FROM t WHERE age = 40", _AGES, [2]),
+        ("id FROM t WHERE age = '40'", _AGES, [2]),
+        ("id FROM t WHERE age = 'x'", _AGES, [4]),
+        ("id FROM t WHERE age IN (40, 25)", _AGES, [1, 2]),
+        ("id FROM t WHERE age <> 25", _AGES, [2, 3, 4]),
+        ("age * 2 AS id FROM t", _AGES, [None, 50, 70, 80]),
+        # JS truthiness wherever a condition is read
+        ("id FROM t WHERE (value)", _FLAGS, [2, 4]),
+        ("id FROM t WHERE value AND id > 0", _FLAGS, [2, 4]),
+        ("id FROM t WHERE NOT value", _FLAGS, [1, 3]),
+    ],
+)
+def test_dynamic_column_reads_follow_js_coercion(
+    spark, select, rows, expected
+):
+    got = execute_sql(spark, f"SELECT {select}", tables={"t": rows}).collect()
+    ids = sorted((r["id"] for r in got), key=lambda v: (v is not None, v))
+    assert ids == expected
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT id FROM t WHERE (b)",
+        "SELECT id FROM (SELECT * FROM t) WHERE (b)",
+    ],
+)
+def test_where_of_one_bracketed_group(spark, query):
+    # Spark alone reads `FROM t WHERE (b)` as the alias WHERE with a
+    # column list
+    table = [{"id": 1, "b": True}, {"id": 2, "b": False}]
+    rows = execute_sql(spark, query, tables={"t": table}).collect()
+    assert rows == [{"id": 1}]
+
+
 def test_execute_sql_on_table_map_launches_no_job(spark, monkeypatch):
     """Dialect resolution reads the call's table map: planning a
     dynamic-typing statement over memory tables runs no Spark job (the
