@@ -19,6 +19,9 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
+import hashlib
+import os
+import pickle
 import re
 import threading
 import uuid
@@ -30,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from squirreling_spark.functions.registry import FunctionSpec, register_functions
 from squirreling_spark.qutil import local_df
-from squirreling_spark.tables import _source
+from squirreling_spark.tables import _signature, _source
 
 
 class QueryError(Exception):
@@ -277,13 +280,103 @@ def _coerce_row(row: dict, schema) -> tuple:
     return tuple(out)
 
 
+# The session attribute holding its execute_sql namespace (one per
+# SparkSession object, as sqlregistry tags its function pack).
+_NAMESPACE = "_squirreling_namespace"
+
+
+@dataclass
+class _Entry:
+    """One table name's relation in a session's execute_sql namespace,
+    kept under ``key``: the path and its ``tables._signature`` for a
+    parquet path; the inferred schema and a digest of the coerced rows
+    for a memory table, whose ``rows`` are kept too for ``numbered``."""
+
+    key: tuple
+    df: DataFrame
+    schema: Any
+    rows: list | None = None
+    _numbered: DataFrame | None = None
+
+    def numbered(self) -> DataFrame:
+        """The memory table's rows with their 1-based list index in
+        ``_RN`` (the reference zips arrays by index), built once."""
+        if self._numbered is None:
+            from pyspark.sql import types as T
+
+            from squirreling_spark.operators.positional_join import _RN
+
+            schema = T.StructType(
+                self.schema.fields + [T.StructField(_RN, T.LongType(), False)]
+            )
+            self._numbered = local_df(
+                self.df.sparkSession,
+                [r + (i,) for i, r in enumerate(self.rows, 1)],
+                schema,
+            )
+        return self._numbered
+
+
+def _namespace(spark: SparkSession) -> dict[str, _Entry]:
+    """The session's execute_sql namespace: {table name: _Entry}."""
+    ns = getattr(spark, _NAMESPACE, None)
+    if ns is None:
+        ns = {}
+        setattr(spark, _NAMESPACE, ns)
+    return ns
+
+
+def _parquet_entry(spark: SparkSession, ns: dict, name: str, path: str):
+    """The namespace's relation for ``name`` over the parquet ``path``,
+    read again (its schema inferred once per file state, as
+    ``tables.source`` does) when the path's signature changed."""
+    key = os.path.abspath(path)
+    signature = _signature(spark, key)
+    entry = ns.get(name)
+    if signature is not None and entry is not None and entry.key == (
+        key, signature
+    ):
+        return entry
+    df, schema = _source(spark, path, signature)
+    entry = _Entry((key, signature), df, schema)
+    if signature is not None:
+        ns[name] = entry
+    return entry
+
+
+def _memory_entry(spark: SparkSession, ns: dict, name: str, rows: list):
+    """The namespace's relation for ``name`` over the list-of-dicts
+    ``rows`` (reference memorySource, src/backend/dataSource.js:29-71),
+    built again when its inferred schema or coerced rows changed: an
+    in-place change to the list is a miss. Every row is typed by
+    _infer_memory_schema (all-null columns as void, which Spark's
+    sampler would reject) and loaded through qutil.local_df as an
+    Arrow-built LocalRelation, so scans of the table never start Python
+    workers."""
+    schema = _infer_memory_schema(rows)
+    coerced = [_coerce_row(r, schema) for r in rows]
+    # pickle tells apart what == would not (0.0 and -0.0)
+    digest = hashlib.blake2b(pickle.dumps(coerced, protocol=5)).digest()
+    entry = ns.get(name)
+    if entry is None or entry.key != (schema, digest):
+        entry = _Entry((schema, digest), local_df(spark, coerced, schema),
+                       schema, coerced)
+        ns[name] = entry
+    return entry
+
+
 def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
     """Register each table-map entry as a temp view under its own name
     and return {table name: schema} — the namespace the dialect rewrites
-    resolve column references against. A name that is not a plain
-    identifier (``dataset.parquet`` is one flat name in the reference's
-    table map) registers backtick-quoted; the rewrite quotes it in the
-    query text to match (``sqldialect._quote_table_names``)."""
+    resolve column references against. Memory tables and parquet paths
+    reuse the relation the session's namespace built for that name in an
+    earlier call while its rows or file state are unchanged; the view
+    is registered on every call, so the call's map wins over a view
+    registered in between. A name that is not a plain identifier
+    (``dataset.parquet`` is one flat name in the reference's table map)
+    registers backtick-quoted; the rewrite quotes it in the query text
+    to match (``sqldialect._quote_table_names``)."""
+    ns = _namespace(spark)
     schemas = {}
     for name, source in tables.items():
         schema = None
@@ -296,19 +389,11 @@ def _register_tables(spark: SparkSession, tables: dict[str, Any]) -> dict:
             elif source.endswith(".json") or source.endswith(".jsonl"):
                 df = spark.read.json(source)
             else:
-                # schema inferred once per file state (tables.source)
-                df, schema = _source(spark, source)
+                entry = _parquet_entry(spark, ns, name, source)
+                df, schema = entry.df, entry.schema
         elif isinstance(source, list):
-            # list-of-dicts in-memory table (reference memorySource,
-            # src/backend/dataSource.js:29-71). Every row is typed by
-            # _infer_memory_schema (all-null columns as void, which
-            # Spark's sampler would reject) and loaded through
-            # qutil.local_df as an Arrow-built LocalRelation, so scans
-            # of the table never start Python workers.
-            schema = _infer_memory_schema(source)
-            df = local_df(
-                spark, [_coerce_row(r, schema) for r in source], schema
-            )
+            entry = _memory_entry(spark, ns, name, source)
+            df, schema = entry.df, entry.schema
         else:
             raise TypeError(f"unsupported table source for {name!r}: {type(source)}")
         plain = re.fullmatch(r"[A-Za-z_]\w*", name)
@@ -459,13 +544,24 @@ def execute_sql(
     `` `dataset.parquet` ``: the rewrite backtick-quotes the FROM items
     and ``"..."`` identifiers that name it, never a string literal.
 
-    A parquet path's schema is always cached: ``tables.source`` infers it
-    once per file state and parquet settings, so a repeat call over an
-    unchanged file runs no schema-inference job. Rows are never cached
-    unless asked: ``cache_tables`` memoizes the named tables' data
-    across queries (``df.cache()`` — the reference's cachedDataSource
-    cell memoization, src/backend/dataSource.js:80-129, at DataFrame
-    granularity) until ``spark.catalog.clearCache()``."""
+    Each SparkSession keeps one execute_sql namespace, one entry per
+    table name, as the reference's cachedDataSource memoizes its sources
+    (src/backend/dataSource.js:80-129). A memory table's Arrow-built
+    relation is reused while its inferred schema and coerced rows are
+    unchanged (an in-place change to the list is a miss); a parquet
+    path's relation is reused while its file state and parquet settings
+    are (``tables.source`` infers the schema once per such state, so no
+    call over an unchanged file runs a schema-inference job). CSV/JSON
+    paths and DataFrames are registered as given. The views are
+    registered on every call, so the call's map wins over views
+    registered in between; UDFs likewise (``register_functions``
+    compiles each name and spec once per session). A POSITIONAL JOIN
+    side that is a memory table without a ``pos_order`` key is numbered
+    by list index on the driver. Rows are never cached unless asked:
+    ``cache_tables`` memoizes the named tables' data across queries
+    (``df.cache()`` — the reference's cachedDataSource cell memoization,
+    src/backend/dataSource.js:80-129, at DataFrame granularity) until
+    ``spark.catalog.clearCache()``."""
     from squirreling_spark.functions.sqldialect import (
         drop_scratch_views,
         ref_resolution_cache,
@@ -481,9 +577,15 @@ def execute_sql(
         spark.catalog.cacheTable(name)
     if functions:
         register_functions(spark, functions)
+    ns = _namespace(spark)
+    numbered = {
+        name.lower(): ns[name].numbered
+        for name, source in (tables or {}).items()
+        if isinstance(source, list)
+    }
     # Column references resolve against the call's table map only (no
     # map: one snapshot of the session's temp views).
-    with ref_resolution_cache(views):
+    with ref_resolution_cache(views, numbered):
         if strict:
             from squirreling_spark.functions.sqlstrict import (
                 strict_guards,

@@ -7,8 +7,9 @@ async scalar UDFs callable anywhere an expression goes; the README's flagship
 example is an LLM call per row (README.md:79-94).
 
 Spark-first mapping:
-- sync Python callables → ``pandas_udf`` when vectorizable (Arrow batches,
-  ~10-100× row-at-a-time), plain ``udf`` otherwise.
+- sync Python callables → a ``pandas_udf`` (Arrow batches): with
+  ``vectorized=True`` ``apply`` takes and returns pandas Series,
+  otherwise it is called once per row inside the batch.
 - **async** callables (LLM/API calls) → a pandas_udf that drives an asyncio
   event loop per Arrow batch with bounded concurrency: the Spark analogue of
   the reference's event-loop Promise batching. Each executor batch issues up
@@ -28,7 +29,7 @@ from __future__ import annotations
 
 import asyncio
 import inspect
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Any, Callable
 
 import pandas as pd
@@ -154,15 +155,34 @@ def make_udf(spec: FunctionSpec, name: str = "<udf>"):
     return checked
 
 
+# The session attribute holding its compiled UDFs: {name: (spec, JVM
+# function)}.
+_COMPILED = "_squirreling_udfs"
+
+
 def register_functions(
     spark: SparkSession, functions: dict[str, FunctionSpec | Callable]
 ) -> None:
-    """Register UDFs for SQL use (reference evaluate.js:687-694 lookup)."""
+    """Register UDFs for SQL use (reference evaluate.js:687-694 lookup).
+    Each session compiles a name's spec once (``make_udf``, then the
+    pickled JVM function ``spark.udf.register`` builds) and keeps it
+    until the name comes with a spec that is not equal. Every call
+    registers the kept JVM function under its name again, so the call's
+    map wins over a function registered under that name in between."""
+    compiled = getattr(spark, _COMPILED, None)
+    if compiled is None:
+        compiled = {}
+        setattr(spark, _COMPILED, compiled)
     for name, spec in functions.items():
         if not isinstance(spec, FunctionSpec):
             spec = FunctionSpec(apply=spec)
-        compiled = make_udf(spec, name=name)
-        spark.udf.register(name, getattr(compiled, "__wrapped_udf__", compiled))
+        hit = compiled.get(name)
+        if hit is not None and hit[0] == spec:
+            spark._jsparkSession.udf().registerPython(name, hit[1])
+            continue
+        udf = make_udf(spec, name=name).__wrapped_udf__
+        # a copy: a spec changed in place afterwards is not equal to it
+        compiled[name] = (replace(spec), spark.udf.register(name, udf)._judf)
 
 
 def register_udtf(spark: SparkSession, name: str, cls, return_type: str) -> None:

@@ -1137,9 +1137,14 @@ _REF_CACHE = threading.local()
 
 
 @contextlib.contextmanager
-def ref_resolution_cache(views: dict | None = None):
+def ref_resolution_cache(
+    views: dict | None = None, numbered: dict | None = None
+):
     """Resolve column references inside the block against one snapshot.
-    ``views`` ({view name: schema}) is the namespace when given.
+    ``views`` ({view name: schema}) is the namespace when given, and
+    ``numbered`` ({lower-cased table name: callable}) gives the tables
+    of that namespace whose row positions are known on the driver: the
+    callable returns the table with its 1-based position in ``_RN``.
     Otherwise an enclosing block's snapshot is reused, or the session's
     temp views are snapshotted on first use — multi-statement digests
     wrap their statements so that one snapshot serves them all, which is
@@ -1150,6 +1155,7 @@ def ref_resolution_cache(views: dict | None = None):
         yield
         return
     _REF_CACHE.c = {} if views is None else {"views": dict(views)}
+    _REF_CACHE.c["numbered"] = numbered or {}
     try:
         yield
     finally:
@@ -1281,8 +1287,9 @@ def _dyn_view(ref: str, view: str, arg: str = "") -> str:
     ``numeric`` is JS ``Number()`` with NaN read as NULL (booleans too);
     ``loose`` is the side of a JS ``==`` against a value of kind ``arg``:
     against a string the decoded text, against a number the numeric view
-    with a non-numeric member as NaN, equal to no number (a NULL member
-    stays NULL); ``truthy`` is JS truthiness (null, false, 0 and '' are
+    with a boolean member as 1 or 0 (JS ``true == 1``) and any other
+    non-numeric member as NaN, equal to no number (a NULL member stays
+    NULL); ``truthy`` is JS truthiness (null, false, 0 and '' are
     falsy, any other string is truthy); ``decoded`` is ``CAST(ref AS
     arg)``, a numeric member cast to TIMESTAMP being epoch ms."""
     dec = f"get_json_object({ref}, '$')"
@@ -1291,8 +1298,9 @@ def _dyn_view(ref: str, view: str, arg: str = "") -> str:
         return num
     if view == "loose":
         return dec if arg == "string" else (
-            f"CASE WHEN {ref} IS NOT NULL"
-            f" THEN coalesce({num}, CAST('NaN' AS DOUBLE)) END")
+            f"CASE WHEN {ref} IS NOT NULL THEN coalesce({num},"
+            f" CASE {ref} WHEN 'true' THEN 1.0D WHEN 'false' THEN 0.0D END,"
+            " CAST('NaN' AS DOUBLE)) END")
     if view == "truthy":
         return (f"(CASE WHEN {ref} IS NULL OR {ref} IN ('null','false','\"\"')"
                 f" THEN FALSE WHEN {ref} NOT LIKE '\"%' AND {num} IS NOT NULL"
@@ -1628,7 +1636,8 @@ def _rewrite_dynamic_refs(q: str, spark) -> str:
     an operand of ``< <= > >=`` against a string; the other side's kind
     is its first value's (a literal or a non-dynamic column), and a read
     against anything else stays. truthy: a whole WHERE, HAVING or ON
-    condition, an operand of AND, OR or NOT. decoded: ``CAST(col AS T)``.
+    condition, a whole WHEN condition of a searched CASE, an operand of
+    AND, OR or NOT. decoded: ``CAST(col AS T)``.
     ``(col)`` is read where its outermost bracket stands. Other reads (a
     select item, NULLIF, GROUP BY) stay JSON text."""
     from pyspark.sql import types as T
@@ -1673,6 +1682,17 @@ def _rewrite_dynamic_refs(q: str, spark) -> str:
         sel.clauses.get(c, ())[1:] for sel in _selects(q)
         for c in ("WHERE", "HAVING")
     }
+    cases = _cases(q) if "WHEN" in q.upper() else []
+
+    def when_cond(i):  # the WHEN at i belongs to a searched CASE (CASE
+        # WHEN cond ...), not to a simple one (CASE x WHEN value ...)
+        depth = _scan(q).depth
+        owner = max(
+            (a for a, b in cases if a < i < b and depth[a] == depth[i]),
+            default=None,
+        )
+        return owner is not None and nxt(owner + 4)[0] == "WHEN"
+
     orders = {}
     if "ORDER" in q.upper():
         lists = [_spec(q, partner[end - 1])[1] for *_, end in _iter_calls(q)]
@@ -1716,7 +1736,8 @@ def _rewrite_dynamic_refs(q: str, spark) -> str:
         ):
             arg = kind(after(nxt(nj)[2] if n == "NOT" else nj))
             view = arg and "loose"
-        elif (a, b) in conds or (
+        elif (a, b) in conds or (p == "WHEN" and n == "THEN"
+                                 and when_cond(pi)) or (
             p in ("AND", "OR", "NOT") and not (p == "AND" and between_and(pi))
             and n not in _TIGHTER
         ) or (n in ("AND", "OR") and p not in _TIGHTER):
@@ -2748,10 +2769,14 @@ def _rewrite_positional_join(
     """``FROM a POSITIONAL JOIN b`` → full outer join of the two sides'
     row-numbered views on the window-free global row number
     (`operators/positional_join._with_rn` — parallel range numbering, no
-    single-task WindowExec). The statement's ``SELECT *`` is expanded to
-    the explicit column list so the internal row-number column stays
-    hidden."""
+    single-task WindowExec). A side without a ``pos_order`` key that the
+    resolution snapshot numbers on the driver (a memory table, whose
+    positions are its list indices) uses that numbering instead. The
+    statement's ``SELECT *`` is expanded to the explicit column list so
+    the internal row-number column stays hidden."""
     pos_order = pos_order or {}
+    c = getattr(_REF_CACHE, "c", None) or {}
+    numbered = c.get("numbered", {})
 
     def rewrite(q, items, i):
         left, right = items[i - 1], items[i]
@@ -2762,16 +2787,21 @@ def _rewrite_positional_join(
         sides = []
         for it in (left, right):
             raw = q[it.start : it.rel_end]
-            src = spark.table(raw)
+            order = pos_order.get(it.name)
+            by_index = order is None and numbered.get(it.name.lower())
+            if by_index:
+                rn = by_index()
+                cols = [f for f in rn.columns if f != _RN]
+            else:
+                src = spark.table(raw)
+                rn, cols = _with_rn(src, order), src.columns
             view = f"{_SCRATCH_PREFIX}{uuid.uuid4().hex[:8]}"
-            rn = _with_rn(src, pos_order.get(it.name))
             rn.createOrReplaceTempView(view)
-            c = getattr(_REF_CACHE, "c", None)
-            if c is not None and "views" in c:
+            if "views" in c:
                 c["views"][view] = rn.schema
             alias = it.alias or (raw if it.quoted else it.name.split(".")[-1])
-            sides.append((view, alias, src))
-        (lv, la, lsrc), (rv, ra, rsrc) = sides
+            sides.append((view, alias, cols))
+        (lv, la, lcols), (rv, ra, rcols) = sides
         q = (
             q[: left.kw]
             + f"FROM {lv} AS {la} FULL OUTER JOIN {rv} AS {ra} "
@@ -2781,8 +2811,7 @@ def _rewrite_positional_join(
         # Expand the bare ``*`` items of the statement that owns the FROM:
         # the rn columns must not leak into it.
         cols = ", ".join(
-            [f"{la}.{c}" for c in lsrc.columns]
-            + [f"{ra}.{c}" for c in rsrc.columns]
+            [f"{la}.{c}" for c in lcols] + [f"{ra}.{c}" for c in rcols]
         )
         for it in reversed(_stmt_of(q, left.kw).items):
             if q[it.start : it.end] == "*":

@@ -11,6 +11,7 @@ streaming state, etc.) get a rows-only check.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,10 +21,23 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a query under ``name`` with an optional DuckDB oracle SQL."""
+    """Register a query under ``name`` with an optional DuckDB oracle SQL.
+    The registered callable builds the query with ``name`` as the
+    description of the Spark jobs the build runs (a trainer's counts and
+    collects), then restores the thread's previous description."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
+        @functools.wraps(fn)
+        def described(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            sc = spark.sparkContext
+            previous = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(name)
+            try:
+                return fn(spark, *args, **kwargs)
+            finally:
+                sc.setJobDescription(previous)
+
+        QUERIES[name] = described
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -15,7 +15,18 @@ parquet settings that change the inferred types. A repeat read with the
 same signature passes the known schema to the reader and runs no job. A
 rewritten file or a changed setting misses and is inferred again. Only
 metadata is kept: every query still scans the files, and each call
-returns a fresh DataFrame.
+returns a fresh DataFrame — two reads of one path joined through the
+DataFrame API must be distinct relations, or ``a["p"] == b["k"]`` is an
+ambiguous self-join.
+
+``engine.execute_sql`` goes one step further for its table map. Each
+SparkSession keeps one execute_sql namespace (an attribute of the
+session object), one entry per table name: the DataFrame a parquet path
+was read into, kept under the path's signature above, and a memory
+table's Arrow-built relation, kept under its schema and rows. A repeat
+call with the same signature reuses the relation and only registers the
+view again, so the call's map still wins over views registered between
+calls. CSV and JSON paths and DataFrame sources are not kept.
 
 At 100 TB the same code path applies: ``spark.read.parquet`` on a directory
 of part files gives partition-parallel scans with predicate pushdown, column
@@ -86,18 +97,26 @@ def _hidden(name: str) -> bool:
     return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
-def _source(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, StructType | None]:
-    """``source`` plus the schema it read the path with (None when the
-    path is read uncached)."""
-    key = os.path.abspath(path)
+def _signature(spark: SparkSession, key: str) -> tuple | None:
+    """The state of the file or directory at the absolute path ``key``
+    plus the session's parquet inference settings, or None when
+    ``os.stat`` cannot see the path."""
     # stat before inferring: a file rewritten in between is stored under
     # its older state, so the next call misses instead of reading stale
     state = _file_state(key)
     if state is None:
+        return None
+    return (state, tuple(spark.conf.get(k) for k in _INFERENCE_SETTINGS))
+
+
+def _source(
+    spark: SparkSession, path: str, signature: tuple | None
+) -> tuple[DataFrame, StructType | None]:
+    """``source`` given the path's ``_signature``, plus the schema it
+    read the path with (None when the path is read uncached)."""
+    if signature is None:
         return spark.read.parquet(path), None
-    signature = (state, tuple(spark.conf.get(k) for k in _INFERENCE_SETTINGS))
+    key = os.path.abspath(path)
     hit = _SCHEMAS.get(key)
     if hit is not None and hit[0] == signature:
         return spark.read.schema(hit[1]).parquet(path), hit[1]
@@ -110,7 +129,7 @@ def source(spark: SparkSession, path: str) -> DataFrame:
     """A fresh DataFrame over the parquet file or directory at ``path``,
     its schema inferred once per file state and parquet settings (see
     the module docstring)."""
-    return _source(spark, path)[0]
+    return _source(spark, path, _signature(spark, os.path.abspath(path)))[0]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1,6 +1,8 @@
 """API façade tests (reference src/index.js surface: executeSql / parseSql /
 planSql / extractTables, error shapes from src/validation/)."""
 
+import json
+
 import pytest
 
 from squirreling_spark.engine import (
@@ -480,6 +482,15 @@ _FLAGS = [
         ("id FROM t WHERE (value)", _FLAGS, [2, 4]),
         ("id FROM t WHERE value AND id > 0", _FLAGS, [2, 4]),
         ("id FROM t WHERE NOT value", _FLAGS, [1, 3]),
+        ("CASE WHEN value THEN id END AS id FROM t", _FLAGS,
+         [None, None, 2, 4]),
+        ("CASE WHEN id > 2 THEN CASE WHEN value THEN id END END AS id"
+         " FROM t", _FLAGS, [None, None, None, 4]),
+        ("id FROM t WHERE CASE WHEN value THEN id > 0 END", _FLAGS, [2, 4]),
+        # loose == against a number reads a boolean as 1 or 0
+        ("id FROM t WHERE value = 1", _FLAGS, [2, 4]),
+        ("id FROM t WHERE value <> 1", _FLAGS, [1, 3]),
+        ("id FROM t WHERE value IN (0, 5)", _FLAGS, [1, 3]),
     ],
 )
 def test_dynamic_column_reads_follow_js_coercion(
@@ -716,3 +727,167 @@ def test_collect_keeps_the_query_as_job_description(spark):
     res.collect()
     desc = spark.sparkContext.getLocalProperty("spark.job.description")
     assert desc == "SELECT id FROM jd"
+
+
+def test_registered_query_describes_its_build_jobs(spark):
+    """A registered query's build-time jobs carry its name as their
+    description in the status store; the previous description comes
+    back after the build."""
+    from squirreling_spark import inventory
+
+    name = "__described_build_probe"
+    inventory.query(name)(lambda s, sf: s.range(s.range(5).count()))
+    sc = spark.sparkContext
+    group = "described-build-probe"
+    sc.setJobGroup(group, "outer description")
+    try:
+        df = inventory.QUERIES[name](spark, "unused")
+        assert sc.getLocalProperty("spark.job.description") == (
+            "outer description"
+        )
+    finally:
+        inventory.QUERIES.pop(name)
+    assert df.count() == 5
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descriptions = {
+        store.job(j).description().get()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    }
+    # the build's count, then the count of the result
+    assert descriptions == {name, "outer description"}
+
+
+# ------------------------------------------------ session execute_sql namespace
+
+def _counting_local_df(monkeypatch):
+    from squirreling_spark import engine
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    real = engine.local_df
+    monkeypatch.setattr(engine, "local_df", counted)
+    return calls
+
+
+def test_repeat_call_over_unchanged_list_builds_no_relation(
+    spark, monkeypatch
+):
+    calls = _counting_local_df(monkeypatch)
+    rows = [{"id": 1, "v": "a"}, {"id": 2, "v": None}]
+    q = "SELECT id, v FROM ns_same ORDER BY id"
+    first = execute_sql(spark, q, tables={"ns_same": rows}).collect()
+    # an equal list built anew is the same table
+    again = execute_sql(
+        spark, q, tables={"ns_same": [dict(r) for r in rows]}
+    ).collect()
+    assert first == again == [{"id": 1, "v": "a"}, {"id": 2, "v": None}]
+    assert len(calls) == 1
+
+
+def test_list_changed_in_place_between_calls_is_read_again(
+    spark, monkeypatch
+):
+    import math
+
+    calls = _counting_local_df(monkeypatch)
+    rows = [{"id": 1, "x": 0.0}, {"id": 2, "x": 1.5}]
+    q = "SELECT id, x FROM ns_mut ORDER BY id"
+    assert execute_sql(spark, q, tables={"ns_mut": rows}).collect() == rows
+    rows[1]["x"] = 2.5
+    rows.append({"id": 3, "x": None})
+    got = execute_sql(spark, q, tables={"ns_mut": rows}).collect()
+    assert got == [
+        {"id": 1, "x": 0.0}, {"id": 2, "x": 2.5}, {"id": 3, "x": None}
+    ]
+    # equal under == but not the same value
+    rows[0]["x"] = -0.0
+    got = execute_sql(spark, q, tables={"ns_mut": rows}).collect()
+    assert math.copysign(1.0, got[0]["x"]) == -1.0
+    assert len(calls) == 3
+
+
+def test_outside_view_between_calls_is_overwritten(spark):
+    rows = [{"id": 1}, {"id": 2}]
+    q = "SELECT count(*) AS n FROM ns_view"
+    assert execute_sql(spark, q, tables={"ns_view": rows}).collect() == [
+        {"n": 2}
+    ]
+    spark.range(7).createOrReplaceTempView("ns_view")
+    assert execute_sql(spark, q, tables={"ns_view": rows}).collect() == [
+        {"n": 2}
+    ]
+
+
+def test_new_session_gets_its_own_namespace(spark, monkeypatch):
+    from squirreling_spark.engine import _namespace
+
+    calls = _counting_local_df(monkeypatch)
+    rows = [{"id": 1}, {"id": 2}, {"id": 3}]
+    q = "SELECT sum(id) AS s FROM ns_sess"
+    assert execute_sql(spark, q, tables={"ns_sess": rows}).collect() == [
+        {"s": 6}
+    ]
+    other = spark.newSession()
+    assert execute_sql(other, q, tables={"ns_sess": rows}).collect() == [
+        {"s": 6}
+    ]
+    assert _namespace(other) is not _namespace(spark)
+    assert _namespace(other)["ns_sess"].df.sparkSession is other
+    assert len(calls) == 2
+
+
+_POS_A = [{"k": i, "name": f"n{i}"} for i in range(5)]
+_POS_B = [
+    {"code": "C0", "value": 1},
+    {"code": None, "value": "x"},
+    {"code": "C2", "value": None},
+]
+# the reference zips the two arrays by index, padding the shorter
+_POS_ROWS = [
+    ("n0", "C0", "1"), ("n1", None, '"x"'), ("n2", "C2", None),
+    ("n3", None, None), ("n4", None, None),
+]
+
+
+def _pos_rows(res):
+    return sorted(
+        ((r["name"], r["code"], r["value"]) for r in res.collect()),
+        key=lambda t: t[0],
+    )
+
+
+@pytest.mark.parametrize("pos_order", [None, {"a": ["k"]}])
+def test_positional_join_of_memory_tables_zips_list_order(spark, pos_order):
+    """A memory table without a ``pos_order`` key is numbered by list
+    index on the driver: the statement runs at most 3 jobs. Both sides'
+    numberings give the rows the distributed one (``_with_rn``) gives
+    DataFrames of the same rows."""
+    from squirreling_spark.qutil import local_df
+
+    q = "SELECT a.name, b.code, b.value FROM a POSITIONAL JOIN b"
+    res = execute_sql(
+        spark, q, tables={"a": _POS_A, "b": _POS_B}, pos_order=pos_order
+    )
+    assert _pos_rows(res) == _POS_ROWS
+    if pos_order is None:
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(res.job_group)) <= 3
+    frames = {
+        "a": local_df(
+            spark, [(r["k"], r["name"]) for r in _POS_A],
+            "k bigint, name string",
+        ),
+        "b": local_df(
+            spark, [(r["code"], None if r["value"] is None else
+                     json.dumps(r["value"])) for r in _POS_B],
+            "code string, value string",
+        ),
+    }
+    with_rn = execute_sql(spark, q, tables=frames, pos_order=pos_order)
+    assert _pos_rows(with_rn) == _POS_ROWS

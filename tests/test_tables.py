@@ -133,3 +133,13 @@ def test_nanosecond_events_truncate_to_microseconds(spark, tmp_path):
     assert sorted((r["event_id"], r["us"]) for r in rows) == [
         (1, 1_700_000_000_123_456), (2, 1_700_000_001_000_000),
     ]
+
+
+def test_two_source_reads_of_one_path_self_join(spark, tmp_path):
+    """``source`` returns a fresh DataFrame per call, so the DataFrame
+    API can join two reads of one path (one shared object would make
+    ``a["p"] == b["k"]`` an ambiguous self-join)."""
+    path = _write(tmp_path / "t.parquet", {"k": [1, 2, 3], "p": [0, 1, 2]})
+    a, b = source(spark, path), source(spark, path)
+    rows = a.join(b, a["p"] == b["k"]).select(a["k"], b["k"]).collect()
+    assert sorted(tuple(r) for r in rows) == [(2, 1), (3, 2)]

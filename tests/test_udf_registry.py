@@ -174,3 +174,48 @@ def test_ranged_arity_raises_udf_arity_error(spark):
         fn("a", "b", "a", "b")
     with pytest.raises(UdfArityError, match="got 0"):
         fn()
+
+
+def test_udf_compiles_once_per_session_and_name(spark, monkeypatch):
+    from squirreling_spark.functions import registry
+
+    compiled = []
+    real = registry.make_udf
+    monkeypatch.setattr(
+        registry, "make_udf",
+        lambda spec, name="<udf>": compiled.append(name) or real(spec, name),
+    )
+    functions = {"ONCE_UP": FunctionSpec(apply=str.upper)}
+    q = "SELECT ONCE_UP(s) AS u FROM t"
+    for _ in range(3):
+        rows = execute_sql(
+            spark, q, tables={"t": [{"s": "ab"}]}, functions=functions
+        ).collect()
+        assert rows == [{"u": "AB"}]
+    assert compiled == ["ONCE_UP"]
+
+
+def test_call_map_udf_overwrites_outside_registration(spark):
+    functions = {"CALL_WINS": FunctionSpec(apply=lambda s: s + "!")}
+    q = "SELECT CALL_WINS(s) AS r FROM t"
+    tables = {"t": [{"s": "a"}]}
+    assert execute_sql(spark, q, tables, functions).collect() == [{"r": "a!"}]
+    spark.udf.register("CALL_WINS", lambda s: "outside", StringType())
+    assert execute_sql(spark, q, tables, functions).collect() == [{"r": "a!"}]
+
+
+def test_changed_spec_under_one_name_takes_effect(spark):
+    q = "SELECT SPEC_SWAP(s) AS r FROM t"
+    tables = {"t": [{"s": "a"}]}
+    spec = FunctionSpec(apply=lambda s: s + "1")
+    assert execute_sql(
+        spark, q, tables, {"SPEC_SWAP": spec}
+    ).collect() == [{"r": "a1"}]
+    assert execute_sql(
+        spark, q, tables, {"SPEC_SWAP": FunctionSpec(apply=lambda s: s + "2")}
+    ).collect() == [{"r": "a2"}]
+    # a spec changed in place is a changed spec too
+    spec.apply = lambda s: s + "3"
+    assert execute_sql(
+        spark, q, tables, {"SPEC_SWAP": spec}
+    ).collect() == [{"r": "a3"}]
