@@ -1,12 +1,14 @@
 """Rewrite-equivalence replay for the SQL front end.
 
-Records the arguments of every ``rewrite_reference_sql``,
-``inline_select_aliases`` and ``loosen_group_by`` call
-(``squirreling_spark/functions/sqldialect.py``) to a JSONL file, replays
+Records the arguments of every ``rewrite_reference_sql`` call and of
+every ``inline_select_aliases`` call (the one GROUP BY retry rewrite)
+in ``squirreling_spark/functions/sqldialect.py`` to a JSONL file, replays
 the recorded calls at a checkout, and lists the calls whose outputs
 differ between two replays. A call made with a SparkSession is recorded
 with the column-resolution snapshot it sees (each view's schema), so the
-replay resolves column references as the recorded run did.
+replay resolves column references as the recorded run did. The quoting
+of flat dotted column names (``a.b`` naming a column "a.b") is part of
+``rewrite_reference_sql``'s output, so a replay covers it too.
 
 Record, as a pytest plugin or around any Python script::
 
@@ -41,7 +43,7 @@ import threading
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-FUNCTIONS = ("rewrite_reference_sql", "inline_select_aliases", "loosen_group_by")
+FUNCTIONS = ("rewrite_reference_sql", "inline_select_aliases")
 _RANDOM_NAME_RE = re.compile(r"(__sq_[a-z]+_)[0-9a-f]{8}\b")
 
 
@@ -159,8 +161,8 @@ def replay(rec_path: str, out_path: str, root: str | None) -> None:
 
 def _sync_views(spark, registered: dict, raw: dict, views: dict) -> None:
     """Make the session's temp views the recorded snapshot: empty views
-    with the recorded schemas (``loosen_group_by`` and POSITIONAL JOIN
-    read them through ``spark.table``)."""
+    with the recorded schemas (POSITIONAL JOIN reads them through
+    ``spark.table``)."""
     for name in set(registered) - set(raw):
         spark.catalog.dropTempView(name)
         del registered[name]

@@ -537,6 +537,12 @@ def execute_sql(
     (functions/sqldialect.py); ``like_mode="ci"`` opts into the
     reference's case-insensitive LIKE (src/expression/binary.js:57-66).
 
+    Names resolve against the columns of the call's tables (the snapshot
+    ``_register_tables`` returns), which the not-found errors list. A flat
+    column "a.b" written ``a.b`` is quoted (strict mode rejects it); the
+    GROUP BY shapes Spark rejects are retried once
+    (``sqldialect.inline_select_aliases``).
+
     Table names are flat, as in the reference's table map: a key such as
     ``dataset.parquet`` is one name, not a schema path. It registers as
     the temp view `` `dataset.parquet` ``, and the query may name it bare
@@ -572,7 +578,7 @@ def execute_sql(
     )
 
     register_reference_functions(spark)
-    views = _register_tables(spark, tables) if tables else None
+    views = _register_tables(spark, tables) if tables is not None else None
     for name in cache_tables or []:
         spark.catalog.cacheTable(name)
     if functions:
@@ -584,8 +590,9 @@ def execute_sql(
         if isinstance(source, list)
     }
     # Column references resolve against the call's table map only (no
-    # map: one snapshot of the session's temp views).
-    with ref_resolution_cache(views, numbered):
+    # map: one snapshot of the session's temp views), in the rewrites
+    # and in the retry alike.
+    with ref_resolution_cache(views or None, numbered):
         if strict:
             from squirreling_spark.functions.sqlstrict import (
                 strict_guards,
@@ -599,31 +606,34 @@ def execute_sql(
             query, spark=spark, like_mode=like_mode, pos_order=pos_order,
             ident_quotes=ident_quotes,
         )
-    if strict:
-        rewritten = strict_guards(rewritten)
+        if strict:
+            rewritten = strict_guards(rewritten)
 
-    job_group = f"squirreling-{uuid.uuid4().hex[:12]}"
-    description = rewritten[:200]
-    spark.sparkContext.setJobGroup(
-        job_group, description, interruptOnCancel=True
-    )
-    try:
-        df = _analyze(spark, rewritten, query, tables)
-        return QueryResult(df, job_group, description, _spark=spark)
-    finally:
-        # every statement built from the text is analyzed by now
-        drop_scratch_views(spark, rewritten)
+        job_group = f"squirreling-{uuid.uuid4().hex[:12]}"
+        description = rewritten[:200]
+        spark.sparkContext.setJobGroup(
+            job_group, description, interruptOnCancel=True
+        )
+        try:
+            df = _analyze(spark, rewritten, query, views)
+            return QueryResult(df, job_group, description, _spark=spark)
+        finally:
+            # every statement built from the text is analyzed by now
+            drop_scratch_views(spark, rewritten)
 
 
 def _analyze(
     spark: SparkSession,
     query: str,
     orig_query: str,
-    orig_tables: dict[str, Any] | None,
+    views: dict | None,
 ) -> DataFrame:
-    """spark.sql the rewritten statement, retrying the reference shapes
-    Spark rejects, and map analysis errors onto the reference's error
-    types (``orig_*`` are the caller's text and table map)."""
+    """spark.sql the rewritten statement, retrying once the reference's
+    GROUP BY and alias shapes Spark rejects
+    (``sqldialect.inline_select_aliases``), and map analysis errors onto
+    the reference's error types. ``orig_query`` is the caller's text and
+    ``views`` the call's resolution snapshot ({table name: schema} of its
+    table map; None without one): the not-found errors list its names."""
     try:
         df = spark.sql(query)
     except Exception as exc:
@@ -636,43 +646,16 @@ def _analyze(
         cond = getattr(exc, "getCondition", lambda: None)() or ""
         cond = set(cond.split("."))
         params = getattr(exc, "getMessageParameters", lambda: None)() or {}
-        # Reference-style loose GROUP BY: retry once with non-aggregated
-        # bare select columns wrapped in any_value (sqldialect.loosen_group_by)
-        if cond & {"MISSING_AGGREGATION", "MISSING_GROUP_BY"}:
-            loose = sqldialect.loosen_group_by(query, spark=spark)
-            if loose is not None:
+        if cond & {
+            "MISSING_AGGREGATION", "MISSING_GROUP_BY",
+            "LATERAL_COLUMN_ALIAS_IN_GROUP_BY", "MISSING_ATTRIBUTES",
+        }:
+            retry = sqldialect.inline_select_aliases(query, spark)
+            if retry is not None:
                 try:
-                    return spark.sql(loose)
+                    return spark.sql(retry)
                 except Exception:  # noqa: BLE001 — report the original
                     pass
-        # Reference alias-chaining shapes Spark rejects: GROUP BY on a
-        # chained select alias (lateral-column-alias) and select aliases
-        # nested inside ORDER BY aggregates. Retry with the aliases
-        # inlined (sqldialect.inline_select_aliases).
-        if cond & {"LATERAL_COLUMN_ALIAS_IN_GROUP_BY", "MISSING_ATTRIBUTES"}:
-            inlined = sqldialect.inline_select_aliases(query)
-            if inlined is not None:
-                try:
-                    return spark.sql(inlined)
-                except Exception:  # noqa: BLE001 — report the original
-                    pass
-        # Reference resolution order: a dotted ref `a.b` matches a FLAT
-        # column literally named "a.b" before table-qualification
-        # (reference test/execute/execute.dot.test.js). Spark resolves
-        # table.column only — when that fails and the suggestion list
-        # shows the flat name exists, retry with the ref backtick-quoted.
-        if "UNRESOLVED_COLUMN" in cond:
-            dotted = _unquote(params.get("objectName", ""))
-            if "." in dotted and f"`{dotted}`" in params.get("proposal", ""):
-                ref = re.compile(rf"(?<![`\w]){re.escape(dotted)}(?![`\w])")
-                retry = sqldialect._sub_outside_strings(
-                    query, ref, lambda m: f"`{dotted}`"
-                )
-                if retry != query:
-                    try:
-                        return spark.sql(retry)
-                    except Exception:  # noqa: BLE001
-                        pass
         first = msg.splitlines()[0]
         pos = _position_of(exc, query)
         # Reference-shaped structured errors (validation/tables.js:166-211,
@@ -681,10 +664,7 @@ def _analyze(
         # suggestions ranked by prefix + edit distance.
         if "TABLE_OR_VIEW_NOT_FOUND" in cond:
             bad = _unquote(params.get("relationName", "?")).split(".")[-1]
-            if orig_tables:
-                available = list(orig_tables)
-            else:
-                available = sqldialect.session_temp_views(spark)
+            available = list(views or sqldialect.session_temp_views(spark))
             raise TableNotFoundError(
                 f'Table "{bad}" not found. Available tables: '
                 + ", ".join(available),
@@ -708,49 +688,37 @@ def _analyze(
                         "from another table",
                         pos,
                     ) from exc
+            if views is None:
+                raise ColumnNotFoundError(first, pos) from exc
+            tables = [it for it in items if it.kind == "table"]
+            named = {it.name.lower() for it in tables}
+            scoped = [t for t in views if t.lower() in named] or list(views)
+            if "." in bad:
+                # reference resolves a qualified ref against ITS table
+                # (alias or name) and lists that table's columns; the
+                # message carries the bare column
+                qual, bare = bad.rsplit(".", 1)
+                target = qual if qual in views else next((
+                    it.name for it in tables
+                    if (it.alias or "").lower() == qual.lower()
+                ), None)
+                if target in views:
+                    scoped, bad = [target], bare
             available: list[str] = []
-            if orig_tables:
-                tables = [it for it in items if it.kind == "table"]
-                if "." in bad:
-                    # reference resolves a qualified ref against ITS
-                    # table (alias or name) and lists that table's
-                    # columns; the message carries the bare column
-                    qual, bare = bad.rsplit(".", 1)
-                    target = qual if qual in orig_tables else next(
-                        (
-                            it.name for it in tables
-                            if (it.alias or "").lower() == qual.lower()
-                        ),
-                        None,
-                    )
-                    if target in orig_tables:
-                        available = sqlstrict._table_columns(
-                            orig_tables[target]
-                        )
-                        bad = bare
-                if not available:
-                    named = {it.name.lower() for it in tables}
-                    scoped = [
-                        t for t in orig_tables if t.lower() in named
-                    ] or list(orig_tables)
-                    for t in scoped:
-                        for c in sqlstrict._table_columns(orig_tables[t]):
-                            if c not in available:
-                                available.append(c)
+            for t in scoped:
+                available += [
+                    f.name for f in views[t].fields if f.name not in available
+                ]
             if available:
                 raise ColumnNotFoundError(
                     f'Column "{bad}" not found. Available columns: '
                     + ", ".join(available),
                     pos,
                 ) from exc
-            if orig_tables is not None:
-                raise ColumnNotFoundError(
-                    f'Column "{bad}" not found', pos
-                ) from exc
-            raise ColumnNotFoundError(first, pos) from exc
+            raise ColumnNotFoundError(f'Column "{bad}" not found', pos) from exc
         if "CANNOT_RESOLVE_STAR_EXPAND" in cond:
             star = _unquote(params.get("targetString", "?"))
-            vis = sqlstrict._visible_tables(orig_query, orig_tables)
+            vis = sqlstrict._visible_tables(orig_query, views)
             raise TableNotFoundError(
                 f'Table "{star}" not found in "{star}.*". '
                 f"Available tables: {', '.join(vis)}",

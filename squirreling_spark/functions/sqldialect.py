@@ -1205,6 +1205,15 @@ def _resolution_views(spark) -> dict:
     return c["views"]
 
 
+def _snapshot(spark) -> dict | None:
+    """The resolution snapshot (``_resolution_views``), or None when
+    there is neither a session to take it from nor an active one."""
+    c = getattr(_REF_CACHE, "c", None)
+    if spark is None and not (c and "views" in c):
+        return None
+    return _resolution_views(spark)
+
+
 # A simple column reference: ``col``, ``tbl.col`` or ```tbl.name`.col``.
 _REF_RE = re.compile(
     r"(?:([A-Za-z_]\w*)|`([^`]+)`)\.([A-Za-z_]\w*)|[A-Za-z_]\w*"
@@ -1221,11 +1230,8 @@ def _quote_table_names(q: str, spark) -> str:
     under the same backtick-quoted names (engine._register_tables)."""
     if "." not in q and '"' not in q:
         return q
-    c = getattr(_REF_CACHE, "c", None)
-    if spark is None and not (c and "views" in c):
-        return q
     names = {
-        n for n in _resolution_views(spark)
+        n for n in _snapshot(spark) or ()
         if not _PLAIN_NAME_RE.fullmatch(n)
     }
     if not names:
@@ -1251,9 +1257,9 @@ def _ref_field(spark, ref: str):
     (expression args, unknown tables). A bare name matches the first
     view that has it."""
     m = _REF_RE.fullmatch(ref)
-    if spark is None or m is None:
+    views = None if m is None else _snapshot(spark)
+    if views is None:
         return None
-    views = _resolution_views(spark)
     table, col = m.group(1) or m.group(2) or "", m.group(3) or ref
     if table:
         # view names are case-insensitive, as in Spark's catalog
@@ -1279,6 +1285,64 @@ def _is_dynamic_ref(spark, ref: str) -> bool:
     StructField with DYNAMIC_COL_META)."""
     f = _ref_field(spark, ref.strip())
     return bool(f is not None and f.metadata.get("sq_dynamic"))
+
+
+def _from_scope(q: str, tables) -> set[str]:
+    """Table names and aliases visible to dotted references: the names
+    in ``tables``, FROM items, column aliases of table functions and
+    CTE names. A base name with an alias is HIDDEN (both the reference
+    and Spark reject ``FROM users u ... users.id``)."""
+    scope = set(tables or {})
+    aliased_bases: set[str] = set()
+    unaliased: set[str] = set()
+    for it in _from_items(q):
+        if it.kind == "table":
+            (aliased_bases if it.alias else unaliased).add(it.name)
+        if it.alias or it.kind == "table":
+            scope.add(it.alias or it.name)
+        # `UNNEST(..) AS u(x, y)` and `LATERAL VIEW .. v AS x` expose x/y
+        scope.update(it.cols or ())
+    scope.update(c.name for c in _ctes(q))
+    # an aliased base name is hidden even when it is a table-map key —
+    # unless the same table is ALSO referenced unaliased elsewhere
+    return scope - (aliased_bases - unaliased)
+
+
+def _unscoped_dotted(q: str, spark) -> list:
+    """The values ``a.b`` (``_chains`` whose first step is a field) whose
+    unquoted head names no table, alias, CTE or struct column in scope of
+    the snapshot: the reference reads them as a flat column "a.b" (exact
+    names first, src/expression/evaluate.js:112-123)."""
+    from pyspark.sql import types as T
+
+    scope = _from_scope(q, _snapshot(spark))
+    return [
+        ch for ch in _chains(q)
+        if ch.kind == "ident" and ch.steps and ch.steps[0][0] == "."
+        and q[ch.start] != "`" and q[ch.start : ch.base_end] not in scope
+        and not isinstance(
+            _ref_dtype(spark, q[ch.start : ch.base_end]), T.StructType
+        )
+    ]
+
+
+def _quote_flat_dotted(q: str, spark) -> str:
+    """Backtick each unscoped ``a.b`` (``_unscoped_dotted``) that names a
+    flat column of a FROM table, as the reference resolves it. Returns at
+    once when no snapshot column name holds a dot."""
+    views = _snapshot(spark) if "." in q else None
+    flat = {
+        (n.lower(), f.name) for n, s in (views or {}).items()
+        for f in s.fields if "." in f.name
+    }
+    if not flat:
+        return q
+    tables = {it.name.lower() for it in _from_items(q) if it.kind == "table"}
+    for ch in reversed(_unscoped_dotted(q, spark)):
+        name = q[ch.start : ch.steps[0][2]]
+        if any((t, name) in flat for t in tables):
+            q = q[: ch.start] + f"`{name}`" + q[ch.steps[0][2] :]
+    return q
 
 
 def _dyn_view(ref: str, view: str, arg: str = "") -> str:
@@ -2581,55 +2645,6 @@ def _namer(q: str):
     return whole
 
 
-def loosen_group_by(q: str, spark=None) -> str | None:
-    """Reference-style loose GROUP BY: non-aggregated bare columns in the
-    outermost statement's select list (``_main_select``) take the group's
-    first value (the reference's row-object evaluation keeps whatever the
-    first row held). Rewrites them to ``any_value(col) AS col``; returns
-    None when nothing applies — the engine retries with this ONLY after
-    Spark raises MISSING_AGGREGATION, so strict queries keep strict
-    errors."""
-    sel = _main_select(q)
-    if sel is None:
-        return None
-    # no GROUP BY at all (MISSING_GROUP_BY retry): the whole input is one
-    # group, every bare column takes its first value
-    group = sel.clauses.get("GROUP BY")
-    keys = {
-        k.lower() for k in _split_top_args(q[group[1] : group[2]])
-    } if group else set()
-    keys |= {k.rsplit(".", 1)[-1] for k in keys}
-    items = [q[it.start : it.end] for it in sel.items]
-    # `SELECT * .. GROUP BY k`: the reference keeps the group's first row
-    # for every non-key column. Expand the star from the (single, bare)
-    # FROM table so each column can be wrapped individually.
-    if spark is not None and "*" in items and "FROM" in sel.clauses:
-        it = next(
-            (it for it in _from_items(q) if it.kw == sel.clauses["FROM"][0]),
-            None,
-        )
-        if it is not None and it.kind == "table":
-            try:
-                cols = spark.table(q[it.start : it.rel_end]).columns
-            except Exception:  # noqa: BLE001 — leave the star alone
-                cols = None
-            if cols:
-                items = [c for i in items for c in (cols if i == "*" else [i])]
-    changed = False
-    out = []
-    for item in items:
-        bare = re.fullmatch(r"[A-Za-z_][\w$]*(?:\.[A-Za-z_][\w$]*)*", item)
-        col = item.rsplit(".", 1)[-1]
-        if bare and item.lower() not in keys and col.lower() not in keys:
-            out.append(f"any_value({item}) AS {col}")
-            changed = True
-        else:
-            out.append(item)
-    if not changed:
-        return None
-    return q[: sel.items[0].start] + ", ".join(out) + q[sel.items[-1].end :]
-
-
 # Aggregate functions: the reference's, and the Spark ones its rewrites
 # emit (ARRAY_AGG → COLLECT_LIST, ARG_MIN → MIN_BY, ...), which
 # ``inline_select_aliases`` reads in rewritten text.
@@ -2660,71 +2675,114 @@ def _alias_sub(expr: str, amap: dict[str, str]) -> str:
     return expr
 
 
-def inline_select_aliases(q: str) -> str | None:
-    """Retry rewrite for the reference's alias-chaining GROUP BY / ORDER
-    BY shapes Spark rejects (execute.group 'chained SELECT alias',
-    execute.orderby 'alias nested inside aggregate'), over the outermost
-    statement (``_main_select``):
+# A column reference: plain or backticked names joined by dots.
+_REF_PART = r"[A-Za-z_][\w$]*|`[^`]+`"
+_BARE_REF_RE = re.compile(rf"(?:{_REF_PART})(?:\.(?:{_REF_PART}))*")
 
-    - select-list aliases are inlined transitively (``x AS a, a+1 AS b``
-      → ``x AS a, (x)+1 AS b``), so a GROUP BY on the chained alias stops
-      being a lateral-column-alias reference;
-    - GROUP BY keys that are bare aliases become their definitions;
+
+def _last_name(ref: str) -> str:
+    """The column part of a ``_BARE_REF_RE`` reference, as written."""
+    return re.findall(_REF_PART, ref)[-1]
+
+
+def _star_columns(q: str, sel: _Select, spark) -> list[str] | None:
+    """The columns a ``*`` of ``sel`` stands for, as select items, when
+    its FROM clause is one table of the resolution snapshot; else None."""
+    items = [it for it in _from_items(q) if _stmt_of(q, it.kw) == sel]
+    views = _snapshot(spark)
+    if len(items) != 1 or items[0].kind != "table" or not views:
+        return None
+    name = items[0].name.lower()
+    schema = next((s for n, s in views.items() if n.lower() == name), None)
+    return schema and [
+        f.name if _PLAIN_NAME_RE.fullmatch(f.name)
+        else "`" + f.name.replace("`", "``") + "`"
+        for f in schema.fields
+    ]
+
+
+def inline_select_aliases(q: str, spark=None) -> str | None:
+    """The one retry rewrite for the reference's GROUP BY and alias
+    shapes Spark rejects, over the outermost statement (``_main_select``);
+    the engine runs it only after Spark rejected the statement:
+
+    - aliased items get earlier aliases inlined (``x AS a, a+1 AS b`` →
+      ``x AS a, (x)+1 AS b``) and GROUP BY keys that are bare aliases
+      become their definitions (execute.group 'chained SELECT alias');
     - alias tokens INSIDE larger ORDER BY / HAVING expressions are
-      substituted (``ORDER BY SUM(a)`` → ``SUM((age))``) — a bare alias
-      as the whole sort key is left alone (Spark resolves that natively);
-    - with a GROUP BY present, non-aggregate select items that are not
-      group keys get the reference's loose first-value semantics via
-      ``any_value`` (same convention as ``loosen_group_by``).
+      substituted (``ORDER BY SUM(a)`` → ``SUM((age))``, execute.orderby);
+      a bare alias as the whole sort key resolves natively;
+    - loose GROUP BY: when the statement groups (a GROUP BY, or an
+      aggregate without one), each item that is no group key and holds
+      no aggregate reads the group's first row through ``any_value`` (as
+      the reference's row-object evaluation does); a bare column keeps
+      its name, and a ``*`` over one snapshot table is expanded first.
 
     Returns None when nothing applies."""
     sel = _main_select(q)
     if sel is None:
-        return None
-    amap: dict[str, str] = {}
-    aliased = []
-    for it in sel.items:
-        if it.alias and _PLAIN_NAME_RE.fullmatch(it.alias):
-            expr = _alias_sub(q[it.start : it.expr_end], amap)
-            amap[it.alias] = expr
-            aliased.append((it, expr))
-    if not amap:
         return None
 
     def norm(e: str) -> str:
         return re.sub(r"[\s()]", "", e).lower()
 
     edits = {}  # (start, end) → replacement text
+    amap: dict[str, str] = {}
+    for it in sel.items:
+        if it.alias:
+            expr = _alias_sub(q[it.start : it.expr_end], amap)
+            if _PLAIN_NAME_RE.fullmatch(it.alias):
+                amap[it.alias] = expr
+            edits[it.start, it.expr_end] = expr
     group = sel.clauses.get("GROUP BY")
-    keys_norm: set[str] = set()
-    if group:
-        keys = [
-            f"({amap[k]})" if k in amap else k
-            for k in _split_top_args(q[group[1] : group[2]])
-        ]
-        keys_norm = {norm(k) for k in keys}
+    raw = _split_top_args(q[group[1] : group[2]]) if group else []
+    keys = [f"({amap[k]})" if k in amap else k for k in raw]
+    if keys != raw:
         edits[group[1:]] = ", ".join(keys)
+    keys = {norm(k) for k in keys} | {
+        _last_name(k).lower() for k in raw if _BARE_REF_RE.fullmatch(k)
+    }
     # ORDER BY / HAVING: substitute aliases inside larger expressions
     # only — a whole-key alias resolves natively and (for `count`-style
     # aliases of aggregates) substituting it is never necessary.
     for name in ("HAVING", "ORDER BY"):
-        if name in sel.clauses:
+        if name in sel.clauses and amap:
             _, start, end = sel.clauses[name]
             parts = []
             for p in _split_top_args(q[start:end]):
-                # a whole-key alias is Spark-native
                 bare = _PLAIN_NAME_RE.match(p)
                 whole = bare and bare.group() in amap and (
                     _ORDER_TAIL_RE.fullmatch(p, bare.end())
                 )
                 parts.append(p if whole else _alias_sub(p, amap))
             edits[start, end] = ", ".join(parts)
-    for it, expr in aliased:
-        if group and norm(expr) not in keys_norm and not any(
-            _iter_calls(expr, _AGGREGATE_FUNCS)
-        ):
-            expr = f"any_value({expr})"
-        edits[it.start, it.expr_end] = expr
+
+    def loose(e: str) -> bool:
+        """``e`` is no group key and holds no aggregate."""
+        return not (
+            norm(e) in keys
+            or _BARE_REF_RE.fullmatch(e) and _last_name(e).lower() in keys
+            or any(_iter_calls(e, _AGGREGATE_FUNCS))
+        )
+
+    def first_value(ref: str) -> str:
+        return f"any_value({ref}) AS {_last_name(ref)}" if loose(ref) else ref
+
+    head = q[sel.head_end : sel.items[-1].end]
+    if group or any(  # without GROUP BY an aggregate makes one group
+        not _OVER_RE.match(head, end)
+        for _, _, _, end in _iter_calls(head, _AGGREGATE_FUNCS)
+    ):
+        for it in sel.items:
+            text = q[it.start : it.end]
+            if it.alias:
+                expr = edits[it.start, it.expr_end]
+                if loose(expr):
+                    edits[it.start, it.expr_end] = f"any_value({expr})"
+            elif text == "*" and (cols := _star_columns(q, sel, spark)):
+                edits[it.start, it.end] = ", ".join(map(first_value, cols))
+            elif _BARE_REF_RE.fullmatch(text):
+                edits[it.start, it.end] = first_value(text)
     out = q
     for start, end in sorted(edits, reverse=True):
         out = out[:start] + edits[start, end] + out[end:]
@@ -2857,9 +2915,11 @@ def rewrite_reference_sql(
 
     Column references resolve against the enclosing
     ``ref_resolution_cache`` snapshot (execute_sql's table map), else
-    against one snapshot of the session's temp views. POSITIONAL JOIN
-    registers scratch views that the returned text names; drop them with
-    ``drop_scratch_views`` once the statement is analyzed."""
+    against one snapshot of the session's temp views. An unscoped ``a.b``
+    that names a flat column "a.b" of a FROM table is backtick-quoted
+    (``_quote_flat_dotted``). POSITIONAL JOIN registers scratch views
+    that the returned text names; drop them with ``drop_scratch_views``
+    once the statement is analyzed."""
     with ref_resolution_cache():
         return _rewrite_reference_sql_inner(
             query, spark, like_mode, pos_order, ident_quotes
@@ -2882,6 +2942,8 @@ def _rewrite_reference_sql_inner(
     # from the ORIGINAL expression text (alias.js), so naming must see the
     # query before function rewrites change the text.
     query = _rewrite_auto_alias(query)
+    # after naming: a flat ``a.b`` item keeps the derived name ``b``
+    query = _quote_flat_dotted(query, spark)
     if "[" in query:
         query = _rewrite_array_literals(query)
     up = query.upper()

@@ -44,8 +44,10 @@ from .sqldialect import (
     _rewrite_calls,
     _scan,
     _selects,
+    _snapshot,
     _split_top_args,
     _stmt_of,
+    _unscoped_dotted,
     _windows,
 )
 
@@ -495,16 +497,6 @@ def _validate_order_by_star(q: str) -> None:
                     )
 
 
-def _table_columns(value) -> list[str]:
-    """Column names of a table-map value: a DataFrame or a list of row
-    dicts (the first row's keys); [] for anything else."""
-    if hasattr(value, "columns"):
-        return list(value.columns)
-    if isinstance(value, list) and value:
-        return list(value[0].keys())
-    return []
-
-
 def _visible_tables(q: str, tables) -> list[str]:
     """FROM-item table names as the query sees them — an alias REPLACES
     its base name (reference + Spark both hide the original). Falls back
@@ -515,28 +507,6 @@ def _visible_tables(q: str, tables) -> list[str]:
         if it.kind == "table" and name not in vis:
             vis.append(name)
     return vis or list(tables or {})
-
-
-def _from_scope(q: str, tables) -> set[str]:
-    """Table names and aliases visible to dotted references. A base name
-    with an alias is HIDDEN (both the reference and Spark reject
-    ``FROM users u ... users.id``)."""
-    scope = set(tables or {})
-    aliased_bases: set[str] = set()
-    unaliased: set[str] = set()
-    for it in _from_items(q):
-        if it.kind == "table":
-            (aliased_bases if it.alias else unaliased).add(it.name)
-        if it.alias or it.kind == "table":
-            scope.add(it.alias or it.name)
-        # `UNNEST(..) AS u(x, y)` and `LATERAL VIEW explode(..) v AS x`
-        # expose x/y directly, and a struct-typed element alias makes
-        # `x.field` a legal dotted reference
-        scope.update(it.cols or ())
-    scope.update(c.name for c in _ctes(q))
-    # an aliased base name is hidden even when it is a table-map key —
-    # unless the same table is ALSO referenced unaliased elsewhere
-    return scope - (aliased_bases - unaliased)
 
 
 def _validate_dotted_from(q: str) -> None:
@@ -555,25 +525,15 @@ def _validate_dotted_from(q: str) -> None:
 
 
 def _validate_dotted_refs(q: str, spark, tables) -> None:
-    """Unquoted ``a.b`` (a chain, ``_chains``, whose first step is a
-    field) resolves ONLY when ``a`` is a table/alias in scope or a struct
-    column; the reference rejects dotted access to FLAT columns named
-    'a.b' unless quoted (execute.dot tests)."""
-    from pyspark.sql import types as T
-
-    from .sqldialect import _ref_dtype
-
-    scope = _from_scope(q, tables)
-    bad = []  # (position, head, fields) of a.b whose head resolves to nothing
-    for ch in filter(lambda ch: ch.steps, _chains(q)):
-        head = q[ch.start : ch.base_end]
-        if ch.kind != "ident" or head[0] == "`" or ch.steps[0][0] != ".":
-            continue
-        if head not in scope and not isinstance(
-            _ref_dtype(spark, head), T.StructType
-        ):
-            fields = [q[a + 1 : b] for op, a, b in ch.steps[:2] if op == "."]
-            bad.append((ch.start, head, fields))
+    """Unquoted ``a.b`` resolves ONLY when ``a`` is a table/alias in scope
+    or a struct column (``_unscoped_dotted``); the reference rejects
+    dotted access to FLAT columns named 'a.b' unless quoted (execute.dot
+    tests), where the default mode quotes them."""
+    bad = [
+        (ch.start, q[ch.start : ch.base_end],
+         [q[a + 1 : b] for op, a, b in ch.steps[:2] if op == "."])
+        for ch in _unscoped_dotted(q, spark)
+    ]
     # a.b.c: the reference parser stops at the second dot, before any
     # table is looked up (execute.dot tests)
     for at, _, fields in bad:
@@ -715,11 +675,11 @@ def _validate_unnest_alias_select(q: str, tables=None) -> None:
         bare = next((item for item in items if item in aliases), None)
         if bare is None:
             continue
-        avail: list[str] = []
-        for v in _visible_tables(q, tables):
-            cols = _table_columns((tables or {}).get(v))
-            avail += [f"{v}.{c}" for c in cols]
-        avail += [f"{a}.unnest" for a in aliases]
+        views = _snapshot(None) or {}
+        avail = [
+            f"{v}.{f.name}" for v in _visible_tables(q, tables)
+            for f in (views[v].fields if v in views else ())
+        ] + [f"{a}.unnest" for a in aliases]
         raise StrictDialectError(
             f'Column "{bare}" not found. Available columns: '
             + ", ".join(avail)

@@ -147,7 +147,8 @@ def hash_agg_q1(spark, sf):
     Spark does partial map-side aggregation before the group-key shuffle, so
     state is O(#groups) per task at any scale). ``spread`` parallelizes the
     decimal-heavy partial aggregate when the input is a single row group
-    (the local fixtures); on a real many-file table it is a no-op."""
+    (the local fixtures). It always repartitions, so on a many-file table
+    it is one extra round-robin shuffle of every lineitem row."""
     li = spread(t(spark, sf, "lineitem"))
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))

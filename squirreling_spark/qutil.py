@@ -92,9 +92,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def spread(
-    df: DataFrame, min_factor: int = 1, by: list[str] | None = None
-) -> DataFrame:
+def spread(df: DataFrame, by: list[str] | None = None) -> DataFrame:
     """Repartition up to the cluster's parallelism — used before
     compute-heavy stages (hashing, vector math).
 
@@ -121,7 +119,7 @@ def spread(
     that sort costs ~25% of the whole minhash pipeline (measured sf0.1);
     hash partitioning needs no sort and a unique key balances just as
     well."""
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     if by:
         return df.repartition(target, *[F.col(c) for c in by])
     return df.repartition(target)

@@ -146,6 +146,73 @@ def test_flat_dotted_column_retry_leaves_string_literals(spark):
     assert [r["s"] for r in rows] == ["a.b"]
 
 
+_FLAT = {"t": [{"a.b": 7, "c.d": 8, "id": 1}]}
+# one region and one age per city: the first row of each group is known
+_CITIES = {"users": [
+    {"id": 1, "city": "x", "region": "e", "age": 30},
+    {"id": 2, "city": "x", "region": "e", "age": 30},
+    {"id": 3, "city": "y", "region": "w", "age": 40},
+]}
+_LOOSE_CHAINED = (
+    "SELECT city, region, age + 1 AS a1, a1 * 2 AS a2, COUNT(*) AS n"
+    " FROM users GROUP BY city"
+)
+
+
+def test_two_flat_dotted_columns_in_one_statement(spark):
+    rows = execute_sql(spark, "SELECT a.b, c.d FROM t", tables=_FLAT).collect()
+    assert [tuple(r.values()) for r in rows] == [(7, 8)]
+    rows = execute_sql(
+        spark, "SELECT c.d + a.b AS s FROM t", tables=_FLAT
+    ).collect()
+    assert rows == [{"s": 15}]
+
+
+def test_loose_group_by_over_chained_aliases(spark):
+    rows = execute_sql(spark, _LOOSE_CHAINED, tables=_CITIES).collect()
+    assert sorted(tuple(r.values()) for r in rows) == [
+        ("x", "e", 31, 62, 2), ("y", "w", 41, 82, 1),
+    ]
+
+
+def test_parquet_path_lists_its_columns_when_one_is_missing(spark, sf001):
+    with pytest.raises(ColumnNotFoundError) as e:
+        execute_sql(
+            spark, "SELECT nope FROM n",
+            tables={"n": f"{sf001}/nation.parquet"},
+        )
+    msg = str(e.value)
+    assert 'Column "nope" not found. Available columns: ' in msg
+    for col in ("n_nationkey", "n_name", "n_regionkey"):
+        assert col in msg
+
+
+@pytest.mark.parametrize(
+    "query, tables, most",
+    [
+        (_LOOSE_CHAINED, _CITIES, 2),
+        ("SELECT a.b, c.d FROM t", _FLAT, 1),
+        ("SELECT city, COUNT(*) AS n FROM users GROUP BY city", _CITIES, 1),
+    ],
+)
+def test_analyses_per_statement(spark, monkeypatch, query, tables, most):
+    # each SparkSession.sql call inside execute_sql is one analysis: a
+    # loose GROUP BY pays one failing analysis before its retry, the
+    # other shapes are rewritten before the first
+    from pyspark.sql import SparkSession
+
+    calls = []
+    sql = SparkSession.sql
+
+    def counted(session, *args, **kwargs):
+        calls.append(args[0])
+        return sql(session, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", counted)
+    execute_sql(spark, query, tables=tables)
+    assert 1 <= len(calls) <= most
+
+
 def test_cache_tables(spark):
     res = execute_sql(
         spark,
