@@ -552,11 +552,11 @@ def _decode_gif_pixels(payload: bytes) -> dict:
     raise ValueError("GIF has no image frame")
 
 
-# --- baseline JPEG decode (ITU T.81, numpy only) ---------------------------
-# Supported subset: 8-bit baseline sequential DCT (SOF0), 1x1 sampling
-# (no chroma subsampling), no restart intervals — greyscale or YCbCr.
-# Progressive/subsampled/restart streams raise and fall to the labeled
-# fake (they're valid JPEG; this decoder just doesn't cover them yet).
+# --- JPEG decode (ITU T.81, numpy only) -------------------------------------
+# Supported subset: 8-bit huffman-coded DCT, baseline sequential (SOF0) and
+# progressive (SOF2), sampling factors 1 or 2, restart intervals —
+# greyscale or YCbCr. Other frame types (12-bit, lossless, arithmetic,
+# hierarchical) raise and fall to the labeled fake.
 
 _JPEG_ZIGZAG = np.array([
      0,  1,  8, 16,  9,  2,  3, 10, 17, 24, 32, 25, 18, 11,  4,  5,
@@ -571,24 +571,6 @@ def _jpeg_dct_mat() -> "np.ndarray":
     m = c * np.sqrt(2 / 8)
     m[0] *= 1 / np.sqrt(2)
     return m  # inverse: M.T @ coef @ M
-
-
-def _jpeg_destuff(data: bytes) -> bytes:
-    """Remove FF00 byte stuffing vectorized; truncate at the first real
-    FFxx marker inside the scan (restart markers etc.) — the decoder
-    raises later only if it actually needs bits past that point, which
-    matches the old per-byte reader's abort-on-read behavior."""
-    a = np.frombuffer(data, np.uint8)
-    ff = np.flatnonzero(a == 0xFF)
-    if len(ff):
-        nxt = np.where(ff + 1 < len(a), ff + 1, len(a) - 1)
-        markers = ff[(ff + 1 >= len(a)) | (a[nxt] != 0)]
-        if len(markers):
-            cut = int(markers[0])
-            a = a[:cut]
-            ff = ff[ff < cut]
-    stuffed = ff[ff + 1 < len(a)] + 1
-    return np.delete(a, stuffed).tobytes()
 
 
 def _jpeg_huff_table(bits: list, vals: list) -> list:
@@ -609,33 +591,31 @@ def _jpeg_huff_table(bits: list, vals: list) -> list:
     return lut
 
 
-def _jpeg_entropy_end(payload: bytes, start: int) -> int:
-    """Index of the first real marker after ``start`` (FF followed by a
-    byte that is neither 00 stuffing nor FF fill) — the end of one scan's
-    entropy-coded segment."""
-    a = np.frombuffer(payload, np.uint8)
-    ff = np.flatnonzero(a[start:-1] == 0xFF) + start
-    real = ff[(a[ff + 1] != 0x00) & (a[ff + 1] != 0xFF)]
-    return int(real[0]) if len(real) else len(payload)
+def _jpeg_grid(comps, h, w):
+    """(hmax, vmax, mcu_w, mcu_h) of a frame; component ci's block grid,
+    padded to whole MCUs, is (mcu_h*vi, mcu_w*hi) (T.81 A.2.4)."""
+    hmax = max(hi for _, hi, _ in comps)
+    vmax = max(vi for _, _, vi in comps)
+    return hmax, vmax, -(-w // (8 * hmax)), -(-h // (8 * vmax))
 
 
 def _decode_jpeg_pixels(payload: bytes) -> dict:
-    """REAL JPEG decode, numpy only: marker walk (DQT/SOF0/SOF2/DHT/SOS),
-    canonical huffman entropy decode, dequantize, inverse zigzag, float
-    IDCT, level shift, JFIF YCbCr→RGB. Baseline sequential (SOF0) decodes
-    in one scan; progressive (SOF2 — the dominant real-web variant) runs
-    every scan (spectral selection + successive approximation, T.81 Annex
-    G) into a per-component coefficient accumulator, reconstructing once
-    at EOI."""
+    """REAL JPEG decode, numpy only: marker walk (DQT/SOF0/SOF2/DHT/DRI/
+    SOS), canonical huffman entropy decode, dequantize, inverse zigzag,
+    float IDCT, level shift, JFIF YCbCr→RGB. The frame header allocates
+    one coefficient accumulator; every scan — the single interleaved
+    scan of a typical baseline file, per-component baseline scans, the
+    spectral-selection and successive-approximation scans of a
+    progressive file (T.81 Annex G) — decodes into it through
+    `_jpeg_scan`, and `_jpeg_reconstruct` turns it into pixels once at
+    EOI."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos, qt, huff_dc, huff_ac = 2, {}, {}, {}
-    comps = h = w = None
+    acc = None
     cids: list[int] = []
     restart_interval = 0
-    progressive = False
-    prog_coefs: list | None = None
-    prog_preds: list | None = None
+    progressive = scanned = False
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
             raise ValueError(f"bad marker byte at {pos}")
@@ -660,6 +640,8 @@ def _decode_jpeg_pixels(payload: bytes) -> dict:
                 qt[tq] = tbl
                 i += 65
         elif marker in (0xC0, 0xC2):  # baseline / progressive SOF
+            if body[0] != 8:
+                raise ValueError("sample precision other than 8 bits")
             progressive = marker == 0xC2
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
@@ -669,19 +651,14 @@ def _decode_jpeg_pixels(payload: bytes) -> dict:
                 cid, samp, tq = body[6 + 3 * c : 9 + 3 * c]
                 hi, vi = samp >> 4, samp & 0x0F
                 if hi not in (1, 2) or vi not in (1, 2):
-                    raise ValueError("chroma subsampling unsupported")
+                    raise ValueError("sampling factor outside 1..2")
                 comps.append((tq, hi, vi))
                 cids.append(cid)
-            if progressive:
-                hmax = max(hi for _, hi, _ in comps)
-                vmax = max(vi for _, _, vi in comps)
-                mw = (w + 8 * hmax - 1) // (8 * hmax)
-                mh = (h + 8 * vmax - 1) // (8 * vmax)
-                prog_coefs = [
-                    np.zeros(((mh * vi) * (mw * hi), 64), np.int32)
-                    for _, hi, vi in comps
-                ]
-                prog_preds = [0] * len(comps)
+            _, _, mcu_w, mcu_h = _jpeg_grid(comps, h, w)
+            offs = [0]  # component ci owns blocks offs[ci]:offs[ci + 1]
+            for _, hi, vi in comps:
+                offs.append(offs[-1] + (mcu_h * vi) * (mcu_w * hi))
+            acc = np.zeros(offs[-1] * 64, np.int32)
         elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7,
                         0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             raise ValueError("non-baseline SOF")
@@ -699,394 +676,248 @@ def _decode_jpeg_pixels(payload: bytes) -> dict:
         elif marker == 0xDD:
             restart_interval = int.from_bytes(body[0:2], "big")
         elif marker == 0xDA:
+            if acc is None:
+                raise ValueError("scan before SOF")
             ns = body[0]
             sel = [
-                (body[1 + 2 * c], body[2 + 2 * c] >> 4,
+                (cids.index(body[1 + 2 * c]), body[2 + 2 * c] >> 4,
                  body[2 + 2 * c] & 0x0F)
                 for c in range(ns)
             ]
-            if progressive and restart_interval:
-                raise ValueError("restart intervals in progressive scans")
+            ss, se, ah_al = body[1 + 2 * ns : 4 + 2 * ns]
             if not progressive:
-                scomps = [(dc, ac) for _, dc, ac in sel]
-                return _jpeg_scan_decode(
-                    payload, pos + 2 + ln, h, w, comps, scomps, qt,
-                    huff_dc, huff_ac,
-                    restart_interval=restart_interval,
-                )
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah_al = body[3 + 2 * ns]
-            ah, al = ah_al >> 4, ah_al & 0x0F
-            scan_start = pos + 2 + ln
-            scan_end = _jpeg_entropy_end(payload, scan_start)
-            in_scan = [
-                (cids.index(cid), dc_t, ac_t) for cid, dc_t, ac_t in sel
-            ]
-            _jpeg_prog_scan(
-                _jpeg_destuff(payload[scan_start:scan_end]),
-                in_scan, ss, se, ah, al,
-                prog_coefs, prog_preds, huff_dc, huff_ac,
-                comps, h, w,
+                if (ss, se, ah_al) != (0, 63, 0):
+                    raise ValueError("bad baseline scan header")
+            elif ss == 0 and se != 0:
+                # T.81 G.1.1.1.1: progressive DC scans have Se=0; a
+                # baseline-shaped scan header under SOF2 is invalid
+                raise ValueError("bad progressive scan header (Ss=0, Se!=0)")
+            elif ss > 0 and (ns != 1 or se < ss or se > 63):
+                raise ValueError("bad progressive AC scan header")
+            pos = _jpeg_scan(
+                payload, pos + 2 + ln, sel, ss, se, ah_al >> 4, ah_al & 0x0F,
+                comps, h, w, offs, acc, huff_dc, huff_ac, restart_interval,
             )
-            pos = scan_end
+            scanned = True
             continue
         pos += 2 + ln
-    if progressive and prog_coefs is not None:
-        return _jpeg_reconstruct(prog_coefs, comps, qt, h, w)
-    raise ValueError("JPEG has no scan")
+    if not scanned:
+        raise ValueError("JPEG has no scan")
+    blocks = acc.reshape(-1, 64)
+    return _jpeg_reconstruct(
+        [blocks[a:b] for a, b in zip(offs, offs[1:])], comps, qt, h, w
+    )
 
 
-def _jpeg_prog_order(comps, in_scan, h, w):
-    """Progressive block visit order as (ci, padded-grid index) pairs.
-    Multi-component scans interleave in MCU order (T.81 A.2.3);
-    single-component scans are NON-interleaved — they walk the
-    component's own UNPADDED block grid (ceil(comp_samples/8) per
-    dimension) in raster order, mapped into the MCU-padded grid the
-    accumulator is sized for (the classic subsampled-progressive
-    gotcha)."""
-    hmax = max(hi for _, hi, _ in comps)
-    vmax = max(vi for _, _, vi in comps)
-    mcu_w = (w + 8 * hmax - 1) // (8 * hmax)
-    mcu_h = (h + 8 * vmax - 1) // (8 * vmax)
-    order: list[tuple[int, int]] = []
-    if len(in_scan) > 1:
-        for my in range(mcu_h):
-            for mx in range(mcu_w):
-                for ci, _, _ in in_scan:
-                    _, hi, vi = comps[ci]
-                    cbw = mcu_w * hi
-                    for byy in range(vi):
-                        for bxx in range(hi):
-                            order.append(
-                                (ci,
-                                 (my * vi + byy) * cbw + (mx * hi + bxx))
-                            )
-        return order
-    ci = in_scan[0][0]
-    _, hi, vi = comps[ci]
-    cw = (-(-(w * hi) // hmax) + 7) // 8
-    ch = (-(-(h * vi) // vmax) + 7) // 8
-    cbw = mcu_w * hi
-    return [(ci, (r // cw) * cbw + (r % cw)) for r in range(cw * ch)]
+def _jpeg_scan_data(payload: bytes, start: int):
+    """One scan's entropy-coded data, from ``start`` to the first marker
+    that is not RSTn: ``(win, bounds, end)``. FF00 stuffing, fill bytes
+    and the RSTn markers are dropped; ``win[i]`` is the MSB-first 32-bit
+    window at destuffed byte i (a Python list: scalar list indexing
+    beats numpy scalar indexing ~10x in the symbol loop); restart
+    segment s spans bits ``bounds[s]:bounds[s + 1]``; ``end`` is the
+    offset of the marker that ends the scan."""
+    a = np.frombuffer(payload, np.uint8)[start:]
+    ff = np.flatnonzero(a[:-1] == 0xFF)
+    nxt = a[ff + 1]
+    marker = (nxt != 0x00) & (nxt != 0xFF)
+    rst = (nxt & 0xF8) == 0xD0
+    other = np.flatnonzero(marker & ~rst)
+    k = int(other[0]) if len(other) else len(ff)
+    n = int(ff[k]) if len(other) else len(a)
+    ff, nxt, rst = ff[:k], nxt[:k], rst[:k]
+    drop = np.zeros(n, bool)
+    drop[ff[nxt == 0x00] + 1] = True  # stuffed zero after a data FF
+    drop[ff[nxt == 0xFF]] = True  # fill byte ahead of a marker
+    rst_at = ff[rst]
+    drop[rst_at] = drop[rst_at + 1] = True
+    data = a[:n][~drop].astype(np.uint64)
+    kept = (rst_at + 2) - np.cumsum(drop)[rst_at + 1]  # bytes before seg s+1
+    d = np.concatenate([data, np.zeros(4, np.uint64)])
+    win = ((d[:-3] << 24) | (d[1:-2] << 16) | (d[2:-1] << 8) | d[3:]).tolist()
+    return win, [0, *(kept * 8).tolist(), len(data) * 8], start + n
 
 
-def _jpeg_prog_scan(
-    data: bytes,
-    in_scan: list,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    coefs: list,
-    preds: list,
-    huff_dc: dict,
-    huff_ac: dict,
-    comps: list,
-    h: int,
-    w: int,
-) -> None:
-    """One progressive scan (T.81 Annex G) into the coefficient
-    accumulator: DC first/refinement (interleaved over the scan's
-    components), AC first with spectral selection + point transform, AC
-    refinement with EOB-run correction bits. Same O(1) windowed bit reads
-    and huffman LUTs as the baseline path; subsampled components visit
-    blocks per `_jpeg_prog_order`."""
-    a = np.frombuffer(data, np.uint8).astype(np.uint64)
-    a = np.concatenate([a, np.zeros(4, np.uint64)])
-    win = (
-        (a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]
-    ).tolist()
-    total_bits = len(data) * 8
-    pos = 0
+def _jpeg_scan(
+    payload, start, sel, ss, se, ah, al, comps, h, w, offs, acc,
+    huff_dc, huff_ac, restart_interval,
+) -> int:
+    """Decode one scan into the frame's accumulator ``acc`` (flat zigzag
+    coefficients; component ci's blocks start at ``offs[ci]``) and
+    return the offset of the marker that ends it. ``sel`` holds the
+    scan's (component index, DC table, AC table).
 
-    def huff(lut) -> int:
-        nonlocal pos
-        if pos >= total_bits:
-            raise ValueError("JPEG bitstream exhausted")
-        word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-        packed = lut[word >> 16]
-        ln = packed & 31
-        if ln == 0:
-            raise ValueError("bad JPEG huffman code")
-        pos += ln
-        return packed >> 5
+    Blocks are visited MCU-interleaved when the scan has more than one
+    component, in the component's own unpadded raster otherwise (T.81
+    A.2). Each block decodes DC when Ss=0 (first pass: huffman-coded
+    difference; refinement: one bit) and the AC band max(Ss,1)..Se when
+    Se>0 (first pass: run/size symbols and EOB runs; refinement:
+    correction bits, G.1.2.3). A baseline scan is Ss=0, Se=63, Ah=Al=0.
+    Every ``restart_interval`` MCUs decoding moves to the next RSTn
+    segment with fresh DC predictions and EOB run (F.2.1.3.1).
 
-    def bits(k: int) -> int:
-        nonlocal pos
-        if k == 0:
-            return 0
-        if pos + k > total_bits:
-            raise ValueError("JPEG bitstream exhausted")
-        word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-        pos += k
-        return word >> (32 - k)
-
-    if ss == 0 and se != 0:
-        # T.81 G.1.1.1.1: progressive DC scans have Se=0; a baseline-shaped
-        # scan header under SOF2 is an invalid stream
-        raise ValueError("bad progressive scan header (Ss=0, Se!=0)")
-    if ss > 0 and len(in_scan) != 1:
-        raise ValueError("progressive AC scan must cover one component")
-    order = _jpeg_prog_order(comps, in_scan, h, w)
-    dc_tids = {ci: dc_t for ci, dc_t, _ in in_scan}
-    if ss == 0:  # DC scan
-        if ah == 0:
-            for ci, bi in order:
-                size = huff(huff_dc[dc_tids[ci]])
-                if size:
-                    v = bits(size)
-                    preds[ci] += (
-                        v if v >= (1 << (size - 1))
-                        else v - (1 << size) + 1
-                    )
-                coefs[ci][bi, 0] = preds[ci] << al
-        else:  # DC refinement: one bit per block per component
-            for ci, bi in order:
-                if bits(1):
-                    # (v>>1)<<1 cleared this bit, so OR == add here
-                    coefs[ci][bi, 0] |= 1 << al
-        return
-
-    # AC scan: exactly one component (T.81 G.1.1.1)
-    ci, _, ac_t = in_scan[0]
-    lut = huff_ac[ac_t]
-    co = coefs[ci]
-    eobrun = 0
-    if ah == 0:  # first pass over this band
-        for _, bi in order:
-            if eobrun:
-                eobrun -= 1
-                continue
-            k = ss
-            while k <= se:
-                rs = huff(lut)
-                r, s = rs >> 4, rs & 15
-                if s == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    eobrun = (1 << r) - 1
-                    if r:
-                        eobrun += bits(r)
-                    break
-                k += r
-                if k > se:
-                    raise ValueError("AC band overflow")
-                v = bits(s)
-                co[bi, k] = (
-                    v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-                ) << al
-                k += 1
-        return
-
-    # AC refinement (G.1.2.3): correction bits for already-nonzero
-    # coefficients; newly-significant coefficients arrive as +-1<<al.
-    # Hot-path shape (r8): each block's band is pulled into a Python
-    # LIST once (`.tolist()`) and written back once — numpy SCALAR
-    # indexing inside the per-coefficient loop was the dominant cost
-    # (the same lesson as the r7 GIF-LZW rewrite; a numpy batch over
-    # whole EOB runs was tried and measured 2.3× SLOWER: real streams
-    # carry many short runs, so per-batch overhead loses).
+    Symbol reads are inlined (no call per symbol): a 32-bit window gives
+    any 16-bit peek in one op and the huffman LUT resolves (value,
+    length) in one list index. First passes collect (index, value)
+    pairs and scatter them once; AC refinement edits the scan's bands
+    as Python lists pulled out once. A read past its segment's end shows
+    as ``pos > stop`` when the segment is done."""
+    win, bounds, end = _jpeg_scan_data(payload, start)
+    hmax, vmax, mcu_w, mcu_h = _jpeg_grid(comps, h, w)
+    if len(sel) > 1:  # MCU-interleaved (T.81 A.2.3)
+        mcu = []  # (ci, block in MCU (0,0), block step per MCU row, col)
+        for ci, _, _ in sel:
+            _, hi, vi = comps[ci]
+            cbw = mcu_w * hi
+            mcu += [(ci, offs[ci] + by * cbw + bx, vi * cbw, hi)
+                    for by in range(vi) for bx in range(hi)]
+        order = [(ci, (b + my * rs + mx * cs) * 64)
+                 for my in range(mcu_h) for mx in range(mcu_w)
+                 for ci, b, rs, cs in mcu]
+        per_mcu = len(mcu)
+    else:  # non-interleaved: ceil(comp_samples/8) blocks per dimension
+        ci = sel[0][0]
+        _, hi, vi = comps[ci]
+        cw = (-(-w * hi // hmax) + 7) // 8
+        ch = (-(-h * vi // vmax) + 7) // 8
+        order = [(ci, (offs[ci] + r * mcu_w * hi + c) * 64)
+                 for r in range(ch) for c in range(cw)]
+        per_mcu = 1
+    dc_luts, ac_luts = [None] * len(comps), [None] * len(comps)
+    for ci, td, ta in sel:
+        if ss == 0 and ah == 0:
+            dc_luts[ci] = huff_dc[td]
+        if se:
+            ac_luts[ci] = huff_ac[ta]
+    k0 = max(ss, 1)
+    width = se - k0 + 1
     p1, m1 = 1 << al, -1 << al
-    width = se - ss + 1
-    for _, bi in order:
-        band = co[bi, ss:se + 1].tolist()
-        dirty = False
-        j = 0  # index into band (k - ss)
-        if eobrun == 0:
+    idx: list[int] = []
+    vals: list[int] = []
+    if ah and se:
+        cols = np.array([b for _, b in order])[:, None] + np.arange(k0, se + 1)
+        bands = acc[cols].tolist()
+    step = restart_interval * per_mcu or len(order)
+    for seg, lo in enumerate(range(0, len(order), step)):
+        if seg + 1 >= len(bounds):
+            raise ValueError("missing JPEG restart segment")
+        pos, stop = bounds[seg], bounds[seg + 1]
+        preds = [0] * len(comps)
+        eobrun = 0
+        for n, (ci, base) in enumerate(order[lo : lo + step], lo):
+            if ss == 0:
+                word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                if ah:  # DC refinement: one bit
+                    pos += 1
+                    if word >> 31:
+                        idx.append(base)
+                else:
+                    packed = dc_luts[ci][word >> 16]
+                    ln = packed & 31
+                    if ln == 0:
+                        raise ValueError("bad JPEG huffman code")
+                    pos += ln
+                    size = packed >> 5
+                    if size:
+                        word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                        v = word >> (32 - size)
+                        pos += size
+                        # T.81 F.2.2.1 EXTEND
+                        preds[ci] += (v if v >= (1 << (size - 1))
+                                      else v - (1 << size) + 1)
+                    idx.append(base)
+                    vals.append(preds[ci] << al)
+            if se == 0:
+                continue
+            lut = ac_luts[ci]
+            if ah == 0:  # AC first pass
+                if eobrun:
+                    eobrun -= 1
+                    continue
+                k = k0
+                while k <= se:
+                    word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                    packed = lut[word >> 16]
+                    ln = packed & 31
+                    if ln == 0:
+                        raise ValueError("bad JPEG huffman code")
+                    pos += ln
+                    r, s = packed >> 9, (packed >> 5) & 15
+                    if s == 0:
+                        if r == 15:  # ZRL: 16 zeros
+                            k += 16
+                            continue
+                        eobrun = (1 << r) - 1  # EOBr: later blocks in run
+                        if r:
+                            word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                            eobrun += word >> (32 - r)
+                            pos += r
+                        break
+                    k += r
+                    if k > se:
+                        raise ValueError("AC run overflow")
+                    word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                    v = word >> (32 - s)
+                    pos += s
+                    idx.append(base + k)
+                    vals.append(
+                        (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
+                    )
+                    k += 1
+                continue
+            # AC refinement: correction bits for already-nonzero
+            # coefficients; newly-significant ones arrive as +-1<<al
+            band = bands[n]
+            j = 0
             while j < width:
-                rs = huff(lut)
-                r, s = rs >> 4, rs & 15
-                val = 0
-                if s == 0:
-                    if r < 15:  # EOB run (includes this block)
+                r, val = 64, 0  # r=64: correct through the rest of band
+                if not eobrun:
+                    word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                    packed = lut[word >> 16]
+                    ln = packed & 31
+                    if ln == 0:
+                        raise ValueError("bad JPEG huffman code")
+                    pos += ln
+                    r, s = packed >> 9, (packed >> 5) & 15
+                    if s:
+                        bit = (win[pos >> 3] >> (31 - (pos & 7))) & 1
+                        val = p1 if bit else m1
+                        pos += 1
+                    elif r < 15:  # EOBr: the run includes this block
                         eobrun = 1 << r
                         if r:
-                            eobrun += bits(r)
-                        break
-                    # r == 15: ZRL — skip 16 zero-history coefficients
-                else:
-                    val = p1 if bits(1) else m1
-                while j < width:
+                            word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
+                            eobrun += word >> (32 - r)
+                            pos += r
+                        r = 64
+                    # else ZRL: skip 16 zero-history coefficients
+                while j < width:  # up to the (r+1)-th zero-history coef
                     v = band[j]
-                    if v != 0:
-                        if bits(1) and (v & p1) == 0:
+                    if v:
+                        bit = (win[pos >> 3] >> (31 - (pos & 7))) & 1
+                        if bit and not v & p1:
                             band[j] = v + (p1 if v >= 0 else m1)
-                            dirty = True
+                        pos += 1
+                    elif r == 0:
+                        break
                     else:
-                        if r == 0:
-                            break
                         r -= 1
                     j += 1
                 if val and j < width:
                     band[j] = val
-                    dirty = True
                 j += 1
-        if eobrun > 0:
-            while j < width:  # correction bits through the rest of band
-                v = band[j]
-                if v != 0:
-                    if bits(1) and (v & p1) == 0:
-                        band[j] = v + (p1 if v >= 0 else m1)
-                        dirty = True
-                j += 1
-            eobrun -= 1
-        if dirty:
-            co[bi, ss:se + 1] = band
-
-
-def _jpeg_win(data: bytes):
-    """(windows list, total_bits) — MSB-first per-byte 32-bit windows as
-    a Python list (scalar list indexing beats numpy scalar indexing ~10x
-    in the symbol loop)."""
-    a = np.frombuffer(data, np.uint8).astype(np.uint64)
-    a = np.concatenate([a, np.zeros(4, np.uint64)])
-    win = (
-        (a[:-3] << 24) | (a[1:-2] << 16) | (a[2:-1] << 8) | a[3:]
-    ).tolist()
-    return win, len(data) * 8
-
-
-def _jpeg_split_restarts(data: bytes) -> list[bytes]:
-    """Split one scan's entropy data on RSTn markers (FF D0-D7) into
-    destuffed restart segments. No restarts → one segment."""
-    a = np.frombuffer(data, np.uint8)
-    ff = np.flatnonzero(a[:-1] == 0xFF)
-    rst = ff[(a[ff + 1] >= 0xD0) & (a[ff + 1] <= 0xD7)]
-    if not len(rst):
-        return [_jpeg_destuff(data)]
-    segs, prev = [], 0
-    for p in rst:
-        segs.append(_jpeg_destuff(data[prev : int(p)]))
-        prev = int(p) + 2
-    segs.append(_jpeg_destuff(data[prev:]))
-    return segs
-
-
-def _jpeg_scan_decode(
-    payload, start, h, w, comps, scomps, qt, huff_dc, huff_ac,
-    restart_interval: int = 0,
-) -> dict:
-    """Entropy decode + block reconstruction. The per-symbol loop is
-    inherently sequential (DC prediction, run-length state), but every
-    step is O(1) int arithmetic: MSB-first 32-bit windows (`_lsb_windows`
-    mirror) give any 16-bit peek in one op, and the huffman LUT resolves
-    (value, length) in one list index. Dequantization + inverse zigzag +
-    IDCT run ONCE for all blocks as batched numpy einsum instead of
-    per-block matmuls. ``restart_interval`` > 0: the stream carries RSTn
-    markers every that-many MCUs — DC predictions reset and decoding
-    re-byte-aligns at each (T.81 F.2.1.3.1)."""
-    if not comps or h is None:
-        raise ValueError("scan before SOF")
-    end = payload.rfind(b"\xff\xd9")
-    segments = _jpeg_split_restarts(
-        payload[start : end if end > start else len(payload)]
-    )
-    seg_idx = 0
-    win, total_bits = _jpeg_win(segments[0])
-    pos = 0
-
-    # MCU geometry: with 1x1 sampling each MCU is one block per
-    # component; 4:2:0 etc. interleave hi*vi luma blocks per chroma block
-    # (T.81 A.2.3). Component ci's block grid is (mcu_h*vi, mcu_w*hi).
-    nci = len(comps)
-    hmax = max(hi for _, hi, _ in comps)
-    vmax = max(vi for _, _, vi in comps)
-    mcu_w = (w + 8 * hmax - 1) // (8 * hmax)
-    mcu_h = (h + 8 * vmax - 1) // (8 * vmax)
-    dc_luts = [huff_dc[scomps[ci][0]] for ci in range(nci)]
-    ac_luts = [huff_ac[scomps[ci][1]] for ci in range(nci)]
-    idx_lists: list[list[int]] = [[] for _ in comps]
-    val_lists: list[list[int]] = [[] for _ in comps]
-    preds = [0] * nci
-    # (ci, block-grid index) visit order, one MCU at a time
-    order: list[tuple[int, int]] = []
-    for my in range(mcu_h):
-        for mx in range(mcu_w):
-            for ci, (_, hi, vi) in enumerate(comps):
-                cbw = mcu_w * hi
-                for byy in range(vi):
-                    for bxx in range(hi):
-                        order.append(
-                            (ci, (my * vi + byy) * cbw + (mx * hi + bxx))
-                        )
-    blocks_per_mcu = sum(hi * vi for _, hi, vi in comps)
-    restart_every = (
-        restart_interval * blocks_per_mcu if restart_interval else 0
-    )
-    for oi, (ci, bi) in enumerate(order):
-        if restart_every and oi and oi % restart_every == 0:
-            # restart marker boundary: next segment, fresh DC predictions
-            seg_idx += 1
-            if seg_idx >= len(segments):
-                raise ValueError("missing JPEG restart segment")
-            win, total_bits = _jpeg_win(segments[seg_idx])
-            pos = 0
-            preds = [0] * nci
-        if True:
-            base = bi * 64
-            dc_lut, ac_lut = dc_luts[ci], ac_luts[ci]
-            idx, vals = idx_lists[ci], val_lists[ci]
-            if pos >= total_bits:
-                raise ValueError("JPEG bitstream exhausted")
-            word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-            packed = dc_lut[word >> 16]
-            ln = packed & 31
-            if ln == 0:
-                raise ValueError("bad JPEG huffman code")
-            pos += ln
-            size = packed >> 5
-            if size:
-                if pos + size > total_bits:
-                    raise ValueError("JPEG bitstream exhausted")
-                word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-                v = word >> (32 - size)
-                pos += size
-                # T.81 F.2.2.1 EXTEND
-                preds[ci] += (
-                    v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-                )
-            idx.append(base)
-            vals.append(preds[ci])
-            k = 1
-            while k < 64:
-                if pos >= total_bits:
-                    raise ValueError("JPEG bitstream exhausted")
-                word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-                packed = ac_lut[word >> 16]
-                ln = packed & 31
-                if ln == 0:
-                    raise ValueError("bad JPEG huffman code")
-                pos += ln
-                rs = packed >> 5
-                if rs == 0x00:  # end of block
-                    break
-                if rs == 0xF0:  # ZRL: 16 zeros
-                    k += 16
-                    continue
-                k += rs >> 4
-                if k > 63:
-                    raise ValueError("AC run overflow")
-                size = rs & 0x0F
-                if pos + size > total_bits:
-                    raise ValueError("JPEG bitstream exhausted")
-                word = (win[pos >> 3] << (pos & 7)) & 0xFFFFFFFF
-                v = word >> (32 - size)
-                pos += size
-                idx.append(base + k)
-                vals.append(
-                    v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-                )
-                k += 1
-
-    zz_mats = []
-    for ci, (_, hi, vi) in enumerate(comps):
-        nblk_i = (mcu_h * vi) * (mcu_w * hi)
-        flat = np.zeros(nblk_i * 64)
-        if idx_lists[ci]:
-            flat[np.asarray(idx_lists[ci])] = val_lists[ci]
-        zz_mats.append(flat.reshape(nblk_i, 64))
-    return _jpeg_reconstruct(zz_mats, comps, qt, h, w)
+            if eobrun:
+                eobrun -= 1
+        if pos > stop:
+            raise ValueError("JPEG bitstream exhausted")
+    if ah and se:
+        acc[cols] = bands
+    elif idx:
+        if ah:
+            acc[idx] |= p1
+        else:
+            acc[idx] = vals
+    return end
 
 
 def _jpeg_reconstruct(zz_mats, comps, qt, h, w) -> dict:
@@ -1094,13 +925,9 @@ def _jpeg_reconstruct(zz_mats, comps, qt, h, w) -> dict:
     then chroma upsampling (pixel replication — spec-legal nearest
     neighbour), level shift, JFIF YCbCr→RGB. ``zz_mats``: per component,
     an (nblk_i, 64) coefficient matrix in zigzag order over that
-    component's own (mcu_h*vi, mcu_w*hi) block grid (baseline scan output
-    or the progressive accumulator)."""
+    component's own (mcu_h*vi, mcu_w*hi) block grid."""
     m = _jpeg_dct_mat()
-    hmax = max(hi for _, hi, _ in comps)
-    vmax = max(vi for _, _, vi in comps)
-    mcu_w = (w + 8 * hmax - 1) // (8 * hmax)
-    mcu_h = (h + 8 * vmax - 1) // (8 * vmax)
+    hmax, vmax, mcu_w, mcu_h = _jpeg_grid(comps, h, w)
     planes = []
     for ci, (tq, hi, vi) in enumerate(comps):
         bh_i, bw_i = mcu_h * vi, mcu_w * hi
@@ -1144,14 +971,14 @@ def _jpeg_reconstruct(zz_mats, comps, qt, h, w) -> dict:
 def _decode_bytes(payload: bytes) -> dict:
     """Image codec dispatch: REAL decoders for BMP (numpy; truecolor,
     paletted, RLE8), PNG (stdlib zlib + numpy; 8/16-bit, grey/truecolor/
-    palette), GIF (pure-Python LZW + numpy palette mapping), and JPEG
-    baseline (4:2:0 subsampling, restart intervals) plus progressive
-    SOF2 incl. subsampled (canonical huffman + IDCT, numpy). Streams
-    outside the supported subsets (restarts inside progressive scans,
-    RLE4/1-bit BMP) fall back to a clearly-labeled
-    deterministic FAKE so pipelines stay runnable end-to-end — route
-    that branch through PIL/ffmpeg in production; the contract (bytes →
-    decoded-summary dict) is unchanged."""
+    palette), GIF (pure-Python LZW + numpy palette mapping), and 8-bit
+    JPEG, baseline and progressive SOF2 (4:2:0 subsampling, restart
+    intervals; canonical huffman + IDCT, numpy). Streams outside the
+    supported subsets (12-bit/lossless/arithmetic JPEG, RLE4/1-bit BMP)
+    fall back to a clearly-labeled deterministic FAKE so pipelines stay
+    runnable end-to-end — route that branch through PIL/ffmpeg in
+    production; the contract (bytes → decoded-summary dict) is
+    unchanged."""
     if payload is None:
         return dict(_NULL_DECODE)
     try:

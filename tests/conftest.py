@@ -10,8 +10,20 @@ from squirreling_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("squirreling-tests", cpus=8)
+def spark(tmp_path_factory):
+    """Session for the whole run. Catalog tables land in a per-run
+    warehouse dir, not ``spark-warehouse/`` under the working directory,
+    where a killed run's leftovers make the next run's CREATE TABLE fail
+    with LOCATION_ALREADY_EXISTS. The warehouse dir is a static conf and
+    ``get_spark`` reuses an existing session, so the fixture checks that
+    the setting took effect."""
+    warehouse = tmp_path_factory.mktemp("warehouse")
+    s = get_spark(
+        "squirreling-tests", cpus=8,
+        extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
+    )
+    got = s.conf.get("spark.sql.warehouse.dir")
+    assert got.removeprefix("file:").rstrip("/") == str(warehouse), got
     yield s
 
 

@@ -824,6 +824,7 @@ class _JBitWriter:
 
     def __init__(self):
         self.buf, self.acc, self.nbits = bytearray(), 0, 0
+        self.n_rst = 0
 
     def emit(self, code, length):
         for i in range(length - 1, -1, -1):
@@ -834,6 +835,13 @@ class _JBitWriter:
                 if self.acc == 0xFF:
                     self.buf.append(0x00)
                 self.acc, self.nbits = 0, 0
+
+    def restart(self):
+        """Byte-align with 1-bits, then a raw RSTn marker (T.81 F.1.2.3)."""
+        while self.nbits:
+            self.emit(1, 1)
+        self.buf += bytes([0xFF, 0xD0 + self.n_rst % 8])
+        self.n_rst += 1
 
     def done(self):
         while self.nbits:
@@ -900,10 +908,14 @@ def _mcu_order(samplings, mcu_w, mcu_h):
     return order
 
 
-def _enc_dc_first(zz, order, al, dc_tabs):
+def _enc_dc_first(zz, order, al, dc_tabs, rst=0):
+    """``rst``: restart every that many ``order`` entries (0 = never)."""
     bw_ = _JBitWriter()
     preds = {}
-    for ci, bi in order:
+    for n, (ci, bi) in enumerate(order):
+        if rst and n and n % rst == 0:
+            bw_.restart()
+            preds = {}
         v = int(zz[ci][bi, 0]) >> al  # arithmetic shift (T.81 G.1.2.1)
         size, bits = _mag(v - preds.get(ci, 0))
         preds[ci] = v
@@ -914,9 +926,11 @@ def _enc_dc_first(zz, order, al, dc_tabs):
     return bw_.done()
 
 
-def _enc_dc_refine(zz, order, al):
+def _enc_dc_refine(zz, order, al, rst=0):
     bw_ = _JBitWriter()
-    for ci, bi in order:
+    for n, (ci, bi) in enumerate(order):
+        if rst and n and n % rst == 0:
+            bw_.restart()
         bw_.emit((int(zz[ci][bi, 0]) >> al) & 1, 1)
     return bw_.done()
 
@@ -934,10 +948,13 @@ def _flush_eob(bw_, eobrun, pending, ac):
     return 0
 
 
-def _enc_ac_first(zz, ci, ss, se, al, ac):
+def _enc_ac_first(zz, ci, ss, se, al, ac, rst=0):
     bw_ = _JBitWriter()
     eobrun = 0
     for bi in range(zz[ci].shape[0]):
+        if rst and bi and bi % rst == 0:  # EOB runs end at a restart
+            eobrun = _flush_eob(bw_, eobrun, [], ac)
+            bw_.restart()
         band = [int(v) for v in zz[ci][bi, ss:se + 1]]
         # point transform: truncation toward zero (T.81 G.1.2.2)
         band = [(abs(v) >> al) * (1 if v >= 0 else -1) for v in band]
@@ -968,7 +985,7 @@ def _enc_ac_first(zz, ci, ss, se, al, ac):
     return bw_.done()
 
 
-def _enc_ac_refine(zz, ci, ss, se, al, ac):
+def _enc_ac_refine(zz, ci, ss, se, al, ac, rst=0):
     """Mirror of the decoder's G.1.2.3 traversal: newly-significant
     coefficients (|v|>>al == 1) emit (run-of-zero-history, s=1) + sign,
     history coefficients (|v|>>al > 1) contribute interleaved correction
@@ -976,6 +993,9 @@ def _enc_ac_refine(zz, ci, ss, se, al, ac):
     bw_ = _JBitWriter()
     eobrun, eob_pending = 0, []
     for bi in range(zz[ci].shape[0]):
+        if rst and bi and bi % rst == 0:
+            eobrun = _flush_eob(bw_, eobrun, eob_pending, ac)
+            bw_.restart()
         band = [int(v) for v in zz[ci][bi, ss:se + 1]]
         absv = [abs(v) >> al for v in band]
         new = [i for i, m in enumerate(absv) if m == 1]
@@ -994,9 +1014,9 @@ def _enc_ac_refine(zz, ci, ss, se, al, ac):
             if absv[i] == 0:
                 run += 1
                 continue
-            if absv[i] > 1:  # history: correction bit rides along
-                pending.append((abs(band[i]) >> al) & 1)
-                continue
+            # libjpeg's encode_mcu_AC_refine: ZRLs go out before ANY
+            # nonzero coefficient once 16 zeros are pending, so a history
+            # coefficient past them gets its correction bit after the ZRL
             while run > 15:
                 c, ln = ac[0xF0]
                 bw_.emit(c, ln)
@@ -1004,6 +1024,9 @@ def _enc_ac_refine(zz, ci, ss, se, al, ac):
                     bw_.emit(b, 1)
                 pending.clear()
                 run -= 16
+            if absv[i] > 1:  # history: correction bit rides along
+                pending.append((abs(band[i]) >> al) & 1)
+                continue
             c, ln = ac[(run << 4) | 1]
             bw_.emit(c, ln)
             bw_.emit(1 if band[i] > 0 else 0, 1)
@@ -1049,19 +1072,24 @@ def _canon_table(symbols):
     return bits, syms
 
 
-def _jpeg_prog_bytes_real(rgb_rows, dc_al=1, ac_al=1, split_band=5):
+def _jpeg_prog_bytes_real(rgb_rows, dc_al=1, ac_al=1, split_band=5,
+                          restart_interval=0):
     """Progressive JPEG ENCODER (SOF2, T.81 Annex G): spectral selection
     (DC scan + split AC bands) with successive approximation (first pass
     at Al, then refinement scans down to 0) — the scan script shape
     libjpeg's default progressive mode emits. Each AC scan carries its
     own DHT (two-pass: record the scan's RS symbols, build a canonical
     table — EOB-run codes 0x10..0xE0 aren't in the Annex-K baseline
-    tables). Independent of the decoder under test."""
+    tables). ``restart_interval`` > 0 adds DRI and ends each scan's
+    restart interval (MCUs: 3 blocks in DC scans, 1 in AC scans) with a
+    flushed EOB run, 1-bit padding and RSTn. Independent of the decoder
+    under test."""
     import struct
 
     from squirreling_spark.pipeline.multimodal import _JPEG_ZIGZAG as ZZ
 
     h, w, zz = _jenc_quant_zz(rgb_rows)
+    ri = restart_interval
     dc_tabs = [_jenc_codes(*DC_L), _jenc_codes(*DC_C), _jenc_codes(*DC_C)]
 
     def seg(marker, body):
@@ -1082,12 +1110,12 @@ def _jpeg_prog_bytes_real(rgb_rows, dc_al=1, ac_al=1, split_band=5):
         """Two-pass AC scan: record symbols, build + emit a fresh DHT
         (always table id 0), encode for real."""
         rec = _SymRec()
-        enc_fn(zz, ci, ss, se, al, rec)
+        enc_fn(zz, ci, ss, se, al, rec, ri)
         bits, syms = _canon_table(rec.seen or {0x00})
         return (
             dht(1, 0, bits, syms)
             + sos([(ci + 1, 0, 0)], ss, se, ah, al,
-                  enc_fn(zz, ci, ss, se, al, _jenc_codes(bits, syms)))
+                  enc_fn(zz, ci, ss, se, al, _jenc_codes(bits, syms), ri))
         )
 
     out = (
@@ -1098,12 +1126,13 @@ def _jpeg_prog_bytes_real(rgb_rows, dc_al=1, ac_al=1, split_band=5):
         + seg(0xC2, bytes([8]) + struct.pack(">HH", h, w)
               + bytes([3, 1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]))
         + dht(0, 0, *DC_L) + dht(0, 1, *DC_C)
+        + (seg(0xDD, struct.pack(">H", ri)) if ri else b"")
     )
     # scan 1: DC first pass, all components, Al=dc_al
     order_dc = _mcu_order([(1, 1)] * 3, w // 8, h // 8)
     out += sos(
         [(1, 0, 0), (2, 1, 0), (3, 1, 0)], 0, 0, 0, dc_al,
-        _enc_dc_first(zz, order_dc, dc_al, dc_tabs),
+        _enc_dc_first(zz, order_dc, dc_al, dc_tabs, 3 * ri),
     )
     # AC first passes at Al=ac_al: luma split into two bands, chroma whole
     out += ac_scan(_enc_ac_first, 0, 1, split_band, ac_al, 0)
@@ -1113,7 +1142,7 @@ def _jpeg_prog_bytes_real(rgb_rows, dc_al=1, ac_al=1, split_band=5):
     # refinement scans down to Al=0
     for al in range(dc_al - 1, -1, -1):
         out += sos([(1, 0, 0), (2, 1, 0), (3, 1, 0)], 0, 0, al + 1, al,
-                   _enc_dc_refine(zz, order_dc, al))
+                   _enc_dc_refine(zz, order_dc, al, 3 * ri))
     for al in range(ac_al - 1, -1, -1):
         for ci in (0, 1, 2):
             out += ac_scan(_enc_ac_refine, ci, 1, 63, al, al + 1)
@@ -1137,9 +1166,16 @@ def test_progressive_jpeg_matches_baseline_pixels(spark):
     prog = bytearray(_jpeg_prog_bytes_real(src, dc_al=1, ac_al=1))
     prog2 = bytearray(_jpeg_prog_bytes_real(src, dc_al=2, ac_al=2))
     prog0 = bytearray(_jpeg_prog_bytes_real(src, dc_al=0, ac_al=0))
+    # 128x128: refinement bands with history coefficients past 16 zeros
+    # (ZRL ahead of a correction bit)
+    g = np.arange(128)
+    gx, gy = np.meshgrid(g, g)
+    big = np.stack([gx, gy, (gx * gy) % 256], axis=-1).astype(np.uint8)
     df = spark.createDataFrame(
         [("base", base), ("prog", prog), ("prog2", prog2),
-         ("prog0", prog0)],
+         ("prog0", prog0),
+         ("base128", bytearray(_jpeg_bytes_real(big))),
+         ("prog128", bytearray(_jpeg_prog_bytes_real(big)))],
         "media_id string, payload binary",
     )
     rows = {r["media_id"]: r for r in decode_image(df).collect()}
@@ -1147,6 +1183,8 @@ def test_progressive_jpeg_matches_baseline_pixels(spark):
     for k in ("prog", "prog2", "prog0"):
         assert rows[k]["decoder"] == "jpeg", k
         assert rows[k]["checksum"] == rows["base"]["checksum"], k
+    assert rows["base128"]["decoder"] == rows["prog128"]["decoder"] == "jpeg"
+    assert rows["prog128"]["checksum"] == rows["base128"]["checksum"]
 
 
 def test_progressive_jpeg_flat_and_tiny(spark):
@@ -1585,6 +1623,160 @@ def test_progressive_420_matches_baseline_420(spark):
         assert rows[k]["decoder"] == "jpeg", k
         assert rows[k]["checksum"] == rows["b420"]["checksum"], k
 
+
+
+# --- scan shapes through the one scan decoder ------------------------------
+
+def _jpeg_bytes_scans(zz_planes, h, w, samplings, per_component):
+    """Baseline (SOF0) stream from quantized zigzag blocks (one (nblk, 64)
+    matrix per component, raster order, 1x1 MCU geometry): one
+    MCU-interleaved scan, or ``per_component`` one non-interleaved scan
+    per component (T.81 A.2.2). ``samplings`` are the SOF sampling bytes;
+    a 1-component scan is non-interleaved whatever they say."""
+    import struct
+
+    from squirreling_spark.pipeline.multimodal import _JPEG_ZIGZAG as ZZ
+
+    tabs = [(_jenc_codes(*DC_L), _jenc_codes(*AC_L))] + [
+        (_jenc_codes(*DC_C), _jenc_codes(*AC_C))] * 2
+
+    def block(bw_, zzq, pred, ci):
+        dct, act = tabs[ci]
+        size, bits = _mag(int(zzq[0]) - pred)
+        bw_.emit(*dct[size])
+        bw_.emit(bits, size)
+        run = 0
+        for k in range(1, 64):
+            if zzq[k] == 0:
+                run += 1
+                continue
+            while run > 15:
+                bw_.emit(*act[0xF0])
+                run -= 16
+            size, bits = _mag(int(zzq[k]))
+            bw_.emit(*act[(run << 4) | size])
+            bw_.emit(bits, size)
+            run = 0
+        if run:
+            bw_.emit(*act[0x00])
+        return int(zzq[0])
+
+    def seg(marker, body):
+        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+    def sos(cis, data):
+        body = bytes([len(cis)])
+        for ci in cis:
+            body += bytes([ci + 1, 0x00 if ci == 0 else 0x11])
+        return seg(0xDA, body + bytes([0, 63, 0])) + data
+
+    ncomp = len(zz_planes)
+    groups = [[ci] for ci in range(ncomp)] if per_component else [
+        list(range(ncomp))]
+    scans = b""
+    for cis in groups:
+        bw_, preds = _JBitWriter(), [0] * ncomp
+        for bi in range(zz_planes[0].shape[0]):
+            for ci in cis:
+                preds[ci] = block(bw_, zz_planes[ci][bi], preds[ci], ci)
+        scans += sos(cis, bw_.done())
+    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
+    for ci in range(ncomp):
+        sof += bytes([ci + 1, samplings[ci], 0 if ci == 0 else 1])
+    return (
+        b"\xff\xd8"
+        + seg(0xDB, bytes([0]) + bytes(QL[ZZ].astype(np.uint8)))
+        + seg(0xDB, bytes([1]) + bytes(QC[ZZ].astype(np.uint8)))
+        + seg(0xC0, sof)
+        + seg(0xC4, bytes([0x00] + DC_L[0] + DC_L[1]))
+        + seg(0xC4, bytes([0x10] + AC_L[0] + AC_L[1]))
+        + seg(0xC4, bytes([0x01] + DC_C[0] + DC_C[1]))
+        + seg(0xC4, bytes([0x11] + AC_C[0] + AC_C[1]))
+        + scans + b"\xff\xd9"
+    )
+
+
+def _gradient(h, w):
+    gx, gy = np.meshgrid(np.linspace(0, 255, w), np.linspace(255, 0, h))
+    return np.stack([gx, gy, (gx + 3 * gy) % 181], -1).astype(np.uint8)
+
+
+def _decode_rows(spark, payloads):
+    df = spark.createDataFrame(
+        [(k, bytearray(v)) for k, v in payloads.items()],
+        "media_id string, payload binary",
+    )
+    return {r["media_id"]: r for r in decode_image(df).collect()}
+
+
+def test_jpeg_non_interleaved_baseline_matches_interleaved(spark):
+    """A baseline frame coded as three scans, one per component, decodes
+    to the same pixels as the one interleaved scan of the same blocks —
+    each scan adds its component to the frame's accumulator."""
+    h, w, zz = _jenc_quant_zz(_gradient(16, 24))
+    rows = _decode_rows(spark, {
+        "one": _jpeg_bytes_scans(zz, h, w, [0x11] * 3, False),
+        "three": _jpeg_bytes_scans(zz, h, w, [0x11] * 3, True),
+        "real": _jpeg_bytes_real(_gradient(16, 24)),
+    })
+    for k in ("one", "three"):
+        assert rows[k]["decoder"] == "jpeg", k
+        assert rows[k]["checksum"] == rows["real"]["checksum"], k
+
+
+def test_jpeg_single_component_ignores_sampling_byte(spark):
+    """A 1-component scan is non-interleaved (T.81 A.2.2): its blocks run
+    in the component's raster whatever sampling the SOF declares, so a
+    greyscale frame marked 0x22 decodes like the same data marked 0x11 —
+    also when the 2x2 MCU grid pads past the raster (24x8)."""
+    for h, w in ((16, 32), (8, 24)):
+        _, _, zz = _jenc_quant_zz(_gradient(h, w))
+        rows = _decode_rows(spark, {
+            f"s{b:x}": _jpeg_bytes_scans(zz[:1], h, w, [b], False)
+            for b in (0x11, 0x22, 0x12)
+        })
+        assert rows["s11"]["decoder"] == "jpeg", (h, w)
+        assert (rows["s11"]["width"], rows["s11"]["height"]) == (w, h)
+        for k in ("s22", "s12"):
+            assert rows[k]["decoder"] == "jpeg", (h, w, k)
+            assert rows[k]["checksum"] == rows["s11"]["checksum"], (h, w, k)
+
+
+def test_progressive_jpeg_restart_intervals(spark):
+    """Progressive scans with DRI + RSTn: every scan resets its DC
+    predictions and EOB run at each restart, in DC scans (3-block MCUs)
+    and AC scans (1-block MCUs) alike; pixels match the restart-free
+    encoding bit for bit."""
+    src = _gradient(32, 40)
+    rows = _decode_rows(spark, {
+        "plain": _jpeg_prog_bytes_real(src),
+        "dri1": _jpeg_prog_bytes_real(src, restart_interval=1),
+        "dri3": _jpeg_prog_bytes_real(src, restart_interval=3),
+        "dri7_al2": _jpeg_prog_bytes_real(src, 2, 2, restart_interval=7),
+        "base": _jpeg_bytes_real(src),
+    })
+    for k in ("plain", "dri1", "dri3", "dri7_al2"):
+        assert rows[k]["decoder"] == "jpeg", k
+        assert rows[k]["checksum"] == rows["base"]["checksum"], k
+
+
+def test_jpeg_sample_precision_other_than_8_falls_back(spark):
+    """12-bit frames (P=12 in SOF0/SOF2) level-shift by 2048 and carry
+    wider coefficients; this decoder covers 8-bit only, so they must fall
+    to the labeled fake instead of decoding as 8-bit."""
+    src = _gradient(16, 16)
+    payloads = {}
+    for name, enc in (("base", _jpeg_bytes_real), ("prog", _jpeg_prog_bytes_real)):
+        real = bytearray(enc(src))
+        payloads[name] = bytes(real)
+        sof = max(real.find(b"\xff\xc0"), real.find(b"\xff\xc2"))
+        real[sof + 4] = 12
+        payloads[name + "12"] = bytes(real)
+    rows = _decode_rows(spark, payloads)
+    for name in ("base", "prog"):
+        assert rows[name]["decoder"] == "jpeg", name
+        assert rows[name + "12"]["decoder"] == "fake", name
+        assert rows[name + "12"]["mean_r"] is None, name
 
 def test_png_adam7_interlaced_matches_sequential(spark):
     """Adam7: 7 independently-filtered sub-images scattered onto the full

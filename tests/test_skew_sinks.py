@@ -78,7 +78,8 @@ def test_write_partitioned_prunes(spark, tmp_path):
 
 def test_bucketed_join_avoids_exchange(spark, tmp_path):
     # bucketed tables are catalog-managed; they land in the session's
-    # warehouse dir (spark-warehouse/, gitignored) and are dropped below
+    # warehouse dir (a per-run temp dir, see the conftest spark fixture)
+    # and are dropped below
     a = spark.createDataFrame([(i, i * 2) for i in range(1000)], ["k", "x"])
     b = spark.createDataFrame([(i, i * 3) for i in range(1000)], ["k", "y"])
     write_bucketed(a, "bk_a", "k", num_buckets=8)
